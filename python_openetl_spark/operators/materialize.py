@@ -115,7 +115,7 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
     if not _reliable():
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
+    if sc.getCheckpointDir() is None:
         ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
         if not ckpt_dir:
             raise ValueError(

@@ -24,7 +24,12 @@ Reference semantics being reproduced (Spark-first, not translated):
 
 All functions are pure DataFrame → DataFrame (no writes); the
 write/commit side lives in plans.pipelines so these compose with any
-sink (parquet dir, catalog table, foreachBatch streaming sink).
+sink (parquet dir, catalog table, foreachBatch streaming sink). The
+``upsert_sync`` verb composes ``temporal_delta`` → ``merge_upsert`` →
+delete propagation into ONE plan and one write, reading its report
+counts from observed metrics of that write; it flags deleted rows with
+an outer join instead of calling :func:`propagate_deletes`, whose
+``(kept, deleted_keys)`` pair would need a second action to count.
 """
 
 from __future__ import annotations

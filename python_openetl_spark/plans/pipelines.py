@@ -22,15 +22,12 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from python_openetl_spark.functions.normalize import normalize_timestamps
-from python_openetl_spark.operators.merge import (
-    merge_upsert,
-    propagate_deletes,
-    temporal_delta,
-)
+from python_openetl_spark.operators.merge import merge_upsert, temporal_delta
 
 
 #: Hive's null-partition directory token.
@@ -62,19 +59,24 @@ def write_staging(
     schema-file convention: a zero-row PARTITIONED write emits no data
     files at all, so a later read couldn't infer the schema — append
     one empty root-level file carrying the full schema (including the
-    partition columns as regular columns). Shared by
-    ``ParquetTable.overwrite`` and ``plans.txn.publish_all`` (r10
-    review: the convention existed in three drifting copies)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    if partition_by and not any(
-        name.endswith(".parquet")
-        for _dir, _sub, files in os.walk(staging)
-        for name in files
-    ):
-        df.limit(0).write.mode("append").parquet(staging)
+    partition columns as regular columns). Shared by the
+    ``ParquetTable`` and ``VersionedTable`` stage steps and
+    ``plans.txn.publish_all``. A failed write removes the staging
+    directory before the error propagates, so it leaves no debris."""
+    try:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        if partition_by and not any(
+            name.endswith(".parquet")
+            for _dir, _sub, files in os.walk(staging)
+            for name in files
+        ):
+            df.limit(0).write.mode("append").parquet(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
 
 
 def _list_partition_dirs(
@@ -141,10 +143,18 @@ class ParquetTable:
         return spark.read.parquet(self.path)
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> None:
+        self.publish(self.stage(df, partition_by))
+
+    def stage(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
+        """Write ``df`` fully to a new staging directory beside the
+        table and return its path; the table is untouched. Safe even
+        when ``df`` reads from this table, since staging != source."""
         staging = f"{self.path}.staging-{uuid.uuid4().hex[:8]}"
-        # Write fully (materializes the plan — safe even when df reads
-        # from self.path, since staging != source), then swap.
         write_staging(df, staging, partition_by)
+        return staging
+
+    def publish(self, staging: str) -> None:
+        """Swap a directory made by :meth:`stage` in as the table."""
         backup = f"{self.path}.bak-{uuid.uuid4().hex[:8]}"
         if os.path.exists(self.path):
             os.rename(self.path, backup)
@@ -451,11 +461,33 @@ def upsert_sync(
 ) -> SyncMetrics:
     """Incremental maintenance (C2, /root/reference/pyopenetl/operations.py:515-609):
     delta read (R5) → MERGE upsert (R8) → delete propagation (R9) →
-    metrics (R15). Skips the merge when the delta is empty (parity with
-    `operations.py:703-705`).
+    metrics (R15).
 
     ``anchor`` fixes the reference's NOW() for reproducibility; pass
     None to use the current wall clock.
+
+    On the engine's own formats the verb is ONE Spark action: the
+    composed merge plan is written once, to a staging directory, and
+    the report counts are ``DataFrame.observe`` metrics of that same
+    job. Publication is decided after the job from those counts: the
+    staging copy is swapped in (ParquetTable) or committed as the next
+    version (VersionedTable), or, when both counts are 0, discarded —
+    the table stays untouched and no version is created (parity with
+    the empty-delta skip, `operations.py:703-705`). A no-change sync
+    therefore costs one discarded staging write rather than the two
+    count scans a count-then-write sequence makes. Observed metrics
+    can only over-count (a retried task or stage may add its rows
+    twice), never under-count, so the worst a retry can cause is a
+    republish of identical rows, never a skipped change.
+
+    The counts are observed at one node, just below the filter that
+    drops the deleted rows: each merged row carries how many raw delta
+    rows it stands for (the dedupe keeps one per pk) and whether its
+    pk is still in the source (null pks never are). Observing the
+    delta and the merge's inputs directly would be fragile: when one
+    side of a join is empty, Spark prunes the other side from the plan
+    and its observed metrics with it (a sync against an empty source
+    then has no ``count(merged)``).
 
     ``table_format="delta"`` routes through Delta Lake's transactional
     ``MERGE INTO`` / ``whenNotMatchedBySourceDelete``
@@ -468,13 +500,13 @@ def upsert_sync(
     verb concurrency-safe END-TO-END on the engine's own format: the
     merge base is the snapshot this call binds at entry (or the
     explicit ``expected_version``), and the publish is a
-    ``commit(expected_version=...)`` compare-and-set — a racer that
-    committed in between raises ``ConcurrentCommitError`` and the
-    caller simply re-runs ``upsert_sync`` against the fresh table (the
-    Delta conflict loop; there is no blind-commit mode on this route
-    because merge-then-publish over a stale base silently undoes the
-    racer's rows). ``expected_version`` with a plain ParquetTable dest
-    is a ValueError, matching :func:`seed`.
+    compare-and-set against it — a racer that committed in between
+    raises ``ConcurrentCommitError`` (the staging copy is discarded)
+    and the caller simply re-runs ``upsert_sync`` against the fresh
+    table (the Delta conflict loop; there is no blind-commit mode on
+    this route because merge-then-publish over a stale base silently
+    undoes the racer's rows). ``expected_version`` with a plain
+    ParquetTable dest is a ValueError, matching :func:`seed`.
     """
     if table_format == "delta":
         from python_openetl_spark.plans.delta_sink import upsert_sync_delta
@@ -527,30 +559,35 @@ def upsert_sync(
 
     if anchor is None:
         anchor = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
+    # __added: raw delta rows per merged row; __live: pk still in source
     delta = temporal_delta(source, ts_col, anchor, data_interval_hours)
-    n_delta = delta.count()
-
-    merged = merge_upsert(target, delta, pk, order_col=ts_col) if n_delta else target
-
-    rows_deleted = 0
+    delta = delta.withColumn("__added", F.count(F.lit(1)).over(Window.partitionBy(pk)))
+    merged = merge_upsert(
+        target.withColumn("__added", F.lit(0)), delta, pk, order_col=ts_col
+    )
+    deleted = F.lit(False)
     if propagate:
-        merged, deleted_keys = propagate_deletes(merged, source, pk)
-        rows_deleted = deleted_keys.count()
-
-    if n_delta or rows_deleted:
-        if versioned:
-            # compare-and-set against the merge base: if another writer
-            # committed since this call bound its snapshot, publishing
-            # the stale merge would silently undo that writer's rows —
-            # raise ConcurrentCommitError instead; caller re-runs
-            table.commit(merged, expected_version=base_version)
-        else:
-            table.overwrite(merged)
-
+        live = source.select(pk).distinct().withColumn("__live", F.lit(True))
+        merged = merged.join(live, on=pk, how="left")
+        deleted = F.col("__live").isNull()
+    report = Observation()
+    merged = merged.observe(
+        report, F.sum("__added").alias("added"), F.count_if(deleted).alias("deleted")
+    )
+    staging = table.stage(merged.filter(~deleted).select(*target.columns))
     # rows_added = upserted delta rows, matching the reference's report
     # (rows_added: df.shape[0], /root/reference/pyopenetl/operations.py:601-609)
+    counts = report.get
+    rows_added, rows_deleted = counts["added"] or 0, counts["deleted"]
+    if not (rows_added or rows_deleted):
+        shutil.rmtree(staging, ignore_errors=True)
+    elif versioned:
+        table.publish(staging, expected_version=base_version)
+    else:
+        table.publish(staging)
+
     return SyncMetrics(
-        rows_added=n_delta,
+        rows_added=rows_added,
         rows_deleted=rows_deleted,
         execution_duration=round(time.time() - t0, 3),
         execution_date=time.strftime("%Y-%m-%d"),

@@ -51,7 +51,6 @@ def publish_all(publishes: list[Publish]) -> None:
     See module docstring for the two-phase protocol and its guarantees.
     """
     stagings: list[tuple[Publish, str]] = []
-    staging = ""
     try:
         # phase 1: materialize everything; no table touched yet
         for p in publishes:
@@ -59,8 +58,8 @@ def publish_all(publishes: list[Publish]) -> None:
             write_staging(p.df, staging, p.partition_by)
             stagings.append((p, staging))
     except Exception:
-        # include the in-flight staging (a failed write leaves its dir)
-        for s in [s for _p, s in stagings] + ([staging] if staging else []):
+        # a failed write_staging already removed its own directory
+        for _p, s in stagings:
             shutil.rmtree(s, ignore_errors=True)
         raise
 

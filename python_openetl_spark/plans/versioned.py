@@ -32,9 +32,11 @@ with ``ConcurrentCommitError`` instead of silently clobbering.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,6 +87,7 @@ class VersionedTable:
         expected_version: int | None = None,
     ) -> int:
         """Write ``df`` as the next version; returns its number.
+        Equivalent to ``publish(stage(df, partition_by), ...)``.
 
         ``txn`` is an optional idempotence token recorded IN the same
         atomic pointer commit (the Delta ``txnAppId/txnVersion``
@@ -93,22 +96,70 @@ class VersionedTable:
         replayed streaming micro-batch (foreachBatch at-least-once)
         commit exactly once (streaming/sinks.py VersionedCdcSink).
 
-        ``expected_version`` opts into OPTIMISTIC CONCURRENCY: the
-        commit succeeds only if the table is still at that version
-        (what the writer read before deriving ``df``), checked and
-        published under an ``_commit.lock`` O_EXCL critical section;
-        a stale snapshot raises :class:`ConcurrentCommitError` and the
-        caller retries from a fresh read — Delta's conflict loop.
-        Same lock contract as the JSONL sink: real on a local/POSIX
-        filesystem, advisory-only on stores without atomic create
-        (S3); a crashed holder leaves the lock for manual removal
-        (fail-loud, never fail-corrupt). Without ``expected_version``
-        the blind single-writer path is unchanged and takes no lock.
+        ``expected_version`` opts into OPTIMISTIC CONCURRENCY, see
+        :meth:`publish`.
         """
-        if expected_version is None:
-            return self._commit_unlocked(df, partition_by, txn)
-        import time
+        done = self._txn_version(self._state(), txn)
+        if done is not None:
+            return done
+        return self.publish(
+            self.stage(df, partition_by), txn=txn, expected_version=expected_version
+        )
 
+    def stage(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
+        """Write ``df`` fully to a new staging directory inside the
+        table root and return its path. Nothing is visible to readers
+        until :meth:`publish`; a failed write leaves no directory."""
+        from python_openetl_spark.plans.pipelines import write_staging
+
+        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex[:8]}")
+        write_staging(df, staging, partition_by)
+        return staging
+
+    def publish(
+        self,
+        staging: str,
+        *,
+        txn: str | None = None,
+        expected_version: int | None = None,
+    ) -> int:
+        """Commit a directory made by :meth:`stage` as the next version:
+        rename it to ``v{N}``, then atomically replace the pointer.
+        Returns the version number. The staging directory is consumed:
+        renamed into place, or removed when the publish fails or the
+        ``txn`` token is already committed.
+
+        ``expected_version`` opts into OPTIMISTIC CONCURRENCY: the
+        publish succeeds only if the table is still at that version
+        (what the writer read before deriving the staged data), checked
+        and published under an ``_commit.lock`` O_EXCL critical section
+        that covers only metadata — the data write happened in
+        :meth:`stage`, outside the lock. A stale snapshot raises
+        :class:`ConcurrentCommitError` and the caller retries from a
+        fresh read — Delta's conflict loop. Same lock contract as the
+        JSONL sink: real on a local/POSIX filesystem, advisory-only on
+        stores without atomic create (S3); a crashed holder leaves the
+        lock for manual removal (fail-loud, never fail-corrupt).
+        Without ``expected_version`` the blind single-writer path takes
+        no lock.
+        """
+        try:
+            if expected_version is None:
+                return self._publish_unlocked(staging, txn)
+            with self._commit_lock():
+                current = self._state()["current"] or 0
+                if current != expected_version:
+                    raise ConcurrentCommitError(
+                        f"table moved to v{current} while this writer worked "
+                        f"from v{expected_version}; re-read and retry"
+                    )
+                return self._publish_unlocked(staging, txn)
+        finally:
+            # no-op once the rename consumed it
+            shutil.rmtree(staging, ignore_errors=True)
+
+    @contextlib.contextmanager
+    def _commit_lock(self):
         lock = os.path.join(self.path, "_commit.lock")
         deadline = time.monotonic() + 10.0
         while True:
@@ -124,35 +175,22 @@ class VersionedTable:
                     ) from None
                 time.sleep(0.05)
         try:
-            current = self._state()["current"] or 0
-            if current != expected_version:
-                raise ConcurrentCommitError(
-                    f"table moved to v{current} while this writer worked "
-                    f"from v{expected_version}; re-read and retry"
-                )
-            return self._commit_unlocked(df, partition_by, txn)
+            yield
         finally:
             os.unlink(lock)
 
-    def _commit_unlocked(
-        self,
-        df: DataFrame,
-        partition_by: list[str] | None,
-        txn: str | None,
-    ) -> int:
+    def _publish_unlocked(self, staging: str, txn: str | None) -> int:
         state = self._state()
-        if txn is not None:
-            for v, meta in state["versions"].items():
-                if meta.get("txn") == txn:
-                    return int(v)
+        done = self._txn_version(state, txn)
+        if done is not None:
+            return done
         n = (state["current"] or 0) + 1 if state["current"] is not None else 1
         while str(n) in state["versions"]:
             n += 1
         vdir = os.path.join(self.path, f"v{n}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(vdir)
+        # an unreferenced v{n} is a crashed writer's debris: replace it
+        shutil.rmtree(vdir, ignore_errors=True)
+        os.rename(staging, vdir)
         meta: dict = {"dir": f"v{n}"}
         if txn is not None:
             meta["txn"] = txn
@@ -161,11 +199,18 @@ class VersionedTable:
         self._commit_state(state)
         return n
 
+    @staticmethod
+    def _txn_version(state: dict, txn: str | None) -> int | None:
+        """The committed version carrying ``txn``, if any."""
+        if txn is not None:
+            for v, meta in state["versions"].items():
+                if meta.get("txn") == txn:
+                    return int(v)
+        return None
+
     def has_txn(self, txn: str) -> bool:
         """True if a committed version carries this idempotence token."""
-        return any(
-            meta.get("txn") == txn for meta in self._state()["versions"].values()
-        )
+        return self._txn_version(self._state(), txn) is not None
 
     def rollback(self, version: int) -> int:
         """Make ``version`` current again (zero-copy: versions are

@@ -524,3 +524,153 @@ def test_expected_version_on_swap_path_raises(spark, tmp_path):
             spark, src, dest, pk="event_id", ts_col="updated_at",
             anchor="2024-02-05 00:00:00", expected_version=1,
         )
+
+
+_SYNC_SCHEMA = "id long, v long, w string, updated_at timestamp"
+_SYNC_ANCHOR = "2024-01-01 12:00:00"
+
+
+def _random_sync_frames(spark, seed):
+    """Seeded target/source pair with duplicate pks on both sides, null
+    pks, null timestamps, ts ties and full-row duplicates."""
+    import datetime as dt
+    import random
+
+    rng = random.Random(seed)
+    anchor = dt.datetime(2024, 1, 1, 12)
+
+    def ts(fresh):
+        if rng.random() < 0.1:
+            return None
+        hours = rng.choice([0.25, 0.5]) if fresh else rng.choice([3, 30])
+        return anchor - dt.timedelta(hours=hours)
+
+    def pk(lo, hi):
+        return None if rng.random() < 0.08 else rng.randrange(lo, hi)
+
+    def row(lo, hi, fresh):
+        return (pk(lo, hi), rng.randrange(3), rng.choice(["a", "b"]), ts(fresh))
+
+    target = [row(0, 16, False) for _ in range(24)]
+    source = [row(6, 24, rng.random() < 0.4) for _ in range(28)]
+    source += source[:3]  # full-row ties
+    return (
+        spark.createDataFrame(target, _SYNC_SCHEMA),
+        spark.createDataFrame(source, _SYNC_SCHEMA),
+    )
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("versioned", [False, True], ids=["parquet", "versioned"])
+@pytest.mark.parametrize("propagate", [True, False], ids=["propagate", "keep"])
+def test_upsert_sync_matches_operator_oracle(spark, tmp_path, versioned, propagate):
+    """The one-action verb publishes exactly what the pure operators
+    compute (temporal_delta → merge_upsert → propagate_deletes) and
+    reports their row counts, on messy seeded inputs."""
+    from python_openetl_spark.operators.merge import (
+        merge_upsert,
+        propagate_deletes,
+        temporal_delta,
+    )
+    from python_openetl_spark.plans.versioned import VersionedTable
+
+    trials = [_random_sync_frames(spark, seed_) for seed_ in range(2)]
+    # an emptied source deletes every row (Spark prunes plan subtrees
+    # joined to an empty side, observed metrics included)
+    trials.append((trials[0][0], trials[0][1].limit(0)))
+    for i, (target, source) in enumerate(trials):
+        delta = temporal_delta(source, "updated_at", _SYNC_ANCHOR, 1)
+        want = merge_upsert(target, delta, "id", order_col="updated_at")
+        want_deleted = 0
+        if propagate:
+            want, deleted_keys = propagate_deletes(want, source, "id")
+            want_deleted = deleted_keys.count()
+        want_rows, want_added = _sorted_rows(want), delta.count()
+
+        path = str(tmp_path / f"t{i}")
+        dest = seed(target, VersionedTable(path) if versioned else path, normalize=False)
+        metrics = upsert_sync(
+            spark, source, dest, pk="id", anchor=_SYNC_ANCHOR, propagate=propagate
+        )
+        assert (metrics.rows_added, metrics.rows_deleted) == (want_added, want_deleted)
+        assert _sorted_rows(dest.read(spark)) == want_rows
+
+
+def _listing(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _sub, files in os.walk(path)
+        for f in files
+    )
+
+
+def test_upsert_sync_no_change_leaves_tables_untouched(spark, tmp_path):
+    """An empty delta with nothing to delete publishes nothing: the
+    ParquetTable's files and the VersionedTable's version are as they
+    were, and no staging directory is left beside or inside either."""
+    from python_openetl_spark.plans.versioned import VersionedTable
+
+    src = _events_as_source(spark)
+    plain = seed(src, str(tmp_path / "plain"))
+    vt = VersionedTable(str(tmp_path / "versioned"))
+    seed(src, vt)
+    before = {t: _listing(t) for t in (plain.path, vt.path)}
+    beside = sorted(os.listdir(tmp_path))
+
+    for dest in (plain, vt):
+        metrics = upsert_sync(
+            spark, src, dest, pk="event_id", ts_col="updated_at",
+            anchor="2030-01-01 00:00:00", data_interval_hours=1,
+        )
+        assert metrics.rows_added == 0 and metrics.rows_deleted == 0
+
+    assert {t: _listing(t) for t in (plain.path, vt.path)} == before
+    assert sorted(os.listdir(tmp_path)) == beside
+    assert vt.current_version() == 1 and vt.versions() == [1]
+
+
+def test_overwrite_failure_leaves_table_and_no_staging(spark, tmp_path):
+    """A failing write job leaves the published table as it was and
+    removes its staging directory."""
+    t = ParquetTable(str(tmp_path / "t"))
+    t.overwrite(spark.range(5))
+    before = _listing(t.path)
+    bad = spark.range(5).withColumn("ok", F.assert_true(F.col("id") < 3))
+    with pytest.raises(Exception, match="id"):
+        t.overwrite(bad)
+    assert _listing(t.path) == before
+    assert sorted(r.id for r in t.read(spark).collect()) == [0, 1, 2, 3, 4]
+    assert os.listdir(tmp_path) == ["t"]
+
+
+def test_upsert_sync_job_count(spark, tmp_path):
+    """upsert_sync runs its merge, delete propagation and report as one
+    write: a guard against count() actions creeping back in. The old
+    count-then-write sequence took 13-14 jobs on this shape."""
+    sc = spark.sparkContext
+    base = spark.range(400).select(
+        F.col("id"),
+        (F.col("id") % 7).alias("v"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("updated_at"),
+    )
+    base.write.parquet(str(tmp_path / "snap"))
+    dest = seed(spark.read.parquet(str(tmp_path / "snap")), str(tmp_path / "t"))
+    changed = base.filter(F.col("id") >= 4).withColumn(
+        "updated_at",
+        F.when(F.col("id") % 50 == 0, F.lit(_SYNC_ANCHOR).cast("timestamp"))
+        .otherwise(F.col("updated_at")),
+    )
+    changed.write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+
+    group = f"upsert-sync-jobs-{os.getpid()}"
+    sc.setJobGroup(group, "upsert_sync job-count guard")
+    try:
+        metrics = upsert_sync(spark, src, dest, pk="id", anchor=_SYNC_ANCHOR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (metrics.rows_added, metrics.rows_deleted) == (7, 4)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7

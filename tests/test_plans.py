@@ -575,7 +575,7 @@ def test_pin_reliable_checkpoint_policy(spark, tmp_path, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+    if spark.sparkContext.getCheckpointDir() is None:
         with _pytest.raises(ValueError, match="checkpoint dir"):
             pin(df)  # reliable mode without a dir must fail loudly
     ckpt = tmp_path / "ckpt"
@@ -583,4 +583,4 @@ def test_pin_reliable_checkpoint_policy(spark, tmp_path, monkeypatch):
     out = pin(df)
     assert out.count() == 10
     # reliable path actually wrote RDD checkpoint files
-    assert not spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty()
+    assert spark.sparkContext.getCheckpointDir() is not None
