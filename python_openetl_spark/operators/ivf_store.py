@@ -25,7 +25,12 @@ and splits the lifecycle the way the incremental-dedup family does
 - :func:`ivf_store_topk` — probes ``nprobe`` cells; the cell predicate
   prunes to the matching ``cell=`` partition DIRECTORIES
   (PartitionFilters — the scan reads ~nprobe/nlist of the data from
-  disk, not just post-filter).
+  disk, not just post-filter). The scan joins ONE broadcast probe
+  relation (query, cell, query vector), built from Arrow so it plans
+  as a driver-local table; vector norms are computed once per row on
+  each side, not once per (row, query) pair. A probe is 3 Spark jobs:
+  the broadcast, the scan, the top-k stage.
+  :func:`ivf_store_range_search` shares the probe.
 - :func:`rebuild_ivf_store` — writes a NEW version directory and
   commits it with one atomic pointer replace; in-flight readers keep
   scanning the version they resolved at query start.
@@ -774,6 +779,96 @@ def update_ivf_store(
     return n
 
 
+def _arrow_relation(spark: SparkSession, **cols) -> DataFrame:
+    """A small driver-built relation from numpy columns, shipped as one
+    ``pyarrow.Table``: Spark plans it as a ``LocalTableScan``, so
+    broadcasting it needs no Spark job (a ``createDataFrame(list)``
+    frame is a parallelized pickled RDD, and its broadcast costs one).
+    Column types follow the arrays: int64 -> long, int32 -> int, a 2-D
+    float32 array -> array<float> with the exact values."""
+    import pyarrow as pa
+
+    arrays = {}
+    for name, a in cols.items():
+        if a.ndim == 2:
+            flat = pa.array(a.reshape(-1), type=pa.float32())
+            arrays[name] = pa.FixedSizeListArray.from_arrays(
+                flat, a.shape[1]
+            ).cast(pa.list_(pa.float32()))
+        else:
+            arrays[name] = pa.array(a)
+    return spark.createDataFrame(pa.table(arrays))
+
+
+def _probe_cells(
+    qvecs: np.ndarray, cnorm: np.ndarray, cells: np.ndarray, nprobe: int
+) -> np.ndarray:
+    """The ``nprobe`` nearest cells of each query (rows of ``qvecs``).
+    A zero-norm query is clamped like every stored vector (1e-300), so
+    it scores 0.0 against every centroid instead of NaN."""
+    qn = qvecs / np.maximum(np.linalg.norm(qvecs, axis=1, keepdims=True), 1e-300)
+    return cells[np.argsort(-(qn @ cnorm.T), axis=1)[:, :nprobe]]
+
+
+def _probe_pairs(
+    spark: SparkSession,
+    idx_dir: str,
+    queries_pdf: pd.DataFrame,
+    *,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    where: str | None,
+) -> DataFrame:
+    """The scored (query, stored vector) pairs of a store probe:
+    ``query_id_col, id_col, cos_sim`` for every live row of the
+    ``nprobe`` cells each query picks, minus the row whose id equals
+    the query id. Shared by :func:`ivf_store_topk` and
+    :func:`ivf_store_range_search`.
+
+    Centroids and vectors both come from the version dir ``idx_dir``.
+    The plan is one ``cell IN (...)`` partition-pruned scan with the
+    optional ``where`` pre-filter on it, and ONE broadcast join on
+    ``cell`` against an Arrow-built (query, cell, query vector)
+    relation of queries x nprobe rows. Norms are computed once per
+    row, not once per pair: ``__en`` on the scan side before the join,
+    ``__qn`` on the probe relation. They are the
+    :func:`_cosine_clamped` expressions on the same values, so the
+    scores are bit-identical to it."""
+    cells, cnorm = _read_centroids(spark, idx_dir)
+    qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
+    qvecs = np.stack(queries_pdf[vec_col].to_numpy())
+    probe = _probe_cells(qvecs.astype(np.float64), cnorm, cells, nprobe)
+    per_query = probe.shape[1]
+    probe_rel = _arrow_relation(
+        spark,
+        **{
+            query_id_col: np.repeat(qids, per_query),
+            "cell": probe.reshape(-1),
+            "__qv": np.repeat(qvecs.astype(np.float32), per_query, axis=0),
+        },
+    ).withColumn("__qn", norm(F.col("__qv")))
+    assigned = _load_assigned(spark, idx_dir, id_col).filter(
+        F.col("cell").isin(np.unique(probe).tolist())  # partition-pruned scan
+    )
+    if where is not None:
+        assigned = assigned.filter(F.expr(where))
+    return (
+        assigned.withColumn("__en", norm(F.col(vec_col)))
+        .join(F.broadcast(probe_rel), "cell")
+        .filter(F.col(id_col) != F.col(query_id_col))
+        .select(
+            query_id_col,
+            id_col,
+            (
+                dot(F.col(vec_col), F.col("__qv"))
+                / F.greatest(F.col("__en") * F.col("__qn"), F.lit(1e-300))
+            ).alias("cos_sim"),
+        )
+    )
+
+
 def ivf_store_topk(
     spark: SparkSession,
     root: str,
@@ -801,36 +896,13 @@ def ivf_store_topk(
     subset (same strategy as similarity.filtered_cosine_topk, at the
     persisted-store level)."""
     idx_dir = current_index_dir(root)
-    cells, cnorm = _read_centroids(spark, idx_dir)
     if queries_pdf.empty:
         return spark.createDataFrame(
             [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
         )
-    qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    probe = np.argsort(-(qnorm @ cnorm.T), axis=1)[:, :nprobe]
-    pairs = [(int(q), int(cells[c])) for q, row in zip(qids, probe) for c in row]
-    probe_df = spark.createDataFrame(pairs, f"{query_id_col} long, cell int")
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, queries_pdf[vec_col])],
-        f"{query_id_col} long, __qv array<float>",
-    )
-    wanted = sorted({c for _, c in pairs})
-    assigned = _load_assigned(spark, idx_dir, id_col).filter(
-        F.col("cell").isin(wanted)  # partition-pruned directory scan
-    )
-    if where is not None:
-        assigned = assigned.filter(F.expr(where))
-    scored = (
-        assigned.join(F.broadcast(probe_df), "cell")
-        .join(F.broadcast(qdf), query_id_col)
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            _cosine_clamped(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-        )
+    scored = _probe_pairs(
+        spark, idx_dir, queries_pdf, nprobe=nprobe, id_col=id_col,
+        vec_col=vec_col, query_id_col=query_id_col, where=where,
     )
     w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return (
@@ -857,51 +929,25 @@ def ivf_store_range_search(
     the right verb when the answer size is data-dependent (near-dup
     discovery around a probe document, recall-oriented retrieval).
 
-    Same probe machinery as :func:`ivf_store_topk` (one pointer
-    resolve, ``cell IN`` partition-pruned scan, optional pre-filter
-    ``where`` pushed into the parquet reader, self-exclusion by id)
-    but the rank window is replaced by a radius predicate — no shuffle
-    at all after the scan-side joins: the threshold filters inside the
-    scan stage, and the output needs no per-query ordering. At
-    ``nprobe = nlist`` the result is exact (the x07 device), which is
-    what makes the brute-force SQL a full value-hash oracle; at
-    production nprobe it inherits IVF's probed-cells recall contract.
-    Output is deterministic as a SET (no rank column to tie-break)."""
+    Same probe as :func:`ivf_store_topk` (one pointer resolve,
+    ``cell IN`` partition-pruned scan, optional pre-filter ``where``
+    pushed into the parquet reader, self-exclusion by id) but the rank
+    window is replaced by a radius predicate — no shuffle at all after
+    the scan-side join: the threshold filters inside the scan stage,
+    and the output needs no per-query ordering. At ``nprobe = nlist``
+    the result is exact (the x07 device), which is what makes the
+    brute-force SQL a full value-hash oracle; at production nprobe it
+    inherits IVF's probed-cells recall contract. Output is
+    deterministic as a SET (no rank column to tie-break)."""
     idx_dir = current_index_dir(root)
-    cells, cnorm = _read_centroids(spark, idx_dir)
     if queries_pdf.empty:
         return spark.createDataFrame(
             [], f"{query_id_col} long, {id_col} long, cos_sim double"
         )
-    qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    qnorm = qmat / np.maximum(
-        np.linalg.norm(qmat, axis=1, keepdims=True), 1e-300
-    )
-    probe = np.argsort(-(qnorm @ cnorm.T), axis=1)[:, :nprobe]
-    pairs = [(int(q), int(cells[c])) for q, row in zip(qids, probe) for c in row]
-    probe_df = spark.createDataFrame(pairs, f"{query_id_col} long, cell int")
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, queries_pdf[vec_col])],
-        f"{query_id_col} long, __qv array<float>",
-    )
-    wanted = sorted({c for _, c in pairs})
-    assigned = _load_assigned(spark, idx_dir, id_col).filter(
-        F.col("cell").isin(wanted)
-    )
-    if where is not None:
-        assigned = assigned.filter(F.expr(where))
-    return (
-        assigned.join(F.broadcast(probe_df), "cell")
-        .join(F.broadcast(qdf), query_id_col)
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            _cosine_clamped(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= F.lit(float(radius)))
-    )
+    return _probe_pairs(
+        spark, idx_dir, queries_pdf, nprobe=nprobe, id_col=id_col,
+        vec_col=vec_col, query_id_col=query_id_col, where=where,
+    ).filter(F.col("cos_sim") >= F.lit(float(radius)))
 
 
 def rebuild_ivf_store(

@@ -49,6 +49,8 @@ from pyspark.sql import functions as F
 from python_openetl_spark.functions.vectors import cosine  # noqa: F401 (re-export parity)
 from python_openetl_spark.operators.ivf_store import _cosine_clamped
 from python_openetl_spark.operators.ivf_store import (
+    _arrow_relation,
+    _probe_cells,
     _ASSIGNED,
     _SEQ,
     _bump_seq,
@@ -322,22 +324,25 @@ def ivfpq_store_topk(
     m, _, dsub = books.shape
 
     qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
+    qvecs = np.stack(queries_pdf[vec_col].to_numpy())
+    qmat = qvecs.astype(np.float64)
     qnorms = np.linalg.norm(qmat, axis=1)
-    qn = qmat / np.maximum(qnorms[:, None], 1e-300)
-    nprobe = min(nprobe, len(cells))
-    probe = np.argsort(-(qn @ cnorm.T), axis=1)[:, :nprobe]
-    pairs = [(int(q), int(cells[c])) for q, row in zip(qids, probe) for c in row]
-    probe_df = spark.createDataFrame(pairs, f"{query_id_col} long, cell int")
+    probe = _probe_cells(qmat, cnorm, cells, nprobe)
+    probe_df = _arrow_relation(
+        spark,
+        **{
+            query_id_col: np.repeat(qids, probe.shape[1]),
+            "cell": probe.reshape(-1),
+        },
+    )
     lut = np.einsum("qsd,scd->qsc", qmat.reshape(len(qids), m, dsub), books)
     qpos = {int(q): i for i, q in enumerate(qids)}
     shortlist = max(k * rerank_factor, k)
 
-    wanted = sorted({c for _, c in pairs})
     # tombstone-aware (the shared _load_assigned loader): deleted ids
     # are invisible to PQ probes exactly as to the raw-vector store
     assigned = _load_assigned(spark, idx_dir, id_col).filter(
-        F.col("cell").isin(wanted)  # partition-pruned directory scan
+        F.col("cell").isin(np.unique(probe).tolist())  # partition-pruned scan
     )
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -379,9 +384,8 @@ def ivfpq_store_topk(
         .filter(F.col("__r") <= shortlist)
         .select(query_id_col, id_col)
     )
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, queries_pdf[vec_col])],
-        f"{query_id_col} long, __qv array<float>",
+    qdf = _arrow_relation(
+        spark, **{query_id_col: qids, "__qv": qvecs.astype(np.float32)}
     )
     w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return (

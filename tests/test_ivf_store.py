@@ -920,3 +920,138 @@ def test_delete_waiting_out_rebuild_tombstones_new_version(spark, tmp_path):
     live = _load_assigned(spark, current_index_dir(root), "vec_id")
     assert live.count() == 97  # tombstones landed in the live v2
     assert live.filter(F.col("vec_id").isin(1, 2, 3)).count() == 0
+
+
+def _vec_frame(spark, ids, vecs, **attrs):
+    """A (vec_id, embedding array<float>, *attrs) frame with the exact
+    float32 values of ``vecs``."""
+    import pyarrow as pa
+
+    cols = {
+        "vec_id": pa.array(np.asarray(ids, dtype=np.int64)),
+        "embedding": pa.array(
+            [v for v in np.asarray(vecs, dtype=np.float32)],
+            type=pa.list_(pa.float32()),
+        ),
+    }
+    cols.update({k: pa.array(v) for k, v in attrs.items()})
+    return spark.createDataFrame(pa.table(cols))
+
+
+def test_zero_norm_query_scores_zero_without_warning(spark, store):
+    """A zero query vector is clamped like a stored one: no numpy
+    divide-by-zero while choosing cells, and k rows at cosine 0.0."""
+    import warnings
+
+    dim = len(_queries(spark)["embedding"][0])
+    q = pd.DataFrame({"query_id": [5_000_000], "embedding": [[0.0] * dim]})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = ivf_store_topk(spark, store, q, k=4, nprobe=2).collect()
+    assert len(got) == 4
+    assert all(r["cos_sim"] == 0.0 for r in got)
+    assert sorted(r["rank"] for r in got) == [1, 2, 3, 4]
+
+
+def test_probe_runs_three_spark_jobs(spark, tmp_path):
+    """One probe of a store with more cell directories than Spark's
+    default 32-path parallel-discovery threshold is one broadcast, one
+    scan and one top-k stage: the partition listing stays on the driver
+    in local mode and the probe relation is a driver-local table. The
+    two-broadcast probe over pickled-RDD frames took 5."""
+    import os
+
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((3000, 16)).astype(np.float32)
+    corpus = _vec_frame(spark, np.arange(3000), vecs)
+    root = str(tmp_path / "store")
+    build_ivf_store(corpus.filter("vec_id < 2000"), root, nlist=64)
+    append_to_ivf_store(corpus.filter("vec_id >= 2000 AND vec_id < 2500"), root)
+    append_to_ivf_store(corpus.filter("vec_id >= 2500"), root)
+    cell_dirs = [
+        d
+        for d in os.listdir(os.path.join(current_index_dir(root), "assigned"))
+        if d.startswith("cell=")
+    ]
+    assert len(cell_dirs) > 32
+    q = pd.DataFrame(
+        {
+            "query_id": np.arange(10_000, 10_064),
+            "embedding": list(rng.standard_normal((64, 16)).astype(np.float32)),
+        }
+    )
+    sc = spark.sparkContext
+    group = f"ivf-probe-jobs-{os.getpid()}"
+    sc.setJobGroup(group, "ivf_store_topk job-count guard")
+    try:
+        got = ivf_store_topk(spark, root, q, k=10, nprobe=8).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(got) == 640
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_probe_scores_bit_identical_to_bruteforce(spark, tmp_path):
+    """At nprobe = nlist both probe verbs return exactly what a
+    brute-force cross join scored with ``_cosine_clamped`` returns —
+    same (query, id, rank) rows and the same cosine doubles — over a
+    store holding a zero-norm vector, a tombstoned id, and under a
+    ``where`` pre-filter."""
+    from pyspark.sql import Window
+
+    from python_openetl_spark.operators.ivf_store import (
+        _cosine_clamped,
+        delete_from_ivf_store,
+        ivf_store_range_search,
+    )
+
+    rng = np.random.default_rng(11)
+    n, dim = 400, 16
+    vecs = rng.standard_normal((n, dim)).astype(np.float32)
+    vecs[0] = 0.0  # zero-norm stored vector
+    ids = np.arange(n)
+    labels = (ids % 3).astype(np.int32)
+    corpus = _vec_frame(spark, ids, vecs, label=labels)
+    root = str(tmp_path / "store")
+    build_ivf_store(
+        corpus.filter("vec_id < 300"), root, nlist=8, attr_cols=("label",)
+    )
+    append_to_ivf_store(corpus.filter("vec_id >= 300"), root)
+    assert delete_from_ivf_store(spark, root, ids=[5, 303]) == 2
+
+    qvecs = rng.standard_normal((5, dim)).astype(np.float32)
+    qvecs[0] = vecs[7]  # query id 7 equals a stored id: excluded by id
+    qids = np.array([7, 20_001, 20_002, 20_003, 20_004])
+    q = pd.DataFrame({"query_id": qids, "embedding": list(qvecs)})
+    qdf = _vec_frame(spark, qids, qvecs).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
+    )
+    where = "label != 1"
+    live = corpus.filter(~F.col("vec_id").isin(5, 303)).filter(where)
+    brute = (
+        live.crossJoin(qdf)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            _cosine_clamped(F.col("embedding"), F.col("__qv")).alias("cos_sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+    ranked = brute.withColumn("rank", F.row_number().over(w))
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    for k in (12, 10_000):
+        got = ivf_store_topk(spark, root, q, k=k, nprobe=8, where=where)
+        want = ranked.filter(F.col("rank") <= k)
+        cols = ("query_id", "vec_id", "rank", "cos_sim")
+        assert rows(got, *cols) == rows(want, *cols)
+    got = ivf_store_range_search(spark, root, q, radius=0.0, nprobe=8, where=where)
+    want = brute.filter(F.col("cos_sim") >= 0.0)
+    cols = ("query_id", "vec_id", "cos_sim")
+    got_rows = rows(got, *cols)
+    assert got_rows == rows(want, *cols)
+    assert (7, 0, 0.0) in got_rows  # the zero-norm vector scores 0.0
+    assert all(r[1] not in (5, 303) for r in got_rows)
