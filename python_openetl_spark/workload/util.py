@@ -35,7 +35,8 @@ def stream_state_partitions(
     best at 8). Rounded to a power of two, floored at 4 (minimum
     commit parallelism), capped at the session's default parallelism
     so a cluster-sized replay scales partitions up with state volume
-    instead of pinning a fixture-sized constant.
+    instead of pinning a fixture-sized constant; with no active
+    session the cap is 32.
     ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides for production
     tuning."""
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")

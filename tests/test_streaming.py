@@ -1025,14 +1025,35 @@ def test_stream_state_partitions_derived_from_replay_volume(monkeypatch):
     # sizing tracks state volume (rows per micro-batch), not a constant:
     # JVM stateful rows target ~8k rows/partition/batch (floor 4),
     # python-state rows ~4k; env override wins (r14 verdict #4)
+    from types import SimpleNamespace
+
+    from pyspark.sql import SparkSession
+
     from python_openetl_spark.workload.util import stream_state_partitions
 
+    # the result is capped at the ACTIVE session's default parallelism,
+    # so whether a session-scoped `spark` fixture ran earlier would
+    # decide the answer; stub the session to pin the cap (32 = the
+    # no-session cap)
+    def active_session(parallelism):
+        stub = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=parallelism)
+        )
+        monkeypatch.setattr(
+            SparkSession, "getActiveSession", staticmethod(lambda: stub)
+        )
+
     monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    active_session(32)
     assert stream_state_partitions(13_316) == 4      # s13 shape @ sf0.1
     assert stream_state_partitions(25_000) == 4      # s15 shape @ sf0.1
     assert stream_state_partitions(60_000) == 8      # scales up with volume
     assert stream_state_partitions(33_333, python_state=True) == 8  # s11
     assert stream_state_partitions(0) == 4           # floor
+    active_session(4)
+    assert stream_state_partitions(60_000) == 4      # capped at parallelism
+    active_session(2)
+    assert stream_state_partitions(0) == 4           # floor wins over cap
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "16")
     assert stream_state_partitions(33_333) == 16
 
