@@ -51,6 +51,9 @@ their nearest EXISTING cell) until a rebuild. The build/append split
 makes the rebuild an explicit, schedulable operation instead of a
 per-query cost.
 
+Local filesystem only: the locks, the pointer and the pin files are
+the ``plans/commit.py`` primitives, and centroids are read with pyarrow.
+
 Reference parity: the reference has no vector surface; this extends
 its incremental-sync architecture (operations.py:515-609 delta
 pattern) to the ANN index the training-data pipeline needs.
@@ -61,8 +64,7 @@ from __future__ import annotations
 import json
 import os
 import re
-import time
-import uuid
+import time  # noqa: F401 -- tests expire lock waits via ivf_store.time.monotonic
 from typing import Iterator
 
 import numpy as np
@@ -72,6 +74,7 @@ from pyspark.sql import functions as F
 
 from python_openetl_spark.functions.vectors import cosine, dot, norm
 from python_openetl_spark.operators.materialize import pin
+from python_openetl_spark.plans.commit import file_lock, write_json
 
 
 def _cosine_clamped(a, b):
@@ -110,88 +113,46 @@ def _read_seq(idx_dir: str) -> int:
         return 0
 
 
-def _acquire_fs_lock(lock: str, *, timeout: float, what: str) -> None:
-    """O_EXCL lock-file acquire (same local-FS lock contract as
-    plans/versioned.py commit and the JSONL sink: real on POSIX,
-    advisory on stores without atomic create; a crashed holder leaves
-    the lock for manual removal — fail-loud, never fail-corrupt)."""
-    deadline = time.monotonic() + timeout
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-            return
-        except FileExistsError:
-            if time.monotonic() >= deadline:
-                raise RuntimeError(
-                    f"{what} lock held too long: {lock} "
-                    "(crashed writer? remove the lock file after "
-                    "verifying no write is in flight)"
-                )
-            time.sleep(0.05)
+def _write_lock(idx_dir: str):
+    """Store-level writer lock (a :func:`plans.commit.file_lock` on
+    ``_write.lock``) held across an ENTIRE append/tombstone write (seq
+    bump + parquet write + pin update), not just the generation counter
+    (r12 advice): two concurrent ``write.mode("append").parquet()`` jobs
+    on the same directory share the FileOutputCommitter ``_temporary``
+    staging dir (same appAttempt id in local mode), so one job's
+    commit/cleanup can drop or double-commit the other's staged files
+    even when their generations are distinct.
 
-
-class _write_lock:
-    """Store-level writer lock held across an ENTIRE append/tombstone
-    write (seq bump + parquet write + pin update), not just the
-    generation counter (r12 advice): two concurrent
-    ``write.mode("append").parquet()`` jobs on the same directory share
-    the FileOutputCommitter ``_temporary`` staging dir (same
-    appAttempt id in local mode), so one job's commit/cleanup can drop
-    or double-commit the other's staged files even when their
-    generations are distinct. Serializing the whole write is the only
-    data-layer-safe answer short of per-write staging dirs; the
-    timeout is sized for a real parquet append, not a counter bump.
-
-    The default timeout comes from ``SPARK_GRAFT_STORE_LOCK_TIMEOUT``
-    (seconds, default 120) so a deployment whose legitimate appends
-    run longer can size it to real write durations (r13 advice: at
-    100 TB a healthy parquet append can exceed any fixed constant, and
-    the timeout's error message tells a waiting writer to remove the
-    lock file — followed against a HEALTHY holder that would corrupt
-    the in-flight write). Every append/tombstone/rebuild path of both
-    stores constructs the lock through this one default."""
-
-    def __init__(self, idx_dir: str, timeout: float | None = None):
-        self._lock = os.path.join(idx_dir, "_write.lock")
-        if timeout is None:
-            timeout = float(
-                os.environ.get("SPARK_GRAFT_STORE_LOCK_TIMEOUT", "120")
-            )
-        self._timeout = timeout
-
-    def __enter__(self):
-        _acquire_fs_lock(self._lock, timeout=self._timeout, what="store write")
-        return self
-
-    def __exit__(self, *exc):
-        os.unlink(self._lock)
+    The timeout comes from ``SPARK_GRAFT_STORE_LOCK_TIMEOUT``
+    (seconds, default 120), sized for a real parquet append: at 100 TB
+    a healthy append can outlast any fixed constant, and the timeout
+    message tells a waiting writer to remove the lock file (r13
+    advice). Every append/tombstone/rebuild path of both stores takes
+    the lock through this one default."""
+    timeout = float(os.environ.get("SPARK_GRAFT_STORE_LOCK_TIMEOUT", "120"))
+    return file_lock(
+        os.path.join(idx_dir, "_write.lock"), timeout=timeout, what="store write"
+    )
 
 
 def _bump_seq(idx_dir: str) -> int:
     """Advance the version's write-generation counter under a
-    ``_seq.lock`` O_EXCL critical section.
+    ``_seq.lock`` file lock (:func:`plans.commit.file_lock`).
 
     The lock guarantees each appender a DISTINCT generation (r11
     verdict: two concurrent appenders that both read seq N would
     otherwise silently share write generation N+1, and a tombstone
     scoped at N+1 would then hide or resurrect the WRONG append's
-    rows); os.replace keeps readers untorn. Generation uniqueness
-    alone does NOT make concurrent appends safe at the data layer —
-    the parquet append itself must also be serialized, which is the
-    store-level :class:`_write_lock` every append/tombstone path holds
-    around its whole write."""
+    rows); the atomic JSON replace keeps readers untorn. Generation
+    uniqueness alone does NOT make concurrent appends safe at the data
+    layer — the parquet append itself must also be serialized, which
+    is the store-level :func:`_write_lock` every append/tombstone path
+    holds around its whole write."""
     lock = os.path.join(idx_dir, "_seq.lock")
-    _acquire_fs_lock(lock, timeout=10.0, what="write-generation")
-    try:
+    with file_lock(lock, timeout=10.0, what="write-generation"):
         n = _read_seq(idx_dir) + 1
-        tmp = os.path.join(idx_dir, f"{_SEQ_FILE}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            json.dump({"seq": n}, f)
-        os.replace(tmp, os.path.join(idx_dir, _SEQ_FILE))
+        write_json(os.path.join(idx_dir, _SEQ_FILE), {"seq": n})
         return n
-    finally:
-        os.unlink(lock)
 
 
 def _read_store_schemas(idx_dir: str) -> dict:
@@ -220,10 +181,7 @@ def _write_store_schemas(idx_dir: str, **schemas) -> None:
     for k, v in schemas.items():
         if v is not None:
             current[k] = v.jsonValue()
-    tmp = os.path.join(idx_dir, f"{_SCHEMA_FILE}.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(current, f)
-    os.replace(tmp, os.path.join(idx_dir, _SCHEMA_FILE))
+    write_json(os.path.join(idx_dir, _SCHEMA_FILE), current)
 
 
 def _pin_from_written(written_schema, deleted_id_col: str):
@@ -340,12 +298,9 @@ def _current_version(root: str) -> int:
 
 
 def _commit_version(root: str, version: int) -> None:
-    """One-rename commit (os.replace is atomic per POSIX): a reader of
+    """One-rename commit (:func:`plans.commit.write_json`): a reader of
     the pointer sees the old or the new version, never a torn file."""
-    tmp = os.path.join(root, f"{_POINTER}.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-    os.replace(tmp, os.path.join(root, _POINTER))
+    write_json(os.path.join(root, _POINTER), {"version": version})
 
 
 def current_index_dir(root: str) -> str:

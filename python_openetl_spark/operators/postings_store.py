@@ -74,8 +74,8 @@ partitions, tombstones ride one broadcast, and corpus scalars
 (N, Σdl) are a map-side-combined aggregate over the doc-count-sized
 doclens table — none of it touches raw text. Single-writer per store
 at a time (the `_write.lock` serializes appends/tombstones — the
-FileOutputCommitter staging-dir hazard, see ivf_store._write_lock);
-readers are never blocked.
+FileOutputCommitter staging-dir hazard, see ivf_store._write_lock;
+lock contract in plans/commit.py); readers are never blocked.
 
 Reference parity: the reference (tmccall8829/python-openetl) has no
 text retrieval; this extends its incremental-sync architecture
@@ -110,6 +110,7 @@ from python_openetl_spark.operators.retrieval import (
     build_postings,
     doc_lengths,
 )
+from python_openetl_spark.plans.commit import write_json
 
 _POSTINGS = "postings"
 _DOCLENS = "doclens"
@@ -163,10 +164,7 @@ def _read_meta(idx_dir: str) -> dict:
 
 
 def _write_meta(idx_dir: str, meta: dict) -> None:
-    tmp = os.path.join(idx_dir, f"{_META}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(idx_dir, _META))
+    write_json(os.path.join(idx_dir, _META), meta)
 
 
 def _pins_for(postings_written, doclens_written):

@@ -471,6 +471,12 @@ def ivf_topk(
     index, expressed as plain columnar layout + equi-join. Recall vs
     exact search is tunable with nprobe (see tests/test_similarity.py).
     """
+    from python_openetl_spark.operators.ivf_store import (
+        _arrow_relation,
+        _cosine_clamped,
+        _probe_cells,
+    )
+
     spark = corpus.sparkSession
     cnorm = _coarse_centroids(corpus, nlist, id_col, vec_col, seed)
     if queries_pdf.empty or cnorm is None:
@@ -482,14 +488,15 @@ def ivf_topk(
     assigned = _assign_cells(corpus, cnorm, id_col, vec_col)
 
     qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    probe = np.argsort(-(qnorm @ cnorm.T), axis=1)[:, :nprobe]
-    pairs = [(int(q), int(c)) for q, row in zip(qids, probe) for c in row]
-    probe_df = spark.createDataFrame(pairs, f"{query_id_col} long, cell int")
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, queries_pdf[vec_col])],
-        f"{query_id_col} long, __qv array<float>",
+    qmat = np.stack(queries_pdf[vec_col].to_numpy())
+    cells = np.arange(len(cnorm), dtype=np.int32)
+    probe = _probe_cells(qmat.astype(np.float64), cnorm, cells, nprobe)
+    probe_df = _arrow_relation(
+        spark,
+        **{query_id_col: np.repeat(qids, probe.shape[1]), "cell": probe.reshape(-1)},
+    )
+    qdf = _arrow_relation(
+        spark, **{query_id_col: qids, "__qv": qmat.astype(np.float32)}
     )
 
     scored = (
@@ -499,7 +506,7 @@ def ivf_topk(
         .select(
             query_id_col,
             id_col,
-            cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
+            _cosine_clamped(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))

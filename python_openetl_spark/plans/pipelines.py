@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from python_openetl_spark.functions.normalize import normalize_timestamps
 from python_openetl_spark.operators.merge import merge_upsert, temporal_delta
+from python_openetl_spark.plans.commit import swap_in
 
 
 #: Hive's null-partition directory token.
@@ -127,8 +128,8 @@ class ParquetTable:
     """A parquet-directory table with atomic overwrite.
 
     Plain parquet has no transactional MERGE, so mutation = rewrite +
-    swap: write the new version to a staging dir, move the old aside,
-    rename staging into place (POSIX rename is atomic per path). On an
+    swap: write the new version to a staging dir and swap it in
+    (``plans.commit.swap_in``: POSIX rename is atomic per path). On an
     object store you'd swap this class for a Delta/Iceberg table and
     keep every operator unchanged — they are pure DataFrame functions.
     """
@@ -155,16 +156,9 @@ class ParquetTable:
 
     def publish(self, staging: str) -> None:
         """Swap a directory made by :meth:`stage` in as the table."""
-        backup = f"{self.path}.bak-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, backup)
-        try:
-            os.rename(staging, self.path)
-        except Exception:
-            if os.path.exists(backup):  # roll back
-                os.rename(backup, self.path)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
+        backup = swap_in(staging, self.path)
+        if backup:
+            shutil.rmtree(backup, ignore_errors=True)
 
     def drop(self) -> None:
         """DROP TABLE IF EXISTS parity (/root/reference/pyopenetl/operations.py:357-366)."""
@@ -329,25 +323,17 @@ class ParquetTable:
             clear_rels = set()
 
         staging = f"{self.path}.staging-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
-        new_rels = {rel for rel, _vals in _list_partition_dirs(staging, partition_by)}
-
-        for rel in sorted(clear_rels | new_rels):
-            old = os.path.join(self.path, rel)
-            new = os.path.join(staging, rel)
-            backup = f"{old}.bak-{uuid.uuid4().hex[:8]}"
-            if os.path.exists(old):
-                os.rename(old, backup)
-            try:
-                if os.path.exists(new):
-                    os.makedirs(os.path.dirname(old), exist_ok=True)
-                    os.rename(new, old)
-            except Exception:
-                if os.path.exists(backup):  # roll this partition back
-                    os.rename(backup, old)
-                raise
-            shutil.rmtree(backup, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
+            new_rels = {rel for rel, _ in _list_partition_dirs(staging, partition_by)}
+            for rel in sorted(clear_rels | new_rels):
+                backup = swap_in(
+                    os.path.join(staging, rel), os.path.join(self.path, rel)
+                )
+                if backup:
+                    shutil.rmtree(backup, ignore_errors=True)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
         # clearing every partition with nothing new can leave a table no
         # reader can infer a schema from: keep one empty schema file
         if not any(

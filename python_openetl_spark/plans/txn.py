@@ -6,7 +6,9 @@ needs the same all-or-nothing guarantee when one logical update spans
 several tables — e.g. a fact table and its rollups must never be
 visible from different versions).
 
-Two-phase publish over ``ParquetTable``'s swap protocol:
+Two-phase publish over ``ParquetTable``'s swap protocol
+(:func:`plans.commit.swap_in`; ``plans/commit.py`` states the
+filesystem contract it relies on):
 
 1. **Prepare** — every DataFrame is fully materialized to its staging
    directory. All the compute and all the I/O failure surface lives
@@ -28,13 +30,14 @@ FAILURE atomicity: no crash leaves a mixed state behind.
 
 from __future__ import annotations
 
-import os
+import os  # noqa: F401 -- tests inject swap failures via txn.os.rename
 import shutil
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from python_openetl_spark.plans.commit import swap_in, undo_swap
 from python_openetl_spark.plans.pipelines import ParquetTable, write_staging
 
 
@@ -64,27 +67,13 @@ def publish_all(publishes: list[Publish]) -> None:
         raise
 
     # phase 2: swap all, rolling back completed swaps on any failure
-    done: list[tuple[str, str]] = []  # (path, backup)
+    done: list[tuple[str, str | None]] = []  # (path, backup)
     try:
         for p, staging in stagings:
-            backup = f"{p.table.path}.txnbak-{uuid.uuid4().hex[:8]}"
-            if os.path.exists(p.table.path):
-                os.rename(p.table.path, backup)
-            else:
-                backup = ""
-            try:
-                os.rename(staging, p.table.path)
-            except Exception:
-                if backup:
-                    os.rename(backup, p.table.path)
-                raise
-            done.append((p.table.path, backup))
-    except Exception:
-        # restore every table already swapped this commit
+            done.append((p.table.path, swap_in(staging, p.table.path)))
+    except BaseException:
         for path, backup in reversed(done):
-            shutil.rmtree(path, ignore_errors=True)
-            if backup:
-                os.rename(backup, path)
+            undo_swap(path, backup)
         for _p, staging in stagings:
             shutil.rmtree(staging, ignore_errors=True)
         raise

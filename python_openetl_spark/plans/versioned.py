@@ -25,27 +25,22 @@ than a single pointer to support concurrent writers and incremental
 metadata. Blind ``commit()`` assumes single-writer semantics (as every
 ParquetTable publish path does); ``commit(expected_version=...)`` adds
 the optimistic-concurrency tier — Delta's conflict detection reduced
-to a compare-and-set under an O_EXCL lock file (same local-FS lock
-contract as the JSONL sink): a racer whose snapshot went stale fails
-with ``ConcurrentCommitError`` instead of silently clobbering.
+to a compare-and-set under a lock file: a racer whose snapshot went
+stale fails with ``ConcurrentCommitError`` instead of silently
+clobbering. The lock, the pointer write and their filesystem contract
+live in ``plans/commit.py``.
 """
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-class ConcurrentCommitError(RuntimeError):
-    """Raised by ``commit(expected_version=...)`` when another writer
-    committed first — the caller re-reads, re-derives, retries (the
-    Delta conflict-resolution loop)."""
+from python_openetl_spark.plans.commit import ConcurrentCommitError, file_lock, write_json
 
 
 class VersionedTable:
@@ -67,10 +62,7 @@ class VersionedTable:
             return {"current": None, "versions": {}}
 
     def _commit_state(self, state: dict) -> None:
-        tmp = f"{self._pointer}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._pointer)  # the atomic commit
+        write_json(self._pointer, state)  # the atomic commit
 
     def current_version(self) -> int | None:
         return self._state()["current"]
@@ -132,21 +124,19 @@ class VersionedTable:
         ``expected_version`` opts into OPTIMISTIC CONCURRENCY: the
         publish succeeds only if the table is still at that version
         (what the writer read before deriving the staged data), checked
-        and published under an ``_commit.lock`` O_EXCL critical section
-        that covers only metadata — the data write happened in
-        :meth:`stage`, outside the lock. A stale snapshot raises
-        :class:`ConcurrentCommitError` and the caller retries from a
-        fresh read — Delta's conflict loop. Same lock contract as the
-        JSONL sink: real on a local/POSIX filesystem, advisory-only on
-        stores without atomic create (S3); a crashed holder leaves the
-        lock for manual removal (fail-loud, never fail-corrupt).
-        Without ``expected_version`` the blind single-writer path takes
-        no lock.
+        and published under a ``_commit.lock`` file lock
+        (``plans/commit.py``) that covers only metadata — the data
+        write happened in :meth:`stage`, outside the lock. A stale
+        snapshot raises :class:`ConcurrentCommitError` and the caller
+        retries from a fresh read — Delta's conflict loop. Without
+        ``expected_version`` the blind single-writer path takes no
+        lock.
         """
         try:
             if expected_version is None:
                 return self._publish_unlocked(staging, txn)
-            with self._commit_lock():
+            lock = os.path.join(self.path, "_commit.lock")
+            with file_lock(lock, timeout=10.0, what="commit"):
                 current = self._state()["current"] or 0
                 if current != expected_version:
                     raise ConcurrentCommitError(
@@ -157,27 +147,6 @@ class VersionedTable:
         finally:
             # no-op once the rename consumed it
             shutil.rmtree(staging, ignore_errors=True)
-
-    @contextlib.contextmanager
-    def _commit_lock(self):
-        lock = os.path.join(self.path, "_commit.lock")
-        deadline = time.monotonic() + 10.0
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-                break
-            except FileExistsError:
-                if time.monotonic() >= deadline:
-                    raise ConcurrentCommitError(
-                        f"commit lock held too long: {lock} (crashed "
-                        "writer? remove the lock file after verifying)"
-                    ) from None
-                time.sleep(0.05)
-        try:
-            yield
-        finally:
-            os.unlink(lock)
 
     def _publish_unlocked(self, staging: str, txn: str | None) -> int:
         state = self._state()

@@ -254,9 +254,9 @@ class JsonlWriter(DataSourceWriter):
     (stated) and str()-serializes as a Python repr.
 
     The sink is SINGLE-WRITER per destination directory: the driver
-    commit is serialized by an ``_commit.lock`` O_EXCL file and a
-    second concurrent committer fails loudly rather than interleave
-    part numbering (see ``commit``)."""
+    commit is serialized by an ``_commit.lock`` file lock
+    (``plans/commit.py``) and a second concurrent committer fails
+    loudly rather than interleave part numbering (see ``commit``)."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
         path = options.get("path")
@@ -289,38 +289,18 @@ class JsonlWriter(DataSourceWriter):
         return _PartFile(tmp, n)
 
     def commit(self, messages) -> None:
-        import shutil
-        import uuid
+        from python_openetl_spark.plans.commit import file_lock
 
         # SINGLE-WRITER CONTRACT (r10 verdict #7): the publish step
         # scans the directory to number new parts and to retire the old
         # generation, so two drivers committing into the same directory
         # concurrently could allocate the same part numbers. The
         # per-task temp files are collision-free by construction; the
-        # DRIVER-side commit is the critical section, guarded by an
-        # O_EXCL lock file. A crashed commit leaves the lock behind —
-        # remove `_commit.lock` manually after confirming no writer is
-        # alive (the same explicit-recovery rule as plans/txn staged
-        # dirs and vacuum_ivf_store).
+        # DRIVER-side commit is the critical section: a second committer
+        # fails at once (timeout 0) instead of waiting.
         lock = os.path.join(self.path, "_commit.lock")
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise RuntimeError(
-                f"openetl_jsonl: another writer holds {lock} — the sink "
-                "is single-writer per directory; if the previous commit "
-                "crashed, remove the lock file after confirming no "
-                "writer is alive"
-            ) from None
-        with os.fdopen(fd, "w") as lf:
-            lf.write(f"pid={os.getpid()}\n")
-        try:
+        with file_lock(lock, timeout=0, what="openetl_jsonl single-writer commit"):
             self._publish(messages)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
 
     def _publish(self, messages) -> None:
         import shutil

@@ -17,12 +17,13 @@ import os
 from pyspark.sql import DataFrame
 
 from python_openetl_spark.operators.merge import merge_upsert
+from python_openetl_spark.plans.commit import write_json
 from python_openetl_spark.plans.pipelines import ParquetTable
 
 
 class _BatchMarker:
     """Shared replay guard: the last applied batch id, stored as a JSON
-    marker file beside the table (atomic tmp-write + rename).
+    marker file beside the table (``plans.commit.write_json``).
 
     Scope: driver-local filesystem — valid exactly where ParquetTable
     itself is (single driver host, POSIX; see its docstring). On an
@@ -47,10 +48,7 @@ class _BatchMarker:
             return -1
 
     def _record_batch(self, batch_id: int) -> None:
-        tmp = self._marker_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self._marker_path)
+        write_json(self._marker_path, {"batch_id": batch_id})
 
 
 class Scd2Sink(_BatchMarker):
@@ -424,7 +422,7 @@ class IvfAppendSink:
     continuously; the quantizer retrains on a schedule, not per batch).
 
     Replay guard: a JSON batch marker (the _BatchMarker device —
-    atomic tmp-write + rename) at the STORE ROOT, not inside a version
+    ``plans.commit.write_json``) at the STORE ROOT, not inside a version
     directory, so replay protection survives a rebuild swapping the
     live version mid-stream. Spark's normal foreachBatch redelivery
     (same batch re-offered after a restart) no-ops on the marker. The
@@ -496,10 +494,7 @@ class IvfAppendSink:
         append_to_ivf_store(
             batch_df, self.root, id_col=self.id_col, vec_col=self.vec_col
         )
-        tmp = self._marker_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self._marker_path)
+        write_json(self._marker_path, {"batch_id": batch_id})
 
 
 class JoinViewSink:

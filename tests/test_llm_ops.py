@@ -134,6 +134,20 @@ def test_ivf_topk_recall_vs_exact(spark):
         assert set(full[full.query_id == qid].vec_id) == set(exact[exact.query_id == qid].vec_id)
 
 
+def test_ivf_topk_zero_query_scores_zero(spark):
+    """An all-zero query picks cells and scores with the clamped cosine
+    (0.0) instead of failing with DIVIDE_BY_ZERO under ANSI."""
+    import pandas as pd
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    dim = len(emb.first()["embedding"])
+    q = pd.DataFrame({"query_id": [-1], "embedding": [[0.0] * dim]})
+    rows = similarity.ivf_topk(emb, q, k=3, nlist=8, nprobe=2).collect()
+    assert len(rows) == 3
+    assert [r.cos_sim for r in rows] == [0.0, 0.0, 0.0]
+    assert [r["rank"] for r in rows] == [1, 2, 3]
+
+
 def test_multimodal_decode_stub(spark):
     docs = load_table(spark, SF_DIR, "documents").limit(20)
     payloads = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))

@@ -90,4 +90,4 @@ def test_publish_all_commit_failure_rolls_back_completed_swaps(
     # BOTH tables still show the pre-transaction contents
     assert [r.id for r in ta.read(spark).collect()] == [1]
     assert [r.id for r in tb.read(spark).collect()] == [2]
-    assert [n for n in os.listdir(tmp_path) if ".txn" in n] == []
+    assert [n for n in os.listdir(tmp_path) if ".txn" in n or ".bak" in n] == []
