@@ -71,6 +71,24 @@ def _nano_timestamp_columns(path: str) -> list[str]:
     return cols
 
 
+def parquet_files(path: str) -> list[str]:
+    """Every ``.parquet`` part file of a table, sorted: a directory is
+    walked recursively (partition subdirs included), skipping the
+    ``_``/``.``-prefixed names Spark's reader also ignores; a plain
+    file path is its own one-element list."""
+    if not os.path.isdir(path):
+        return [path]
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [
+            os.path.join(root, n)
+            for n in names
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        ]
+    return sorted(files)
+
+
 def _one_parquet_file(path: str) -> str:
     if os.path.isdir(path):
         for name in sorted(os.listdir(path)):

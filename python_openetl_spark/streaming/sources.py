@@ -55,11 +55,9 @@ def replay_rows_per_batch(path: str) -> float:
     partitions from the staged manifest itself."""
     import pyarrow.parquet as pq
 
-    files: list[str] = []
-    for root, _dirs, fnames in os.walk(path):
-        files += [
-            os.path.join(root, f) for f in fnames if f.endswith(".parquet")
-        ]
+    from python_openetl_spark.io import parquet_files
+
+    files = parquet_files(path)
     if not files:
         return 0.0
     total = sum(pq.ParquetFile(f).metadata.num_rows for f in files)

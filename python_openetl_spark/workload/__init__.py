@@ -55,15 +55,7 @@ from python_openetl_spark.workload import (
     udf_surface,
 )
 
-# Order is load-bearing: the driver's correctness gate checks the FIRST 50
-# entries of the aggregated dict in insertion order. Round 1 spent all 50
-# slots on `relational` (q00–q49); round 2 rotated the m*/d*/x*/mm*/s*/u*
-# families in (all green except 5 TIMESTAMP_NTZ errors + 2 rows-only).
-# Round 3's window (_WINDOW_R3): the 5 NTZ fixes + the 2 newly
-# oracle-ified rows first, then every query added in round 2 that has
-# never had a driver row (llm2/incremental2/streaming2/scale/llm3),
-# then timestamp-touching queries re-verified under the new NTZ fixture
-# data, then a representative spread of each family.
+# all_queries() lists these modules' queries in this order, after the window
 _MODULES = (
     incremental,
     llm,
@@ -81,177 +73,30 @@ _MODULES = (
     relational2,
     llm6,
     relational3,
-    # round-5 additions (production-recall bench twins; in _WINDOW_R5)
     llm7,
-    # round-5 post-window additions (rotate into _WINDOW_R6)
     relational4,
     llm8,
     llm9,
     relational5,
     incremental3,
-    # round-6 post-window additions (rotate into _WINDOW_R7)
     relational6,
     llm10,
-    # round-8 post-window additions (rotate into _WINDOW_R9)
     llm11,
     relational7,
-    # round-9 post-window additions (rotate into _WINDOW_R10)
     llm12,
-    # round-10 post-window additions (rotate into _WINDOW_R11)
     relational8,
     llm13,
-    # round-11 post-window additions (rotate into _WINDOW_R12)
     incremental4,
     llm14,
-    # round-12 post-window additions (rotate into _WINDOW_R13)
     llm15,
-    # round-13 additions (in _WINDOW_R13)
     llm16,
-    # round-14 post-window additions (rotate into _WINDOW_R15)
     llm17,
 )
 
-# Round 4's window (_WINDOW_R4), per the r3 verdict's plan:
-#   1. the two queries that have NEVER had a driver row (d30/m13 landed
-#      after _WINDOW_R3 froze) + the two r3 reds k01/k03 (decimal
-#      canonicalization fixed: comparison projection now DOUBLE on both
-#      sides) + the new k04 staging-swap parquet row;
-#   2. every relational q* row whose only driver check predates the
-#      round-2 fixture timestamp regeneration (43 rows), with the
-#      date-predicate-heavy TPC-H shapes FIRST (q01, q30, q31,
-#      q39-q44 — the most likely silent casualties of the regen),
-#      plus the r1-only merges m03/m04.
-# That is exactly 50.
-#
-# Round 5's window (_WINDOW_R5), per the r4 verdict's plan item 1:
-#   1. the 24 queries that have NEVER had a driver row (round-4
-#      post-window additions, all green in the independently re-run
-#      sf0.1 soak): d31-d38, e02-e04, q54-q59, x09, x10, mm04, u04,
-#      s07, m14, k05;
-#   2. the 24 still-stale rows whose only driver check is r2
-#      (mm01-03, u01-03, d02-05, d07-11, d13, d15-17, x01-04, x06),
-#      re-proven under r5-current fixtures;
-#   3. the two new round-5 production-recall bench twins (x04p/d14p),
-#      so they get driver rows immediately instead of waiting for R6.
-# That is exactly 50; after R5 every query declared through round 4 has
-# a driver row from r3, r4, or r5, and nothing predates r3.
-#
-# Round 6's window (_WINDOW_R6), per the r5 verdict's plan item 1:
-#   1. the 35 round-5 post-window additions that have NEVER had a
-#      driver row (q60-q68, d39-d50, e05, x11-x13, m15-m18, s08,
-#      u05-u06, k06-k08 — all green in the judge's independently-run
-#      sf0.1 soak);
-#   2. the 15 oldest r3-checked rows per COVERAGE.md's ledger
-#      (d01, d06, d12, d14, d18-d24, e01, k02, x05, x07).
-# That is exactly 50; after R6 every one of the 183 r5-era queries has
-# had a driver row at least once, and nothing predates r3 except rows
-# already re-proven in r4/r5.
-#
-# Round 8's window (_WINDOW_R8), per the r7 verdict's plan item 1:
-#   1. the 17 rows lacking recent (or any) driver evidence — the 3
-#      r3-checked leftovers (d27-d29) plus the 14 round-7 post-window
-#      additions (x15p, x17, x18, k13, k14, k15, q74, q75, q76, m20,
-#      s10, s11, d52, mm05; k13 is rows-only by design — all green in
-#      the judge's independently-run sf0.1 soak);
-#   2. 33 of the oldest r4-checked rows in ledger priority order
-#      (date-predicate-heavy TPC-H shapes first, then m13, then the
-#      remaining q* in ledger order). The verdict's fill list named
-#      m03/m04, but those turned green in CORRECTNESS_r07 (they sat in
-#      _WINDOW_R7), so their latest check is r7 — the next-oldest
-#      r4 row in ledger order (q29) takes the 33rd slot instead.
-# That is exactly 50; after a green R8 every one of the 215 queries
-# has driver evidence, and the queries with the stalest checks are the
-# remaining r4 rows (q00, q32-q36, q38, q45, q46, q48, q49, d30,
-# k01, k03, k04) — they lead _WINDOW_R9 alongside any round-8
-# post-window additions.
-#
-# Round 9's window (_WINDOW_R9), per the rotation rule (never-checked
-# rows lead, oldest evidence fills):
-#   1. the 10 round-8 post-window additions that have never had a
-#      driver row (x19, s12, d53, e08, mm06, x20, d54, q77, q78, k16 —
-#      all green in the sf0.1 soak; k13 is excluded because it already
-#      has an r8 driver row, rows-only by design);
-#   2. the 15 remaining r4-checked rows (q00, q32-q36, q38, q45, q46,
-#      q48, q49, d30, k01, k03, k04);
-#   3. the first 25 r5-checked rows in COVERAGE.md ledger order
-#      (d02-d17 family, d31-d38, e02-e04).
-# That is exactly 50; after a green R9 nothing predates r5.
-#
-# Round 10's window (_WINDOW_R10), per the rotation rule
-# (never-checked rows lead, oldest evidence fills):
-#   1. the 10 round-9 post-window additions that have never had a
-#      driver row (d55, d56, x21, x22, s13, q79, q80, mm07, e09,
-#      m21 — all oracle/hostile-checked and independently
-#      sf0.1-soaked by the round-9 judge; k13 stays excluded:
-#      rows-only by design with an r8 driver row);
-#   2. the 25 remaining r5-checked rows in COVERAGE.md ledger order
-#      (k05, m14, mm01-mm04, q54-q59, s07, u01-u04, x01-x04, x04p,
-#      x06, x09, x10);
-#   3. the first 15 r6-checked rows in ledger order (d01, d06, d12,
-#      d14, d18-d24, d39-d42).
-# That is exactly 50; after a green R10 every one of the 235 queries
-# has driver evidence and nothing predates r6.
-#
-# Round 11's window (_WINDOW_R11), per the rotation rule
-# (never-checked rows lead, oldest evidence fills):
-#   1. the 12 round-10 post-window additions that have never had a
-#      driver row (q81, q82, x23, d57, s14, s15, s16, mm08, k17, k18,
-#      m22, e10 — all oracle/soak-verified in round 10 AND
-#      independently sf0.1-soaked by the round-10 judge; k13 stays
-#      excluded: rows-only by design with an r8 driver row);
-#   2. the 35 remaining r6-checked rows in ledger order (d43-d50,
-#      e01, e05, k02, k06-k08, m15-m18, q60-q68, s08, u05, u06,
-#      x05, x07, x11-x13);
-#   3. the first 3 r7-checked rows in ledger order (d25, d26, d51).
-# That is exactly 50; after a green R11 nothing predates r7.
-#
-# Round 12's window (_WINDOW_R12), per the rotation rule
-# (never-checked rows lead, oldest evidence fills):
-#   1. the 18 round-11 post-window additions that have never had a
-#      driver row (q83-q87, m23, d58-d61, k19, x24, x25, s17, u08,
-#      u09, mm09, e11 — all oracle/soak-verified in round 11 AND
-#      independently sf0.01-soaked by the round-11 judge; k13 stays
-#      excluded: rows-only by design with an r8 driver row);
-#   2. the first 32 r7-checked rows in ledger order (e06, e07,
-#      k09-k12, m01-m12, m19, q02, q12, q24, q27, q28, q37, q47,
-#      q50-q53, q69, q70).
-# That is exactly 50; after a green R12 every query except k13 has
-# driver evidence and only 15 r7-checked rows (q71-q73, s01-s06,
-# s09, u07, x08, x14-x16) plus the round-12 post-window additions
-# remain for _WINDOW_R13's lead.
-#
-# Round 13's window (_WINDOW_R13), per the rotation rule
-# (never-checked rows lead, oldest evidence fills):
-#   1. the 2 round-12 post-window additions that have never had a
-#      driver row (x26, x27 — soak-verified at sf0.01 by the round-12
-#      judge) plus the new round-13 x28 (postings-store lifecycle,
-#      oracle/hostile-checked this round);
-#   2. the 15 remaining r7-checked rows in ledger order (q71-q73,
-#      s01-s06, s09, u07, x08, x14-x16);
-#   3. the first 32 r8-checked rows in ledger order (d27-d29, d52,
-#      k14, k15, m13, m20, mm05, q01, q03-q11, q13-q23, q25, q26).
-# That is exactly 50; after a green R13 nothing predates r8 except
-# the 17 remaining r8 rows (q29-q31, q39-q44, q74-q76, s10, s11,
-# x15p, x17, x18) that lead _WINDOW_R14's fill.
-# Round 14's window (_WINDOW_R14), per the rotation rule
-# (never-checked rows lead, oldest evidence fills) and the r13
-# verdict's plan item 1:
-#   1. the 1 round-13 post-window addition that has never had a
-#      driver row (x29 — oracle-checked at sf0.001/0.01 in round 13
-#      AND independently sf0.01-soak-verified by the round-13 judge;
-#      k13 stays excluded: rows-only by design with an r8 driver row);
-#   2. the 17 remaining r8-checked rows in ledger order (q29-q31,
-#      q39-q44, q74-q76, s10, s11, x15p, x17, x18);
-#   3. the first 32 r9-checked rows in ledger order (d02-d05,
-#      d07-d11, d13, d14p, d15-d17, d30-d38 family, d53, d54,
-#      e02-e04, e08, k01, k03, k04).
-# That is exactly 50; after a green R14 nothing predates r9 except
-# the 18 remaining r9 rows (k16, mm06, q00, q32-q36, q38, q45, q46,
-# q48, q49, q77, q78, s12, x19, x20) that lead _WINDOW_R15's fill.
+# The driver's correctness gate checks only the FIRST 50 entries of
+# all_queries(), in insertion order: this window is those 50 rows.
 _WINDOW_R14 = (
-    # never driver-checked (round-13 post-window addition)
     "x29_phrase_store_contamination",
-    # oldest (r8-checked) rows in ledger order (17)
     "q29_histogram", "q30_volume_shipping", "q31_market_share",
     "q39_returned_item_revenue", "q40_profit_by_nation_year",
     "q41_small_quantity_revenue", "q42_large_volume_orders",
@@ -260,7 +105,6 @@ _WINDOW_R14 = (
     "s10_stream_versioned_cdc", "s11_stateful_running_state",
     "x15p_ivf_store_production_probe", "x17_cell_knn_join",
     "x18_ivfpq_store_topk",
-    # oldest (r9-checked) rows in ledger order (32)
     "d02_text_stats", "d03_language_id", "d04_quality_score",
     "d05_fingerprint", "d07_ngram_jaccard_pairs", "d08_simhash",
     "d09_simhash_near_pairs", "d10_hash_sample", "d11_stratified_sample",
@@ -274,333 +118,6 @@ _WINDOW_R14 = (
     "e02_exact_contamination", "e03_neardup_contamination",
     "e04_build_training_set", "e08_temperature_mixture",
     "k01_csv_roundtrip", "k03_orc_roundtrip", "k04_parquet_roundtrip",
-)
-#
-_WINDOW_R13 = (
-    # never driver-checked (round-12 post-window + round-13 additions)
-    "x26_feature_rerank", "x27_retrieval_quality_report",
-    "x28_postings_store_topk",
-    # oldest (r7-checked) rows in ledger order (15)
-    "q71_rank_functions", "q72_windowed_distinct", "q73_try_arithmetic",
-    "s01_tumbling_window", "s02_sliding_window", "s03_session_window",
-    "s04_first_arrival_dedup", "s05_stream_static_enrichment",
-    "s06_interval_join", "s09_chained_window_stats",
-    "u07_apply_in_arrow_range", "x08_pq_topk", "x14_filtered_topk",
-    "x15_incremental_ivf_topk", "x16_knn_join",
-    # oldest (r8-checked) rows in ledger order (32)
-    "d27_repeated_ngram_spans", "d28_bloom_incremental_dedup",
-    "d29_incremental_near_dedup", "d52_embedding_drift_psi",
-    "k14_compaction_report", "k15_avro_roundtrip",
-    "m13_schema_evolution_merge", "m20_version_retention",
-    "mm05_phash_near_dup", "q01_pricing_summary", "q03_top_orders",
-    "q04_revenue_by_nation", "q05_top_order_per_customer",
-    "q06_running_total", "q07_set_ops", "q08_distinct_counts",
-    "q09_customers_without_orders", "q10_conditional_agg",
-    "q11_string_functions", "q13_json_extract", "q14_in_list",
-    "q15_union_distinct", "q16_rollup", "q17_having",
-    "q18_exists_subquery", "q19_theta_join_ranges", "q20_cube",
-    "q21_grouping_sets", "q22_pivot", "q23_percentiles",
-    "q25_lateral_explode", "q26_scalar_subquery",
-)
-#
-_WINDOW_R12 = (
-    # never driver-checked (round-11 post-window additions)
-    "q83_first_touch_funnel", "q84_first_touch_dropoff_report",
-    "q85_funnel_time_to_convert", "q86_important_parts",
-    "q87_waiting_suppliers", "m23_cdc_into_join_view",
-    "d58_dsir_importance_select", "d59_weighted_sample",
-    "d60_source_overlap_sketch", "d61_dup_graph_triangles",
-    "k19_bloom_pruned_scan", "x24_store_update_probe",
-    "x25_ann_recall_report", "s17_stream_join_view",
-    "u08_iterator_pandas_udf", "u09_arrow_python_udf", "mm09_patch_grid",
-    "e11_weighted_epoch_corpus",
-    # oldest (r7-checked) rows in ledger order (32)
-    "e06_token_budget_selection", "e07_corpus_version_drift",
-    "k09_dynamic_partition_pruned_join", "k10_tarball_ingest",
-    "k11_remote_csv_seed", "k12_registry_dispatch", "m01_merge_upsert",
-    "m02_delta_dedup_latest", "m03_propagate_deletes",
-    "m04_safe_append_conflicts", "m05_temporal_delta", "m06_scd2_merge",
-    "m07_incremental_rollup", "m08_snapshot_diff", "m09_seed_roundtrip",
-    "m10_upsert_sync_roundtrip", "m11_normalize_timestamps",
-    "m12_apply_cdc", "m19_version_changes", "q02_delta_scan",
-    "q12_daily_rollup", "q24_asof_join", "q27_date_functions",
-    "q28_approx_aggs", "q37_sessionize", "q47_window_frames",
-    "q50_time_range_frame", "q51_asof_forward_tolerance",
-    "q52_salted_skew_join", "q53_salted_distinct_users",
-    "q69_hierarchy_depths", "q70_bag_set_ops",
-)
-#
-_WINDOW_R11 = (
-    # never driver-checked (round-10 post-window additions)
-    "q81_multi_step_funnel", "q82_funnel_dropoff_report",
-    "x23_store_delete_probe", "d57_perplexity_buckets",
-    "s14_stream_stream_left_join", "s15_stream_session_windows",
-    "s16_stream_python_datasource",
-    "mm08_audio_constellation_near_dup", "k17_python_datasource_scan",
-    "k18_python_datasource_write_roundtrip",
-    "m22_incremental_join_view", "e10_ccnet_quality_corpus",
-    # remaining r6-checked rows in ledger order (35)
-    "d43_corpus_drift_kl", "d44_domain_cap", "d45_pseudonymize",
-    "d46_bpe_merge_train", "d47_quality_canonical_corpus",
-    "d48_cross_doc_repeated_spans", "d49_balanced_shards",
-    "d50_gopher_quality_gate", "e01_prepare_corpus",
-    "e05_dataset_card", "k02_json_roundtrip",
-    "k06_zorder_layout_scan", "k07_hive_partition_pruned_scan",
-    "k08_permissive_csv_ingest", "m15_multi_table_publish",
-    "m16_time_travel", "m17_bucketed_colocated_join",
-    "m18_cdc_rollup_maintenance", "q60_data_quality_report",
-    "q61_conversion_funnel", "q62_cohort_retention",
-    "q63_gap_fill_daily_revenue", "q64_asof_nearest",
-    "q65_quarantine_rows", "q66_customer_value_deciles",
-    "q67_interval_concurrency", "q68_mad_outliers",
-    "s08_watermark_scoped_dedup", "u05_map_in_arrow",
-    "u06_grouped_agg_trimmed_mean", "x05_ivf_topk",
-    "x07_ivf_full_probe", "x11_maxsim_topk", "x12_matryoshka_topk",
-    "x13_quantized_topk",
-    # oldest r7-checked rows in ledger order (3)
-    "d25_kmeans_assign", "d26_semantic_dedup", "d51_lexical_richness",
-)
-#
-_WINDOW_R10 = (
-    # never driver-checked (round-9 post-window additions)
-    "d55_paragraph_dedup", "d56_epoch_mixture",
-    "x21_store_range_search", "x22_store_knn_join",
-    "s13_stream_stream_interval_join", "q79_regression_aggs",
-    "q80_strict_sequence_funnel", "mm07_cdc_offset_invariant_dedup",
-    "e09_dedup_temperature_corpus", "m21_versioned_clone",
-    # oldest r5-checked rows in ledger order (25)
-    "k05_manifest_pruned_scan", "m14_partition_overwrite",
-    "mm01_binary_payload_stats", "mm02_image_decode",
-    "mm03_frame_sample", "mm04_modality_dispatch",
-    "q54_order_priority_checking", "q55_priority_shipping",
-    "q56_supplier_cnt_by_part", "q57_part_promotion_suppliers",
-    "q58_hll_distinct_sketch", "q59_approx_quantile_sketch",
-    "s07_outer_interval_join",
-    "u01_pandas_udf_norm", "u02_apply_in_pandas_zscore",
-    "u03_python_udf_priority", "u04_python_udtf_terms",
-    "x01_cosine_topk", "x02_cosine_pairs_exact",
-    "x03_cosine_topk_arrow", "x04_lsh_cosine_pairs",
-    "x04p_lsh_production_recall", "x06_quantize_embeddings",
-    "x09_ivf_pq_topk", "x10_hybrid_search_rrf",
-    # oldest r6-checked rows in ledger order (15)
-    "d01_exact_dedup", "d06_minhash_lsh_candidates",
-    "d12_dup_clusters", "d14_embedding_dup_clusters",
-    "d18_repetition_stats", "d19_contamination_check",
-    "d20_pii_redaction", "d21_sequence_packing",
-    "d22_mixture_resample", "d23_incremental_dedup",
-    "d24_training_shuffle", "d39_url_dedup", "d40_pagerank",
-    "d41_blocked_fuzzy_pairs", "d42_k_anonymity",
-)
-#
-_WINDOW_R9 = (
-    # never driver-checked (round-8 post-window additions)
-    "x19_knn_join_linkage", "s12_stream_ivf_ingest",
-    "d53_ngram_novelty", "e08_temperature_mixture",
-    "mm06_video_frame_near_dup", "x20_filtered_store_probe",
-    "d54_winnowing_fingerprints", "q77_linear_interpolation",
-    "q78_sliding_median", "k16_jdbc_catalog_scan",
-    # last r4-checked rows, rotated back through (15)
-    "q00_full_scan", "q32_profile", "q33_binned_range_join",
-    "q34_custdist", "q35_waiting_supplier",
-    "q36_global_sales_opportunity", "q38_unpivot", "q45_top_supplier",
-    "q46_best_supplier_per_part", "q48_stats_aggs",
-    "q49_argmax_per_group", "d30_vocab_encode",
-    "k01_csv_roundtrip", "k03_orc_roundtrip", "k04_parquet_roundtrip",
-    # oldest r5-checked rows in ledger order (25)
-    "d02_text_stats", "d03_language_id", "d04_quality_score",
-    "d05_fingerprint", "d07_ngram_jaccard_pairs", "d08_simhash",
-    "d09_simhash_near_pairs", "d10_hash_sample",
-    "d11_stratified_sample", "d13_canonical_corpus",
-    "d14p_dup_clusters_production", "d15_rolling_fingerprint",
-    "d16_token_frequency", "d17_tfidf_top_terms",
-    "d31_leakage_safe_split", "d32_unigram_logprob",
-    "d33_cms_heavy_hitters", "d34_bm25_topk", "d35_chunk_documents",
-    "d36_incremental_postings", "d37_curriculum_mixture",
-    "d38_containment_pairs", "e02_exact_contamination",
-    "e03_neardup_contamination", "e04_build_training_set",
-)
-#
-_WINDOW_R8 = (
-    # never driver-checked / r3-stale (lead slots)
-    "d27_repeated_ngram_spans", "d28_bloom_incremental_dedup",
-    "d29_incremental_near_dedup",
-    "x15p_ivf_store_production_probe", "x17_cell_knn_join",
-    "x18_ivfpq_store_topk",
-    "k13_doctor_report", "k14_compaction_report", "k15_avro_roundtrip",
-    "q74_subtree_rollup", "q75_variant_shred", "q76_locf_forward_fill",
-    "m20_version_retention",
-    "s10_stream_versioned_cdc", "s11_stateful_running_state",
-    "d52_embedding_drift_psi", "mm05_phash_near_dup",
-    # oldest r4-checked rows, rotated back through (33)
-    "q01_pricing_summary", "q03_top_orders", "q04_revenue_by_nation",
-    "q30_volume_shipping", "q31_market_share",
-    "q39_returned_item_revenue", "q40_profit_by_nation_year",
-    "q41_small_quantity_revenue", "q42_large_volume_orders",
-    "q43_disjunctive_predicates", "q44_promo_revenue",
-    "m13_schema_evolution_merge",
-    "q05_top_order_per_customer", "q06_running_total", "q07_set_ops",
-    "q08_distinct_counts", "q09_customers_without_orders",
-    "q10_conditional_agg", "q11_string_functions",
-    "q13_json_extract", "q14_in_list", "q15_union_distinct",
-    "q16_rollup", "q17_having", "q18_exists_subquery",
-    "q19_theta_join_ranges", "q20_cube", "q21_grouping_sets",
-    "q22_pivot", "q23_percentiles", "q25_lateral_explode",
-    "q26_scalar_subquery", "q29_histogram",
-)
-#
-# Round 7's window (_WINDOW_R7), per the r6 verdict's plan item 1:
-#   1. the 18 round-6 post-window additions that have never had a
-#      driver row — q69-q73, d51, x14-x16, e06, e07, m19, s09,
-#      k09-k12, u07 (all green in the judge's independently-run sf0.1
-#      soak);
-#   2. 32 of the 35 remaining r3-checked rows (m01-m12, q02, q12, q24,
-#      q27/q28, q37, q47, q50-q53, s01-s06, d25/d26, x08 — see
-#      COVERAGE.md's ledger).
-# That is exactly 50; the 3 left over (d27-d29) lead _WINDOW_R8
-# alongside any round-7 post-window additions.
-_WINDOW_R7 = (
-    # never driver-checked (round-6 post-window additions)
-    "q69_hierarchy_depths", "q70_bag_set_ops", "q71_rank_functions",
-    "q72_windowed_distinct", "q73_try_arithmetic",
-    "d51_lexical_richness",
-    "x14_filtered_topk", "x15_incremental_ivf_topk", "x16_knn_join",
-    "e06_token_budget_selection", "e07_corpus_version_drift",
-    "m19_version_changes",
-    "s09_chained_window_stats",
-    "k09_dynamic_partition_pruned_join", "k10_tarball_ingest",
-    "k11_remote_csv_seed", "k12_registry_dispatch",
-    "u07_apply_in_arrow_range",
-    # oldest r3-checked rows, rotated back through (32 of 35;
-    # d27-d29 lead _WINDOW_R8)
-    "m01_merge_upsert", "m02_delta_dedup_latest",
-    "m03_propagate_deletes", "m04_safe_append_conflicts",
-    "m05_temporal_delta", "m06_scd2_merge", "m07_incremental_rollup",
-    "m08_snapshot_diff", "m09_seed_roundtrip",
-    "m10_upsert_sync_roundtrip", "m11_normalize_timestamps",
-    "m12_apply_cdc",
-    "q02_delta_scan", "q12_daily_rollup", "q24_asof_join",
-    "q27_date_functions", "q28_approx_aggs", "q37_sessionize",
-    "q47_window_frames", "q50_time_range_frame",
-    "q51_asof_forward_tolerance", "q52_salted_skew_join",
-    "q53_salted_distinct_users",
-    "s01_tumbling_window", "s02_sliding_window", "s03_session_window",
-    "s04_first_arrival_dedup", "s05_stream_static_enrichment",
-    "s06_interval_join",
-    "d25_kmeans_assign", "d26_semantic_dedup",
-    "x08_pq_topk",
-)
-
-_WINDOW_R6 = (
-    # never driver-checked (round-5 post-window additions)
-    "q60_data_quality_report", "q61_conversion_funnel",
-    "q62_cohort_retention", "q63_gap_fill_daily_revenue",
-    "q64_asof_nearest", "q65_quarantine_rows",
-    "q66_customer_value_deciles", "q67_interval_concurrency",
-    "q68_mad_outliers",
-    "d39_url_dedup", "d40_pagerank", "d41_blocked_fuzzy_pairs",
-    "d42_k_anonymity", "d43_corpus_drift_kl", "d44_domain_cap",
-    "d45_pseudonymize", "d46_bpe_merge_train",
-    "d47_quality_canonical_corpus", "d48_cross_doc_repeated_spans",
-    "d49_balanced_shards", "d50_gopher_quality_gate",
-    "e05_dataset_card",
-    "x11_maxsim_topk", "x12_matryoshka_topk", "x13_quantized_topk",
-    "m15_multi_table_publish", "m16_time_travel",
-    "m17_bucketed_colocated_join", "m18_cdc_rollup_maintenance",
-    "s08_watermark_scoped_dedup",
-    "u05_map_in_arrow", "u06_grouped_agg_trimmed_mean",
-    "k06_zorder_layout_scan", "k07_hive_partition_pruned_scan",
-    "k08_permissive_csv_ingest",
-    # oldest r3-checked rows, rotated back through
-    "d01_exact_dedup", "d06_minhash_lsh_candidates", "d12_dup_clusters",
-    "d14_embedding_dup_clusters", "d18_repetition_stats",
-    "d19_contamination_check", "d20_pii_redaction",
-    "d21_sequence_packing", "d22_mixture_resample",
-    "d23_incremental_dedup", "d24_training_shuffle",
-    "e01_prepare_corpus", "k02_json_roundtrip",
-    "x05_ivf_topk", "x07_ivf_full_probe",
-)
-
-_WINDOW_R5 = (
-    # never driver-checked (round-4 post-window additions)
-    "d31_leakage_safe_split", "d32_unigram_logprob", "d33_cms_heavy_hitters",
-    "d34_bm25_topk", "d35_chunk_documents", "d36_incremental_postings",
-    "d37_curriculum_mixture", "d38_containment_pairs",
-    "e02_exact_contamination", "e03_neardup_contamination",
-    "e04_build_training_set",
-    "q54_order_priority_checking", "q55_priority_shipping",
-    "q56_supplier_cnt_by_part", "q57_part_promotion_suppliers",
-    "q58_hll_distinct_sketch", "q59_approx_quantile_sketch",
-    "x09_ivf_pq_topk", "x10_hybrid_search_rrf", "mm04_modality_dispatch",
-    "u04_python_udtf_terms", "s07_outer_interval_join",
-    "m14_partition_overwrite", "k05_manifest_pruned_scan",
-    # stale since r2: re-proven under r5-current fixtures
-    "mm01_binary_payload_stats", "mm02_image_decode", "mm03_frame_sample",
-    "u01_pandas_udf_norm", "u02_apply_in_pandas_zscore",
-    "u03_python_udf_priority",
-    "d02_text_stats", "d03_language_id", "d04_quality_score",
-    "d05_fingerprint", "d07_ngram_jaccard_pairs", "d08_simhash",
-    "d09_simhash_near_pairs", "d10_hash_sample", "d11_stratified_sample",
-    "d13_canonical_corpus", "d15_rolling_fingerprint",
-    "d16_token_frequency", "d17_tfidf_top_terms",
-    "x01_cosine_topk", "x02_cosine_pairs_exact", "x03_cosine_topk_arrow",
-    "x04_lsh_cosine_pairs", "x06_quantize_embeddings",
-    # new round-5 production-recall bench twins
-    "x04p_lsh_production_recall", "d14p_dup_clusters_production",
-)
-
-_WINDOW_R4 = (
-    # never driver-checked / fixed reds / new
-    "d30_vocab_encode", "m13_schema_evolution_merge",
-    "k01_csv_roundtrip", "k03_orc_roundtrip", "k04_parquet_roundtrip",
-    # date-predicate-heavy TPC-H, stale since r1
-    "q01_pricing_summary", "q30_volume_shipping", "q31_market_share",
-    "q39_returned_item_revenue", "q40_profit_by_nation_year",
-    "q41_small_quantity_revenue", "q42_large_volume_orders",
-    "q43_disjunctive_predicates", "q44_promo_revenue",
-    # r1-only merge rows (timestamp-touching)
-    "m03_propagate_deletes", "m04_safe_append_conflicts",
-    # remaining stale-r1 relational rows
-    "q00_full_scan", "q03_top_orders", "q04_revenue_by_nation",
-    "q05_top_order_per_customer", "q06_running_total", "q07_set_ops",
-    "q08_distinct_counts", "q09_customers_without_orders",
-    "q10_conditional_agg", "q11_string_functions", "q13_json_extract",
-    "q14_in_list", "q15_union_distinct", "q16_rollup", "q17_having",
-    "q18_exists_subquery", "q19_theta_join_ranges", "q20_cube",
-    "q21_grouping_sets", "q22_pivot", "q23_percentiles",
-    "q25_lateral_explode", "q26_scalar_subquery", "q29_histogram",
-    "q32_profile", "q33_binned_range_join", "q34_custdist",
-    "q35_waiting_supplier", "q36_global_sales_opportunity",
-    "q38_unpivot", "q45_top_supplier", "q46_best_supplier_per_part",
-    "q48_stats_aggs", "q49_argmax_per_group",
-)
-
-_WINDOW_R3 = (
-    # fixed this round (driver-red in r02)
-    "m02_delta_dedup_latest", "s04_first_arrival_dedup", "q37_sessionize",
-    "q50_time_range_frame", "q51_asof_forward_tolerance",
-    "q28_approx_aggs", "x05_ivf_topk",
-    # never driver-checked (added in round 2 past the window)
-    "d18_repetition_stats", "d19_contamination_check", "d20_pii_redaction",
-    "d21_sequence_packing", "d22_mixture_resample", "x07_ivf_full_probe",
-    "m12_apply_cdc", "s05_stream_static_enrichment", "s06_interval_join",
-    "q52_salted_skew_join", "q53_salted_distinct_users",
-    "d23_incremental_dedup", "d24_training_shuffle", "e01_prepare_corpus",
-    # timestamp-sensitive: re-verify under the NTZ fixture regeneration
-    "q02_delta_scan", "q12_daily_rollup", "q24_asof_join", "q27_date_functions",
-    "s01_tumbling_window", "s02_sliding_window", "s03_session_window",
-    "m01_merge_upsert", "m05_temporal_delta", "m06_scd2_merge",
-    "m07_incremental_rollup", "m08_snapshot_diff", "m09_seed_roundtrip",
-    "m10_upsert_sync_roundtrip", "m11_normalize_timestamps",
-    # representative spread of each family
-    "q47_window_frames",
-    "d01_exact_dedup", "d06_minhash_lsh_candidates", "d12_dup_clusters",
-    "d14_embedding_dup_clusters",
-    # round-3 additions: kmeans/semantic dedup, PQ, repeated spans,
-    # Bloom dedup, format sinks
-    "d25_kmeans_assign", "d26_semantic_dedup", "x08_pq_topk",
-    "d27_repeated_ngram_spans", "d28_bloom_incremental_dedup",
-    "k01_csv_roundtrip", "k02_json_roundtrip", "k03_orc_roundtrip",
-    "d29_incremental_near_dedup",
 )
 
 

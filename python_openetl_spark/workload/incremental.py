@@ -8,8 +8,6 @@ result; the oracle states the same semantics in ANSI SQL.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,7 +18,7 @@ from python_openetl_spark.operators.merge import (
     propagate_deletes,
     temporal_delta,
 )
-from python_openetl_spark.workload.util import t
+from python_openetl_spark.workload.util import scratch, t
 
 # Orders before the cutoff form the "target" snapshot; orders in the
 # overlap window re-arrive as a delta with a changed totalprice
@@ -177,7 +175,7 @@ def m08_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _tmp_table() -> "ParquetTable":
     from python_openetl_spark.plans.pipelines import ParquetTable
 
-    return ParquetTable(tempfile.mkdtemp(prefix="poe_roundtrip_") + "/t")
+    return ParquetTable(scratch("roundtrip") + "/t")
 
 
 def m09_seed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

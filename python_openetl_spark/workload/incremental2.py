@@ -1,9 +1,4 @@
-"""Round-2 incremental-maintenance queries.
-
-Registered after ``relational``/``llm2`` in ``_MODULES`` so the current
-50-entry driver window is unchanged (locally oracle-gated now, rotate
-next round).
-"""
+"""Round-2 incremental-maintenance queries."""
 
 from __future__ import annotations
 
@@ -12,7 +7,7 @@ from pyspark.sql import functions as F
 
 from python_openetl_spark.workload.incremental import _CUTOFF, _target
 from python_openetl_spark.operators.materialize import pin
-from python_openetl_spark.workload.util import t
+from python_openetl_spark.workload.util import scratch, t
 
 
 def _new_snapshot(spark, sf_dir) -> DataFrame:
@@ -125,8 +120,6 @@ def m14_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     original and a silent no-op path hash-mismatches). Every other
     month's rows must survive byte-identically; the oracle states the
     spliced final table."""
-    import tempfile
-
     from python_openetl_spark.plans.pipelines import ParquetTable
 
     o = t(spark, sf_dir, "orders")
@@ -144,7 +137,7 @@ def m14_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition("o_month")
         )
 
-    table = ParquetTable(tempfile.mkdtemp(prefix="poe_m14_") + "/t")
+    table = ParquetTable(scratch("m14") + "/t")
     table.overwrite(rollup(o), partition_by=["o_month"])
     repl = rollup(
         o.filter(
@@ -197,12 +190,10 @@ def m15_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped, half-wrote, or double-wrote either side hash-mismatches.
     Failure-atomicity (rollback of completed swaps) is proven in
     tests/test_txn.py."""
-    import tempfile
-
     from python_openetl_spark.plans.pipelines import ParquetTable
     from python_openetl_spark.plans.txn import Publish, publish_all
 
-    base = tempfile.mkdtemp(prefix="poe_m15_")
+    base = scratch("m15")
     ta = ParquetTable(base + "/orders_by_status")
     tb = ParquetTable(base + "/lineitem_by_flag")
     o = t(spark, sf_dir, "orders")
@@ -265,8 +256,6 @@ def m16_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, then roll back to v1 and read the current pointer again —
     a pointer path that mutates snapshots, reads the wrong version, or
     loses the rollback hash-mismatches."""
-    import tempfile
-
     from python_openetl_spark.plans.versioned import VersionedTable
 
     def rollup(df: DataFrame) -> DataFrame:
@@ -276,7 +265,7 @@ def m16_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     o = t(spark, sf_dir, "orders")
-    vt = VersionedTable(tempfile.mkdtemp(prefix="poe_m16_") + "/t")
+    vt = VersionedTable(scratch("m16") + "/t")
     vt.commit(rollup(o.filter(F.col("o_orderdate") < F.lit(_CUTOFF).cast("timestamp_ltz"))))
     vt.commit(rollup(o))
     v1 = vt.read(spark, version=1)
@@ -329,8 +318,6 @@ def m19_version_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     custkey + 1_000_000), then consume the v1->v2 CDC feed — the
     "what changed since version N" contract, computed from the two
     immutable snapshots with one full-outer pk join."""
-    import tempfile
-
     from python_openetl_spark.plans.versioned import VersionedTable
 
     c = t(spark, sf_dir, "customer").select(
@@ -352,7 +339,7 @@ def m19_version_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    vt = VersionedTable(tempfile.mkdtemp(prefix="poe_m19_") + "/t")
+    vt = VersionedTable(scratch("m19") + "/t")
     vt.commit(c)
     vt.commit(v2)
     return vt.changes(spark, "c_custkey", from_version=1)
@@ -399,8 +386,6 @@ def m20_version_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     version's files while the kept versions stay readable. The pointer
     commit protocol makes retention an explicit, schedulable verb (the
     same contract as the IVF store's vacuum)."""
-    import tempfile
-
     from python_openetl_spark.plans.versioned import VersionedTable
 
     c = t(spark, sf_dir, "customer").select("c_custkey")
@@ -410,7 +395,7 @@ def m20_version_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("c_custkey") + 2_000_000).alias("c_custkey")
         )
     )
-    vt = VersionedTable(tempfile.mkdtemp(prefix="poe_m20_") + "/t")
+    vt = VersionedTable(scratch("m20") + "/t")
     vt.commit(c)
     vt.commit(v2)
     vt.commit(v3)

@@ -11,26 +11,21 @@ a driver-checked verb.
   AQE correctly prefers a broadcast join, which is also shuffle-free).
   The oracle states the same join + aggregate over the raw tables, so
   a bucketed write that drops/duplicates rows hash-mismatches.
-
-Registered after ``relational5`` in ``_MODULES``; locally oracle-gated
-now, rotates into ``_WINDOW_R6``.
 """
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_openetl_spark.operators.materialize import pin
-from python_openetl_spark.workload.util import dsum, t
+from python_openetl_spark.workload.util import dsum, scratch, t
 
 
 def m17_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from python_openetl_spark.plans.bucketed import colocated_join, seed_bucketed
 
-    base = tempfile.mkdtemp(prefix="poe_m17_")
+    base = scratch("m17")
     orders = t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"), "o_totalprice", "o_orderpriority"
     )
@@ -176,7 +171,7 @@ def m21_versioned_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src_versions int, clone_versions int, shallow_versions int, "
             "src_checksum double, clone_checksum double, shallow_checksum double",
         )
-    base = tempfile.mkdtemp(prefix="poe_m21_")
+    base = scratch("m21")
     src = VersionedTable(base + "/src")
     src.commit(b0.filter(F.col("id") % 2 == 0))
     src.commit(b0)

@@ -13,9 +13,6 @@ Reference parity: this is the incremental story the reference's
 sliding-window refresh (tmccall8829/python-openetl
 operations.py:515-609) approximates — maintain derived data for the
 price of the delta, exactly.
-
-Registered after ``llm13`` in ``_MODULES``; round-11 post-window,
-rotates into ``_WINDOW_R12``.
 """
 
 from __future__ import annotations

@@ -23,9 +23,6 @@
 - x17: the approximate 100 TB twin of x16 — IVF-cell co-partitioned
   kNN join (``operators/knn_join.py ivf_knn_join``) at production
   probe budget, planted-anchor contract.
-
-Registered after ``relational6`` in ``_MODULES``; the round-6 rows
-rotate into ``_WINDOW_R7``; x15p/x17 are round-7 post-window.
 """
 
 from __future__ import annotations
@@ -35,12 +32,9 @@ from pyspark.sql import functions as F
 
 from python_openetl_spark.functions.text import tokens
 from python_openetl_spark.workload.llm import _TOKS_SQL
-from python_openetl_spark.workload.util import corpus_key, embedding_dim, nonempty, t, table_rows
+from python_openetl_spark.workload.util import corpus_memo, embedding_dim, nonempty, scratch, t, table_rows
 
 _X14_QUERY_IDS = (2, 4, 8)
-
-#: x15 store memo: sf_dir -> built store root (see x15 docstring)
-_X15_STORES: dict = {}
 
 
 def d51_lexical_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,21 +107,19 @@ def _x15_store(spark: SparkSession, sf_dir: str, nlist: int) -> str:
     repeats measure the probe path (the cold build cost is the first
     repeat of a fresh session). Keyed by sf_dir so different fixture
     scales never share an index."""
-    import tempfile
-
     from python_openetl_spark.operators.ivf_store import (
         append_to_ivf_store,
         build_ivf_store,
     )
 
-    root = _X15_STORES.get(corpus_key(sf_dir))
-    if root is None:
+    def build() -> str:
         emb = t(spark, sf_dir, "embeddings")
-        root = tempfile.mkdtemp(prefix="poe_x15_") + "/ivf"
+        root = scratch("x15") + "/ivf"
         build_ivf_store(emb.filter(F.col("vec_id") % 10 != 7), root, nlist=nlist)
         append_to_ivf_store(emb.filter(F.col("vec_id") % 10 == 7), root)
-        _X15_STORES[corpus_key(sf_dir)] = root
-    return root
+        return root
+
+    return corpus_memo("x15", sf_dir, build)
 
 
 def _x15_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,11 +315,6 @@ def x17_cell_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-#: x18 store memo: sf_dir -> built store root (same amortization rule
-#: as _X15_STORES: an index is infrastructure, not per-query cost)
-_X18_STORES: dict = {}
-
-
 def x18_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted incrementally-maintained IVFPQ index
     (operators/ivfpq_store.py — the compressed twin of x15's raw-vector
@@ -341,8 +328,6 @@ def x18_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical vector -> same cell -> probed; ADC score ~max ->
     comfortably inside the rerank_factor*k shortlist; exact re-rank
     -> rank 1 — so a broken append or codebook path flips the row."""
-    import tempfile
-
     from python_openetl_spark.operators import similarity
     from python_openetl_spark.operators.ivfpq_store import (
         append_to_ivfpq_store,
@@ -357,9 +342,9 @@ def x18_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table_rows(sf_dir, "embeddings")
     dim = embedding_dim(sf_dir)
     ip, pp = ivf_params(n), pq_params(n, dim)
-    root = _X18_STORES.get(corpus_key(sf_dir))
-    if root is None:
-        root = tempfile.mkdtemp(prefix="poe_x18_") + "/ivfpq"
+
+    def build() -> str:
+        root = scratch("x18") + "/ivfpq"
         build_ivfpq_store(
             emb.filter(F.col("vec_id") % 10 != 7),
             root,
@@ -368,7 +353,10 @@ def x18_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ksub=pp["ksub"],
         )
         append_to_ivfpq_store(emb.filter(F.col("vec_id") % 10 == 7), root)
-        _X18_STORES[corpus_key(sf_dir)] = root
+        return root
+
+    # an index is infrastructure, not per-query cost (the x15 rule)
+    root = corpus_memo("x18", sf_dir, build)
     queries = _x15_queries(spark, sf_dir)  # 1/5/9 + the appended anchor
     exact = similarity.cosine_topk(emb, queries, k=5).select("query_id", "vec_id")
     approx = ivfpq_store_topk(
@@ -417,8 +405,6 @@ def e07_corpus_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/textops.py token_kl_divergence). This is the
     "should we retrain / re-weight on the new snapshot" report: row
     churn AND distribution shift, from two immutable snapshots."""
-    import tempfile
-
     from python_openetl_spark.operators.textops import token_kl_divergence
     from python_openetl_spark.plans.versioned import VersionedTable
 
@@ -437,7 +423,7 @@ def e07_corpus_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    vt = VersionedTable(tempfile.mkdtemp(prefix="poe_e07_") + "/corpus")
+    vt = VersionedTable(scratch("e07") + "/corpus")
     vt.commit(v1)
     vt.commit(v2)
     chg = vt.changes(spark, "doc_id", 1)
@@ -458,7 +444,6 @@ QUERIES = {
     "x15_incremental_ivf_topk": x15_incremental_ivf_topk,
     "x16_knn_join": x16_knn_join,
     "e07_corpus_version_drift": e07_corpus_version_drift,
-    # round-7 post-window additions (rotate into _WINDOW_R8)
     "x15p_ivf_store_production_probe": x15p_ivf_store_production_probe,
     "x17_cell_knn_join": x17_cell_knn_join,
     "x18_ivfpq_store_topk": x18_ivfpq_store_topk,

@@ -25,9 +25,6 @@ vector or corpus-prep surface; these extend its batch-linkage and
 sync verbs (pyopenetl/operations.py:515-609) to the
 embedding-similarity and training-mixture operations a training-data
 pipeline needs — the BASELINE.json LLM-data north star.
-
-Registered after ``llm10`` in ``_MODULES``; these are round-8
-post-window additions that rotate into ``_WINDOW_R9``.
 """
 
 from __future__ import annotations
@@ -37,7 +34,7 @@ from pyspark.sql import functions as F
 
 from python_openetl_spark.functions.text import tokens
 from python_openetl_spark.workload.llm import _TOKS_SQL
-from python_openetl_spark.workload.util import corpus_key, nonempty, t, table_rows
+from python_openetl_spark.workload.util import corpus_memo, nonempty, scratch, t, table_rows
 
 
 def x19_knn_join_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,11 +63,6 @@ def x19_knn_join_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: s12 store memo: sf_dir -> streamed store root (the x15/x18 rule: an
-#: index is amortized infrastructure, not per-query cost — bench repeats
-#: measure the probe path; the cold build+stream is the first repeat)
-_S12_STORES: dict = {}
-
 #: anchors planted in the STREAMED batches (vec_id % 5 == 0)
 _S12_ANCHOR_SRCS = (10, 25, 40)
 _S12_QID_BASE = 3_000_000
@@ -87,9 +79,6 @@ def s12_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic (identical vector -> same nearest cell -> always
     probed -> cosine 1.0 -> in top-5), so a broken sink, marker, or
     append path flips the row while ANN approximation noise cannot."""
-    import math
-    import tempfile
-
     from python_openetl_spark.operators.ivf_store import (
         build_ivf_store,
         ivf_store_topk,
@@ -105,9 +94,11 @@ def s12_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not nonempty(sf_dir, "embeddings"):
         return spark.createDataFrame([], "query_id long, anchor_found boolean")
     p = ivf_params(table_rows(sf_dir, "embeddings"))
-    root = _S12_STORES.get(corpus_key(sf_dir))
-    if root is None:
-        tmp = tempfile.mkdtemp(prefix="poe_s12_")
+
+    # the store is amortized infrastructure, not per-query cost (the
+    # x15/x18 rule): the cold build+stream is the first repeat
+    def build() -> str:
+        tmp = scratch("s12")
         root = tmp + "/ivf"
         build_ivf_store(
             emb.filter(F.col("vec_id") % 5 != 0), root, nlist=p["nlist"]
@@ -125,15 +116,16 @@ def s12_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        # memoize ONLY a fully-ingested store: awaitTermination(timeout)
-        # returns False if the trigger hasn't finished — memoizing then
-        # would pin a partial store for the rest of the session
+        # a timed-out ingest raises, so corpus_memo never pins a
+        # partial store for the rest of the session
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError(
                 "s12: streaming ingest did not finish within 300s"
             )
-        _S12_STORES[corpus_key(sf_dir)] = root
+        return root
+
+    root = corpus_memo("s12", sf_dir, build)
     anchors = (
         emb.filter(F.col("vec_id").isin(*_S12_ANCHOR_SRCS))
         .select(
@@ -346,10 +338,6 @@ ORACLE["mm06_video_frame_near_dup"] = """
 """
 
 
-#: x20 store memo: sf_dir -> attribute-carrying store root
-_X20_STORES: dict = {}
-
-
 def x20_filtered_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ANN on the persisted IVF store: the store is built with
     ``attr_cols=("label",)`` so filterable metadata rides inside each
@@ -378,11 +366,9 @@ def x20_filtered_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id long, vec_id long, cos_sim double, rank int"
         )
     p = ivf_params(table_rows(sf_dir, "embeddings"))
-    import tempfile
 
-    root = _X20_STORES.get(corpus_key(sf_dir))
-    if root is None:
-        root = tempfile.mkdtemp(prefix="poe_x20_") + "/ivf"
+    def build() -> str:
+        root = scratch("x20") + "/ivf"
         build_ivf_store(
             emb.filter(F.col("vec_id") % 10 != 7),
             root,
@@ -390,7 +376,9 @@ def x20_filtered_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             attr_cols=("label",),
         )
         append_to_ivf_store(emb.filter(F.col("vec_id") % 10 == 7), root)
-        _X20_STORES[corpus_key(sf_dir)] = root
+        return root
+
+    root = corpus_memo("x20", sf_dir, build)
     queries = (
         emb.filter(F.col("vec_id").isin(2, 4, 8))
         .select(F.col("vec_id").alias("query_id"), "embedding")

@@ -18,9 +18,6 @@ real two-stream watermarked join.
 Reference parity: the reference (tmccall8829/python-openetl) has no
 streaming or vector surface; these extend its sync verbs
 (pyopenetl/operations.py:515-609) toward the BASELINE.json north star.
-
-Registered after ``relational7`` in ``_MODULES``; round-9 post-window
-additions that rotate into ``_WINDOW_R10``.
 """
 
 from __future__ import annotations
@@ -29,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_openetl_spark.workload.llm import _TOKS_SQL
-from python_openetl_spark.workload.util import corpus_key, nonempty, stream_state_partitions, t, table_rows
+from python_openetl_spark.workload.util import corpus_memo, nonempty, scratch, stream_state_partitions, t, table_rows
 
 
 def d55_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,10 +39,6 @@ def d55_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return paragraph_dedup(t(spark, sf_dir, "documents"), para_tokens=12)
 
-
-#: x21 store memo: sf_dir -> store root (the x15/x18/x20 rule: an index
-#: is amortized infrastructure — bench repeats measure the probe path)
-_X21_STORES: dict = {}
 
 _X21_QUERY_IDS = (3, 11, 42)
 _X21_RADIUS = 0.15
@@ -75,13 +68,13 @@ def x21_store_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id long, vec_id long, cos_sim double"
         )
     p = ivf_params(table_rows(sf_dir, "embeddings"))
-    import tempfile
 
-    root = _X21_STORES.get(corpus_key(sf_dir))
-    if root is None:
-        root = tempfile.mkdtemp(prefix="poe_x21_") + "/ivf"
+    def build() -> str:
+        root = scratch("x21") + "/ivf"
         build_ivf_store(emb, root, nlist=p["nlist"])
-        _X21_STORES[corpus_key(sf_dir)] = root
+        return root
+
+    root = corpus_memo("x21", sf_dir, build)
     queries = (
         emb.filter(F.col("vec_id").isin(*_X21_QUERY_IDS))
         .select(F.col("vec_id").alias("query_id"), "embedding")
@@ -90,13 +83,6 @@ def x21_store_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_store_range_search(
         spark, root, queries, radius=_X21_RADIUS, nprobe=p["nlist"]
     )
-
-
-#: s13 staging memo: sf_dir -> (purchases_dir, clicks_dir, schemas).
-#: Staging is input PREPARATION (the fixture pretending to be a live
-#: feed), not the machinery under test — the stream itself runs fresh
-#: on every call (new checkpoint, new state stores).
-_S13_STAGED: dict = {}
 
 
 def s13_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,8 +105,6 @@ def s13_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
     stream and restores the session setting after; a production job
     sizes this to state VOLUME, exactly as it sizes shuffle partitions
     for batch."""
-    import tempfile
-
     from python_openetl_spark.streaming.sources import (
         read_file_stream,
         stage_replay_dir,
@@ -140,10 +124,13 @@ def s13_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("c_ts"),
     )
-    staged = _S13_STAGED.get(corpus_key(sf_dir))
-    if staged is None:
-        tmp = tempfile.mkdtemp(prefix="poe_s13_")
-        staged = (
+
+    # staging is input PREPARATION (the fixture pretending to be a live
+    # feed), not the machinery under test — the stream itself runs fresh
+    # on every call (new checkpoint, new state stores)
+    def stage() -> tuple[str, str]:
+        tmp = scratch("s13")
+        return (
             stage_replay_dir(
                 purchases, tmp + "/p", chunks=3,
                 order_col="p_ts", shuffle_time_order=False,
@@ -153,8 +140,8 @@ def s13_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
                 order_col="c_ts", shuffle_time_order=False,
             ),
         )
-        _S13_STAGED[corpus_key(sf_dir)] = staged
-    p_path, c_path = staged
+
+    p_path, c_path = corpus_memo("s13", sf_dir, stage)
     ps = read_file_stream(spark, p_path, purchases.schema).withWatermark(
         "p_ts", "2 hours"
     )
@@ -181,10 +168,7 @@ def s13_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
             joined.writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="poe_s13_ckpt_"),
-            )
+            .option("checkpointLocation", scratch("s13_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -331,10 +315,6 @@ ORACLE["mm07_cdc_offset_invariant_dedup"] = """
 """
 
 
-#: x22 store memo: sf_dir -> attribute-carrying store root
-_X22_STORES: dict = {}
-
-
 def x22_store_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed kNN JOIN against the PERSISTED store
     (operators/knn_join.py ivf_store_knn_join): every 30th vector
@@ -359,13 +339,13 @@ def x22_store_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id long, vec_id long, cos_sim double, rank int"
         )
     p = ivf_params(table_rows(sf_dir, "embeddings"))
-    import tempfile
 
-    root = _X22_STORES.get(corpus_key(sf_dir))
-    if root is None:
-        root = tempfile.mkdtemp(prefix="poe_x22_") + "/ivf"
+    def build() -> str:
+        root = scratch("x22") + "/ivf"
         build_ivf_store(emb, root, nlist=p["nlist"], attr_cols=("label",))
-        _X22_STORES[corpus_key(sf_dir)] = root
+        return root
+
+    root = corpus_memo("x22", sf_dir, build)
     queries = emb.filter(F.col("vec_id") % 30 == 2).select(
         (F.col("vec_id") + 5_000_000).alias("query_id"), "embedding"
     )

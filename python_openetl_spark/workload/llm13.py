@@ -19,9 +19,6 @@ Reference parity: the reference (tmccall8829/python-openetl) has no
 vector, LM, or streaming surface; these extend SURVEY.md §2's
 beyond-reference families (ANN store lifecycle, text analysis,
 structured streaming).
-
-Registered after ``relational8`` in ``_MODULES``; round-10
-post-window, rotates into ``_WINDOW_R11``.
 """
 
 from __future__ import annotations
@@ -30,15 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_openetl_spark.operators.materialize import pin
-from python_openetl_spark.workload.util import corpus_key, nonempty, stream_state_partitions, t, table_rows
+from python_openetl_spark.workload.util import corpus_memo, nonempty, scratch, stream_state_partitions, t, table_rows
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-#: x23 store memo: sf_dir -> store root. Build + delete are store
-#: PREPARATION (amortized infrastructure, the x20/x21/x22 convention);
-#: the probe under test runs fresh on every call.
-_X23_STORES: dict = {}
 
 
 def x23_store_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,19 +55,19 @@ def x23_store_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, vec_id long, cos_sim double, rank int"
         )
-    import tempfile
 
-    memo = _X23_STORES.get(corpus_key(sf_dir))
-    if memo is None:
+    # build + delete are store PREPARATION (amortized infrastructure);
+    # the probe under test runs fresh on every call
+    def build() -> tuple[str, int]:
         # nlist is memoized WITH the store root: the count() that sizes
         # it is build-time infrastructure, not per-probe cost
         nlist = ivf_params(table_rows(sf_dir, "embeddings"))["nlist"]
-        root = tempfile.mkdtemp(prefix="poe_x23_") + "/ivf"
+        root = scratch("x23") + "/ivf"
         build_ivf_store(emb, root, nlist=nlist)
         delete_from_ivf_store(spark, root, where="vec_id % 10 = 3")
-        memo = (root, nlist)
-        _X23_STORES[corpus_key(sf_dir)] = memo
-    root, nlist = memo
+        return root, nlist
+
+    root, nlist = corpus_memo("x23", sf_dir, build)
     queries = (
         emb.filter(F.col("vec_id").isin(5, 10, 20))
         .select(F.col("vec_id").alias("query_id"), "embedding")
@@ -176,11 +168,6 @@ ORACLE["d57_perplexity_buckets"] = _D32_AGG_SQL + """
 """
 
 
-#: s14 staging memo: sf_dir -> (purchases_dir, clicks_dir). Input
-#: preparation only (the s13 convention) — the stream itself runs
-#: fresh on every call with new checkpoint + state stores.
-_S14_STAGED: dict = {}
-
 #: sentinel ids sit outside every fixture id domain; the sentinel ROW
 #: exists only to advance the event-time watermark past the last real
 #: purchase so unmatched left rows can finalize (see docstring).
@@ -216,8 +203,6 @@ def s14_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored after (the s13 measurement: per-partition-per-batch state
     cost), exactly as a production job sizes partitions to state
     volume."""
-    import tempfile
-
     from python_openetl_spark.streaming.sources import (
         read_file_stream,
         stage_replay_dir,
@@ -237,9 +222,11 @@ def s14_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("c_ts"),
     )
-    staged = _S14_STAGED.get(corpus_key(sf_dir))
-    if staged is None:
-        tmp = tempfile.mkdtemp(prefix="poe_s14_")
+
+    # input preparation only (the s13 convention): the stream itself runs
+    # fresh on every call with new checkpoint + state stores
+    def stage() -> tuple[str, str]:
+        tmp = scratch("s14")
         p_path = stage_replay_dir(
             purchases, tmp + "/p", chunks=3,
             order_col="p_ts", shuffle_time_order=False,
@@ -267,9 +254,9 @@ def s14_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_S14_SENTINEL_UID).cast("long").alias("c_user"),
             sent_ts.alias("c_ts"),
         ).coalesce(1).write.parquet(c_path + "/chunk=3")
-        staged = (p_path, c_path)
-        _S14_STAGED[corpus_key(sf_dir)] = staged
-    p_path, c_path = staged
+        return p_path, c_path
+
+    p_path, c_path = corpus_memo("s14", sf_dir, stage)
     ps = read_file_stream(spark, p_path, purchases.schema).withWatermark(
         "p_ts", "2 hours"
     )
@@ -295,10 +282,7 @@ def s14_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             joined.writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="poe_s14_ckpt_"),
-            )
+            .option("checkpointLocation", scratch("s14_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -390,10 +374,6 @@ ORACLE["mm08_audio_constellation_near_dup"] = """
 """
 
 
-#: s15 staging memo (sf_dir -> staged dir): input preparation only.
-_S15_STAGED: dict = {}
-
-
 def s15_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-window aggregation as a REAL replayed stream — the
     stateful-aggregation milestone s03 (the batch twin) cannot prove:
@@ -407,8 +387,6 @@ def s15_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     close so availableNow's no-data final batch flushes ALL sessions —
     the emitted set must equal s03's batch result exactly. Gap 30 min,
     the s03 convention; same DECIMAL-exact value sums."""
-    import tempfile
-
     from python_openetl_spark.streaming.sources import (
         read_file_stream,
         stage_replay_dir,
@@ -421,11 +399,10 @@ def s15_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_start long, user_id long, n_events long, total_value double",
         )
     base = ev.select("user_id", "ts", "value")
-    staged = _S15_STAGED.get(corpus_key(sf_dir))
-    if staged is None:
-        tmp = tempfile.mkdtemp(prefix="poe_s15_")
+
+    def stage() -> str:  # input preparation only (the s13 convention)
         staged = stage_replay_dir(
-            base, tmp + "/ev", chunks=3, order_col="ts",
+            base, scratch("s15") + "/ev", chunks=3, order_col="ts",
             shuffle_time_order=False,
         )
         far = ev.agg(
@@ -436,7 +413,9 @@ def s15_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_micros(F.lit(int(far))).alias("ts"),
             F.lit(0.0).alias("value"),
         ).coalesce(1).write.parquet(staged + "/chunk=3")
-        _S15_STAGED[corpus_key(sf_dir)] = staged
+        return staged
+
+    staged = corpus_memo("s15", sf_dir, stage)
     stream = read_file_stream(spark, staged, base.schema).withWatermark(
         "ts", "2 hours"
     )
@@ -470,9 +449,7 @@ def s15_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             sess.writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="poe_s15_ckpt_")
-            )
+            .option("checkpointLocation", scratch("s15_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -510,8 +487,30 @@ ORACLE["s15_stream_session_windows"] = """
 """
 
 
-#: k17 staging memo (sf_dir -> jsonl path): input preparation only.
-_K17_STAGED: dict = {}
+def _k17_jsonl(spark: SparkSession, sf_dir: str) -> str:
+    """The documents table staged once per corpus as one sorted JSONL
+    file — k17's and s16's input preparation, not the scan under test."""
+    import json
+
+    def stage() -> str:
+        rows = (
+            t(spark, sf_dir, "documents")
+            .select("doc_id", "lang", "text")
+            .collect()
+        )
+        path = scratch("k17") + "/documents.jsonl"
+        with open(path, "w") as f:
+            for r in sorted(rows, key=lambda r: r["doc_id"]):
+                f.write(
+                    json.dumps(
+                        {"doc_id": r["doc_id"], "lang": r["lang"], "text": r["text"]},
+                        sort_keys=True,
+                    )
+                    + "\n"
+                )
+        return path
+
+    return corpus_memo("k17", sf_dir, stage)
 
 
 def k17_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -527,33 +526,13 @@ def k17_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped straddler changes the row multiset. This is the reference's
     chunked feed-ingest loop (operations.py:486-513) as a planner-
     visible source instead of a driver loop."""
-    import json
-    import tempfile
-
     from python_openetl_spark.sources.pydatasource import JsonlDataSource
 
     try:
         spark.dataSource.register(JsonlDataSource)
     except Exception:
         pass  # already registered in this session
-    path = _K17_STAGED.get(corpus_key(sf_dir))
-    if path is None:
-        rows = (
-            t(spark, sf_dir, "documents")
-            .select("doc_id", "lang", "text")
-            .collect()
-        )
-        path = tempfile.mkdtemp(prefix="poe_k17_") + "/documents.jsonl"
-        with open(path, "w") as f:
-            for r in sorted(rows, key=lambda r: r["doc_id"]):
-                f.write(
-                    json.dumps(
-                        {"doc_id": r["doc_id"], "lang": r["lang"], "text": r["text"]},
-                        sort_keys=True,
-                    )
-                    + "\n"
-                )
-        _K17_STAGED[corpus_key(sf_dir)] = path
+    path = _k17_jsonl(spark, sf_dir)
     import os
 
     tb = max(1024, os.path.getsize(path) // 24)  # force ~24 splits
@@ -762,7 +741,6 @@ def s16_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     across offsets all change the row multiset."""
     import ast
     import os
-    import tempfile
     import time
 
     from python_openetl_spark.sources.pydatasource import JsonlDataSource
@@ -771,9 +749,7 @@ def s16_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(JsonlDataSource)
     except Exception:
         pass
-    # reuse k17's staged file (stage it if k17 hasn't run yet)
-    k17_python_datasource_scan(spark, sf_dir)  # ensures _K17_STAGED
-    path = _K17_STAGED[corpus_key(sf_dir)]
+    path = _k17_jsonl(spark, sf_dir)  # k17's staged file
     size = os.path.getsize(path)
     stream = (
         spark.readStream.format("openetl_jsonl")
@@ -787,7 +763,7 @@ def s16_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="poe_s16_ckpt_"))
+        .option("checkpointLocation", scratch("s16_ckpt"))
         # back-to-back triggers: with 6 byte-offset batches a 50 ms
         # cadence added ~0.3 s of pure inter-batch dead time (r14); the
         # drain condition below, not the trigger clock, ends the query
@@ -835,7 +811,6 @@ def k18_python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> D
     a dropped part, a double-published temp, or a serialization
     mismatch between writer and reader all change the row multiset."""
     import os
-    import tempfile
 
     from python_openetl_spark.sources.pydatasource import JsonlDataSource
 
@@ -843,7 +818,7 @@ def k18_python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> D
         spark.dataSource.register(JsonlDataSource)
     except Exception:
         pass
-    out = tempfile.mkdtemp(prefix="poe_k18_") + "/docs"
+    out = scratch("k18") + "/docs"
     os.makedirs(out)
     (
         t(spark, sf_dir, "documents")

@@ -38,9 +38,6 @@
 Reference parity: tmccall8829/python-openetl has no corpus-selection
 surface (row-level ETL only); this extends the LLM-data north-star
 family (SURVEY.md §2.3).
-
-Registered after ``incremental4`` in ``_MODULES``; round-11
-post-window, rotates into ``_WINDOW_R12``.
 """
 
 from __future__ import annotations
@@ -49,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_openetl_spark.operators.materialize import pin
-from python_openetl_spark.workload.util import corpus_key, nonempty, t, table_rows
+from python_openetl_spark.workload.util import corpus_memo, nonempty, scratch, t, table_rows
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -116,9 +113,6 @@ ORACLE["d58_dsir_importance_select"] = f"""
 """
 
 
-_X24_STORES: dict = {}
-
-
 def x24_store_update_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k probe of a store that UPDATED a tenth of its vectors
     (``vec_id % 10 = 4`` re-embedded to the NEGATED original —
@@ -143,23 +137,21 @@ def x24_store_update_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, vec_id long, cos_sim double, rank int"
         )
-    import tempfile
 
-    memo = _X24_STORES.get(corpus_key(sf_dir))
-    if memo is None:
+    def build() -> tuple[str, int]:
         # nlist memoized WITH the store root (x23 rule: the sizing
         # count() is build-time infrastructure, not per-probe cost)
         nlist = ivf_params(table_rows(sf_dir, "embeddings"))["nlist"]
-        root = tempfile.mkdtemp(prefix="poe_x24_") + "/ivf"
+        root = scratch("x24") + "/ivf"
         build_ivf_store(emb, root, nlist=nlist)
         batch = emb.filter(F.col("vec_id") % 10 == 4).select(
             "vec_id",
             F.transform("embedding", lambda x: -x).alias("embedding"),
         )
         update_ivf_store(batch, root)
-        memo = (root, nlist)
-        _X24_STORES[corpus_key(sf_dir)] = memo
-    root, nlist = memo
+        return root, nlist
+
+    root, nlist = corpus_memo("x24", sf_dir, build)
     queries = (
         emb.filter(F.col("vec_id").isin(5, 10, 20))
         .select(F.col("vec_id").alias("query_id"), "embedding")
@@ -207,8 +199,6 @@ def s17_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doubled mults), a missed delete, or a lost zero-count row each
     breaks the hash. Per batch the cost is one delta-sized join + a
     count merge; accumulated A is never re-joined."""
-    import tempfile
-
     from python_openetl_spark.plans.versioned import VersionedTable
     from python_openetl_spark.streaming.sinks import JoinViewSink
 
@@ -230,7 +220,7 @@ def s17_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     b2 = a.filter(F.col("o_orderkey") % 3 == 2).withColumn("mult", one)
-    path = tempfile.mkdtemp(prefix="poe_s17_") + "/jview"
+    path = scratch("s17") + "/jview"
     sink = JoinViewSink(path, b, "o_orderkey")
     sink(b0, batch_id=0)
     sink(b1, batch_id=1)
@@ -300,8 +290,6 @@ def k19_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning actually skips files (~1/16 of files per probe) and that
     false negatives are impossible; this row proves end-to-end value
     equality with an unpruned scan."""
-    import tempfile
-
     from python_openetl_spark.plans.manifest import (
         bloom_pruned_read,
         build_bloom_manifest,
@@ -311,7 +299,7 @@ def k19_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    table = ParquetTable(tempfile.mkdtemp(prefix="poe_k19_") + "/orders")
+    table = ParquetTable(scratch("k19") + "/orders")
     table.overwrite(src.repartition(16, "o_custkey"))
     # One row per file (16 total): pin it, because every probe below
     # drives TWO collect jobs against the manifest (geometry check +

@@ -1,9 +1,5 @@
 """Round-12 LLM-data queries.
 
-Registered after ``llm14`` in ``_MODULES`` so the frozen
-``_WINDOW_R12`` is unchanged; locally oracle-gated now, rotate into
-``_WINDOW_R13``.
-
 - x26: feature-scored reranking of the fused retrieval shortlist
   (operators/retrieval.py feature_rerank) — the deterministic
   cross-encoder-tier stand-in that completes the three-stage retrieval
@@ -26,7 +22,7 @@ from pyspark.sql import functions as F
 
 from python_openetl_spark.workload.llm3 import _TOKS
 from python_openetl_spark.workload.llm6 import _Q_LEN, _Q_MOD, _derived_queries
-from python_openetl_spark.workload.util import t
+from python_openetl_spark.workload.util import corpus_memo, t
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -34,55 +30,45 @@ ORACLE: dict = {}
 #: rerank feature weights (exact shortest-repr doubles on both parsers)
 _W_LEX, _W_COS, _W_LEN = 0.5, 0.3, 0.2
 
-#: materialized tower top-k (pandas) keyed by (fixture dir, corpus
-#: fingerprint) — x27 evaluates x26's pipeline, so both rows consume
-#: the IDENTICAL lexical/dense towers over the same corpus; rebuilding
-#: them per row made the pair the two heaviest non-streaming rows in
-#: the suite (r13 verdict #4: share, the way _X29_STORES memoizes its
-#: store). The fingerprint half of the key (util.corpus_key: per-file
-#: size+mtime) makes a corpus mutated in place MISS the memo and
-#: recompute instead of serving stale towers (r14 verdict #7). Pandas
-#: (driver-local, queries x k rows — bm25 already requires a
-#: broadcastable query set) so the cache is session-proof: each call
-#: re-creates the Spark frame on ITS session.
-_TOWERS: dict = {}
+
+def _build_towers(spark: SparkSession, sf_dir: str):
+    """(lexical_pdf, dense_pdf): BM25 top-10 and cosine top-10 towers
+    over the x10 query set, as driver-local pandas (queries x k rows —
+    bm25 already requires a broadcastable query set)."""
+    from python_openetl_spark.operators import similarity
+    from python_openetl_spark.operators.retrieval import bm25_topk
+
+    docs = t(spark, sf_dir, "documents")
+    emb = t(spark, sf_dir, "embeddings")
+    qdocs = _derived_queries(docs).join(
+        F.broadcast(emb.select(F.col("vec_id").alias("query_id"))),
+        "query_id",
+    )
+    lexical = bm25_topk(docs, qdocs, k=10).toPandas()
+    dense = (
+        similarity.cosine_topk(
+            emb,
+            emb.join(
+                F.broadcast(qdocs.select("query_id")),
+                emb.vec_id == F.col("query_id"),
+            ).select("query_id", "embedding"),
+            k=10,
+        )
+        .select(
+            "query_id", F.col("vec_id").alias("doc_id"), "cos_sim", "rank"
+        )
+        .toPandas()
+    )
+    return lexical, dense
 
 
 def _shared_towers(spark: SparkSession, sf_dir: str):
-    """(lexical_pdf, dense_pdf): BM25 top-10 and cosine top-10 towers
-    over the x10 query set, computed once per (fixture dir,
-    corpus state)."""
-    from python_openetl_spark.operators import similarity
-    from python_openetl_spark.operators.retrieval import bm25_topk
-    from python_openetl_spark.workload.util import corpus_key
-
-    key = corpus_key(sf_dir)
-    cached = _TOWERS.get(key)
-    if cached is None:
-        docs = t(spark, sf_dir, "documents")
-        emb = t(spark, sf_dir, "embeddings")
-        qdocs = _derived_queries(docs).join(
-            F.broadcast(emb.select(F.col("vec_id").alias("query_id"))),
-            "query_id",
-        )
-        lexical = bm25_topk(docs, qdocs, k=10).toPandas()
-        dense = (
-            similarity.cosine_topk(
-                emb,
-                emb.join(
-                    F.broadcast(qdocs.select("query_id")),
-                    emb.vec_id == F.col("query_id"),
-                ).select("query_id", "embedding"),
-                k=10,
-            )
-            .select(
-                "query_id", F.col("vec_id").alias("doc_id"), "cos_sim", "rank"
-            )
-            .toPandas()
-        )
-        cached = (lexical, dense)
-        _TOWERS[key] = cached
-    return cached
+    """The towers, computed once per corpus: x27 evaluates x26's
+    pipeline, so both rows consume the IDENTICAL towers — rebuilding
+    them per row made the pair the two heaviest non-streaming rows in
+    the suite. Pandas, so the memo is session-proof: each call
+    re-creates the Spark frame on ITS session."""
+    return corpus_memo("towers", sf_dir, lambda: _build_towers(spark, sf_dir))
 
 
 def x26_feature_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

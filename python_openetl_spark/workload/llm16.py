@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from python_openetl_spark.functions.text import tokens
 from python_openetl_spark.workload.llm3 import _TOKS
 from python_openetl_spark.workload.llm6 import _K, _Q_LEN, _Q_MOD, _derived_queries
-from python_openetl_spark.workload.util import corpus_key, t
+from python_openetl_spark.workload.util import corpus_memo, scratch, t
 
 #: batch/delete slices: every 5th doc is EDITED and re-ingested under
 #: its original id (the d36 device — truncation sheds terms, planted
@@ -29,10 +29,6 @@ from python_openetl_spark.workload.util import corpus_key, t
 #: the EDITED generation too).
 _EDIT_MOD = 5
 _DEL_MOD = 7
-
-#: store roots keyed by fixture dir (the x15 rule: an index is
-#: amortized infrastructure — bench repeats measure the probe path)
-_X28_STORES: dict[str, str] = {}
 
 
 def _edited_batch(docs: DataFrame) -> DataFrame:
@@ -46,25 +42,25 @@ def _edited_batch(docs: DataFrame) -> DataFrame:
 
 
 def _x28_store(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from python_openetl_spark.operators.postings_store import (
         append_to_postings_store,
         build_postings_store,
         delete_from_postings_store,
     )
 
-    root = _X28_STORES.get(corpus_key(sf_dir))
-    if root is None:
+    def build() -> str:
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-        root = tempfile.mkdtemp(prefix="poe_x28_") + "/postings"
+        root = scratch("x28") + "/postings"
         build_postings_store(docs, root)
         append_to_postings_store(_edited_batch(docs), root)
         delete_from_postings_store(
             spark, root, where=f"doc_id % {_DEL_MOD} = 0"
         )
-        _X28_STORES[corpus_key(sf_dir)] = root
-    return root
+        return root
+
+    # an index is amortized infrastructure (the x15 rule): bench
+    # repeats measure the probe path
+    return corpus_memo("x28", sf_dir, build)
 
 
 def x28_postings_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,23 +84,19 @@ def x28_postings_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PH_START = 3
 _PH_LEN = 6
 
-_X29_STORES: dict[str, str] = {}
-
 
 def _x29_store(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from python_openetl_spark.operators.postings_store import (
         build_positional_postings_store,
     )
 
-    root = _X29_STORES.get(corpus_key(sf_dir))
-    if root is None:
+    def build() -> str:
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-        root = tempfile.mkdtemp(prefix="poe_x29_") + "/positional"
+        root = scratch("x29") + "/positional"
         build_positional_postings_store(docs, root)
-        _X29_STORES[corpus_key(sf_dir)] = root
-    return root
+        return root
+
+    return corpus_memo("x29", sf_dir, build)
 
 
 def x29_phrase_store_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,8 +108,7 @@ def x29_phrase_store_contamination(spark: SparkSession, sf_dir: str) -> DataFram
     the seed doc itself plus any verbatim duplicates/quotes. Pure
     integer/set arithmetic, so the DuckDB oracle (boundary-safe
     substring over the space-joined token stream — exact because
-    tokens contain no spaces) matches bit-for-bit. Round-13
-    post-window addition; rotates into _WINDOW_R14."""
+    tokens contain no spaces) matches bit-for-bit."""
     from python_openetl_spark.operators.postings_store import (
         postings_store_phrase,
     )

@@ -1,4 +1,4 @@
-"""Round-14 workload additions (post-window; rotate into _WINDOW_R15).
+"""Round-14 workload additions.
 
 - m24: ONE-call CDC maintenance of the persisted postings store
   (operators/postings_store.py apply_cdc_to_postings_store — the
@@ -29,7 +29,7 @@ from python_openetl_spark.functions.text import tokens
 from python_openetl_spark.workload.llm3 import _TOKS
 from python_openetl_spark.workload.llm6 import _K, _Q_LEN, _Q_MOD, _derived_queries
 from python_openetl_spark.workload.llm16 import _PH_LEN, _PH_START, _x29_store
-from python_openetl_spark.workload.util import corpus_key, t
+from python_openetl_spark.workload.util import corpus_memo, scratch, t
 
 #: m24 CDC slices (disjoint by construction — the batch is unique on
 #: doc_id, merge.apply_cdc's per-key-compacted contract): every 7th
@@ -41,8 +41,6 @@ _UPD_MOD = 5
 _INS_MOD = 211
 _INS_OFFSET = 1_000_000_000
 _INS_LEN = 5
-
-_M24_STORES: dict[str, str] = {}
 
 
 def _m24_cdc_batch(docs: DataFrame) -> DataFrame:
@@ -75,21 +73,19 @@ def _m24_cdc_batch(docs: DataFrame) -> DataFrame:
 
 
 def _m24_store(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from python_openetl_spark.operators.postings_store import (
         apply_cdc_to_postings_store,
         build_postings_store,
     )
 
-    root = _M24_STORES.get(corpus_key(sf_dir))
-    if root is None:
+    def build() -> str:
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-        root = tempfile.mkdtemp(prefix="poe_m24_") + "/postings"
+        root = scratch("m24") + "/postings"
         build_postings_store(docs, root)
         apply_cdc_to_postings_store(_m24_cdc_batch(docs), root)
-        _M24_STORES[corpus_key(sf_dir)] = root
-    return root
+        return root
+
+    return corpus_memo("m24", sf_dir, build)
 
 
 def m24_postings_cdc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,11 +5,6 @@ redaction, sequence packing, mixture resampling — the preparation
 passes of an LLM data pipeline beyond the dedup/similarity families in
 ``workload.llm``. Every query has a full DuckDB oracle (the float
 divisions are evaluated in the same IEEE order on both engines).
-
-Registered AFTER ``relational`` in ``workload.__init__._MODULES`` so
-the driver's current 50-entry correctness window (the round-1
-unverified families + round-1 red rows) is not displaced; these are
-locally oracle-gated now and rotate into the window next round.
 """
 
 from __future__ import annotations

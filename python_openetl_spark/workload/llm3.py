@@ -11,10 +11,6 @@ order, and the end-to-end preparation composite.
 - e01: :func:`operators.prep.prepare_corpus` — dedup → quality gate →
   contamination gate → PII redaction as ONE composite verb, the
   pipeline a training-data system runs end-to-end.
-
-Registered last in ``workload.__init__._MODULES``: all three sit past
-the driver's 50-entry correctness window this round (locally
-oracle-gated; they rotate into the window next round).
 """
 
 from __future__ import annotations

@@ -1,9 +1,5 @@
 """Round-4 LLM-data-pipeline queries.
 
-Registered after the round-3 modules in ``_MODULES`` so the frozen
-``_WINDOW_R4`` is unchanged; these are locally oracle-gated now and
-rotate into ``_WINDOW_R5``.
-
 d31: leakage-safe train/val/test split — the contamination-control
 step between dedup (d12/d13) and sampling (d10/d24): split membership
 is decided per dup-CLUSTER so near-duplicate pairs can never straddle

@@ -1,9 +1,5 @@
 """Round-4 session-2 LLM-data queries.
 
-Registered after ``relational2`` in ``_MODULES`` so the frozen
-``_WINDOW_R4`` is unchanged; locally oracle-gated now, rotate into
-``_WINDOW_R5``.
-
 - d34: BM25 top-k retrieval over an inverted index
   (operators/retrieval.py) — the sparse complement of the dense ANN
   family (x01–x08) and the retrieval tier of decontamination (e02/e03

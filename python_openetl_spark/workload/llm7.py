@@ -24,9 +24,6 @@ catches a planted pair with p^8 ~ 0.81 and six tables amplify to
 ~0.99995 — recall on the planted set is robustly above the 0.5 floor
 at any corpus scale, while a broken bucketing kernel, table seeding,
 or bucket join (recall 0) hash-mismatches.
-
-Registered after ``relational3`` in ``_MODULES``; x04p/d14p take the
-last two ``_WINDOW_R5`` slots so they get driver rows immediately.
 """
 
 from __future__ import annotations

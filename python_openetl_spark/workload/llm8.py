@@ -12,10 +12,6 @@
 - d44: per-domain cap sampling — deterministic hash-order keep of at
   most N docs per registrable domain (the mega-domain rebalancing step
   of web-corpus curation).
-
-Registered after ``relational4`` in ``_MODULES`` so the frozen
-``_WINDOW_R5`` is unchanged; locally oracle-gated now, rotates into
-``_WINDOW_R6``.
 """
 
 from __future__ import annotations

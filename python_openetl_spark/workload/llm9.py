@@ -13,9 +13,6 @@ retrieval.
   prefix, rerank the survivors with the full 64-dim cosine. The
   oracle mirrors BOTH stages exactly (prefix slice included), so the
   check is deterministic equality, not a recall bound.
-
-Registered after ``llm8`` in ``_MODULES``; locally oracle-gated now,
-rotates into ``_WINDOW_R6``.
 """
 
 from __future__ import annotations

@@ -1012,11 +1012,6 @@ def q50_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Insertion order is load-bearing: the driver's correctness gate checks the
-#: FIRST 50 entries of the aggregated ``queries()`` dict. ``workload/__init__``
-#: puts this module last, so only the head of this dict lands in the window —
-#: front-load the queries that most need a fresh driver row this round
-#: (round 1 reds q10/q13/q28/q37 + never-checked q50/q51).
 QUERIES = {
     "q50_time_range_frame": q50_time_range_frame,
     "q51_asof_forward_tolerance": q51_asof_forward_tolerance,

@@ -3,10 +3,6 @@ not yet cover, adapted to the fixture star schema (no partsupp table,
 no commit/receipt dates — the join/subquery STRUCTURE is what each
 query exercises).
 
-Registered after the round-3 modules in ``_MODULES`` so the frozen
-``_WINDOW_R4`` is unchanged; locally oracle-gated now, rotate into
-``_WINDOW_R5``.
-
 Decimal rule per workload/__init__: money/quantity sums go through
 exact DECIMAL and return DOUBLE; counts are BIGINT on both engines.
 """

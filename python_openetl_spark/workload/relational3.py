@@ -1,8 +1,5 @@
 """Round-4 session-2 relational additions: mergeable-sketch analytics.
 
-Registered after ``llm6`` in ``_MODULES`` so the frozen ``_WINDOW_R4``
-is unchanged; locally oracle-gated now, rotates into ``_WINDOW_R5``.
-
 q58: HyperLogLog distinct-count via Spark's built-in Apache DataSketches
 functions (``hll_sketch_agg`` / ``hll_union_agg`` /
 ``hll_sketch_estimate``). The 100 TB story is REAGGREGATION: per-

@@ -8,9 +8,6 @@ the range/set/regexp checks an ETL pipeline wants BEFORE publish.
 All non-referential checks compile into one conditional aggregate
 over one scan; the FK check is one left-anti join against the
 broadcast customer key set.
-
-Registered after ``llm7`` in ``_MODULES`` so the frozen ``_WINDOW_R5``
-is unchanged; locally oracle-gated now, rotates into ``_WINDOW_R6``.
 """
 
 from __future__ import annotations

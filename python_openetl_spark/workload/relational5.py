@@ -5,9 +5,6 @@
   revenue, forward-fill for the price level. The oracle builds the
   same spine with DuckDB's scalar ``generate_series`` and fills with
   ``last_value(... IGNORE NULLS)``.
-
-Registered after ``llm9`` in ``_MODULES``; locally oracle-gated now,
-rotates into ``_WINDOW_R6``.
 """
 
 from __future__ import annotations

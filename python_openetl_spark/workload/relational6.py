@@ -14,9 +14,6 @@ rank functions, windowed DISTINCT, and ANSI-safe try arithmetic.
 - q71: ``dense_rank`` / ``percent_rank`` / ``cume_dist`` per nation —
   the rank-function family q05/q47 (row_number, frames) left
   uncovered. Tiebreak on c_custkey makes every rank deterministic.
-
-Registered after ``incremental3`` in ``_MODULES``; locally
-oracle-gated now, rotates into ``_WINDOW_R7``.
 """
 
 from __future__ import annotations
@@ -234,7 +231,6 @@ QUERIES = {
     "q71_rank_functions": q71_rank_functions,
     "q72_windowed_distinct": q72_windowed_distinct,
     "q73_try_arithmetic": q73_try_arithmetic,
-    # round-7 post-window addition (rotates into _WINDOW_R8)
     "q74_subtree_rollup": q74_subtree_rollup,
     "q75_variant_shred": q75_variant_shred,
     "q76_locf_forward_fill": q76_locf_forward_fill,

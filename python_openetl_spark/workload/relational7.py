@@ -11,9 +11,6 @@ Reference parity: the reference's temporal surface is the sliding
 created_at/updated_at delta filter (pyopenetl/operations.py:515-609);
 q77 covers the downstream repair its warehouse users run on such
 event streams, expressed with Spark's IGNORE-NULLS window pair.
-
-Registered after ``llm11`` in ``_MODULES``; round-8 post-window,
-rotates into ``_WINDOW_R9``.
 """
 
 from __future__ import annotations

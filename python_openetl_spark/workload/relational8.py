@@ -11,10 +11,7 @@ Reference parity: tmccall8829/python-openetl has no event-pattern
 operator (row-level ETL only, openetl/etl.py); this family is part of
 the beyond-reference analytics surface (SURVEY.md §2).
 
-Registered after ``llm12`` in ``_MODULES``; round-10 post-window,
-rotates into ``_WINDOW_R11``.
-
-Round-11 additions (post-window, rotate into ``_WINDOW_R12``):
+Round-11 additions:
 
 - q83: the same 4-step funnel under RELAXED ("eventually-after")
   first-touch semantics (r10 verdict #2) — chained running-min windows

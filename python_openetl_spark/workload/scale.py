@@ -6,9 +6,6 @@ join / COUNT(DISTINCT), which is exactly what the DuckDB oracle
 states. A green row here proves the salted dataflow is equivalent to
 the unsalted semantics on real data, the same way s05/s06 prove the
 streaming join plans through their batch twins.
-
-Registered after relational in ``_MODULES`` (rotates into the driver
-window in a later round; green in the local gate replica now).
 """
 
 from __future__ import annotations

@@ -22,17 +22,15 @@ predicate pushdown on read-back.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_openetl_spark.operators.materialize import pin
-from python_openetl_spark.workload.util import t
+from python_openetl_spark.workload.util import scratch, t
 
 
 def _tmp(fmt: str) -> str:
-    return tempfile.mkdtemp(prefix=f"poe_{fmt}_roundtrip_") + "/data"
+    return scratch(f"{fmt}_roundtrip") + "/data"
 
 
 def k01_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,11 +262,10 @@ def k10_tarball_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     untar/infer/seed path is value-checked, not just exercised."""
     import os
     import tarfile
-    import tempfile
 
     from python_openetl_spark.plans.pipelines import ingest_tarball
 
-    tmp = tempfile.mkdtemp(prefix="poe_k10_")
+    tmp = scratch("k10")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -301,11 +298,10 @@ def k11_remote_csv_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same fetch -> parallel CSV scan -> atomic overwrite path an
     http source takes), read the seeded table back and aggregate."""
     import os
-    import tempfile
 
     from python_openetl_spark.sources.files import seed_from_remote_csv
 
-    tmp = tempfile.mkdtemp(prefix="poe_k11_")
+    tmp = scratch("k11")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -333,12 +329,11 @@ def k12_registry_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     that drops, re-types, or duplicates rows hash-mismatches its
     four siblings and the oracle."""
     import os
-    import tempfile
 
     from python_openetl_spark.sources import registry
     from python_openetl_spark.sources.jdbc import JdbcSource, write_table
 
-    tmp = tempfile.mkdtemp(prefix="poe_k12_")
+    tmp = scratch("k12")
     # the SAME slice feeds five independent sink writes: pin it once so
     # each write reads the materialized rows instead of re-running the
     # source scan+projection per sink (guide §1.2)
@@ -489,7 +484,7 @@ QUERIES = {
     "k11_remote_csv_seed": k11_remote_csv_seed,
     "k12_registry_dispatch": k12_registry_dispatch,
     "k08_permissive_csv_ingest": k08_permissive_csv_ingest,
-    # round-7 post-window addition (rows-only by design; see docstring)
+    # rows-only by design; see docstring
     "k13_doctor_report": k13_doctor_report,
 }
 
@@ -599,7 +594,6 @@ def k14_compaction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-empty partition" and "compaction reached ~ceil(n/500) files
     without losing a row"."""
     import math
-    import tempfile
 
     from python_openetl_spark.plans.pipelines import compact_table
 
@@ -610,7 +604,7 @@ def k14_compaction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(0, True, True)],
             "n_rows long, fragmented boolean, compacted_ok boolean",
         )
-    path = tempfile.mkdtemp(prefix="poe_k14_") + "/orders"
+    path = scratch("k14") + "/orders"
     o.repartition(32).write.parquet(path)
     stats = compact_table(spark, path, target_rows_per_file=500)
     expected = max(1, math.ceil(n / 500))

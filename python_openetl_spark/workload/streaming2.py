@@ -5,8 +5,6 @@ check the window operators — ``enrich_with_static`` and
 is a no-op there), so DuckDB states the semantics; the genuinely
 streaming behaviors (state eviction, late-data drop) are covered by the
 real micro-batch replays in tests/test_streaming.py.
-
-Registered last in ``_MODULES`` (window-neutral this round).
 """
 
 from __future__ import annotations
@@ -20,7 +18,7 @@ from python_openetl_spark.streaming.joins import (
     interval_join_outer,
 )
 from python_openetl_spark.operators.materialize import pin
-from python_openetl_spark.workload.util import corpus_key, nonempty, stream_state_partitions, t
+from python_openetl_spark.workload.util import corpus_memo, nonempty, scratch, stream_state_partitions, t
 
 
 def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,8 +245,6 @@ def s10_stream_versioned_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta txnAppId pattern). The report proves exactly-once end to
     end: version count unmoved by the replay, final row count and an
     exact decimal value checksum over the live table."""
-    import tempfile
-
     from python_openetl_spark.plans.versioned import VersionedTable
     from python_openetl_spark.streaming.sinks import VersionedCdcSink
 
@@ -271,7 +267,7 @@ def s10_stream_versioned_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = b0.filter(F.col("id") % 5 == 0).select(
         (F.col("id") + 1_000_000).alias("id"), "ts", "v"
     )
-    path = tempfile.mkdtemp(prefix="poe_s10_") + "/vcdc"
+    path = scratch("s10") + "/vcdc"
     sink = VersionedCdcSink(path, pk="id", order_col="ts")
     sink(b0, batch_id=0)
     sink(b1, batch_id=1)
@@ -305,13 +301,6 @@ ORACLE["s10_stream_versioned_cdc"] = """
 """
 
 
-#: staged replay dirs per sf_dir — the s13/s14/s15 convention: the
-#: replay INPUT is a deterministic function of the fixture, so staging
-#: it once per session is fixture setup, not result caching (each run
-#: still replays the full stream through the state machine)
-_S11_STAGED: dict = {}
-
-
 def s11_stateful_running_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (streaming/stateful.py
     running_user_totals, applyInPandasWithState) executed as a REAL
@@ -324,8 +313,6 @@ def s11_stateful_running_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     running total is asserted with tolerance in
     tests/test_streaming.py, because a cross-batch float accumulation
     order is kernel-defined, not SQL-defined."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from python_openetl_spark.streaming.sources import (
@@ -339,11 +326,13 @@ def s11_stateful_running_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "user_id long, n_events long, last_ts_us long"
         )
-    path = _S11_STAGED.get(corpus_key(sf_dir))
-    if path is None:
-        tmp = tempfile.mkdtemp(prefix="poe_s11_")
-        path = stage_replay_dir(ev, tmp + "/replay", chunks=3)
-        _S11_STAGED[corpus_key(sf_dir)] = path
+    # the replay INPUT is a deterministic function of the fixture, so
+    # staging it once per corpus is fixture setup, not result caching
+    # (each run still replays the full stream through the state machine)
+    path = corpus_memo(
+        "s11", sf_dir,
+        lambda: stage_replay_dir(ev, scratch("s11") + "/replay", chunks=3),
+    )
     stream = read_file_stream(spark, path, ev.schema)
     name = "poe_s11_state"
     # state-partition sizing derived from the staged replay volume
@@ -370,7 +359,7 @@ def s11_stateful_running_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("update")
             # fresh checkpoint per invocation: a reused one would resume
             # a finished stream and emit nothing
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="poe_s11_ckpt_"))
+            .option("checkpointLocation", scratch("s11_ckpt"))
             .trigger(availableNow=True)
             .start()
         )

@@ -2,12 +2,20 @@
 
 from __future__ import annotations
 
+import atexit
+import logging
 import os
+import shutil
+import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_openetl_spark.io import load_table
+from python_openetl_spark.io import load_table, parquet_files
+
+_log = logging.getLogger("python_openetl_spark")
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -44,8 +52,6 @@ def stream_state_partitions(
         return max(1, int(env))
     import math
 
-    from pyspark.sql import SparkSession
-
     target = 4096 if python_state else 8192
     raw = max(1.0, float(rows_per_batch) / target)
     n = 2 ** round(math.log2(raw))
@@ -54,101 +60,74 @@ def stream_state_partitions(
     return int(min(max(4, n), max(4, cap)))
 
 
-def nonempty(sf_dir: str, name: str) -> bool:
-    """Degenerate-corpus guard: is the fixture table non-empty?
+def _footer_read(sf_dir: str, name: str, read, spark_read):
+    """``read(part_files)`` over a fixture table's parquet footers, or
+    ``spark_read(load_table(...))`` when pyarrow cannot read them.
 
-    Parquet footers record exact row counts, so the check is a
-    driver-side metadata read (one footer per part-file, no Spark job)
-    — where the previous ``df.take(1)`` scheduled a scan job per query
-    call just to decide "not empty" (guide §5: the driver should do
-    almost no data work, and row-count metadata is no data at all).
-    Cost is O(part files), independent of table size, so it holds at
-    any scale. Falls back to a Spark ``take(1)`` when the footers
-    cannot be read (exotic store layout, permissions)."""
-    import pyarrow.parquet as pq
-
+    Footers record exact row counts and the first page holds the first
+    row, so the metadata questions below are driver-side reads (no
+    Spark job; O(part files), independent of table size). Only an
+    unreadable footer (``OSError``: permissions, exotic store layout;
+    ``ArrowInvalid``: corrupt file) falls back to a Spark job, logged at
+    WARNING on the ``python_openetl_spark`` logger; with no active
+    session the pyarrow error itself propagates. A table directory with
+    no part file raises: it is a broken or half-written table, not an
+    empty one."""
     path = os.path.join(sf_dir, f"{name}.parquet")
+    files = parquet_files(path)
+    if not files:
+        raise FileNotFoundError(f"no .parquet part file under {path}")
     try:
-        if os.path.isdir(path):
-            for root, _dirs, files in os.walk(path):
-                for fname in files:
-                    if fname.endswith(".parquet"):
-                        md = pq.ParquetFile(os.path.join(root, fname)).metadata
-                        if md.num_rows > 0:
-                            return True
-            return False
-        return pq.ParquetFile(path).metadata.num_rows > 0
-    except Exception:
-        from pyspark.sql import SparkSession
-
+        return read(files)
+    except (OSError, pa.ArrowInvalid) as err:
         spark = SparkSession.getActiveSession()
-        return bool(load_table(spark, sf_dir, name).take(1))
+        if spark is None:
+            raise
+        _log.warning("footer read of %s failed (%s); falling back to Spark", path, err)
+        return spark_read(load_table(spark, sf_dir, name))
+
+
+def nonempty(sf_dir: str, name: str) -> bool:
+    """Degenerate-corpus guard: is the fixture table non-empty?"""
+    return _footer_read(
+        sf_dir,
+        name,
+        lambda files: any(pq.ParquetFile(f).metadata.num_rows > 0 for f in files),
+        lambda df: bool(df.take(1)),
+    )
 
 
 def table_rows(sf_dir: str, name: str) -> int:
-    """Exact fixture-table row count from parquet footers.
-
-    Footers record exact per-file row counts, so this equals
-    ``load_table(...).count()`` (load_table normalizes column types but
-    never drops rows) at the cost of a driver-side metadata read instead
-    of a per-call Spark count job. Used by the ANN probe queries whose
-    index parameters derive from corpus size (``ivf_params(n)``) — each
-    previously scheduled a full count scan per call (guide §5: row-count
-    metadata is not data work). Falls back to a Spark count when the
-    footers cannot be read."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for fname in files:
-                    if fname.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, fname)
-                        ).metadata.num_rows
-            return total
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        return load_table(spark, sf_dir, name).count()
+    """Exact fixture-table row count, equal to ``load_table(...).count()``
+    (load_table normalizes column types but never drops rows). Sizes the
+    ANN probes' index parameters (``ivf_params(n)``)."""
+    return _footer_read(
+        sf_dir,
+        name,
+        lambda files: sum(pq.ParquetFile(f).metadata.num_rows for f in files),
+        lambda df: df.count(),
+    )
 
 
 def embedding_dim(sf_dir: str, name: str = "embeddings") -> int:
-    """Vector dimensionality from the first stored row, via a pyarrow
-    single-batch read (one page decode, no Spark job) — the companion of
-    :func:`table_rows` for the ANN probes that size PQ/IVF parameters
-    from ``(n, dim)``. Falls back to a Spark ``first()``."""
-    import pyarrow.parquet as pq
+    """Vector dimensionality from the first stored row (one page
+    decode) — the companion of :func:`table_rows` for the ANN probes
+    that size PQ/IVF parameters from ``(n, dim)``."""
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        files = []
-        if os.path.isdir(path):
-            for root, _dirs, fnames in os.walk(path):
-                files.extend(
-                    os.path.join(root, f) for f in fnames if f.endswith(".parquet")
-                )
-            files.sort()
-        else:
-            files = [path]
+    def first_vector(files: list[str]) -> int:
         for f in files:
             pf = pq.ParquetFile(f)
-            if pf.metadata.num_rows == 0:
-                continue
-            batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
-            return len(batch.column("embedding")[0].as_py())
-        raise ValueError(f"no rows in {path}")
-    except Exception:
-        from pyspark.sql import SparkSession
+            if pf.metadata.num_rows:
+                batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
+                return len(batch.column("embedding")[0].as_py())
+        raise ValueError(f"no rows in {sf_dir}/{name}.parquet")
 
-        spark = SparkSession.getActiveSession()
-        return len(
-            load_table(spark, sf_dir, name).select("embedding").first()[0]
-        )
+    return _footer_read(
+        sf_dir,
+        name,
+        first_vector,
+        lambda df: len(df.select("embedding").first()[0]),
+    )
 
 
 def corpus_key(sf_dir: str) -> tuple:
@@ -173,6 +152,39 @@ def corpus_key(sf_dir: str) -> tuple:
     except OSError:
         return (sf_dir,)
     return (sf_dir, tuple(entries))
+
+
+#: the per-process scratch root (see :func:`scratch`) and the one
+#: corpus-keyed memo (see :func:`corpus_memo`)
+_SCRATCH_ROOT: str | None = None
+_MEMO: dict = {}
+
+
+def scratch(tag: str) -> str:
+    """A fresh empty directory (``<root>/<tag>_*``) for a query's
+    staged inputs, stores, tables or checkpoints. All of them live under
+    one per-process root, ``tempfile.mkdtemp(prefix="poe_")``, made on
+    first use and removed by one ``atexit`` handler — so a run leaves
+    nothing in the temp dir, unless the process is killed."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="poe_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=_SCRATCH_ROOT)
+
+
+def corpus_memo(tag: str, sf_dir: str, build):
+    """``build()``'s result, computed once per ``(tag, corpus_key(sf_dir))``.
+
+    Holds derived state that is a pure function of the fixture — an ANN
+    or postings store, a staged replay input, materialized tower top-k —
+    so bench repeats measure the query path, not the setup. A corpus
+    mutated in place changes its key and rebuilds; a ``build()`` that
+    raises memoizes nothing."""
+    key = (tag, corpus_key(sf_dir))
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def dsum(col: Column | str, scale: int = 6, precision: int = 24) -> Column:

@@ -217,9 +217,9 @@ def test_driver_window_is_full_and_oracle_backed(spark):
     assert len(set(w)) == 50
     # every query oracle-backed except the EXPLICIT rows-only surface
     # (k13's capability flags ARE environment state — an oracle would
-    # hardcode the sandbox); no orphan oracles. k13 sits in _WINDOW_R8
-    # by the r7 verdict's prescription — the driver records its weaker
-    # rows-only check — so the window check carves out exactly that set
+    # hardcode the sandbox); no orphan oracles. The driver records a
+    # weaker rows-only check for k13, so the window check carves out
+    # exactly that set
     rows_only = {"k13_doctor_report"}
     assert all(n in o for n in w if n not in rows_only), [
         n for n in w if n not in o and n not in rows_only
@@ -539,7 +539,7 @@ def test_q86_threshold_is_broadcast_and_reuses_the_group_exchange(spark):
     assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan, plan
 
 
-def test_bloom_prune_empty_manifest_returns_no_files(spark):
+def test_bloom_prune_empty_manifest_returns_no_files(spark, tmp_path):
     """A zero-row table's bloom manifest is empty; pruning must return
     [] (and bloom_pruned_read its typed-empty fallback), not raise the
     mixed-geometry error."""
@@ -549,9 +549,7 @@ def test_bloom_prune_empty_manifest_returns_no_files(spark):
         build_bloom_manifest,
     )
 
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="poe_bloom_empty_")
+    d = str(tmp_path / "empty")
     spark.createDataFrame([], "k long, v int").write.mode("overwrite").parquet(d)
     man = build_bloom_manifest(spark, d, "k")
     assert man.count() == 0
