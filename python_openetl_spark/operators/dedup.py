@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from python_openetl_spark.functions.text import fingerprint, text_shingles, token_hash60, tokens

@@ -69,22 +69,21 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_openetl_spark.functions.vectors import cosine, dot, norm
+from python_openetl_spark.functions.vectors import (
+    cosine_of_norms,
+    empty_topk,
+    nearest_cells,
+    norm,
+    topk,
+    unit_rows,
+)
+from python_openetl_spark.operators.kmeans import train_coarse_centroids
 from python_openetl_spark.operators.materialize import pin
 from python_openetl_spark.plans.commit import file_lock, write_json
 
-
-def _cosine_clamped(a, b):
-    """JVM cosine with the 1e-300 denominator clamp: a zero-norm vector
-    scores 0.0 instead of NaN — Spark orders NaN as the LARGEST double,
-    so an unclamped zero vector in the store would rank FIRST for every
-    query (the knn_join/_unit rule, applied at the probe boundary).
-    Identical to :func:`functions.vectors.cosine` for any nonzero pair,
-    so exact-recall oracles are unaffected."""
-    return dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(1e-300))
 
 _CENTROIDS = "centroids.parquet"
 _ASSIGNED = "assigned"
@@ -312,24 +311,22 @@ def current_index_dir(root: str) -> str:
 
 
 def _assign_fn(cnorm: np.ndarray, id_col: str, vec_col: str, attrs: tuple = ()):
+    """Arrow kernel: each row gains its nearest ``cell`` under the cell
+    rule (``functions.vectors.nearest_cells``; a zero-norm vector lands
+    in cell 0). Shared by every IVF build, append and assignment scan."""
+
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # 1e-300 clamp: a zero-norm vector must land in a real cell
-            # (cos 0.0 against every centroid -> argmax 0), not produce
-            # a NaN row whose argmax is undefined
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-300
-            )
+            mat = unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
             out = {
                 id_col: pdf[id_col],
                 vec_col: pdf[vec_col],
             }
             for a in attrs:  # filterable metadata rides with the vector
                 out[a] = pdf[a]
-            out["cell"] = (mat @ cnorm.T).argmax(axis=1).astype(np.int32)
+            out["cell"] = nearest_cells(mat, cnorm)[:, 0].astype(np.int32)
             yield pd.DataFrame(out)
 
     return assign
@@ -370,7 +367,7 @@ def _read_centroids(spark: SparkSession, root: str) -> tuple[np.ndarray, np.ndar
     cmat = np.array(tbl.column("centroid").to_pylist(), dtype=np.float64)
     order = np.argsort(cells)
     cmat = cmat[order]
-    return cells[order], cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
+    return cells[order], unit_rows(cmat)
 
 
 def build_ivf_store(
@@ -414,8 +411,6 @@ def _build_into(
     # reason: sampled centroids give uneven cells — hot probe tasks,
     # weaker recall per nprobe). Training is build-time-only cost:
     # train_iters corpus scans, nlist x dim scalars on the driver.
-    from python_openetl_spark.operators.kmeans import train_coarse_centroids
-
     spark = corpus.sparkSession
     cents = train_coarse_centroids(
         corpus,
@@ -758,11 +753,10 @@ def _arrow_relation(spark: SparkSession, **cols) -> DataFrame:
 def _probe_cells(
     qvecs: np.ndarray, cnorm: np.ndarray, cells: np.ndarray, nprobe: int
 ) -> np.ndarray:
-    """The ``nprobe`` nearest cells of each query (rows of ``qvecs``).
-    A zero-norm query is clamped like every stored vector (1e-300), so
-    it scores 0.0 against every centroid instead of NaN."""
-    qn = qvecs / np.maximum(np.linalg.norm(qvecs, axis=1, keepdims=True), 1e-300)
-    return cells[np.argsort(-(qn @ cnorm.T), axis=1)[:, :nprobe]]
+    """The ``nprobe`` nearest cells of each query (rows of ``qvecs``),
+    nearest first, under the cell rule; ``cells`` maps centroid rows to
+    cell ids. A zero-norm query scores 0.0 against every centroid."""
+    return cells[nearest_cells(unit_rows(qvecs), cnorm, nprobe)]
 
 
 def _probe_pairs(
@@ -788,9 +782,8 @@ def _probe_pairs(
     ``cell`` against an Arrow-built (query, cell, query vector)
     relation of queries x nprobe rows. Norms are computed once per
     row, not once per pair: ``__en`` on the scan side before the join,
-    ``__qn`` on the probe relation. They are the
-    :func:`_cosine_clamped` expressions on the same values, so the
-    scores are bit-identical to it."""
+    ``__qn`` on the probe relation, and ``functions.vectors.cosine_of_norms``
+    divides by them, so the scores are bit-identical to ``cosine``."""
     cells, cnorm = _read_centroids(spark, idx_dir)
     qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
     qvecs = np.stack(queries_pdf[vec_col].to_numpy())
@@ -816,9 +809,8 @@ def _probe_pairs(
         .select(
             query_id_col,
             id_col,
-            (
-                dot(F.col(vec_col), F.col("__qv"))
-                / F.greatest(F.col("__en") * F.col("__qn"), F.lit(1e-300))
+            cosine_of_norms(
+                F.col(vec_col), F.col("__qv"), F.col("__en"), F.col("__qn")
             ).alias("cos_sim"),
         )
     )
@@ -852,19 +844,12 @@ def ivf_store_topk(
     persisted-store level)."""
     idx_dir = current_index_dir(root)
     if queries_pdf.empty:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
-        )
+        return empty_topk(spark, query_id_col, id_col)
     scored = _probe_pairs(
         spark, idx_dir, queries_pdf, nprobe=nprobe, id_col=id_col,
         vec_col=vec_col, query_id_col=query_id_col, where=where,
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
-    )
+    return topk(scored, k, by=query_id_col, id_col=id_col)
 
 
 def ivf_store_range_search(

@@ -39,18 +39,14 @@ index the training-data pipeline needs at 100 TB.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_openetl_spark.functions.vectors import cosine  # noqa: F401 (re-export parity)
-from python_openetl_spark.operators.ivf_store import _cosine_clamped
+from python_openetl_spark.functions.vectors import empty_topk
 from python_openetl_spark.operators.ivf_store import (
-    _arrow_relation,
-    _probe_cells,
     _ASSIGNED,
     _SEQ,
     _bump_seq,
@@ -66,7 +62,8 @@ from python_openetl_spark.operators.ivf_store import (
     _write_store_schemas,
     current_index_dir,
 )
-from python_openetl_spark.operators.pq import pq_fit
+from python_openetl_spark.operators.kmeans import train_coarse_centroids
+from python_openetl_spark.operators.pq import _encode_assign_fn, _ivfpq_probe, pq_fit
 
 _CODEBOOKS = "codebooks.parquet"
 
@@ -97,36 +94,6 @@ def _read_codebooks(spark: SparkSession, idx_dir: str) -> np.ndarray:
     for r in tbl:
         books[r["sub"], r["cell"]] = r["centroid"]
     return books
-
-
-def _encode_assign_fn(cnorm: np.ndarray, books: np.ndarray, id_col: str, vec_col: str):
-    """One scan: coarse-cell assignment AND PQ encoding per batch (the
-    ivf_pq_topk kernel, persisted form)."""
-    m, _, dsub = books.shape
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            mn = mat / np.maximum(norms[:, None], 1e-300)
-            cell = (mn @ cnorm.T).argmax(axis=1).astype(np.int32)
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            for s in range(m):
-                x = mat[:, s * dsub : (s + 1) * dsub]
-                c = books[s]
-                codes[:, s] = (2.0 * x @ c.T - (c * c).sum(axis=1)).argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "codes": list((codes & 0xFF).astype(np.int8)),
-                    "vnorm": norms,
-                    "cell": cell,
-                }
-            )
-
-    return kernel
 
 
 def build_ivfpq_store(
@@ -164,8 +131,6 @@ def _build_pq_into(
     vec_col: str,
     seed: int,
 ) -> None:
-    from python_openetl_spark.operators.kmeans import train_coarse_centroids
-
     spark = corpus.sparkSession
     books = pq_fit(
         corpus, m=m, ksub=ksub, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed
@@ -316,90 +281,13 @@ def ivfpq_store_topk(
     top-k). The version pointer is resolved once up front."""
     idx_dir = current_index_dir(root)
     if queries_pdf.empty:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
-        )
+        return empty_topk(spark, query_id_col, id_col)
     cells, cnorm = _read_centroids(spark, idx_dir)
-    books = _read_codebooks(spark, idx_dir)
-    m, _, dsub = books.shape
-
-    qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qvecs = np.stack(queries_pdf[vec_col].to_numpy())
-    qmat = qvecs.astype(np.float64)
-    qnorms = np.linalg.norm(qmat, axis=1)
-    probe = _probe_cells(qmat, cnorm, cells, nprobe)
-    probe_df = _arrow_relation(
-        spark,
-        **{
-            query_id_col: np.repeat(qids, probe.shape[1]),
-            "cell": probe.reshape(-1),
-        },
-    )
-    lut = np.einsum("qsd,scd->qsc", qmat.reshape(len(qids), m, dsub), books)
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    shortlist = max(k * rerank_factor, k)
-
     # tombstone-aware (the shared _load_assigned loader): deleted ids
     # are invisible to PQ probes exactly as to the raw-vector store
-    assigned = _load_assigned(spark, idx_dir, id_col).filter(
-        F.col("cell").isin(np.unique(probe).tolist())  # partition-pruned scan
-    )
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sub_idx = np.arange(m)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64) & 0xFF
-            qidx = pdf[query_id_col].map(qpos).to_numpy()
-            dots = lut[qidx[:, None], sub_idx[None, :], codes].sum(axis=1)
-            vn = pdf["vnorm"].to_numpy()
-            # zero-norm guard: vnorm 0 would divide by the 1e-300 clamp
-            # and inflate the ADC score to ~1e300, hijacking the
-            # shortlist; a zero vector scores 0 everywhere instead
-            score = np.where(
-                vn * qnorms[qidx] == 0.0,
-                0.0,
-                dots / np.maximum(vn * qnorms[qidx], 1e-300),
-            )
-            yield pd.DataFrame(
-                {
-                    query_id_col: pdf[query_id_col],
-                    id_col: pdf[id_col],
-                    "adc_score": score,
-                }
-            )
-
-    cand_rows = (
-        assigned.join(F.broadcast(probe_df), "cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col, "codes", "vnorm")
-        .mapInPandas(adc, schema=f"{query_id_col} long, {id_col} long, adc_score double")
-    )
-    w_short = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_score").desc(), F.col(id_col)
-    )
-    cand = (
-        cand_rows.withColumn("__r", F.row_number().over(w_short))
-        .filter(F.col("__r") <= shortlist)
-        .select(query_id_col, id_col)
-    )
-    qdf = _arrow_relation(
-        spark, **{query_id_col: qids, "__qv": qvecs.astype(np.float32)}
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qdf), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            # clamped: a zero-norm shortlist row must score 0.0, not a
-            # NaN that Spark ranks FIRST (identical to cosine() for any
-            # nonzero pair, so full-recall oracle configs are unaffected)
-            _cosine_clamped(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _ivfpq_probe(
+        _load_assigned(spark, idx_dir, id_col), corpus, cells, cnorm,
+        _read_codebooks(spark, idx_dir), queries_pdf, k=k, nprobe=nprobe,
+        rerank_factor=rerank_factor, id_col=id_col, vec_col=vec_col,
+        query_id_col=query_id_col,
     )

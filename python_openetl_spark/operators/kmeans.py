@@ -2,8 +2,9 @@
 
 The coarse-clustering backbone for semantic dedup (SemDeDup: Abbas et
 al., arXiv:2303.09540 — cluster embeddings, then dedup only *within*
-clusters) and for IVF-style index builds (`operators/similarity.py`
-samples centroids; this refines them with Lloyd sweeps, same dataflow).
+clusters) and for IVF-style index builds (the sampled IVF operators
+stop at :func:`init_centroids`; the trainer refines those seeds with
+Lloyd sweeps, same dataflow).
 
 Scale shape (the part that must survive 100 TB):
 
@@ -34,11 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _unit_rows(mat: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(mat, axis=1, keepdims=True)
-    n[n == 0.0] = 1.0
-    return mat / n
+from python_openetl_spark.functions.vectors import nearest_cells, unit_rows
 
 
 def init_centroids(
@@ -46,7 +43,9 @@ def init_centroids(
 ) -> np.ndarray:
     """Deterministic seed centroids: the k corpus vectors that sort
     first by ``xxhash64(id, seed)`` — an engine-reproducible uniform
-    sample (same device as operators/sampling.py), one tiny top-k job."""
+    sample (same device as operators/sampling.py), one tiny top-k job,
+    unit-normalised. The one sampled-centroid function: the IVF
+    operators seed from it too. Empty corpus: a ``(0, 0)`` array."""
     rows = (
         df.select(id_col, vec_col)
         .withColumn("__h", F.xxhash64(F.col(id_col), F.lit(seed)))
@@ -56,7 +55,7 @@ def init_centroids(
     )
     if not rows:
         return np.zeros((0, 0))
-    return _unit_rows(np.array([r[vec_col] for r in rows], dtype=np.float64))
+    return unit_rows(np.array([r[vec_col] for r in rows], dtype=np.float64))
 
 
 def spherical_kmeans(
@@ -83,22 +82,21 @@ def spherical_kmeans(
     full-corpus shuffle saved; the explode happens in the same scan).
     """
     src = df.select(id_col, vec_col)
+    schema = f"{id_col} long, cell int, cell_rank int"
+    if include_vec:
+        schema += f", {vec_col} array<float>"
     cents = init_centroids(src, id_col, vec_col, k, seed)
     k = cents.shape[0]  # fewer rows than k: every row seeds a centroid
     if k == 0:  # empty corpus: no centroids, no assignment rows
-        schema = f"{id_col} long, cell int, cell_rank int"
-        if include_vec:
-            schema += f", {vec_col} array<float>"
-        empty = df.sparkSession.createDataFrame([], schema)
-        return np.zeros((0, 0)), empty
+        return cents, df.sparkSession.createDataFrame([], schema)
 
     for _ in range(iters):
         c_bc = cents  # closed over; k x dim doubles, broadcast with the task
 
         def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                mat = _unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-                cells = (mat @ c_bc.T).argmax(axis=1)
+                mat = unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+                cells = nearest_cells(mat, c_bc)[:, 0]
                 sums = np.zeros_like(c_bc)
                 np.add.at(sums, cells, mat)
                 counts = np.bincount(cells, minlength=c_bc.shape[0])
@@ -131,7 +129,7 @@ def spherical_kmeans(
             if r["pos"] == 0:
                 counts[r["cell"]] = r["n0"]
         live = counts > 0
-        new[live] = _unit_rows(sums[live])  # empty cells keep their centroid
+        new[live] = unit_rows(sums[live])  # empty cells keep their centroid
         cents = new
 
     c_bc = cents
@@ -139,8 +137,8 @@ def spherical_kmeans(
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mat = _unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            order = np.argsort(-(mat @ c_bc.T), axis=1, kind="stable")[:, :p]
+            mat = unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            order = nearest_cells(mat, c_bc, p)
             n = len(pdf)
             out = {
                 id_col: np.repeat(pdf[id_col].to_numpy(), p),
@@ -151,11 +149,7 @@ def spherical_kmeans(
                 out[vec_col] = np.repeat(pdf[vec_col].to_numpy(), p)
             yield pd.DataFrame(out)
 
-    schema = f"{id_col} long, cell int, cell_rank int"
-    if include_vec:
-        schema += f", {vec_col} array<float>"
-    assignments = src.mapInPandas(assign, schema=schema)
-    return cents, assignments
+    return cents, src.mapInPandas(assign, schema=schema)
 
 
 def train_coarse_centroids(
@@ -238,7 +232,7 @@ def semantic_dedup(
         n = len(ids)
         if n < 2:
             return pd.DataFrame({id_col: ids[:0]})
-        mat = _unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+        mat = unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
         dropped = np.zeros(n, dtype=bool)
         row_idx = np.arange(n)
         blk = 2048  # bounds the score slab at n x 2048 doubles

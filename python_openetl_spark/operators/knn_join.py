@@ -16,12 +16,15 @@ Two strategies:
    top-k. Exact kNN join is inherently O(n·q) FLOPs — this form
    distributes them with per-task memory capped at
    (corpus_block_rows + query_block_rows) vectors and shuffle volume
-   n·QB + q·CB (the classic block-replication trade). Result is
-   bit-identical to ``cosine_topk`` (same float64 math, same
-   (cos desc, id) tie-break), so exact-SQL oracles stay valid.
+   n·QB + q·CB (the classic block-replication trade). The shortlist is
+   re-scored with the JVM ``cosine``, so the result is bit-identical to
+   ``similarity.cosine_topk`` (same expression, same (cos desc, id)
+   tie-break, zero-norm rows included) and exact-SQL oracles stay
+   valid.
 2. :func:`ivf_knn_join` — APPROXIMATE cell co-partitioned join, the
    100 TB shape: assign corpus vectors to their nearest IVF cell,
-   assign each query to its ``nprobe`` nearest cells, equi-join on the
+   assign each query to its ``nprobe`` nearest cells (``ivf_store``'s
+   ``_assign_fn``/``_probe_cells``), equi-join on the
    cell id (plus a query-block axis to bound hot cells), GEMM within
    each co-partition, exact re-rank per query. FLOPs drop to
    ~``nprobe/nlist`` of the exact join; recall is tunable and must be
@@ -40,17 +43,24 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from python_openetl_spark.functions.vectors import (
+    cosine,
+    empty_topk,
+    local_topk,
+    topk,
+    unit_rows,
+)
+from python_openetl_spark.operators.ivf_store import (
+    _assign_fn,
+    _load_assigned,
+    _probe_cells,
+    _read_centroids,
+    current_index_dir,
+)
+from python_openetl_spark.operators.kmeans import train_coarse_centroids
 
 _OUT_SCHEMA = "{qid} long, {cid} long, cos_sim double"
-
-
-def _unit(mat: np.ndarray) -> np.ndarray:
-    # 1e-300 clamp (same as ivf_store._assign_fn): a zero-norm vector
-    # must score cos 0.0, not NaN — Spark orders NaN as the LARGEST
-    # double, so an unclamped zero corpus vector would rank first for
-    # every query in the global window.
-    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-300)
 
 
 def _gemm_topk_kernel(
@@ -58,10 +68,9 @@ def _gemm_topk_kernel(
 ):
     """Cogrouped-Arrow kernel: one bounded GEMM per (corpus-block,
     query-block) co-partition, emitting each query's block-local top-k
-    under the global (cos desc, id asc) total order — the same float64
-    math and lexsort tie-break as similarity.cosine_topk_arrow, so
-    block truncation composes with the final window into the exact
-    global answer.
+    (``functions.vectors.local_topk``, as similarity.cosine_topk_arrow
+    does), so block truncation composes with the final window into the
+    exact global answer.
 
     ``exclude_self`` masks corpus rows whose id equals the query id —
     right for self-query shapes (dedup: queries drawn from the corpus),
@@ -81,43 +90,79 @@ def _gemm_topk_kernel(
         if left.empty or right.empty:
             return empty
         ids = left[id_col].to_numpy(dtype=np.int64)
-        mat = _unit(np.stack(left[vec_col].to_numpy()).astype(np.float64))
+        mat = unit_rows(np.stack(left[vec_col].to_numpy()).astype(np.float64))
         qids = right[query_id_col].to_numpy(dtype=np.int64)
-        qnorm = _unit(np.stack(right["__qv"].to_numpy()).astype(np.float64))
-        sims = mat @ qnorm.T  # (corpus_block, query_block)
-        frames = []
-        for qi, qid in enumerate(qids):
-            col = sims[:, qi]
-            if exclude_self:
-                mask = ids != qid
-                cand_ids, cand_col = ids[mask], col[mask]
-            else:
-                cand_ids, cand_col = ids, col
-            cand_idx = np.lexsort((cand_ids, -cand_col))[:k]
-            sel = cand_ids[cand_idx]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        query_id_col: np.full(len(sel), qid, dtype=np.int64),
-                        id_col: sel,
-                        "cos_sim": cand_col[cand_idx],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        qnorm = unit_rows(np.stack(right["__qv"].to_numpy()).astype(np.float64))
+        return local_topk(
+            ids, qids, mat @ qnorm.T, k,  # (corpus_block, query_block)
+            query_id_col=query_id_col, id_col=id_col, exclude_self=exclude_self,
+        )
 
     return kernel
 
 
-def _global_topk(local: DataFrame, query_id_col: str, id_col: str, k: int) -> DataFrame:
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
+def _probe_queries(
+    queries: DataFrame,
+    cnorm: np.ndarray,
+    cells: np.ndarray,
+    nprobe: int,
+    qb: int,
+    query_id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Each query row fanned out to its ``nprobe`` nearest cells
+    (``ivf_store._probe_cells``) in one Arrow pass, plus its query-block
+    id ``__qb``. The probe list stays distributed (contrast ivf_topk's
+    driver-side probe pairs, fine for anchors, wrong for a join-sized
+    set)."""
+
+    def probe(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            qvecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            idx = np.repeat(np.arange(len(pdf)), nprobe)
+            yield pd.DataFrame(
+                {
+                    query_id_col: pdf[query_id_col].to_numpy()[idx],
+                    "__qv": pdf[vec_col].to_numpy()[idx],
+                    "cell": _probe_cells(qvecs, cnorm, cells, nprobe)
+                    .reshape(-1)
+                    .astype(np.int32),
+                }
+            )
+
+    return queries.select(query_id_col, vec_col).mapInPandas(
+        probe, schema=f"{query_id_col} long, __qv array<float>, cell int"
+    ).withColumn(
+        "__qb", F.pmod(F.xxhash64(F.col(query_id_col)), F.lit(qb)).cast("int")
     )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
+
+
+def _block_join(
+    c: DataFrame,
+    q: DataFrame,
+    keys: list,
+    k: int,
+    query_id_col: str,
+    id_col: str,
+    vec_col: str,
+    exclude_self: bool,
+) -> DataFrame:
+    """Cogroup the replicated corpus and query sides on ``keys``, run
+    the GEMM kernel per co-partition, and keep each query's global
+    shortlist of ``_shortlist_size(k)`` candidates."""
+    local = (
+        c.groupBy(*keys)
+        .cogroup(q.groupBy(*keys))
+        .applyInPandas(
+            _gemm_topk_kernel(
+                id_col, query_id_col, vec_col, _shortlist_size(k), exclude_self
+            ),
+            schema=_OUT_SCHEMA.format(qid=query_id_col, cid=id_col),
+        )
     )
+    return topk(local, _shortlist_size(k), by=query_id_col, id_col=id_col)
 
 
 def _shortlist_size(k: int) -> int:
@@ -150,8 +195,6 @@ def _exact_rescore_topk(
     matches bit-for-bit, the x01/x02 contract) and re-ranked on the
     exact values. Cost: two id-keyed joins over (k + margin)·|queries|
     rows — output-sized, not corpus-sized."""
-    from python_openetl_spark.functions.vectors import dot, norm
-
     rescored = (
         candidates.select(query_id_col, id_col)
         .join(corpus.select(id_col, vec_col), id_col)
@@ -162,15 +205,10 @@ def _exact_rescore_topk(
         .select(
             query_id_col,
             id_col,
-            (
-                dot(F.col(vec_col), F.col("__qv"))
-                / F.greatest(
-                    norm(F.col(vec_col)) * norm(F.col("__qv")), F.lit(1e-300)
-                )
-            ).alias("cos_sim"),
+            cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
         )
     )
-    return _global_topk(rescored, query_id_col, id_col, k)
+    return topk(rescored, k, by=query_id_col, id_col=id_col)
 
 
 def cosine_knn_join(
@@ -199,9 +237,7 @@ def cosine_knn_join(
     spark = corpus.sparkSession
     n_c, n_q = corpus.count(), queries.count()
     if n_c == 0 or n_q == 0:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
-        )
+        return empty_topk(spark, query_id_col, id_col)
     cb = max(1, math.ceil(n_c / corpus_block_rows))
     qb = max(1, math.ceil(n_q / query_block_rows))
     c = corpus.select(
@@ -214,17 +250,9 @@ def cosine_knn_join(
         F.col(vec_col).alias("__qv"),
         F.pmod(F.xxhash64(F.col(query_id_col)), F.lit(qb)).cast("int").alias("__qb"),
     ).withColumn("__cb", F.explode(F.sequence(F.lit(0), F.lit(cb - 1))))
-    local = (
-        c.groupBy("__cb", "__qb")
-        .cogroup(q.groupBy("__cb", "__qb"))
-        .applyInPandas(
-            _gemm_topk_kernel(
-                id_col, query_id_col, vec_col, _shortlist_size(k), exclude_self
-            ),
-            schema=_OUT_SCHEMA.format(qid=query_id_col, cid=id_col),
-        )
+    cand = _block_join(
+        c, q, ["__cb", "__qb"], k, query_id_col, id_col, vec_col, exclude_self
     )
-    cand = _global_topk(local, query_id_col, id_col, _shortlist_size(k))
     return _exact_rescore_topk(
         cand, corpus, queries, query_id_col, id_col, vec_col, k
     )
@@ -260,8 +288,6 @@ def ivf_knn_join(
     dim scalars on the driver; r7 verdict #2): sampled centroids track
     corpus density unevenly, giving hot cells (skewed probe tasks) and
     weaker recall per nprobe at scale."""
-    from python_openetl_spark.operators.kmeans import train_coarse_centroids
-
     spark = corpus.sparkSession
     cnorm = train_coarse_centroids(
         corpus,
@@ -273,63 +299,18 @@ def ivf_knn_join(
     )
     n_q = queries.count()
     if cnorm.shape[0] == 0 or n_q == 0:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
-        )
+        return empty_topk(spark, query_id_col, id_col)
     nprobe = min(nprobe, cnorm.shape[0])
     qb = max(1, math.ceil(n_q / query_block_rows))
-
-    def assign_corpus(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = _unit(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "__cell": (mat @ cnorm.T).argmax(axis=1).astype(np.int32),
-                }
-            )
-
-    def assign_queries(batches):
-        # each query row fans out to its nprobe nearest cells — the
-        # probe list stays distributed (contrast ivf_topk's driver-side
-        # probe pairs, fine for anchors, wrong for a join-sized set)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qn = _unit(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            probe = np.argsort(-(qn @ cnorm.T), axis=1)[:, :nprobe]
-            idx = np.repeat(np.arange(len(pdf)), nprobe)
-            yield pd.DataFrame(
-                {
-                    query_id_col: pdf[query_id_col].to_numpy()[idx],
-                    "__qv": pdf[vec_col].to_numpy()[idx],
-                    "__cell": probe.reshape(-1).astype(np.int32),
-                }
-            )
-
+    cells = np.arange(cnorm.shape[0], dtype=np.int32)
     c = corpus.select(id_col, vec_col).mapInPandas(
-        assign_corpus, schema=f"{id_col} long, {vec_col} array<float>, __cell int"
+        _assign_fn(cnorm, id_col, vec_col),
+        schema=f"{id_col} long, {vec_col} array<float>, cell int",
     ).withColumn("__qb", F.explode(F.sequence(F.lit(0), F.lit(qb - 1))))
-    q = queries.select(query_id_col, vec_col).mapInPandas(
-        assign_queries,
-        schema=f"{query_id_col} long, __qv array<float>, __cell int",
-    ).withColumn(
-        "__qb", F.pmod(F.xxhash64(F.col(query_id_col)), F.lit(qb)).cast("int")
+    q = _probe_queries(queries, cnorm, cells, nprobe, qb, query_id_col, vec_col)
+    cand = _block_join(
+        c, q, ["cell", "__qb"], k, query_id_col, id_col, vec_col, exclude_self
     )
-    local = (
-        c.groupBy("__cell", "__qb")
-        .cogroup(q.groupBy("__cell", "__qb"))
-        .applyInPandas(
-            _gemm_topk_kernel(
-                id_col, query_id_col, vec_col, _shortlist_size(k), exclude_self
-            ),
-            schema=_OUT_SCHEMA.format(qid=query_id_col, cid=id_col),
-        )
-    )
-    cand = _global_topk(local, query_id_col, id_col, _shortlist_size(k))
     return _exact_rescore_topk(
         cand, corpus, queries, query_id_col, id_col, vec_col, k
     )
@@ -373,62 +354,25 @@ def ivf_store_knn_join(
     is what makes a brute-force filtered SQL a full value-hash oracle
     (the x07/x20/x21 device); production nprobe inherits IVF's
     probed-cells recall contract."""
-    from python_openetl_spark.operators.ivf_store import (
-        _load_assigned,
-        _read_centroids,
-        current_index_dir,
-    )
-
     idx_dir = current_index_dir(root)
     cells, cnorm = _read_centroids(spark, idx_dir)
     n_q = queries.count()
     if cnorm.shape[0] == 0 or n_q == 0:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
-        )
+        return empty_topk(spark, query_id_col, id_col)
     nprobe = min(nprobe, cnorm.shape[0])
     qb = max(1, math.ceil(n_q / query_block_rows))
-
-    def assign_queries(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qn = _unit(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            probe = np.argsort(-(qn @ cnorm.T), axis=1)[:, :nprobe]
-            idx = np.repeat(np.arange(len(pdf)), nprobe)
-            yield pd.DataFrame(
-                {
-                    query_id_col: pdf[query_id_col].to_numpy()[idx],
-                    "__qv": pdf[vec_col].to_numpy()[idx],
-                    # store cell ids come from the centroid table, not
-                    # a dense 0..nlist-1 range — map through `cells`
-                    "__cell": cells[probe.reshape(-1)].astype(np.int32),
-                }
-            )
-
     assigned = _load_assigned(spark, idx_dir, id_col)
     if where is not None:
         assigned = assigned.filter(F.expr(where))
     c = assigned.select(
-        id_col, vec_col, F.col("cell").cast("int").alias("__cell")
+        id_col, vec_col, F.col("cell").cast("int").alias("cell")
     ).withColumn("__qb", F.explode(F.sequence(F.lit(0), F.lit(qb - 1))))
-    q = queries.select(query_id_col, vec_col).mapInPandas(
-        assign_queries,
-        schema=f"{query_id_col} long, __qv array<float>, __cell int",
-    ).withColumn(
-        "__qb", F.pmod(F.xxhash64(F.col(query_id_col)), F.lit(qb)).cast("int")
+    # store cell ids come from the centroid table, not a dense
+    # 0..nlist-1 range: _probe_cells maps through `cells`
+    q = _probe_queries(queries, cnorm, cells, nprobe, qb, query_id_col, vec_col)
+    cand = _block_join(
+        c, q, ["cell", "__qb"], k, query_id_col, id_col, vec_col, exclude_self
     )
-    local = (
-        c.groupBy("__cell", "__qb")
-        .cogroup(q.groupBy("__cell", "__qb"))
-        .applyInPandas(
-            _gemm_topk_kernel(
-                id_col, query_id_col, vec_col, _shortlist_size(k), exclude_self
-            ),
-            schema=_OUT_SCHEMA.format(qid=query_id_col, cid=id_col),
-        )
-    )
-    cand = _global_topk(local, query_id_col, id_col, _shortlist_size(k))
     return _exact_rescore_topk(
         cand, assigned, queries, query_id_col, id_col, vec_col, k
     )

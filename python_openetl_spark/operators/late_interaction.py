@@ -15,7 +15,8 @@ Execution shape: the whole MaxSim is ONE nested higher-order
 expression (transform → round(dot) → array_max → decimal fold) inside
 the scan — whole-stage codegen, no UDF, no explode: the q×d×m×m dot
 lattice never materializes as rows. The query side is broadcast; the
-corpus side streams. Top-k is the standard per-query rank window.
+corpus side streams. Top-k is the shared per-query window
+(``functions.vectors.topk``).
 
 Determinism contract: each sub-vector dot is a sequential fold
 rounded to 9 decimals (engine fold orders agree; rounding absorbs the
@@ -33,7 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from python_openetl_spark.functions.vectors import empty_topk, topk
 
 
 def _subvectors(v: Column, m: int, dsub: int) -> Column:
@@ -95,11 +97,8 @@ def maxsim_topk(
             )
     probe = corpus.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     if probe is None:
-        # empty corpus (or all-NULL vectors): typed empty result, the
-        # similarity.py degradation convention
-        return corpus.sparkSession.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, maxsim double, rank int"
-        )
+        # empty corpus (or all-NULL vectors): typed empty result
+        return empty_topk(corpus.sparkSession, query_id_col, id_col, "maxsim")
     dim = len(probe[0])
     assert dim % m == 0, f"dim {dim} not divisible by m={m}"
     dsub = dim // m
@@ -110,18 +109,9 @@ def maxsim_topk(
     d = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__dv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col(id_col).asc()
+    scored = d.join(F.broadcast(q), F.col(id_col) != F.col("query_id")).select(
+        "query_id",
+        id_col,
+        maxsim_score(F.col("__qv"), F.col("__dv"), m=m, dsub=dsub).alias("maxsim"),
     )
-    return (
-        d.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            maxsim_score(F.col("__qv"), F.col("__dv"), m=m, dsub=dsub).alias(
-                "maxsim"
-            ),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return topk(scored, k, by="query_id", score="maxsim", id_col=id_col)

@@ -19,9 +19,9 @@ Scale shape (mirrors operators/kmeans.py):
   per batch), reduced distributedly via posexplode + groupBy;
 - encoding is one scan emitting (id, codes, norm) — the only thing a
   query-time scan ever reads;
-- ADC candidate generation is per-batch local top-C (the
-  cosine_topk_arrow pattern): the shuffle carries O(batches x q x C)
-  candidate rows, never scores;
+- ADC candidate generation is per-batch local top-C
+  (``functions.vectors.local_topk``): the shuffle carries
+  O(batches x q x C) candidate rows, never full score matrices;
 - the exact re-rank joins the tiny candidate set back to the corpus by
   broadcast and scores with the JVM cosine expression — bit-identical
   to the SQL oracle, which is what lets a full-recall configuration
@@ -36,14 +36,33 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from python_openetl_spark.functions.vectors import (
+    cosine,
+    empty_topk,
+    local_topk,
+    nearest_cells,
+    topk,
+    unit_rows,
+)
+from python_openetl_spark.operators.ivf_store import _arrow_relation, _probe_cells
+from python_openetl_spark.operators.kmeans import init_centroids
 
 
-def _empty_topk(spark, query_id_col: str, id_col: str) -> DataFrame:
-    """Typed empty result for a zero-query call (the similarity.py
-    convention: degrade, don't raise a driver-side stack error)."""
-    return spark.createDataFrame(
-        [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
+def _codes(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """The PQ code rule: each subvector's nearest codebook centroid in
+    L2, ``argmin ||x-c||^2 == argmax(2x.c - ||c||^2)``; ``(n, m)``
+    int64."""
+    m, _, dsub = books.shape
+    return np.stack(
+        [
+            (
+                2.0 * mat[:, s * dsub : (s + 1) * dsub] @ books[s].T
+                - (books[s] * books[s]).sum(axis=1)
+            ).argmax(axis=1)
+            for s in range(m)
+        ],
+        axis=1,
     )
 
 
@@ -90,12 +109,11 @@ def pq_fit(
         def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                codes = _codes(mat, b_bc)
                 subs, cells, ns, sums = [], [], [], []
                 for s in range(m):
                     x = mat[:, s * dsub : (s + 1) * dsub]
-                    # ||x-c||^2 argmin == argmax(2x.c - ||c||^2)
-                    c = b_bc[s]
-                    assign = (2.0 * x @ c.T - (c * c).sum(axis=1)).argmax(axis=1)
+                    assign = codes[:, s]
                     acc = np.zeros((ksub, dsub))
                     np.add.at(acc, assign, x)
                     cnt = np.bincount(assign, minlength=ksub)
@@ -148,22 +166,15 @@ def pq_encode(
     Codes for cells 128..255 wrap negative in int8 storage; decoders
     must mask with ``& 0xFF`` before using them as codebook indices.
     """
-    m, ksub, dsub = books.shape
-    assert ksub <= 256, f"ksub={ksub} exceeds one-byte code range"
-    b_bc = books
+    assert books.shape[1] <= 256, f"ksub={books.shape[1]} exceeds one-byte code range"
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int8)
-            for s in range(m):
-                x = mat[:, s * dsub : (s + 1) * dsub]
-                c = b_bc[s]
-                codes[:, s] = (2.0 * x @ c.T - (c * c).sum(axis=1)).argmax(axis=1)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
-                    "codes": list(codes),
+                    "codes": list(_codes(mat, books).astype(np.int8)),
                     "vnorm": np.linalg.norm(mat, axis=1),
                 }
             )
@@ -171,6 +182,101 @@ def pq_encode(
     return df.select(id_col, vec_col).mapInPandas(
         encode, schema=f"{id_col} long, codes array<tinyint>, vnorm double"
     )
+
+
+def _encode_assign_fn(cnorm: np.ndarray, books: np.ndarray, id_col: str, vec_col: str):
+    """One scan: coarse-cell assignment (the cell rule,
+    ``functions.vectors.nearest_cells``) AND PQ encoding per batch,
+    emitting ``(id, codes, vnorm, cell)``."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "codes": list(_codes(mat, books).astype(np.int8)),
+                    "vnorm": np.linalg.norm(mat, axis=1),
+                    "cell": nearest_cells(unit_rows(mat), cnorm)[:, 0].astype(np.int32),
+                }
+            )
+
+    return kernel
+
+
+def _adc_cosine(dots: np.ndarray, norms: np.ndarray) -> np.ndarray:
+    """ADC dots over the product of both norms. A zero-norm vector or
+    query scores 0.0: its codes still decode to nonzero centroids, so
+    its approximate dot is not 0, and dividing it by the norm floor
+    would inflate it to ~1e300 and hijack the shortlist."""
+    return np.divide(dots, norms, out=np.zeros_like(dots), where=norms != 0.0)
+
+
+def _adc_fn(lut: np.ndarray, qids: np.ndarray, qnorms: np.ndarray, query_id_col: str, id_col: str):
+    """Arrow kernel ADC-scoring (query, coded row) pairs: ``m`` lookups
+    in the query's ``lut[q, sub, code]`` table per row, no float math
+    per dimension."""
+    qpos = {int(q): i for i, q in enumerate(qids)}
+    sub_idx = np.arange(lut.shape[1])
+
+    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            # & 0xFF: int8 storage wraps cells 128..255 negative; mask
+            # back to unsigned before LUT indexing
+            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64) & 0xFF
+            qidx = pdf[query_id_col].map(qpos).to_numpy()
+            dots = lut[qidx[:, None], sub_idx[None, :], codes].sum(axis=1)
+            yield pd.DataFrame(
+                {
+                    query_id_col: pdf[query_id_col],
+                    id_col: pdf[id_col],
+                    "adc_score": _adc_cosine(dots, pdf["vnorm"].to_numpy() * qnorms[qidx]),
+                }
+            )
+
+    return adc
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    corpus: DataFrame,
+    qids: np.ndarray,
+    qvecs: np.ndarray,
+    *,
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """The exact re-rank tail of every PQ probe: keep each query's
+    ``shortlist`` best ``adc_score`` candidates, score them with the JVM
+    ``cosine`` against the raw ``corpus`` vectors, rank the top ``k``.
+    The scores are bit-identical to the exact path, so when the
+    shortlist captures the true top-k the result hash-matches the
+    brute-force oracle. Both broadcast sides are driver-local relations
+    or shortlist-sized."""
+    short = topk(
+        cand, shortlist, by=query_id_col, score="adc_score", id_col=id_col
+    ).select(query_id_col, id_col)
+    qdf = _arrow_relation(
+        corpus.sparkSession, **{query_id_col: qids, "__qv": qvecs.astype(np.float32)}
+    )
+    scored = (
+        corpus.select(id_col, vec_col)
+        .join(F.broadcast(short), id_col)
+        .join(F.broadcast(qdf), query_id_col)
+        .select(
+            query_id_col,
+            id_col,
+            cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
+        )
+    )
+    return topk(scored, k, by=query_id_col, id_col=id_col)
 
 
 def pq_topk(
@@ -194,18 +300,16 @@ def pq_topk(
     the shortlist captures the true top-k (fixture settings do — pinned
     in tests), the full result hash-matches the brute-force oracle.
     """
-    from python_openetl_spark.operators.ivf_store import _cosine_clamped
-
-    spark = corpus.sparkSession
     if queries_pdf.empty:
-        return _empty_topk(spark, query_id_col, id_col)
+        return empty_topk(corpus.sparkSession, query_id_col, id_col)
     books = pq_fit(
         corpus, m=m, ksub=ksub, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed
     )
     enc = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
 
     qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
+    qvecs = np.stack(queries_pdf[vec_col].to_numpy())
+    qmat = qvecs.astype(np.float64)
     qnorm = np.linalg.norm(qmat, axis=1)
     dsub = books.shape[2]
     # LUT[q, s, c] = dot(q_sub, book[s][c])
@@ -215,62 +319,73 @@ def pq_topk(
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sub_idx = np.arange(m)
         for pdf in batches:
-            # & 0xFF: int8 storage wraps cells 128..255 negative; mask
-            # back to unsigned before LUT indexing
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64) & 0xFF  # (n, m)
             vnorm = pdf["vnorm"].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            out_q, out_id, out_s = [], [], []
+            # one (n, m) gather per query: memory stays flat in the
+            # query count, apart from the (n, q) score matrix itself
+            sims = np.empty((len(pdf), len(qids)))
             for qi in range(len(qids)):
-                dots = lut[qi][sub_idx, codes].sum(axis=1)
-                # zero-norm guard: vnorm 0 / the 1e-300 clamp would
-                # inflate the score to ~1e300 and hijack the shortlist
-                score = np.where(
-                    vnorm * qnorm[qi] == 0.0,
-                    0.0,
-                    dots / np.maximum(vnorm * qnorm[qi], 1e-300),
+                sims[:, qi] = _adc_cosine(
+                    lut[qi][sub_idx, codes].sum(axis=1), vnorm * qnorm[qi]
                 )
-                mask = ids != qids[qi]
-                cand_ids, cand_sc = ids[mask], score[mask]
-                top = np.argsort(-cand_sc, kind="stable")[:shortlist]
-                out_q.append(np.full(top.size, qids[qi]))
-                out_id.append(cand_ids[top])
-                out_s.append(cand_sc[top])
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.concatenate(out_q),
-                    id_col: np.concatenate(out_id),
-                    "adc_score": np.concatenate(out_s),
-                }
+            yield local_topk(
+                pdf[id_col].to_numpy(), qids, sims, shortlist,
+                query_id_col=query_id_col, id_col=id_col, score="adc_score",
             )
 
-    w_short = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_score").desc(), F.col(id_col)
+    cand = enc.mapInPandas(
+        adc, schema=f"{query_id_col} long, {id_col} long, adc_score double"
     )
+    return _exact_rerank(
+        cand, corpus, qids, qvecs, k=k, shortlist=shortlist, id_col=id_col,
+        vec_col=vec_col, query_id_col=query_id_col,
+    )
+
+
+def _ivfpq_probe(
+    coded: DataFrame,
+    corpus: DataFrame,
+    cells: np.ndarray,
+    cnorm: np.ndarray,
+    books: np.ndarray,
+    queries_pdf: pd.DataFrame,
+    *,
+    k: int,
+    nprobe: int,
+    rerank_factor: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """The IVFPQ probe shared by :func:`ivf_pq_topk` and the persisted
+    store (operators/ivfpq_store.py): each query's ``nprobe`` nearest
+    cells (``ivf_store._probe_cells``) select the ``coded`` rows
+    ``(id, codes, vnorm, cell)`` — a partition-pruned scan when
+    ``coded`` is a store — ADC scores them, and :func:`_exact_rerank`
+    fixes the ``rerank_factor * k`` shortlist against ``corpus``."""
+    m, _, dsub = books.shape
+    qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
+    qvecs = np.stack(queries_pdf[vec_col].to_numpy())
+    qmat = qvecs.astype(np.float64)
+    probe = _probe_cells(qmat, cnorm, cells, nprobe)
+    probe_df = _arrow_relation(
+        corpus.sparkSession,
+        **{query_id_col: np.repeat(qids, probe.shape[1]), "cell": probe.reshape(-1)},
+    )
+    lut = np.einsum("qsd,scd->qsc", qmat.reshape(len(qids), m, dsub), books)
     cand = (
-        enc.mapInPandas(adc, schema=f"{query_id_col} long, {id_col} long, adc_score double")
-        .withColumn("__r", F.row_number().over(w_short))
-        .filter(F.col("__r") <= shortlist)
-        .select(query_id_col, id_col)
-    )
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, queries_pdf[vec_col])],
-        f"{query_id_col} long, __qv array<float>",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qdf), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            # clamped: a zero-norm shortlist row scores 0.0, not a NaN
-            # Spark ranks first; identical for any nonzero pair
-            _cosine_clamped(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
+        coded.filter(F.col("cell").isin(np.unique(probe).tolist()))
+        .join(F.broadcast(probe_df), "cell")
+        .filter(F.col(id_col) != F.col(query_id_col))
+        .select(query_id_col, id_col, "codes", "vnorm")
+        .mapInPandas(
+            _adc_fn(lut, qids, np.linalg.norm(qmat, axis=1), query_id_col, id_col),
+            schema=f"{query_id_col} long, {id_col} long, adc_score double",
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    )
+    return _exact_rerank(
+        cand, corpus, qids, qvecs, k=k, shortlist=max(k * rerank_factor, k),
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
 
@@ -308,121 +423,22 @@ def ivf_pq_topk(
     tunable with (nlist, nprobe, m, ksub, rerank_factor) — pinned
     settings and bounds live in tests/test_pq.py.
     """
-    from python_openetl_spark.operators.ivf_store import _cosine_clamped
-
-    spark = corpus.sparkSession
-    # empty-query guard (same convention as cosine_topk_arrow/ivf_topk):
-    # np.stack on zero queries raises; pq_fit raises by contract on an
-    # empty CORPUS, so cent_rows below is non-empty whenever we get there
+    # empty-query guard: np.stack on zero queries raises; pq_fit raises
+    # by contract on an empty CORPUS, so centroids exist past it
     if queries_pdf.empty:
-        return _empty_topk(spark, query_id_col, id_col)
+        return empty_topk(corpus.sparkSession, query_id_col, id_col)
     books = pq_fit(
         corpus, m=m, ksub=ksub, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed
     )
-    # coarse centroids: the deterministic xxhash64-ordered sample device
-    # (similarity.ivf_topk), offset seed so coarse != PQ seeds
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .withColumn("__h", F.xxhash64(F.col(id_col), F.lit(seed + 1)))
-        .orderBy("__h")
-        .limit(nlist)
-        .collect()
+    # coarse centroids: the sampled seeds (similarity.ivf_topk's), with
+    # an offset seed so coarse != PQ seeds
+    cnorm = init_centroids(corpus, id_col, vec_col, nlist, seed + 1)
+    coded = corpus.select(id_col, vec_col).mapInPandas(
+        _encode_assign_fn(cnorm, books, id_col, vec_col),
+        schema=f"{id_col} long, codes array<tinyint>, vnorm double, cell int",
     )
-    cmat = np.array([r[vec_col] for r in cent_rows], dtype=np.float64)
-    cnorm = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-    dsub = books.shape[2]
-
-    def encode_assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            mn = mat / np.maximum(norms[:, None], 1e-300)
-            cell = (mn @ cnorm.T).argmax(axis=1).astype(np.int32)
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            for s in range(m):
-                x = mat[:, s * dsub : (s + 1) * dsub]
-                c = books[s]
-                codes[:, s] = (2.0 * x @ c.T - (c * c).sum(axis=1)).argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cell": cell,
-                    "codes": list((codes & 0xFF).astype(np.int8)),
-                    "vnorm": norms,
-                }
-            )
-
-    enc = corpus.select(id_col, vec_col).mapInPandas(
-        encode_assign, schema=f"{id_col} long, cell int, codes array<tinyint>, vnorm double"
-    )
-
-    qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    qnorms = np.linalg.norm(qmat, axis=1)
-    qn = qmat / np.maximum(qnorms[:, None], 1e-300)
-    probe = np.argsort(-(qn @ cnorm.T), axis=1)[:, :nprobe]
-    probe_df = spark.createDataFrame(
-        [(int(q), int(c)) for q, row in zip(qids, probe) for c in row],
-        f"{query_id_col} long, cell int",
-    )
-    lut = np.einsum("qsd,scd->qsc", qmat.reshape(len(qids), m, dsub), books)
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    shortlist = max(k * rerank_factor, k)
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sub_idx = np.arange(m)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64) & 0xFF
-            qidx = pdf[query_id_col].map(qpos).to_numpy()
-            dots = lut[qidx[:, None], sub_idx[None, :], codes].sum(axis=1)
-            vn = pdf["vnorm"].to_numpy()
-            score = np.where(  # zero-norm guard (see adc above)
-                vn * qnorms[qidx] == 0.0,
-                0.0,
-                dots / np.maximum(vn * qnorms[qidx], 1e-300),
-            )
-            yield pd.DataFrame(
-                {
-                    query_id_col: pdf[query_id_col],
-                    id_col: pdf[id_col],
-                    "adc_score": score,
-                }
-            )
-
-    cand_rows = (
-        enc.join(F.broadcast(probe_df), "cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col, "codes", "vnorm")
-        .mapInPandas(adc, schema=f"{query_id_col} long, {id_col} long, adc_score double")
-    )
-    w_short = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_score").desc(), F.col(id_col)
-    )
-    cand = (
-        cand_rows.withColumn("__r", F.row_number().over(w_short))
-        .filter(F.col("__r") <= shortlist)
-        .select(query_id_col, id_col)
-    )
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, queries_pdf[vec_col])],
-        f"{query_id_col} long, __qv array<float>",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qdf), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            # clamped: a zero-norm shortlist row scores 0.0, not a NaN
-            # Spark ranks first; identical for any nonzero pair
-            _cosine_clamped(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _ivfpq_probe(
+        coded, corpus, np.arange(len(cnorm), dtype=np.int32), cnorm, books,
+        queries_pdf, k=k, nprobe=nprobe, rerank_factor=rerank_factor,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )

@@ -1,18 +1,30 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three strategies, slowest-exact → fastest-approximate:
+Exact top-k, slowest to fastest per row:
 
-1. :func:`cosine_topk` — exact brute force with JVM expressions
-   (zip_with/aggregate). Oracle-checkable bit-for-bit vs DuckDB. Right
-   choice when the query set is small (broadcastable).
-2. :func:`cosine_topk_arrow` — exact brute force with an Arrow-batched
-   pandas UDF doing a numpy matmul per batch. Same results (up to fp
-   reduction order), ~2 orders of magnitude faster per row; the scale
-   path for large query sets. The corpus side streams through executors
-   — only the queries are broadcast.
-3. :func:`lsh_cosine_pairs` — approximate all-pairs via sign-bit
-   hyperplane LSH: bucket join instead of cross join. At 100 TB this is
-   the only viable shape; recall is tunable with bands/planes.
+- :func:`cosine_topk` — brute force with the JVM ``cosine`` expression
+  (zip_with/aggregate), oracle-checkable bit-for-bit vs DuckDB; right
+  when the query set is small (broadcastable).
+  :func:`filtered_cosine_topk` pre-filters it on an attribute, and
+  :func:`matryoshka_topk` / :func:`quantized_topk` rank on a cheap
+  prefix / int8 score first and re-rank the shortlist exactly.
+- :func:`cosine_topk_arrow` — brute force with an Arrow-batched numpy
+  matmul per batch. Same results (up to fp reduction order), ~2 orders
+  of magnitude faster per row; the corpus streams through executors and
+  only the queries are broadcast.
+
+Approximate:
+
+- :func:`ivf_topk` — probe the ``nprobe`` nearest of ``nlist`` sampled
+  coarse cells; :func:`ivf_recall_report` audits it against exact
+  search.
+- :func:`lsh_cosine_pairs` — all-pairs via sign-bit hyperplane LSH: a
+  bucket join instead of a cross join, the only viable all-pairs shape
+  at 100 TB, with recall tunable by bands/planes.
+  :func:`cosine_pairs_exact` is its O(n²) ground truth.
+
+Every operator scores, breaks ties, excludes self-matches and ranks
+under the one contract stated in ``functions/vectors.py``.
 """
 
 from __future__ import annotations
@@ -23,9 +35,25 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from python_openetl_spark.functions.vectors import cosine, dot, hyperplane_bucket, norm
+from python_openetl_spark.functions.vectors import (
+    cosine,
+    cosine_of_norms,
+    dot,
+    empty_topk,
+    local_topk,
+    nearest_cells,
+    norm,
+    quantize_int8,
+    topk,
+    unit_rows,
+)
+from python_openetl_spark.operators.ivf_store import (
+    _arrow_relation,
+    _assign_fn,
+    _probe_cells,
+)
+from python_openetl_spark.operators.kmeans import init_centroids
 from python_openetl_spark.session import scan_parallelism
 
 
@@ -53,12 +81,29 @@ def cosine_topk(
             cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
+    return topk(scored, k, by=query_id_col, id_col=id_col)
+
+
+def _rerank_exact(
+    stage1: DataFrame,
+    score: str,
+    k: int,
+    rerank_factor: int,
+    query_id_col: str,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Stage 2 of the two-stage verbs: keep each query's ``k *
+    rerank_factor`` best ``score`` rows, re-score them with the exact
+    cosine against the query vector ``__qv``, rank the top ``k``."""
+    cands = topk(stage1, k * rerank_factor, by=query_id_col, score=score, id_col=id_col)
+    rescored = cands.select(
+        query_id_col,
+        id_col,
+        score,
+        cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
     )
+    return topk(rescored, k, by=query_id_col, id_col=id_col)
 
 
 def matryoshka_topk(
@@ -109,25 +154,8 @@ def matryoshka_topk(
             ),
         )
     )
-    w1 = Window.partitionBy(query_id_col).orderBy(
-        F.col("pre_sim").desc(), F.col(id_col)
-    )
-    cands = stage1.withColumn("prerank", F.row_number().over(w1)).filter(
-        F.col("prerank") <= k * rerank_factor
-    )
-    rescored = cands.select(
-        query_id_col,
-        id_col,
-        "pre_sim",
-        cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "pre_sim", "cos_sim", "rank")
+    return _rerank_exact(
+        stage1, "pre_sim", k, rerank_factor, query_id_col, id_col, vec_col
     )
 
 
@@ -159,8 +187,6 @@ def quantized_topk(
     """
     if k < 1 or rerank_factor < 1:
         raise ValueError("k and rerank_factor must be >= 1")
-    from python_openetl_spark.functions.vectors import quantize_int8
-
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("__qv"),
@@ -184,25 +210,8 @@ def quantized_topk(
             ).alias("approx_ip"),
         )
     )
-    w1 = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_ip").desc(), F.col(id_col)
-    )
-    cands = scored.withColumn("prerank", F.row_number().over(w1)).filter(
-        F.col("prerank") <= k * rerank_factor
-    )
-    rescored = cands.select(
-        query_id_col,
-        id_col,
-        "approx_ip",
-        cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_ip", "cos_sim", "rank")
+    return _rerank_exact(
+        scored, "approx_ip", k, rerank_factor, query_id_col, id_col, vec_col
     )
 
 
@@ -222,46 +231,23 @@ def cosine_topk_arrow(
     emits its local top-k per query; a final per-query window keeps the
     global top-k. Shuffle volume: O(batches · queries · k), not O(n·m).
     """
-    spark = corpus.sparkSession
-    if queries_pdf.empty:  # empty query set -> empty result, not a stack error
-        return spark.createDataFrame(
-            [], f"query_id long, {id_col} long, cos_sim double, rank int"
-        )
+    if queries_pdf.empty:
+        return empty_topk(corpus.sparkSession, "query_id", id_col)
     qids = np.asarray(queries_pdf["query_id"], dtype=np.int64)
-    qmat = np.stack(queries_pdf["embedding"].to_numpy()).astype(np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
+    qnorm = unit_rows(np.stack(queries_pdf["embedding"].to_numpy()).astype(np.float64))
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ qnorm.T  # (batch, nq)
-            for qi, qid in enumerate(qids):
-                col = sims[:, qi]
-                mask = ids != qid
-                # lexsort (cos desc, id asc): ties at the k-th score must
-                # keep the smaller id so batch-level truncation agrees
-                # with the exact cosine_topk's global tie-break
-                cand_idx = np.lexsort((ids[mask], -col[mask]))[:k]
-                sel_ids = ids[mask][cand_idx]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(sel_ids), qid, dtype=np.int64),
-                        id_col: sel_ids,
-                        "cos_sim": col[mask][cand_idx],
-                    }
-                )
+            mat = unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            yield local_topk(
+                ids, qids, mat @ qnorm.T, k, query_id_col="query_id", id_col=id_col
+            )
 
     local = corpus.select(id_col, vec_col).mapInPandas(
         score_batches, schema=f"query_id long, {id_col} long, cos_sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cos_sim", "rank")
-    )
+    return topk(local, k, by="query_id", id_col=id_col)
 
 
 def deterministic_planes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -380,65 +366,11 @@ def lsh_cosine_pairs(
         .select(
             "id_a",
             "id_b",
-            (dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))).alias(
-                "cos_sim"
-            ),
+            cosine_of_norms(
+                F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
+            ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-
-def _coarse_centroids(
-    corpus: DataFrame, nlist: int, id_col: str, vec_col: str, seed: int
-) -> "np.ndarray | None":
-    """Deterministic coarse-quantizer centroids shared by the IVF index
-    (:func:`ivf_topk`) and its evaluator (:func:`ivf_recall_report`) —
-    ONE definition so the report can never drift from the index it
-    audits: the xxhash64-ordered sample, L2-normalized, or None for an
-    empty corpus."""
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .withColumn("__h", F.xxhash64(F.col(id_col), F.lit(seed)))
-        .orderBy("__h")
-        .limit(nlist)
-        .collect()
-    )
-    if not cent_rows:
-        return None
-    cmat = np.array([r[vec_col] for r in cent_rows], dtype=np.float64)
-    return cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-
-
-def _nearest_cell(matnorm: "np.ndarray", cnorm: "np.ndarray") -> "np.ndarray":
-    """THE cell-assignment rule (argmax cosine against the normalized
-    centroids) — one definition shared by the index build kernel and
-    the recall evaluator's scoring kernel so they cannot drift."""
-    return (matnorm @ cnorm.T).argmax(axis=1).astype(np.int32)
-
-
-def _assign_cells(
-    corpus: DataFrame, cnorm: "np.ndarray", id_col: str, vec_col: str
-) -> DataFrame:
-    """One corpus scan assigning every vector to its nearest centroid
-    (Arrow-batched numpy argmax; the cell id is 4 bytes per row).
-    Shared by index build and recall evaluation — see
-    :func:`_coarse_centroids`."""
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": _nearest_cell(mat, cnorm),
-                }
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, {vec_col} array<float>, cell int"
     )
 
 
@@ -471,21 +403,15 @@ def ivf_topk(
     index, expressed as plain columnar layout + equi-join. Recall vs
     exact search is tunable with nprobe (see tests/test_similarity.py).
     """
-    from python_openetl_spark.operators.ivf_store import (
-        _arrow_relation,
-        _cosine_clamped,
-        _probe_cells,
-    )
-
     spark = corpus.sparkSession
-    cnorm = _coarse_centroids(corpus, nlist, id_col, vec_col, seed)
-    if queries_pdf.empty or cnorm is None:
-        # no queries, or an empty corpus (no centroids to probe):
-        # degrade to an empty result instead of a driver-side stack error
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, cos_sim double, rank int"
-        )
-    assigned = _assign_cells(corpus, cnorm, id_col, vec_col)
+    cnorm = init_centroids(corpus, id_col, vec_col, nlist, seed)
+    if queries_pdf.empty or cnorm.shape[0] == 0:
+        # no queries, or an empty corpus (no centroids to probe)
+        return empty_topk(spark, query_id_col, id_col)
+    assigned = corpus.select(id_col, vec_col).mapInPandas(
+        _assign_fn(cnorm, id_col, vec_col),
+        schema=f"{id_col} long, {vec_col} array<float>, cell int",
+    )
 
     qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
     qmat = np.stack(queries_pdf[vec_col].to_numpy())
@@ -506,15 +432,10 @@ def ivf_topk(
         .select(
             query_id_col,
             id_col,
-            _cosine_clamped(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
+            cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
-    )
+    return topk(scored, k, by=query_id_col, id_col=id_col)
 
 
 def cosine_pairs_exact(
@@ -558,7 +479,9 @@ def cosine_pairs_exact(
         .select(
             F.col("a.doc").alias("id_a"),
             F.col("b.doc").alias("id_b"),
-            (dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nv") * F.col("b.nv"))).alias("cos_sim"),
+            cosine_of_norms(
+                F.col("a.v"), F.col("b.v"), F.col("a.nv"), F.col("b.nv")
+            ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -603,12 +526,7 @@ def filtered_cosine_topk(
             cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", "rank")
-    )
+    return topk(scored, k, by=query_id_col, id_col=id_col)
 
 
 def ivf_recall_report(
@@ -665,13 +583,12 @@ def ivf_recall_report(
         + ", ".join(f"{c} double" for c in rec_cols)
         + ", monotone_ok boolean"
     )
-    cnorm = _coarse_centroids(corpus, nlist, id_col, vec_col, seed)
-    if queries_pdf.empty or cnorm is None:
+    cnorm = init_centroids(corpus, id_col, vec_col, nlist, seed)
+    if queries_pdf.empty or cnorm.shape[0] == 0:
         return spark.createDataFrame([], schema)
     qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    order = np.argsort(-(qnorm @ cnorm.T), axis=1)
+    qnorm = unit_rows(np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64))
+    order = nearest_cells(qnorm, cnorm, cnorm.shape[0])
     # (query, cell) -> probe rank over ALL cells: one slice of this
     # ranking IS budget b's probe list, which is what makes the
     # candidate sets nested and the monotonicity column a theorem
@@ -681,7 +598,7 @@ def ivf_recall_report(
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # ONE Arrow kernel does cell assignment (shared _nearest_cell
+        # ONE Arrow kernel does cell assignment (the shared cell
         # rule) AND the |batch| x |Q| GEMM — the JVM fold expression
         # this replaces interpreted ~dim ops per (query, candidate)
         # pair and went super-linear at 10x scale (173 s at sf1); the
@@ -690,9 +607,8 @@ def ivf_recall_report(
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            cells = _nearest_cell(mat, cnorm)
+            mat = unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            cells = nearest_cells(mat, cnorm)[:, 0]
             sims = mat @ qnorm.T  # (batch, Q)
             n = len(pdf)
             ids = np.repeat(pdf[id_col].to_numpy(), nq)
@@ -715,12 +631,8 @@ def ivf_recall_report(
         schema=f"{query_id_col} long, {id_col} long, probe_rank int, cos_sim double",
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        w_exact = Window.partitionBy(query_id_col).orderBy(
-            F.col("cos_sim").desc(), F.col(id_col)
-        )
         exact = (
-            scored.withColumn("rank", F.row_number().over(w_exact))
-            .filter(F.col("rank") <= k)
+            topk(scored, k, by=query_id_col, id_col=id_col)
             .select(
                 query_id_col,
                 id_col,
@@ -729,15 +641,9 @@ def ivf_recall_report(
         )
         per_budget = []
         for b in budgets:
-            wb = Window.partitionBy(query_id_col).orderBy(
-                F.col("cos_sim").desc(), F.col(id_col)
-            )
-            approx = (
-                scored.filter(F.col("probe_rank") < b)
-                .withColumn("rank", F.row_number().over(wb))
-                .filter(F.col("rank") <= k)
-                .select(query_id_col, id_col)
-            )
+            approx = topk(
+                scored.filter(F.col("probe_rank") < b), k, by=query_id_col, id_col=id_col
+            ).select(query_id_col, id_col)
             hits = (
                 approx.join(
                     exact.select(query_id_col, id_col), [query_id_col, id_col]

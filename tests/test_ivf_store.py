@@ -993,14 +993,14 @@ def test_probe_runs_three_spark_jobs(spark, tmp_path):
 
 def test_probe_scores_bit_identical_to_bruteforce(spark, tmp_path):
     """At nprobe = nlist both probe verbs return exactly what a
-    brute-force cross join scored with ``_cosine_clamped`` returns —
+    brute-force cross join scored with ``functions.vectors.cosine`` returns —
     same (query, id, rank) rows and the same cosine doubles — over a
     store holding a zero-norm vector, a tombstoned id, and under a
     ``where`` pre-filter."""
     from pyspark.sql import Window
 
+    from python_openetl_spark.functions.vectors import cosine
     from python_openetl_spark.operators.ivf_store import (
-        _cosine_clamped,
         delete_from_ivf_store,
         ivf_store_range_search,
     )
@@ -1034,7 +1034,7 @@ def test_probe_scores_bit_identical_to_bruteforce(spark, tmp_path):
         .select(
             "query_id",
             "vec_id",
-            _cosine_clamped(F.col("embedding"), F.col("__qv")).alias("cos_sim"),
+            cosine(F.col("embedding"), F.col("__qv")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))

@@ -156,3 +156,48 @@ def test_pq_topk_empty_queries(spark):
     out2 = pq.ivf_pq_topk(emb, empty, k=5, m=M, ksub=KSUB)
     assert out2.count() == 0
     assert [f.name for f in out2.schema.fields] == ["query_id", "vec_id", "cos_sim", "rank"]
+
+
+def test_pq_probes_build_arrow_relations_and_keep_job_counts(spark):
+    """Both PQ verbs build their query (and probe) relations from Arrow,
+    so no pickled-RDD frame (``LogicalRDD``) is left in the result plan,
+    and their Spark job counts stay at 10 (pq_topk) and 12 (ivf_pq_topk)
+    on a 400 x 16 corpus with 3 queries."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+
+    rng = np.random.default_rng(3)
+    vecs = rng.standard_normal((400, 16)).astype(np.float32)
+    corpus = spark.createDataFrame(
+        pa.table(
+            {
+                "vec_id": pa.array(np.arange(400, dtype=np.int64)),
+                "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
+            }
+        )
+    )
+    q = pd.DataFrame({"query_id": [1, 5, 9], "embedding": [vecs[1], vecs[5], vecs[9]]})
+    sc = spark.sparkContext
+    calls = {
+        "pq_topk": (lambda: pq.pq_topk(corpus, q, k=5, m=4, ksub=8, iters=2), 10),
+        "ivf_pq_topk": (
+            lambda: pq.ivf_pq_topk(
+                corpus, q, k=5, nlist=8, nprobe=2, m=4, ksub=8, iters=2
+            ),
+            12,
+        ),
+    }
+    for name, (call, max_jobs) in calls.items():
+        group = f"{name}-jobs-{os.getpid()}"
+        sc.setJobGroup(group, f"{name} job-count guard")
+        try:
+            out = call()
+            rows = out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 15, name
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, name
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs, name

@@ -628,16 +628,14 @@ _corpus = st.lists(_vec, min_size=2, max_size=24)
 def test_block_knn_join_matches_bruteforce_with_ties(spark, vecs, dup_of):
     """cosine_knn_join must equal cosine_topk on arbitrary corpora —
     including planted EXACT-duplicate vectors, which force cos_sim
-    ties that only the shared (cos desc, id asc) tie-break resolves;
+    ties that only the shared (cos desc, id asc) tie-break resolves,
+    and zero-norm vectors, which both score 0.0 under the norm floor;
     tiny blocks force block-local truncation + global re-rank."""
     from pyspark.sql import functions as F
 
     from python_openetl_spark.operators.knn_join import cosine_knn_join
     from python_openetl_spark.operators.similarity import cosine_topk
 
-    # avoid zero-norm vectors (normalization would NaN — the operator
-    # contract matches cosine_topk's: vectors must have nonzero norm)
-    vecs = [v if any(abs(x) > 1e-3 for x in v) else [1.0, 0, 0, 0] for v in vecs]
     vecs.append(list(vecs[dup_of % len(vecs)]))  # planted exact duplicate
     corpus = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
