@@ -32,10 +32,11 @@ dedup extension end-to-end (pairs → clusters → canonical corpus).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_openetl_spark.operators.materialize import pin
+from python_openetl_spark.operators.materialize import _arrow_relation, pin
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -82,10 +83,10 @@ def _driver_union_find(pdf, spark) -> DataFrame:
     and path compression over collected (src, dst) longs.
 
     Only called when the edge set is small (see ``driver_threshold``);
-    one Arrow collect of two long columns, O(E α(E)) locally, one
-    parallelize back. Returns (id, cluster_id) for every id appearing in
-    ``pdf`` — self-loops contribute singletons, so the caller needs no
-    follow-up node join."""
+    one Arrow collect of two long columns, O(E α(E)) locally, labels
+    back as a sized Arrow relation (joins against it broadcast). Returns
+    (id, cluster_id) for every id appearing in ``pdf`` — self-loops
+    contribute singletons, so the caller needs no follow-up node join."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -96,7 +97,8 @@ def _driver_union_find(pdf, spark) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(pdf["src"].to_numpy(), pdf["dst"].to_numpy()):
+    src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+    for a, b in zip(src, dst):
         ra, rb = find(int(a)), find(int(b))
         if ra != rb:
             # attach the larger root under the smaller → root IS min id
@@ -104,9 +106,12 @@ def _driver_union_find(pdf, spark) -> DataFrame:
                 parent[rb] = ra
             else:
                 parent[ra] = rb
-    members = set(map(int, pdf["src"])) | set(map(int, pdf["dst"]))
-    rows = [(m, find(m)) for m in members]
-    return spark.createDataFrame(rows, "id long, cluster_id long")
+    members = np.unique(np.concatenate([src, dst])).astype(np.int64)
+    return _arrow_relation(
+        spark,
+        id=members,
+        cluster_id=np.array([find(int(m)) for m in members], dtype=np.int64),
+    )
 
 
 def connected_components(
@@ -213,9 +218,10 @@ def canonicalize_corpus(
     column (ties → min id): "keep the longest / highest-quality copy",
     the curation policy real pipelines want instead of id order.
 
-    One anti-join against the (small) non-canonical member set — the
-    corpus itself is never shuffled, so 100 TB of documents flow through
-    with only the id column of the duplicate graph in the exchange.
+    One anti-join against the (small) non-canonical member set: on the
+    driver union-find path that set is a sized local relation, so the
+    join is broadcast and the corpus is never shuffled (the large-graph
+    loop path may still shuffle it by id).
     With ``prefer_col`` the duplicate graph is additionally broadcast
     against the corpus's (id, score) projection, so scoring adds a
     column-pruned scan, not a corpus shuffle.

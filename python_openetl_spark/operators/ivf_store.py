@@ -9,7 +9,9 @@ metadata-pointer commit protocol as plans/versioned.py):
 
     root/_current.json                   {"version": N}  (os.replace commit)
     root/v0000000N/centroids.parquet     cell -> centroid vector (nlist rows)
-    root/v0000000N/assigned/cell=<c>/... vectors hive-partitioned by cell
+    root/v0000000N/assigned/cell=<c>/... sealed cells: build/rebuild rows
+    root/v0000000N/assigned/cell=-1/...  the delta: appended rows, each
+                                         one's real cell in ``__cell``
 
 and splits the lifecycle the way the incremental-dedup family does
 (operators/dedup.py incremental stores):
@@ -20,12 +22,15 @@ and splits the lifecycle the way the incremental-dedup family does
   Arrow-batched nearest-centroid assignment, partitioned write.
 - :func:`append_to_ivf_store` — BATCH-sized cost: new vectors are
   assigned to the EXISTING centroids (no retrain, the FAISS
-  ``add``-after-``train`` contract) and appended to their cell
-  partitions. The index never re-reads the corpus.
+  ``add``-after-``train`` contract) and written, without a shuffle, into
+  the delta partition ``cell=-1`` (cell ids are non-negative): one file
+  per input task, sorted by ``__cell`` so parquet min/max statistics can
+  skip row groups, in one Spark job. The index never re-reads the
+  corpus, and a hive reader of ``assigned/`` still sees every row.
 - :func:`ivf_store_topk` — probes ``nprobe`` cells; the cell predicate
-  prunes to the matching ``cell=`` partition DIRECTORIES
-  (PartitionFilters — the scan reads ~nprobe/nlist of the data from
-  disk, not just post-filter). The scan joins ONE broadcast probe
+  prunes to the matching sealed ``cell=`` partition DIRECTORIES plus
+  the delta (PartitionFilters — the scan reads ~nprobe/nlist of the
+  sealed data from disk, not just post-filter). The scan joins ONE broadcast probe
   relation (query, cell, query vector), built from Arrow so it plans
   as a driver-local table; vector norms are computed once per row on
   each side, not once per (row, query) pair. A probe is 3 Spark jobs:
@@ -33,7 +38,8 @@ and splits the lifecycle the way the incremental-dedup family does
   :func:`ivf_store_range_search` shares the probe.
 - :func:`rebuild_ivf_store` — writes a NEW version directory and
   commits it with one atomic pointer replace; in-flight readers keep
-  scanning the version they resolved at query start.
+  scanning the version they resolved at query start. It is the
+  compaction point: the delta folds into sealed cells, tombstones go.
 - :func:`delete_from_ivf_store` — FAISS ``remove_ids`` parity as
   GENERATION-scoped id tombstones (the deletion-vector device):
   delete-sized cost, all read paths anti-join the tombstones,
@@ -81,7 +87,7 @@ from python_openetl_spark.functions.vectors import (
     unit_rows,
 )
 from python_openetl_spark.operators.kmeans import train_coarse_centroids
-from python_openetl_spark.operators.materialize import pin
+from python_openetl_spark.operators.materialize import _arrow_relation, pin
 from python_openetl_spark.plans.commit import file_lock, write_json
 
 
@@ -94,13 +100,20 @@ _POINTER = "_current.json"
 #: GENERATION-scoped instead of id-forever (r11: the update verb)
 _SEQ = "__seq"
 _SEQ_FILE = "_seq.json"
+#: the delta partition appends write into (``assigned/cell=-1``) and the
+#: data column that carries each delta row's real cell; NULL on sealed
+#: rows, whose cell is their directory
+_DELTA_CELL = -1
+_CELL = "__cell"
 #: pinned parquet schemas for the version's assigned/deleted dirs —
 #: read paths pass them via spark.read.schema(...) so NO footer is
 #: opened at planning time (r11 verdict: mergeSchema inference read
 #: every footer per probe, +25-30% at bench scale and a
 #: footer-scan-per-file hazard at 100 TB file counts). Written at
 #: build/rebuild; a legacy (pre-pin) store is migrated by its first
-#: append; mergeSchema remains the fallback for unpinned directories.
+#: append, which also adds ``__cell`` to a pin written before the delta
+#: partition existed; mergeSchema remains the fallback for unpinned
+#: directories.
 _SCHEMA_FILE = "_schema.json"
 
 
@@ -188,7 +201,8 @@ def _pin_from_written(written_schema, deleted_id_col: str):
     DataFrame with the given schema: Spark's partitioned read appends
     the ``cell`` partition column after the data columns, so the pin
     must match that order (identical output schema to the old
-    mergeSchema read). Returns (assigned, deleted) StructTypes.
+    mergeSchema read), with the delta's nullable ``__cell`` data column
+    just before it. Returns (assigned, deleted) StructTypes.
 
     The write-generation column is pinned LONG on both sides (r12
     advice): the counter is an unbounded Python int, so the write path
@@ -206,8 +220,9 @@ def _pin_from_written(written_schema, deleted_id_col: str):
     fields = [
         StructField(f.name, LongType()) if f.name == _SEQ else f
         for f in written_schema.fields
-        if f.name != "cell"
+        if f.name not in ("cell", _CELL)
     ]
+    fields.append(StructField(_CELL, IntegerType()))
     fields.append(StructField("cell", IntegerType()))
     deleted = StructType(
         [
@@ -219,7 +234,7 @@ def _pin_from_written(written_schema, deleted_id_col: str):
 
 
 def _load_assigned(
-    spark: SparkSession, idx_dir: str, id_col: str = "vec_id"
+    spark: SparkSession, idx_dir: str, id_col: str = "vec_id", cells=None
 ) -> DataFrame:
     """The ONE place store contents are read: the cell-partitioned
     ``assigned`` scan minus the version's tombstones (see
@@ -227,6 +242,12 @@ def _load_assigned(
     through here so delete semantics cannot drift between verbs. The
     tombstone set is broadcast — its size is bounded by rebuild
     cadence, the deletion-vector contract.
+
+    ``cell`` is every row's real cell: a delta row's ``__cell``, a
+    sealed row's directory. Given ``cells``, only their rows are read:
+    the raw ``cell`` keeps those directories and the delta
+    (PartitionFilters), and a ``__cell`` predicate parquet can check
+    against row-group statistics keeps the delta rows of those cells.
 
     Tombstones are GENERATION-scoped (r11): a tombstone ``(id, seq)``
     hides rows of that id written at or before generation ``seq``; a
@@ -249,6 +270,13 @@ def _load_assigned(
     else:
         reader = reader.option("mergeSchema", "true")
     df = reader.parquet(os.path.join(idx_dir, _ASSIGNED))
+    delta = _CELL in df.columns
+    if cells is not None:
+        df = df.filter(F.col("cell").isin([*cells, _DELTA_CELL]))
+        if delta:
+            df = df.filter(F.col(_CELL).isNull() | F.col(_CELL).isin(cells))
+    if delta:
+        df = df.withColumn("cell", F.coalesce(_CELL, "cell")).drop(_CELL)
     row_seq = (
         F.coalesce(F.col(_SEQ), F.lit(0)) if _SEQ in df.columns else F.lit(0)
     )
@@ -351,7 +379,7 @@ def store_attr_cols(
         if pinned is not None
         else spark.read.parquet(os.path.join(idx_dir, _ASSIGNED)).columns
     )
-    return tuple(c for c in cols if c not in (id_col, vec_col, "cell", _SEQ))
+    return tuple(c for c in cols if c not in (id_col, vec_col, "cell", _SEQ, _CELL))
 
 
 def _read_centroids(spark: SparkSession, root: str) -> tuple[np.ndarray, np.ndarray]:
@@ -422,27 +450,82 @@ def _build_into(
     )
     if cents.shape[0] == 0:
         raise ValueError("build_ivf_store: empty corpus — nothing to train on")
+    _write_sealed(
+        spark, idx_dir, cents, id_col,
+        lambda cnorm: corpus.select(id_col, vec_col, *attr_cols).mapInPandas(
+            _assign_fn(cnorm, id_col, vec_col, attr_cols),
+            schema=f"{id_col} long, {vec_col} array<float>"
+            + _attr_schema(corpus, attr_cols)
+            + ", cell int",
+        ),
+    )
+
+
+def _write_sealed(spark, idx_dir: str, cents, id_col: str, rows_for) -> None:
+    """The one build/rebuild write of both stores: the centroids, then
+    ``rows_for(cnorm)`` (id, payload, ``cell``) as generation 0 into
+    sealed cell directories, then the pinned read schemas (so probes
+    never pay footer inference)."""
     spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cell int, centroid array<double>",
     ).coalesce(1).write.parquet(os.path.join(idx_dir, _CENTROIDS))
-    _, cnorm = _read_centroids(spark, idx_dir)
-    sel = [id_col, vec_col, *attr_cols]
-    assigned = corpus.select(*sel).mapInPandas(
-        _assign_fn(cnorm, id_col, vec_col, attr_cols),
-        schema=f"{id_col} long, {vec_col} array<float>"
-        + _attr_schema(corpus, attr_cols)
-        + ", cell int",
-    ).withColumn(_SEQ, F.lit(0).cast("long"))  # build rows are generation 0
+    rows = rows_for(_read_centroids(spark, idx_dir)[1])
+    rows = rows.withColumn(_SEQ, F.lit(0).cast("long"))
     # repartition by cell BEFORE the partitioned write: otherwise every
     # task writes a sliver into every cell directory (tasks x nlist
     # small files — the small-files explosion that drowns later scans)
-    assigned.repartition("cell").write.partitionBy("cell").parquet(
+    rows.repartition("cell").write.partitionBy("cell").parquet(
         os.path.join(idx_dir, _ASSIGNED)
     )
-    # pin the read schemas so probes never pay footer inference (r12)
-    a_pin, d_pin = _pin_from_written(assigned.schema, id_col)
+    a_pin, d_pin = _pin_from_written(rows.schema, id_col)
     _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
+
+
+def _widen_pins(idx_dir: str, id_col: str) -> None:
+    """Update older pins before a write, so no reader meets a file its
+    pin cannot resolve: an int ``__seq``/``seq`` becomes long (int files
+    upcast) and the assigned pin gains ``__cell`` (old files read NULL)."""
+    pins = _read_store_schemas(idx_dir)
+    if "assigned" in pins:
+        a_pin, d_pin = _pin_from_written(pins["assigned"], id_col)
+        if (a_pin, d_pin) != (pins["assigned"], pins.get("deleted")):
+            _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
+
+
+def _append_delta(root: str, id_col: str, rows_for) -> None:
+    """The one append path of both stores: ``rows_for(idx_dir)`` (id,
+    payload, ``cell`` against that version's quantizers) is written as a
+    new write generation, without a shuffle, into the delta partition:
+    one file per input task, sorted by ``__cell``, one Spark job. The
+    store lock covers seq bump, write and pin update (concurrent appends
+    would share the committer's ``_temporary`` dir); an append that
+    waited out a rebuild retries on the new version."""
+    while True:
+        idx_dir = current_index_dir(root)
+        rows = rows_for(idx_dir)
+        with _write_lock(idx_dir):
+            if current_index_dir(root) != idx_dir:
+                continue
+            assigned = os.path.join(idx_dir, _ASSIGNED)
+            _widen_pins(idx_dir, id_col)
+            rows.select(
+                *[c for c in rows.columns if c != "cell"],
+                # long: the counter is unbounded and the pin says long
+                F.lit(_bump_seq(idx_dir)).cast("long").alias(_SEQ),
+                F.col("cell").alias(_CELL),
+            ).sortWithinPartitions(_CELL).write.mode("append").parquet(
+                os.path.join(assigned, f"cell={_DELTA_CELL}")
+            )
+            if "assigned" not in _read_store_schemas(idx_dir):
+                # one-time legacy migration: pin the union schema a
+                # mergeSchema read infers, so later probes skip footers
+                merged = rows.sparkSession.read.option(
+                    "mergeSchema", "true"
+                ).parquet(assigned)
+                a_pin, d_pin = _pin_from_written(merged.schema, id_col)
+                _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
+            return
 
 
 def append_to_ivf_store(
@@ -452,117 +535,72 @@ def append_to_ivf_store(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Assign new vectors to the EXISTING centroids and append their
-    cell partitions — batch-sized cost, corpus never re-read. The
-    batch must carry the store's attribute columns, and their values are
-    CAST to the store's types (names AND types are read from the live
-    version, never from the batch — a batch carrying ``label`` as a
-    different type would otherwise append type-mismatched parquet into
-    the same cell partitions and break later probes/rebuilds). Casts
+    """Assign new vectors to the EXISTING centroids and write them into
+    the version's delta partition (:func:`_append_delta`) — batch-sized
+    cost, corpus never re-read. The batch must carry the store's
+    attribute columns, and their values are CAST to the store's types
+    (names AND types are read from the live version, never from the
+    batch — a batch carrying ``label`` as a different type would
+    otherwise append type-mismatched parquet into the store and break
+    later probes/rebuilds). Casts
     go through ``try_cast`` with an explicit null-introduced check
     that raises ``ValueError`` when any value fails to cast — Spark's
     plain CAST only raises under ANSI mode (Spark 4 default), and on
     3.5 a bad value would silently become NULL, corrupting filterable
     store metadata."""
     spark = batch.sparkSession
-    idx_dir = current_index_dir(root)
-    pins = _read_store_schemas(idx_dir)
-    store_schema = pins.get("assigned") or spark.read.parquet(
-        os.path.join(idx_dir, _ASSIGNED)
-    ).schema
-    attr_types = {
-        f.name: f.dataType
-        for f in store_schema.fields
-        if f.name not in (id_col, vec_col, "cell", _SEQ)
-    }
-    attrs = tuple(attr_types)
-    missing = [a for a in attrs if a not in batch.columns]
-    if missing:
-        raise ValueError(
-            f"append_to_ivf_store: batch lacks store attribute columns {missing}"
-        )
-    _, cnorm = _read_centroids(spark, idx_dir)
-    if attrs:
-        # try_cast + null-introduced check: one batch-sized aggregate.
-        # Plain CAST raises only under ANSI (Spark 4); on 3.5 a bad
-        # value silently nulls, so the check must be value-level.
-        nulled = batch.select(
-            *[
-                F.sum(
-                    (
-                        F.col(a).isNotNull()
-                        & F.col(a).try_cast(attr_types[a]).isNull()
-                    ).cast("int")
-                ).alias(a)
-                for a in attrs
-            ]
-        ).first()
-        bad = [a for a in attrs if (nulled[a] or 0) > 0]
-        if bad:
-            raise ValueError(
-                "append_to_ivf_store: batch values not castable to the "
-                f"store's attribute types in columns {bad} "
-                f"(store types: { {a: attr_types[a].simpleString() for a in bad} })"
-            )
-    conformed = batch.select(
-        id_col,
-        vec_col,
-        *[F.col(a).try_cast(attr_types[a]).alias(a) for a in attrs],
-    )
-    # the ENTIRE write sits under the store lock (seq bump + parquet
-    # append + pin update): distinct generations alone don't protect
-    # two concurrent appends sharing the committer's _temporary dir
-    stale = False
-    with _write_lock(idx_dir):
-        if current_index_dir(root) != idx_dir:
-            # a rebuild committed while this writer waited on the lock
-            # (rebuild_ivf_store holds it for its whole duration):
-            # writing here would land in the superseded version dir —
-            # rows silently absent from the new version and deleted by
-            # the next vacuum. Retry against the new current version
-            # (re-reading ITS centroids/pins — a rebuild may have
-            # re-trained them).
-            stale = True
-        else:
-            assigned = conformed.mapInPandas(
-                _assign_fn(cnorm, id_col, vec_col, attrs),
-                schema=f"{id_col} long, {vec_col} array<float>"
-                + _attr_schema(conformed, attrs)
-                + ", cell int",
-            ).withColumn(
-                # cast to long: the counter is unbounded and the pin says
-                # long — a bare int literal would diverge from the pin type
-                # once the counter passes 2^31
-                _SEQ, F.lit(_bump_seq(idx_dir)).cast("long")
-            )  # new write generation
-            assigned.repartition("cell").write.mode("append").partitionBy(
-                "cell"
-            ).parquet(os.path.join(idx_dir, _ASSIGNED))
-            if "assigned" not in pins:
-                # one-time legacy migration: this pre-pin store now definitely
-                # mixes seq-stamped files with (possibly) unstamped ones, so pin
-                # the union schema ONCE — the same schema mergeSchema would
-                # infer on every future read — and future probes skip footers
-                merged = spark.read.option("mergeSchema", "true").parquet(
-                    os.path.join(idx_dir, _ASSIGNED)
-                ).schema
-                a_pin, d_pin = _pin_from_written(merged, id_col)
-                _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
-            else:
-                from pyspark.sql.types import LongType
 
-                seq_field = next(
-                    (f for f in pins["assigned"].fields if f.name == _SEQ), None
+    def assigned(idx_dir: str) -> DataFrame:
+        store_schema = _read_store_schemas(idx_dir).get(
+            "assigned"
+        ) or spark.read.parquet(os.path.join(idx_dir, _ASSIGNED)).schema
+        attr_types = {
+            f.name: f.dataType
+            for f in store_schema.fields
+            if f.name not in (id_col, vec_col, "cell", _SEQ, _CELL)
+        }
+        attrs = tuple(attr_types)
+        missing = [a for a in attrs if a not in batch.columns]
+        if missing:
+            raise ValueError(
+                f"append_to_ivf_store: batch lacks store attribute columns {missing}"
+            )
+        if attrs:
+            # try_cast + null-introduced check: one batch-sized aggregate.
+            # Plain CAST raises only under ANSI (Spark 4); on 3.5 a bad
+            # value silently nulls, so the check must be value-level.
+            nulled = batch.select(
+                *[
+                    F.sum(
+                        (
+                            F.col(a).isNotNull()
+                            & F.col(a).try_cast(attr_types[a]).isNull()
+                        ).cast("int")
+                    ).alias(a)
+                    for a in attrs
+                ]
+            ).first()
+            bad = [a for a in attrs if (nulled[a] or 0) > 0]
+            if bad:
+                raise ValueError(
+                    "append_to_ivf_store: batch values not castable to the "
+                    f"store's attribute types in columns {bad} "
+                    f"(store types: { {a: attr_types[a].simpleString() for a in bad} })"
                 )
-                if seq_field is not None and not isinstance(
-                    seq_field.dataType, LongType
-                ):
-                    # pre-r13 pin carried int seq: upgrade both pins to long
-                    # (old int files upcast; this long-seq file reads exact)
-                    a_pin, d_pin = _pin_from_written(pins["assigned"], id_col)
-                    _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
-    if stale:
-        append_to_ivf_store(batch, root, id_col=id_col, vec_col=vec_col)
+        conformed = batch.select(
+            id_col,
+            vec_col,
+            *[F.col(a).try_cast(attr_types[a]).alias(a) for a in attrs],
+        )
+        _, cnorm = _read_centroids(spark, idx_dir)
+        return conformed.mapInPandas(
+            _assign_fn(cnorm, id_col, vec_col, attrs),
+            schema=f"{id_col} long, {vec_col} array<float>"
+            + _attr_schema(conformed, attrs)
+            + ", cell int",
+        )
+
+    _append_delta(root, id_col, assigned)
 
 
 def delete_from_ivf_store(
@@ -650,32 +688,12 @@ def _tombstone(
             if root is not None and current_index_dir(root) != idx_dir:
                 idx_dir = current_index_dir(root)
                 continue
+            _widen_pins(idx_dir, id_col)
             doomed.withColumn(
                 "seq", F.lit(_read_seq(idx_dir)).cast("long")
             ).coalesce(1).write.mode("append").parquet(
                 os.path.join(idx_dir, _DELETED)
             )
-            pins = _read_store_schemas(idx_dir)
-            if "deleted" in pins:
-                from pyspark.sql.types import LongType
-
-                seq_field = next(
-                    (f for f in pins["deleted"].fields if f.name == "seq"),
-                    None,
-                )
-                if seq_field is not None and not isinstance(
-                    seq_field.dataType, LongType
-                ):
-                    # pre-r13 int pin can't read the long file just
-                    # written — upgrade (old int tombstones upcast)
-                    a_pin, d_pin = _pin_from_written(
-                        pins.get("assigned") or pins["deleted"], id_col
-                    )
-                    _write_store_schemas(
-                        idx_dir,
-                        assigned=a_pin if "assigned" in pins else None,
-                        deleted=d_pin,
-                    )
         break
     return n
 
@@ -729,27 +747,6 @@ def update_ivf_store(
     return n
 
 
-def _arrow_relation(spark: SparkSession, **cols) -> DataFrame:
-    """A small driver-built relation from numpy columns, shipped as one
-    ``pyarrow.Table``: Spark plans it as a ``LocalTableScan``, so
-    broadcasting it needs no Spark job (a ``createDataFrame(list)``
-    frame is a parallelized pickled RDD, and its broadcast costs one).
-    Column types follow the arrays: int64 -> long, int32 -> int, a 2-D
-    float32 array -> array<float> with the exact values."""
-    import pyarrow as pa
-
-    arrays = {}
-    for name, a in cols.items():
-        if a.ndim == 2:
-            flat = pa.array(a.reshape(-1), type=pa.float32())
-            arrays[name] = pa.FixedSizeListArray.from_arrays(
-                flat, a.shape[1]
-            ).cast(pa.list_(pa.float32()))
-        else:
-            arrays[name] = pa.array(a)
-    return spark.createDataFrame(pa.table(arrays))
-
-
 def _probe_cells(
     qvecs: np.ndarray, cnorm: np.ndarray, cells: np.ndarray, nprobe: int
 ) -> np.ndarray:
@@ -777,7 +774,8 @@ def _probe_pairs(
     :func:`ivf_store_range_search`.
 
     Centroids and vectors both come from the version dir ``idx_dir``.
-    The plan is one ``cell IN (...)`` partition-pruned scan with the
+    The plan is one partition-pruned scan of the probed sealed cells
+    and the delta (:func:`_load_assigned` given ``cells``) with the
     optional ``where`` pre-filter on it, and ONE broadcast join on
     ``cell`` against an Arrow-built (query, cell, query vector)
     relation of queries x nprobe rows. Norms are computed once per
@@ -797,9 +795,8 @@ def _probe_pairs(
             "__qv": np.repeat(qvecs.astype(np.float32), per_query, axis=0),
         },
     ).withColumn("__qn", norm(F.col("__qv")))
-    assigned = _load_assigned(spark, idx_dir, id_col).filter(
-        F.col("cell").isin(np.unique(probe).tolist())  # partition-pruned scan
-    )
+    # partition-pruned scan of the probed sealed cells plus the delta
+    assigned = _load_assigned(spark, idx_dir, id_col, np.unique(probe).tolist())
     if where is not None:
         assigned = assigned.filter(F.expr(where))
     return (
@@ -829,7 +826,8 @@ def ivf_store_topk(
     where: str | None = None,
 ) -> DataFrame:
     """Probe ``nprobe`` cells per query; the ``cell IN (...)`` predicate
-    prunes partition directories before any distance math. The version
+    prunes to the probed sealed cell directories and the delta before
+    any distance math. The version
     pointer is resolved ONCE up front, so centroids and vectors come
     from the same index snapshot even under a concurrent rebuild.
 
@@ -937,9 +935,7 @@ def rebuild_ivf_store(
         )
         current = full.select(id_col, vec_col, *attrs)
         if nlist is None:
-            nlist = spark.read.parquet(
-                os.path.join(cur_dir, _CENTROIDS)
-            ).count()
+            nlist = len(_read_centroids(spark, cur_dir)[0])
         _build_into(
             current, _version_dir(root, version + 1), nlist, id_col,
             vec_col, seed, train_iters, attr_cols=attrs,

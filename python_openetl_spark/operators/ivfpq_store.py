@@ -14,12 +14,14 @@ protocol as ivf_store (shared helpers imported from it):
     root/_current.json                      {"version": N}
     root/v0000000N/centroids.parquet        cell -> coarse centroid
     root/v0000000N/codebooks.parquet        (sub, cell) -> PQ sub-centroid
-    root/v0000000N/assigned/cell=<c>/...    vec_id, codes, vnorm
+    root/v0000000N/assigned/cell=<c>/...    vec_id, codes, vnorm (sealed)
+    root/v0000000N/assigned/cell=-1/...     appended rows, real cell in __cell
 
 Lifecycle mirrors ivf_store: :func:`build_ivfpq_store` trains coarse +
 PQ quantizers and writes version 1; :func:`append_to_ivfpq_store`
 encodes new vectors against the EXISTING quantizers (no retrain — the
-FAISS add-after-train contract) and appends cell partitions;
+FAISS add-after-train contract) and writes them into the shared delta
+partition;
 :func:`ivfpq_store_topk` probes ``nprobe`` cell directories
 (PartitionFilters), ADC-scores their codes, and exact-re-ranks the
 ``rerank_factor·k`` shortlist against the caller's raw corpus.
@@ -43,23 +45,17 @@ import os
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from python_openetl_spark.functions.vectors import empty_topk
 from python_openetl_spark.operators.ivf_store import (
-    _ASSIGNED,
-    _SEQ,
-    _bump_seq,
-    _write_lock,
-    _load_assigned,
-    _CENTROIDS,
+    _append_delta,
     _commit_version,
     _current_version,
-    _pin_from_written,
+    _load_assigned,
     _read_centroids,
-    _read_store_schemas,
     _version_dir,
-    _write_store_schemas,
+    _write_lock,
+    _write_sealed,
     current_index_dir,
 )
 from python_openetl_spark.operators.kmeans import train_coarse_centroids
@@ -145,25 +141,14 @@ def _build_pq_into(
     )
     if cents.shape[0] == 0:
         raise ValueError("build_ivfpq_store: empty corpus — nothing to train on")
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.parquet(os.path.join(idx_dir, _CENTROIDS))
     _write_codebooks(spark, idx_dir, books)
-    _, cnorm = _read_centroids(spark, idx_dir)
-    encoded = corpus.select(id_col, vec_col).mapInPandas(
-        _encode_assign_fn(cnorm, books, id_col, vec_col),
-        schema=f"{id_col} long, codes array<tinyint>, vnorm double, cell int",
-    ).withColumn(_SEQ, F.lit(0).cast("long"))  # build rows are generation 0
-    # repartition by cell before the partitioned write (ivf_store rule:
-    # otherwise tasks x nlist sliver files drown later probe scans)
-    encoded.repartition("cell").write.partitionBy("cell").parquet(
-        os.path.join(idx_dir, _ASSIGNED)
+    _write_sealed(
+        spark, idx_dir, cents, id_col,
+        lambda cnorm: corpus.select(id_col, vec_col).mapInPandas(
+            _encode_assign_fn(cnorm, books, id_col, vec_col),
+            schema=f"{id_col} long, codes array<tinyint>, vnorm double, cell int",
+        ),
     )
-    # pin the read schemas so probes never pay footer inference (r12,
-    # shared _load_assigned contract with the uncompressed store)
-    a_pin, d_pin = _pin_from_written(encoded.schema, id_col)
-    _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
 
 
 def rebuild_ivfpq_store(
@@ -196,9 +181,7 @@ def rebuild_ivfpq_store(
     cur_dir = _version_dir(root, version)
     with _write_lock(cur_dir):
         if nlist is None:
-            nlist = spark.read.parquet(
-                os.path.join(cur_dir, _CENTROIDS)
-            ).count()
+            nlist = len(_read_centroids(spark, cur_dir)[0])
         if m is None or ksub is None:
             books = _read_codebooks(spark, cur_dir)
             m = m if m is not None else books.shape[0]
@@ -223,42 +206,21 @@ def append_to_ivfpq_store(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Encode new vectors against the EXISTING quantizers and append
-    their cell partitions — batch-sized cost, corpus never re-read."""
+    """Encode new vectors against the EXISTING quantizers and write them
+    into the delta partition (``ivf_store._append_delta``: one Spark
+    job, one file per input task) — batch-sized cost, corpus never
+    re-read; :func:`rebuild_ivfpq_store` folds the delta into cells."""
     spark = batch.sparkSession
-    idx_dir = current_index_dir(root)
-    _, cnorm = _read_centroids(spark, idx_dir)
-    books = _read_codebooks(spark, idx_dir)
-    # whole write under the store lock (ivf_store rule: distinct
-    # generations don't protect concurrent appends from sharing the
-    # committer's _temporary staging dir)
-    stale = False
-    with _write_lock(idx_dir):
-        if current_index_dir(root) != idx_dir:
-            # a rebuild committed while this writer waited: retry on
-            # the new current version, re-reading ITS quantizers (the
-            # r14 rebuild-vs-append rule, see ivf_store)
-            stale = True
-        else:
-            encoded = batch.select(id_col, vec_col).mapInPandas(
-                _encode_assign_fn(cnorm, books, id_col, vec_col),
-                schema=f"{id_col} long, codes array<tinyint>, vnorm double, cell int",
-            ).withColumn(
-                _SEQ, F.lit(_bump_seq(idx_dir)).cast("long")
-            )  # new write generation; long to match the pinned read schema
-            encoded.repartition("cell").write.mode("append").partitionBy(
-                "cell"
-            ).parquet(os.path.join(idx_dir, _ASSIGNED))
-            if "assigned" not in _read_store_schemas(idx_dir):
-                # one-time legacy migration (ivf_store append rule): pin the
-                # union schema mergeSchema would infer, once, post-append
-                merged = spark.read.option("mergeSchema", "true").parquet(
-                    os.path.join(idx_dir, _ASSIGNED)
-                ).schema
-                a_pin, d_pin = _pin_from_written(merged, id_col)
-                _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
-    if stale:
-        append_to_ivfpq_store(batch, root, id_col=id_col, vec_col=vec_col)
+
+    def encoded(idx_dir: str) -> DataFrame:
+        _, cnorm = _read_centroids(spark, idx_dir)
+        books = _read_codebooks(spark, idx_dir)
+        return batch.select(id_col, vec_col).mapInPandas(
+            _encode_assign_fn(cnorm, books, id_col, vec_col),
+            schema=f"{id_col} long, codes array<tinyint>, vnorm double, cell int",
+        )
+
+    _append_delta(root, id_col, encoded)
 
 
 def ivfpq_store_topk(
@@ -286,7 +248,8 @@ def ivfpq_store_topk(
     # tombstone-aware (the shared _load_assigned loader): deleted ids
     # are invisible to PQ probes exactly as to the raw-vector store
     return _ivfpq_probe(
-        _load_assigned(spark, idx_dir, id_col), corpus, cells, cnorm,
+        lambda probed: _load_assigned(spark, idx_dir, id_col, probed),
+        corpus, cells, cnorm,
         _read_codebooks(spark, idx_dir), queries_pdf, k=k, nprobe=nprobe,
         rerank_factor=rerank_factor, id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col,

@@ -133,3 +133,25 @@ def materialize(df: DataFrame, *, threshold_bytes: int | None = None) -> DataFra
     if plan_size_estimate(df) <= limit:
         return df
     return pin(df)
+
+
+def _arrow_relation(spark, **cols) -> DataFrame:
+    """A small driver-built relation from numpy columns, shipped as one
+    ``pyarrow.Table``: a sized ``LocalTableScan``, so joins against it
+    are auto-broadcast. A ``createDataFrame(list)`` frame is a pickled
+    RDD that Spark cannot size (its joins plan as shuffles) and whose
+    rows a Python worker unpickles. A broadcast costs one Spark job
+    either way. Column types follow the arrays: int64 -> long, int32 ->
+    int, a 2-D float32 array -> array<float> with the exact values."""
+    import pyarrow as pa
+
+    arrays = {}
+    for name, a in cols.items():
+        if a.ndim == 2:
+            flat = pa.array(a.reshape(-1), type=pa.float32())
+            arrays[name] = pa.FixedSizeListArray.from_arrays(
+                flat, a.shape[1]
+            ).cast(pa.list_(pa.float32()))
+        else:
+            arrays[name] = pa.array(a)
+    return spark.createDataFrame(pa.table(arrays))

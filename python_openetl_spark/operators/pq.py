@@ -30,7 +30,7 @@ Scale shape (mirrors operators/kmeans.py):
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -45,8 +45,9 @@ from python_openetl_spark.functions.vectors import (
     topk,
     unit_rows,
 )
-from python_openetl_spark.operators.ivf_store import _arrow_relation, _probe_cells
+from python_openetl_spark.operators.ivf_store import _probe_cells
 from python_openetl_spark.operators.kmeans import init_centroids
+from python_openetl_spark.operators.materialize import _arrow_relation
 
 
 def _codes(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
@@ -343,7 +344,7 @@ def pq_topk(
 
 
 def _ivfpq_probe(
-    coded: DataFrame,
+    coded_cells: Callable[[list], DataFrame],
     corpus: DataFrame,
     cells: np.ndarray,
     cnorm: np.ndarray,
@@ -359,10 +360,11 @@ def _ivfpq_probe(
 ) -> DataFrame:
     """The IVFPQ probe shared by :func:`ivf_pq_topk` and the persisted
     store (operators/ivfpq_store.py): each query's ``nprobe`` nearest
-    cells (``ivf_store._probe_cells``) select the ``coded`` rows
-    ``(id, codes, vnorm, cell)`` — a partition-pruned scan when
-    ``coded`` is a store — ADC scores them, and :func:`_exact_rerank`
-    fixes the ``rerank_factor * k`` shortlist against ``corpus``."""
+    cells (``ivf_store._probe_cells``) are passed to ``coded_cells``,
+    which returns the coded rows ``(id, codes, vnorm, cell)`` of those
+    cells — a partition-pruned scan when they come from a store — ADC
+    scores them, and :func:`_exact_rerank` fixes the
+    ``rerank_factor * k`` shortlist against ``corpus``."""
     m, _, dsub = books.shape
     qids = np.asarray(queries_pdf[query_id_col], dtype=np.int64)
     qvecs = np.stack(queries_pdf[vec_col].to_numpy())
@@ -374,7 +376,7 @@ def _ivfpq_probe(
     )
     lut = np.einsum("qsd,scd->qsc", qmat.reshape(len(qids), m, dsub), books)
     cand = (
-        coded.filter(F.col("cell").isin(np.unique(probe).tolist()))
+        coded_cells(np.unique(probe).tolist())
         .join(F.broadcast(probe_df), "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(query_id_col, id_col, "codes", "vnorm")
@@ -438,7 +440,8 @@ def ivf_pq_topk(
         schema=f"{id_col} long, codes array<tinyint>, vnorm double, cell int",
     )
     return _ivfpq_probe(
-        coded, corpus, np.arange(len(cnorm), dtype=np.int32), cnorm, books,
+        lambda probed: coded.filter(F.col("cell").isin(probed)),
+        corpus, np.arange(len(cnorm), dtype=np.int32), cnorm, books,
         queries_pdf, k=k, nprobe=nprobe, rerank_factor=rerank_factor,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )

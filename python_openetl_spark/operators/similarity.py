@@ -48,12 +48,9 @@ from python_openetl_spark.functions.vectors import (
     topk,
     unit_rows,
 )
-from python_openetl_spark.operators.ivf_store import (
-    _arrow_relation,
-    _assign_fn,
-    _probe_cells,
-)
+from python_openetl_spark.operators.ivf_store import _assign_fn, _probe_cells
 from python_openetl_spark.operators.kmeans import init_centroids
+from python_openetl_spark.operators.materialize import _arrow_relation
 from python_openetl_spark.session import scan_parallelism
 
 

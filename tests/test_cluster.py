@@ -172,3 +172,27 @@ def test_triangle_counts_self_loops_and_isolated_clique(spark):
         10: 3, 11: 3, 12: 3, 13: 3,
         20: 0, 21: 0, 22: 0, 23: 0,
     }, got
+
+
+def test_canonicalize_corpus_never_shuffles_the_corpus(spark, tmp_path):
+    """On the driver union-find path the loser ids are a sized
+    driver-local relation, so the anti-join is broadcast: the physical
+    plan has no shuffle Exchange and no sort-merge join above the corpus
+    scan (a pickled-RDD loser set planned a SortMergeJoin LeftAnti with
+    a hash Exchange of the whole corpus)."""
+    import re
+
+    path = str(tmp_path / "corpus")
+    spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"), F.lit("text").alias("text")
+    ).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 200, 2)], "doc_a long, doc_b long"
+    )
+    kept = canonicalize_corpus(corpus, pairs, "doc_id")
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert "SortMergeJoin" not in plan, plan
+    assert kept.count() == 900

@@ -678,10 +678,15 @@ def test_store_read_schema_is_pinned_no_footer_inference(spark, tmp_path):
         .parquet(os.path.join(idx, _ASSIGNED))
         .schema
     )
-    # identical output schema (same names, types, order) as inference
+    # identical output schema (same names, types, order) as inference,
+    # less the internal write-generation and delta-cell columns
     assert [
         (f.name, f.dataType) for f in live_pinned.schema.fields
-    ] == [(f.name, f.dataType) for f in merged.fields if f.name != "__seq"]
+    ] == [
+        (f.name, f.dataType)
+        for f in merged.fields
+        if f.name not in ("__seq", "__cell")
+    ]
     # and identical contents
     assert live_pinned.count() == 239
     assert live_pinned.filter(F.col("vec_id") == 5).count() == 0
@@ -1055,3 +1060,291 @@ def test_probe_scores_bit_identical_to_bruteforce(spark, tmp_path):
     assert got_rows == rows(want, *cols)
     assert (7, 0, 0.0) in got_rows  # the zero-norm vector scores 0.0
     assert all(r[1] not in (5, 303) for r in got_rows)
+
+
+def _parquet_files(idx_dir):
+    """{partition dir name: sorted parquet file names} under assigned/."""
+    import os
+
+    out = {}
+    for d in sorted(os.listdir(os.path.join(idx_dir, "assigned"))):
+        path = os.path.join(idx_dir, "assigned", d)
+        if os.path.isdir(path):
+            out[d] = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    return out
+
+
+def _count_jobs(spark, name, fn):
+    """(fn(), number of Spark jobs it ran) under a fresh job group."""
+    import os
+
+    sc = spark.sparkContext
+    group = f"{name}-{os.getpid()}"
+    sc.setJobGroup(group, name)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _file_batch(spark, tmp_path, ids, vecs, files):
+    """A batch read back from ``files`` parquet files, one input
+    partition each; returns (frame, number of non-empty partitions)."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    src = tmp_path / "batch"
+    src.mkdir()
+    for i, part in enumerate(np.array_split(np.arange(len(ids)), files)):
+        papq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(np.asarray(ids)[part], type=pa.int64()),
+                    "embedding": pa.array(
+                        list(np.asarray(vecs, dtype=np.float32)[part]),
+                        type=pa.list_(pa.float32()),
+                    ),
+                }
+            ),
+            str(src / f"p{i}.parquet"),
+        )
+    batch = spark.read.parquet(str(src))
+    parts = sum(1 for n in batch.rdd.glom().map(len).collect() if n)
+    return batch, parts
+
+
+def test_append_writes_one_delta_file_per_task_in_one_job(spark, tmp_path):
+    """An append creates no sealed cell directory and adds no file to
+    one: its rows go, without a shuffle, into the delta partition
+    ``cell=-1`` as one parquet file per input partition, each sorted by
+    ``__cell``, in one Spark job. The per-cell shuffled write it
+    replaces ran 2 jobs and wrote one file into every touched cell."""
+    import os
+
+    import pyarrow.parquet as papq
+
+    from python_openetl_spark.operators.ivf_store import _load_assigned
+
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((900, 16)).astype(np.float32)
+    root = str(tmp_path / "store")
+    build_ivf_store(_vec_frame(spark, np.arange(600), vecs[:600]), root, nlist=16)
+    idx = current_index_dir(root)
+    before = _parquet_files(idx)
+    assert "cell=-1" not in before
+    batch, parts = _file_batch(spark, tmp_path, np.arange(600, 900), vecs[600:], 3)
+    assert parts == 3
+    _, jobs = _count_jobs(
+        spark, "ivf-append", lambda: append_to_ivf_store(batch, root)
+    )
+    assert jobs <= 1
+    after = _parquet_files(idx)
+    assert set(after) == set(before) | {"cell=-1"}
+    assert all(after[d] == before[d] for d in before)  # sealed cells untouched
+    assert len(after["cell=-1"]) == parts
+    for f in after["cell=-1"]:
+        cells = papq.read_table(os.path.join(idx, "assigned", "cell=-1", f))
+        cells = cells.column("__cell").to_numpy()
+        assert np.all(np.diff(cells) >= 0) and cells.min() >= 0
+    live = _load_assigned(spark, idx).select("vec_id", "cell").toPandas()
+    assert len(live) == 900 and live["cell"].between(0, 15).all()
+
+
+def test_delta_store_probes_match_bruteforce(spark, tmp_path):
+    """At nprobe = nlist both probe verbs return exactly the brute-force
+    ``functions.vectors.cosine`` rows over a store holding a base, two
+    appends (in the delta), a tombstoned appended id and an appended id
+    re-embedded by ``update_ivf_store``, under a ``where`` pre-filter."""
+    from pyspark.sql import Window
+
+    from python_openetl_spark.functions.vectors import cosine
+    from python_openetl_spark.operators.ivf_store import (
+        delete_from_ivf_store,
+        ivf_store_range_search,
+        update_ivf_store,
+    )
+
+    rng = np.random.default_rng(17)
+    n, dim = 500, 16
+    vecs = rng.standard_normal((n, dim)).astype(np.float32)
+    ids = np.arange(n)
+    labels = (ids % 3).astype(np.int32)
+    corpus = _vec_frame(spark, ids, vecs, label=labels)
+    root = str(tmp_path / "store")
+    build_ivf_store(
+        corpus.filter("vec_id < 300"), root, nlist=8, attr_cols=("label",)
+    )
+    append_to_ivf_store(corpus.filter("vec_id >= 300 AND vec_id < 400"), root)
+    append_to_ivf_store(corpus.filter("vec_id >= 400"), root)
+    assert delete_from_ivf_store(spark, root, ids=[350]) == 1
+    new_vec = rng.standard_normal(dim).astype(np.float32)
+    assert update_ivf_store(
+        _vec_frame(spark, [420], [new_vec], label=np.array([2], np.int32)), root
+    ) == 1
+    assert _parquet_files(current_index_dir(root))["cell=-1"]
+
+    live_vecs = vecs.copy()
+    live_vecs[420] = new_vec
+    keep = ids != 350
+    live = _vec_frame(spark, ids[keep], live_vecs[keep], label=labels[keep])
+    qvecs = rng.standard_normal((4, dim)).astype(np.float32)
+    qvecs[0] = live_vecs[420]  # query id 420 equals a stored id: excluded
+    qids = np.array([420, 30_001, 30_002, 30_003])
+    q = pd.DataFrame({"query_id": qids, "embedding": list(qvecs)})
+    qdf = _vec_frame(spark, qids, qvecs).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
+    )
+    where = "label != 1"
+    brute = (
+        live.filter(where)
+        .crossJoin(qdf)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            cosine(F.col("embedding"), F.col("__qv")).alias("cos_sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+    ranked = brute.withColumn("rank", F.row_number().over(w))
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    for k in (12, 10_000):
+        got = ivf_store_topk(spark, root, q, k=k, nprobe=8, where=where)
+        want = ranked.filter(F.col("rank") <= k)
+        cols = ("query_id", "vec_id", "rank", "cos_sim")
+        assert rows(got, *cols) == rows(want, *cols)
+    got = ivf_store_range_search(spark, root, q, radius=0.0, nprobe=8, where=where)
+    cols = ("query_id", "vec_id", "cos_sim")
+    assert rows(got, *cols) == rows(brute.filter(F.col("cos_sim") >= 0.0), *cols)
+
+
+def test_probe_prunes_sealed_cells_and_delta_rows(spark, tmp_path):
+    """A probe's scan keeps its ``cell`` PartitionFilters and pushes the
+    ``__cell`` predicate to parquet. A sealed cell it does not probe is
+    never opened (its files are overwritten with garbage here, and the
+    probe still runs), and no delta row of an unprobed cell is scored."""
+    import os
+    import re
+
+    from python_openetl_spark.operators.ivf_store import (
+        _load_assigned,
+        _probe_cells,
+        _read_centroids,
+        ivf_store_range_search,
+    )
+
+    rng = np.random.default_rng(23)
+    vecs = rng.standard_normal((800, 16)).astype(np.float32)
+    root = str(tmp_path / "store")
+    build_ivf_store(_vec_frame(spark, np.arange(600), vecs[:600]), root, nlist=16)
+    append_to_ivf_store(_vec_frame(spark, np.arange(600, 800), vecs[600:]), root)
+    idx = current_index_dir(root)
+    cell_of = dict(
+        _load_assigned(spark, idx).select("vec_id", "cell").toPandas().values
+    )
+    qvecs = rng.standard_normal((3, 16)).astype(np.float32)
+    q = pd.DataFrame({"query_id": [-1, -2, -3], "embedding": list(qvecs)})
+    cells, cnorm = _read_centroids(spark, idx)
+    probed = {
+        int(c) for c in _probe_cells(qvecs.astype(np.float64), cnorm, cells, 2).ravel()
+    }
+    unprobed = sorted(set(range(16)) - probed)
+    df = ivf_store_range_search(spark, root, q, radius=-1.1, nprobe=2)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pruned = re.search(r"PartitionFilters: \[cell#\d+ IN \(([-\d,]+)\)\]", plan)
+    assert pruned, plan
+    assert {int(c) for c in pruned.group(1).split(",")} == probed | {-1}
+    assert "PushedFilters: [Or(IsNull(__cell),In(__cell, [" in plan, plan
+    victim = next(
+        d
+        for c in unprobed
+        if os.path.isdir(d := os.path.join(idx, "assigned", f"cell={c}"))
+    )
+    for f in os.listdir(victim):
+        with open(os.path.join(victim, f), "wb") as fh:
+            fh.write(b"not a parquet file")
+    got = df.select("vec_id").toPandas()["vec_id"].tolist()
+    assert got and {int(cell_of[i]) for i in got} <= probed
+    assert any(i >= 600 for i in got)  # delta rows of probed cells are read
+    want = {i for i, c in cell_of.items() if int(c) in probed}
+    assert set(got) == want
+
+
+def test_rebuild_folds_the_delta_into_sealed_cells(spark, tmp_path):
+    """``rebuild_ivf_store`` is the delta's compaction point: the new
+    version has no ``cell=-1`` directory and holds the same live rows."""
+    from python_openetl_spark.operators.ivf_store import (
+        _load_assigned,
+        delete_from_ivf_store,
+        rebuild_ivf_store,
+    )
+
+    rng = np.random.default_rng(29)
+    vecs = rng.standard_normal((700, 16)).astype(np.float32)
+    root = str(tmp_path / "store")
+    build_ivf_store(_vec_frame(spark, np.arange(500), vecs[:500]), root, nlist=8)
+    append_to_ivf_store(_vec_frame(spark, np.arange(500, 700), vecs[500:]), root)
+    delete_from_ivf_store(spark, root, ids=[3, 650])
+
+    def live():
+        return sorted(
+            (r["vec_id"], tuple(r["embedding"]))
+            for r in _load_assigned(spark, current_index_dir(root)).collect()
+        )
+
+    before = live()
+    assert len(before) == 698
+    rebuild_ivf_store(spark, root)
+    assert "cell=-1" not in _parquet_files(current_index_dir(root))
+    assert live() == before
+
+
+def test_parent_layout_store_appends_and_probes(spark, tmp_path):
+    """A store written before the delta layout — a pin without
+    ``__cell`` and an append shuffled into the sealed cell directories —
+    takes a delta append, migrates its pin, and probes exactly."""
+    import json
+    import os
+
+    from python_openetl_spark.operators.ivf_store import (
+        _SCHEMA_FILE,
+        _assign_fn,
+        _bump_seq,
+        _read_centroids,
+        ivf_store_range_search,
+    )
+
+    rng = np.random.default_rng(31)
+    vecs = rng.standard_normal((600, 16)).astype(np.float32)
+    root = str(tmp_path / "store")
+    build_ivf_store(_vec_frame(spark, np.arange(400), vecs[:400]), root, nlist=8)
+    idx = current_index_dir(root)
+    pin_path = os.path.join(idx, _SCHEMA_FILE)
+    pins = json.loads(open(pin_path).read())
+    pins["assigned"]["fields"] = [
+        f for f in pins["assigned"]["fields"] if f["name"] != "__cell"
+    ]
+    with open(pin_path, "w") as fh:
+        json.dump(pins, fh)
+    # the earlier append: assigned, stamped and shuffled into its cells
+    _, cnorm = _read_centroids(spark, idx)
+    _vec_frame(spark, np.arange(400, 500), vecs[400:500]).mapInPandas(
+        _assign_fn(cnorm, "vec_id", "embedding"),
+        schema="vec_id long, embedding array<float>, cell int",
+    ).withColumn("__seq", F.lit(_bump_seq(idx)).cast("long")).repartition(
+        "cell"
+    ).write.mode("append").partitionBy("cell").parquet(os.path.join(idx, "assigned"))
+
+    append_to_ivf_store(_vec_frame(spark, np.arange(500, 600), vecs[500:]), root)
+    pinned = json.loads(open(pin_path).read())["assigned"]["fields"]
+    assert [f["name"] for f in pinned][-2:] == ["__cell", "cell"]
+    assert _parquet_files(idx)["cell=-1"]
+    q = pd.DataFrame({"query_id": [-1, -2], "embedding": list(vecs[[10, 550]])})
+    got = ivf_store_range_search(spark, root, q, radius=-1.1, nprobe=8)
+    assert got.count() == 2 * 600
+    top = ivf_store_topk(spark, root, q, k=1, nprobe=8).toPandas()
+    assert sorted(top["vec_id"]) == [10, 550]

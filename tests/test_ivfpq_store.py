@@ -42,10 +42,15 @@ def test_store_holds_codes_not_vectors(spark, store):
     """The scale point of PQ: the persisted rows are one-byte codes +
     a norm, never the raw embedding."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    stored = spark.read.parquet(current_index_dir(store) + "/assigned")
+    stored = spark.read.option("mergeSchema", "true").parquet(
+        current_index_dir(store) + "/assigned"
+    )
     assert stored.count() == emb.count()
-    # __seq is the r11 write-generation stamp (tombstone scoping)
-    assert set(stored.columns) == {"vec_id", "codes", "vnorm", "cell", "__seq"}
+    # __seq is the r11 write-generation stamp (tombstone scoping), and
+    # __cell the real cell of an appended row in the delta partition
+    assert set(stored.columns) == {
+        "vec_id", "codes", "vnorm", "cell", "__seq", "__cell"
+    }
     assert stored.schema["codes"].dataType.simpleString() == "array<tinyint>"
 
 
@@ -217,3 +222,97 @@ def test_pq_store_honors_shared_tombstones(spark, tmp_path):
     )
     assert live.count() == emb.count() - 10
     assert live.filter(F.col("vec_id").isin(victims)).count() == 0
+
+
+def test_delta_append_probe_and_rebuild(spark, tmp_path):
+    """The PQ store shares the delta layout: an append writes one file
+    per input partition under ``cell=-1`` only, in one Spark job; a full
+    probe over a base and two appends equals exact top-k; a narrow
+    probe keeps its ``cell`` PartitionFilters, the delta included; and
+    a rebuild folds the delta away, keeping the same live ids."""
+    import re
+
+    from python_openetl_spark.operators.ivf_store import _load_assigned
+    from tests.test_ivf_store import _count_jobs, _file_batch, _parquet_files
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    root = str(tmp_path / "store")
+    build_ivfpq_store(
+        emb.filter(F.col("vec_id") % 4 != 3), root, nlist=8, m=8, ksub=16
+    )
+    idx = current_index_dir(root)
+    before = _parquet_files(idx)
+    first = pdf[pdf["vec_id"] % 8 == 3]
+    batch, parts = _file_batch(
+        spark, tmp_path, first["vec_id"].to_numpy(), np.stack(first["embedding"]), 2
+    )
+    _, jobs = _count_jobs(
+        spark, "ivfpq-append", lambda: append_to_ivfpq_store(batch, root)
+    )
+    assert jobs <= 1
+    after = _parquet_files(idx)
+    assert set(after) == set(before) | {"cell=-1"}
+    assert all(after[d] == before[d] for d in before)
+    assert len(after["cell=-1"]) == parts
+    append_to_ivfpq_store(emb.filter(F.col("vec_id") % 8 == 7), root)
+
+    qpdf = _queries(spark)
+    exact = {
+        (r["query_id"], r["vec_id"])
+        for r in similarity.cosine_topk(emb, spark.createDataFrame(qpdf), k=5).collect()
+    }
+    full = ivfpq_store_topk(
+        spark, root, qpdf, emb, k=5, nprobe=8, rerank_factor=len(pdf) // 5 + 1
+    )
+    assert {(r["query_id"], r["vec_id"]) for r in full.collect()} == exact
+    plan = (
+        ivfpq_store_topk(spark, root, qpdf, emb, k=5, nprobe=2)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    pruned = re.search(r"PartitionFilters: \[cell#\d+ IN \(([-\d,]+)\)\]", plan)
+    assert pruned and "-1" in pruned.group(1).split(","), plan
+
+    def live_ids():
+        return sorted(
+            r["vec_id"]
+            for r in _load_assigned(spark, current_index_dir(root)).collect()
+        )
+
+    held = live_ids()
+    assert held == sorted(pdf["vec_id"])
+    rebuild_ivfpq_store(spark, root, emb)
+    assert "cell=-1" not in _parquet_files(current_index_dir(root))
+    assert live_ids() == held
+
+
+def test_parent_layout_pin_migrates_on_append(spark, tmp_path):
+    """A PQ store pinned before the delta layout (no ``__cell`` in its
+    assigned pin) gains the column at its first append, and the
+    appended vectors are found at rank 1 for themselves."""
+    import json
+    import os
+
+    from python_openetl_spark.operators.ivf_store import _SCHEMA_FILE
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    root = str(tmp_path / "store")
+    build_ivfpq_store(
+        emb.filter(F.col("vec_id") % 10 != 7), root, nlist=8, m=8, ksub=16
+    )
+    pin_path = os.path.join(current_index_dir(root), _SCHEMA_FILE)
+    pins = json.loads(open(pin_path).read())
+    pins["assigned"]["fields"] = [
+        f for f in pins["assigned"]["fields"] if f["name"] != "__cell"
+    ]
+    with open(pin_path, "w") as fh:
+        json.dump(pins, fh)
+    append_to_ivfpq_store(emb.filter(F.col("vec_id") % 10 == 7), root)
+    fields = json.loads(open(pin_path).read())["assigned"]["fields"]
+    assert [f["name"] for f in fields][-2:] == ["__cell", "cell"]
+    rows = emb.filter(F.col("vec_id") % 10 == 7).limit(2).collect()
+    qpdf = pd.DataFrame(
+        {"query_id": [-1, -2], "embedding": [r["embedding"] for r in rows]}
+    )
+    got = ivfpq_store_topk(spark, root, qpdf, emb, k=1, nprobe=8).toPandas()
+    assert sorted(got["vec_id"]) == sorted(r["vec_id"] for r in rows)
