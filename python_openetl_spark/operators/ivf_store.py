@@ -24,8 +24,7 @@ and splits the lifecycle the way the incremental-dedup family does
   assigned to the EXISTING centroids (no retrain, the FAISS
   ``add``-after-``train`` contract) and written, without a shuffle, into
   the delta partition ``cell=-1`` (cell ids are non-negative): one file
-  per input task, sorted by ``__cell`` so parquet min/max statistics can
-  skip row groups, in one Spark job. The index never re-reads the
+  per input task, in one Spark job. The index never re-reads the
   corpus, and a hive reader of ``assigned/`` still sees every row.
 - :func:`ivf_store_topk` — probes ``nprobe`` cells; the cell predicate
   prunes to the matching sealed ``cell=`` partition DIRECTORIES plus
@@ -40,6 +39,15 @@ and splits the lifecycle the way the incremental-dedup family does
   commits it with one atomic pointer replace; in-flight readers keep
   scanning the version they resolved at query start. It is the
   compaction point: the delta folds into sealed cells, tombstones go.
+  A probe reads every delta row but only the sealed cells it probes,
+  so a rebuild is due once the delta holds more rows than those cells
+  (delta share above ~c/nlist, c the distinct cells a query batch
+  probes); past that the delta is most of every read. Measured on 4
+  vCPUs, 32-dim vectors, nlist 256, nprobe 2, 16 queries (c = 31):
+  after 50 appends of 400 rows (delta 44% of 45,600 rows) a probe
+  read 23,099 rows from 81 files in 0.70 s, against 5,403 rows in
+  0.59 s once rebuilt; the per-cell append layout this replaced read
+  5,472 rows from 1,250 of its 10,407 files in 2.05 s.
 - :func:`delete_from_ivf_store` — FAISS ``remove_ids`` parity as
   GENERATION-scoped id tombstones (the deletion-vector device):
   delete-sized cost, all read paths anti-join the tombstones,
@@ -244,10 +252,11 @@ def _load_assigned(
     cadence, the deletion-vector contract.
 
     ``cell`` is every row's real cell: a delta row's ``__cell``, a
-    sealed row's directory. Given ``cells``, only their rows are read:
+    sealed row's directory. Given ``cells``, only their rows are kept:
     the raw ``cell`` keeps those directories and the delta
-    (PartitionFilters), and a ``__cell`` predicate parquet can check
-    against row-group statistics keeps the delta rows of those cells.
+    (PartitionFilters), and a pushed ``__cell`` predicate keeps the
+    delta rows of those cells before any scoring. Every delta file is
+    still read: its rows are in append order, not grouped by cell.
 
     Tombstones are GENERATION-scoped (r11): a tombstone ``(id, seq)``
     hides rows of that id written at or before generation ``seq``; a
@@ -497,7 +506,7 @@ def _append_delta(root: str, id_col: str, rows_for) -> None:
     """The one append path of both stores: ``rows_for(idx_dir)`` (id,
     payload, ``cell`` against that version's quantizers) is written as a
     new write generation, without a shuffle, into the delta partition:
-    one file per input task, sorted by ``__cell``, one Spark job. The
+    one file per input task, one Spark job. The
     store lock covers seq bump, write and pin update (concurrent appends
     would share the committer's ``_temporary`` dir); an append that
     waited out a rebuild retries on the new version."""
@@ -514,7 +523,7 @@ def _append_delta(root: str, id_col: str, rows_for) -> None:
                 # long: the counter is unbounded and the pin says long
                 F.lit(_bump_seq(idx_dir)).cast("long").alias(_SEQ),
                 F.col("cell").alias(_CELL),
-            ).sortWithinPartitions(_CELL).write.mode("append").parquet(
+            ).write.mode("append").parquet(
                 os.path.join(assigned, f"cell={_DELTA_CELL}")
             )
             if "assigned" not in _read_store_schemas(idx_dir):

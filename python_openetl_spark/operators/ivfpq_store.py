@@ -22,8 +22,9 @@ PQ quantizers and writes version 1; :func:`append_to_ivfpq_store`
 encodes new vectors against the EXISTING quantizers (no retrain — the
 FAISS add-after-train contract) and writes them into the shared delta
 partition;
-:func:`ivfpq_store_topk` probes ``nprobe`` cell directories
-(PartitionFilters), ADC-scores their codes, and exact-re-ranks the
+:func:`ivfpq_store_topk` probes ``nprobe`` sealed cell directories
+(PartitionFilters) plus the unpruned delta, which every probe reads
+and a rebuild folds away, ADC-scores their codes, and exact-re-ranks the
 ``rerank_factor·k`` shortlist against the caller's raw corpus.
 :func:`rebuild_ivfpq_store` re-trains both quantizers from the RAW
 corpus rows whose ids the store holds (codes alone cannot re-train
@@ -236,7 +237,8 @@ def ivfpq_store_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Probe ``nprobe`` cell directories (partition-pruned), ADC-score
+    """Probe ``nprobe`` sealed cell directories (partition-pruned) plus
+    the delta (read whole, its rows of unprobed cells dropped), ADC-score
     their one-byte codes, exact-re-rank the shortlist against ``corpus``
     raw vectors (bit-identical JVM cosine — the same re-rank contract as
     operators/pq.py, so a full-recall configuration hash-matches exact

@@ -416,7 +416,8 @@ class IvfAppendSink:
     """``writeStream.foreachBatch(IvfAppendSink(root))`` — streaming
     vector ingest into a persisted IVF store (operators/ivf_store.py):
     each micro-batch is assigned to the EXISTING coarse centroids and
-    appended to its cell partitions at batch-sized cost — the store's
+    appended to the store's ``cell=-1`` delta partition, which every
+    probe reads and a rebuild folds away, at batch-sized cost — the store's
     add-after-train contract driven by a stream, which is how a
     production vector index actually fills (documents arrive
     continuously; the quantizer retrains on a schedule, not per batch).
@@ -427,13 +428,13 @@ class IvfAppendSink:
     live version mid-stream. Spark's normal foreachBatch redelivery
     (same batch re-offered after a restart) no-ops on the marker. The
     one remaining window is a crash BETWEEN the append and the marker
-    write: plain cell-partition parquet appends cannot commit data and
+    write: plain parquet appends to the delta cannot commit data and
     marker atomically, so that window re-appends the batch (duplicate
     rows cost shortlist slots, never wrong ranks — probes order by
     (cos, id)). Exactly-once needs the data write and the token in ONE
     atomic commit, which is the versioned-pointer design
     (:class:`VersionedCdcSink`); an IVF store trades that for
-    append-in-place cell files that probes can partition-prune.
+    append-in-place delta files that need no version swap.
 
     ``stream_id`` scopes the marker: batch ids restart at 0 for every
     NEW streaming query (fresh checkpoint), so an unscoped marker from

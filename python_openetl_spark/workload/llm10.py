@@ -320,8 +320,9 @@ def x18_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/ivfpq_store.py — the compressed twin of x15's raw-vector
     store): build coarse cells + PQ codebooks from 90% of the corpus,
     APPEND the remaining 10% encoded against the EXISTING quantizers
-    (no retrain), then answer top-k by probing cell partition
-    directories and ADC-scoring ~16-byte codes, exact re-rank of the
+    (no retrain, into the store's delta), then answer top-k by probing
+    cell partition directories plus the delta and ADC-scoring ~16-byte
+    codes, exact re-rank of the
     shortlist. Driver contract is the x09 pattern (recall floor 0.2
     per query, parameters derived from corpus count) PLUS the x15
     anchor device: a query equal to APPENDED vector 7 must find it —

@@ -73,7 +73,7 @@ def s12_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is built from 80% of the corpus, the remaining 20% arrives as three
     replayed micro-batches through ``foreachBatch(IvfAppendSink)`` —
     each batch assigned to the EXISTING k-means centroids and appended
-    to its cell partitions at batch-sized cost, with a marker-file
+    to the store's ``cell=-1`` delta at batch-sized cost, with a marker-file
     replay guard — and the row then probes anchors EQUAL to streamed
     vectors at the production ``nlist/8`` budget. The anchor invariant
     is deterministic (identical vector -> same nearest cell -> always
