@@ -3,15 +3,16 @@ ingest without retraining.
 
 The in-memory IVF operator (operators/similarity.py ivf_topk) rebuilds
 its coarse quantizer per call; production vector search cannot — the
-corpus arrives continuously. This module persists the index as
-immutable versioned directories behind one atomic pointer (the same
-metadata-pointer commit protocol as plans/versioned.py):
+corpus arrives continuously. This store keeps the index under the
+generational-store protocol of operators/store.py (immutable versions
+behind one atomic pointer, the write lock and write generations,
+pinned read schemas, generation-scoped tombstones, rebuild and
+vacuum), with this layout inside each version:
 
-    root/_current.json                   {"version": N}  (os.replace commit)
-    root/v0000000N/centroids.parquet     cell -> centroid vector (nlist rows)
-    root/v0000000N/assigned/cell=<c>/... sealed cells: build/rebuild rows
-    root/v0000000N/assigned/cell=-1/...  the delta: appended rows, each
-                                         one's real cell in ``__cell``
+    v0000000N/centroids.parquet     cell -> centroid vector (nlist rows)
+    v0000000N/assigned/cell=<c>/... sealed cells: build/rebuild rows
+    v0000000N/assigned/cell=-1/...  the delta: appended rows, each
+                                    one's real cell in ``__cell``
 
 and splits the lifecycle the way the incremental-dedup family does
 (operators/dedup.py incremental stores):
@@ -35,38 +36,34 @@ and splits the lifecycle the way the incremental-dedup family does
   each side, not once per (row, query) pair. A probe is 3 Spark jobs:
   the broadcast, the scan, the top-k stage.
   :func:`ivf_store_range_search` shares the probe.
-- :func:`rebuild_ivf_store` — writes a NEW version directory and
-  commits it with one atomic pointer replace; in-flight readers keep
-  scanning the version they resolved at query start. It is the
-  compaction point: the delta folds into sealed cells, tombstones go.
-  A probe reads every delta row but only the sealed cells it probes,
-  so a rebuild is due once the delta holds more rows than those cells
-  (delta share above ~c/nlist, c the distinct cells a query batch
-  probes); past that the delta is most of every read. Measured on 4
-  vCPUs, 32-dim vectors, nlist 256, nprobe 2, 16 queries (c = 31):
-  after 50 appends of 400 rows (delta 44% of 45,600 rows) a probe
-  read 23,099 rows from 81 files in 0.70 s, against 5,403 rows in
-  0.59 s once rebuilt; the per-cell append layout this replaced read
-  5,472 rows from 1,250 of its 10,407 files in 2.05 s.
+- :func:`rebuild_ivf_store` — re-trains the centroids into a new
+  version: the compaction point, where the delta folds into sealed
+  cells and tombstones go. A probe reads every delta row but only the
+  sealed cells it probes, so a rebuild is due once the delta outgrows
+  the probed cells (the store.py rule). Measured on 4 vCPUs, 32-dim
+  vectors, nlist 256, nprobe 2, 16 queries (31 distinct cells): after
+  50 appends of 400 rows (delta 44% of 45,600 rows) a probe read
+  23,099 rows from 81 files in 0.70 s, against 5,403 rows in 0.59 s
+  once rebuilt; the per-cell append layout this replaced read 5,472
+  rows from 1,250 of its 10,407 files in 2.05 s.
 - :func:`delete_from_ivf_store` — FAISS ``remove_ids`` parity as
-  GENERATION-scoped id tombstones (the deletion-vector device):
-  delete-sized cost, all read paths anti-join the tombstones,
-  compaction happens at the next rebuild. A later append of the same
-  id is a new write generation and escapes the tombstone.
+  generation-scoped id tombstones: delete-sized cost, every read path
+  subtracts them, the next rebuild compacts them.
 - :func:`update_ivf_store` — re-embed/metadata UPDATE as
   tombstone-then-append (delete-sized + batch-sized cost, corpus
   never re-read); visible immediately, compacts at rebuild.
-- :func:`vacuum_ivf_store` — the explicit deletion point: prunes
-  superseded version directories once no reader can still hold them.
+- :func:`vacuum_ivf_store` — the protocol's vacuum (operators/store.py),
+  importable here.
+
+The raw-vector and the compressed store (operators/ivfpq_store.py)
+share this cell layout: its reader :func:`_load_assigned`, the sealed
+write, the delta append and the centroid reader live here.
 
 Drift note: appends shift the true cell distribution away from the
 trained centroids; recall degrades gracefully (vectors are still in
 their nearest EXISTING cell) until a rebuild. The build/append split
 makes the rebuild an explicit, schedulable operation instead of a
 per-query cost.
-
-Local filesystem only: the locks, the pointer and the pin files are
-the ``plans/commit.py`` primitives, and centroids are read with pyarrow.
 
 Reference parity: the reference has no vector surface; this extends
 its incremental-sync architecture (operations.py:515-609 delta
@@ -75,16 +72,14 @@ pattern) to the ANN index the training-data pipeline needs.
 
 from __future__ import annotations
 
-import json
 import os
-import re
-import time  # noqa: F401 -- tests expire lock waits via ivf_store.time.monotonic
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from python_openetl_spark.functions.vectors import (
     cosine_of_norms,
@@ -95,190 +90,60 @@ from python_openetl_spark.functions.vectors import (
     unit_rows,
 )
 from python_openetl_spark.operators.kmeans import train_coarse_centroids
-from python_openetl_spark.operators.materialize import _arrow_relation, pin
-from python_openetl_spark.plans.commit import file_lock, write_json
-
+from python_openetl_spark.operators.materialize import _arrow_relation
+from python_openetl_spark.operators.store import (
+    _SEQ,
+    _bump_seq,
+    _commit_version,
+    _delete,
+    _live,
+    _locked,
+    _pin,
+    _read_store_schemas,
+    _rebuild,
+    _scan,
+    _tomb_pin,
+    _tombstone,
+    _version_dir,
+    _write_store_schemas,
+    current_index_dir,
+)
+from python_openetl_spark.operators.store import (  # noqa: F401 -- re-export
+    vacuum_ivf_store,
+)
 
 _CENTROIDS = "centroids.parquet"
 _ASSIGNED = "assigned"
-_DELETED = "deleted"
-_POINTER = "_current.json"
-#: per-row write-generation column on assigned rows (build/rebuild = 0,
-#: each append bumps the version's counter) — what makes tombstones
-#: GENERATION-scoped instead of id-forever (r11: the update verb)
-_SEQ = "__seq"
-_SEQ_FILE = "_seq.json"
 #: the delta partition appends write into (``assigned/cell=-1``) and the
 #: data column that carries each delta row's real cell; NULL on sealed
 #: rows, whose cell is their directory
 _DELTA_CELL = -1
 _CELL = "__cell"
-#: pinned parquet schemas for the version's assigned/deleted dirs —
-#: read paths pass them via spark.read.schema(...) so NO footer is
-#: opened at planning time (r11 verdict: mergeSchema inference read
-#: every footer per probe, +25-30% at bench scale and a
-#: footer-scan-per-file hazard at 100 TB file counts). Written at
-#: build/rebuild; a legacy (pre-pin) store is migrated by its first
-#: append, which also adds ``__cell`` to a pin written before the delta
-#: partition existed; mergeSchema remains the fallback for unpinned
-#: directories.
-_SCHEMA_FILE = "_schema.json"
 
 
-def _read_seq(idx_dir: str) -> int:
-    try:
-        with open(os.path.join(idx_dir, _SEQ_FILE)) as f:
-            return int(json.load(f)["seq"])
-    except FileNotFoundError:
-        return 0
-
-
-def _write_lock(idx_dir: str):
-    """Store-level writer lock (a :func:`plans.commit.file_lock` on
-    ``_write.lock``) held across an ENTIRE append/tombstone write (seq
-    bump + parquet write + pin update), not just the generation counter
-    (r12 advice): two concurrent ``write.mode("append").parquet()`` jobs
-    on the same directory share the FileOutputCommitter ``_temporary``
-    staging dir (same appAttempt id in local mode), so one job's
-    commit/cleanup can drop or double-commit the other's staged files
-    even when their generations are distinct.
-
-    The timeout comes from ``SPARK_GRAFT_STORE_LOCK_TIMEOUT``
-    (seconds, default 120), sized for a real parquet append: at 100 TB
-    a healthy append can outlast any fixed constant, and the timeout
-    message tells a waiting writer to remove the lock file (r13
-    advice). Every append/tombstone/rebuild path of both stores takes
-    the lock through this one default."""
-    timeout = float(os.environ.get("SPARK_GRAFT_STORE_LOCK_TIMEOUT", "120"))
-    return file_lock(
-        os.path.join(idx_dir, "_write.lock"), timeout=timeout, what="store write"
-    )
-
-
-def _bump_seq(idx_dir: str) -> int:
-    """Advance the version's write-generation counter under a
-    ``_seq.lock`` file lock (:func:`plans.commit.file_lock`).
-
-    The lock guarantees each appender a DISTINCT generation (r11
-    verdict: two concurrent appenders that both read seq N would
-    otherwise silently share write generation N+1, and a tombstone
-    scoped at N+1 would then hide or resurrect the WRONG append's
-    rows); the atomic JSON replace keeps readers untorn. Generation
-    uniqueness alone does NOT make concurrent appends safe at the data
-    layer — the parquet append itself must also be serialized, which
-    is the store-level :func:`_write_lock` every append/tombstone path
-    holds around its whole write."""
-    lock = os.path.join(idx_dir, "_seq.lock")
-    with file_lock(lock, timeout=10.0, what="write-generation"):
-        n = _read_seq(idx_dir) + 1
-        write_json(os.path.join(idx_dir, _SEQ_FILE), {"seq": n})
-        return n
-
-
-def _read_store_schemas(idx_dir: str) -> dict:
-    """Pinned read schemas for this version dir, keyed ``assigned`` /
-    ``deleted`` (StructType values); {} for a pre-pin legacy store."""
-    from pyspark.sql.types import StructType
-
-    try:
-        with open(os.path.join(idx_dir, _SCHEMA_FILE)) as f:
-            raw = json.load(f)
-    except FileNotFoundError:
-        return {}
-    return {k: StructType.fromJson(v) for k, v in raw.items()}
-
-
-def _write_store_schemas(idx_dir: str, **schemas) -> None:
-    """Merge the given ``assigned=``/``deleted=`` StructTypes into the
-    version's pin file (os.replace: readers see old or new, never
-    torn). Passing None for a key leaves any existing pin untouched."""
-    current = {}
-    try:
-        with open(os.path.join(idx_dir, _SCHEMA_FILE)) as f:
-            current = json.load(f)
-    except FileNotFoundError:
-        pass
-    for k, v in schemas.items():
-        if v is not None:
-            current[k] = v.jsonValue()
-    write_json(os.path.join(idx_dir, _SCHEMA_FILE), current)
-
-
-def _pin_from_written(written_schema, deleted_id_col: str):
-    """The read-back StructType for an assigned dir just written from a
-    DataFrame with the given schema: Spark's partitioned read appends
-    the ``cell`` partition column after the data columns, so the pin
-    must match that order (identical output schema to the old
-    mergeSchema read), with the delta's nullable ``__cell`` data column
-    just before it. Returns (assigned, deleted) StructTypes.
-
-    The write-generation column is pinned LONG on both sides (r12
-    advice): the counter is an unbounded Python int, so the write path
-    casts its literal to long — pinning int would read a
-    past-2^31 file's seq back as NULL, silently turning
-    generation-scoped tombstones into kill-all. Legacy int-written seq
-    files upcast to long under the pin (parquet int32→int64 widening)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    fields = [
-        StructField(f.name, LongType()) if f.name == _SEQ else f
-        for f in written_schema.fields
-        if f.name not in ("cell", _CELL)
-    ]
-    fields.append(StructField(_CELL, IntegerType()))
-    fields.append(StructField("cell", IntegerType()))
-    deleted = StructType(
-        [
-            StructField(deleted_id_col, LongType()),
-            StructField("seq", LongType()),
-        ]
-    )
-    return StructType(fields), deleted
+def _pin_from_written(written_schema: StructType) -> StructType:
+    """The pinned read-back schema of an assigned dir written from a
+    frame with the given schema: the delta's nullable ``__cell`` data
+    column just before the ``cell`` partition column."""
+    data = [f for f in written_schema.fields if f.name != _CELL]
+    return _pin(StructType([*data, StructField(_CELL, IntegerType())]), "cell")
 
 
 def _load_assigned(
     spark: SparkSession, idx_dir: str, id_col: str = "vec_id", cells=None
 ) -> DataFrame:
     """The ONE place store contents are read: the cell-partitioned
-    ``assigned`` scan minus the version's tombstones (see
-    :func:`delete_from_ivf_store`). Every probe/rebuild/join path goes
-    through here so delete semantics cannot drift between verbs. The
-    tombstone set is broadcast — its size is bounded by rebuild
-    cadence, the deletion-vector contract.
+    ``assigned`` scan minus the version's tombstones. Every probe,
+    rebuild and join path of both IVF stores goes through here, so
+    delete semantics cannot drift between verbs.
 
     ``cell`` is every row's real cell: a delta row's ``__cell``, a
     sealed row's directory. Given ``cells``, only their rows are kept:
     the raw ``cell`` keeps those directories and the delta
     (PartitionFilters), and a pushed ``__cell`` predicate keeps the
     delta rows of those cells before any scoring. Every delta file is
-    still read: its rows are in append order, not grouped by cell.
-
-    Tombstones are GENERATION-scoped (r11): a tombstone ``(id, seq)``
-    hides rows of that id written at or before generation ``seq``; a
-    LATER append of the same id (``__seq > seq``) is live — which is
-    what makes :func:`update_ivf_store` a delete+append and makes
-    re-appending a deleted id resurrect it immediately. Rows/tombstones
-    without the seq column (legacy layout) behave as generation 0 /
-    kill-all respectively."""
-    # Pinned schema when the version carries one (r12): no parquet
-    # footer is opened at planning time, and a directory mixing legacy
-    # files with seq-stamped files still reads legacy rows as seq-NULL
-    # (a file missing a pinned column yields NULL), which coalesces to
-    # the legacy semantics (generation 0 / kill-all) below. mergeSchema
-    # remains the fallback for pre-pin stores ONLY — it infers the same
-    # union schema by reading every footer, listing-order-independent.
-    pins = _read_store_schemas(idx_dir)
-    reader = spark.read
-    if "assigned" in pins:
-        reader = reader.schema(pins["assigned"])
-    else:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(os.path.join(idx_dir, _ASSIGNED))
+    still read: its rows are in append order, not grouped by cell."""
+    df = _scan(spark, idx_dir, _ASSIGNED)
     delta = _CELL in df.columns
     if cells is not None:
         df = df.filter(F.col("cell").isin([*cells, _DELTA_CELL]))
@@ -286,65 +151,7 @@ def _load_assigned(
             df = df.filter(F.col(_CELL).isNull() | F.col(_CELL).isin(cells))
     if delta:
         df = df.withColumn("cell", F.coalesce(_CELL, "cell")).drop(_CELL)
-    row_seq = (
-        F.coalesce(F.col(_SEQ), F.lit(0)) if _SEQ in df.columns else F.lit(0)
-    )
-    ddir = os.path.join(idx_dir, _DELETED)
-    if os.path.isdir(ddir):
-        treader = spark.read
-        if "deleted" in pins:
-            treader = treader.schema(pins["deleted"])
-        else:
-            treader = treader.option("mergeSchema", "true")
-        tomb = treader.parquet(ddir)
-        if "seq" in tomb.columns:
-            # legacy (seq-NULL) tombstones in a mixed dir keep their
-            # kill-all meaning rather than silently becoming MAX-losers
-            tomb = tomb.groupBy(id_col).agg(
-                F.max(F.coalesce(F.col("seq"), F.lit(2**62))).alias("__tomb_seq")
-            )
-        else:  # legacy id-only tombstones: hide every generation
-            tomb = (
-                tomb.select(id_col)
-                .distinct()
-                .withColumn("__tomb_seq", F.lit(2**62))
-            )
-        df = (
-            df.join(F.broadcast(tomb), id_col, "left")
-            .filter(
-                F.col("__tomb_seq").isNull() | (row_seq > F.col("__tomb_seq"))
-            )
-            .drop("__tomb_seq")
-        )
-    return df.drop(_SEQ)
-
-
-def _version_dir(root: str, version: int) -> str:
-    return os.path.join(root, f"v{version:08d}")
-
-
-def _current_version(root: str) -> int:
-    try:
-        with open(os.path.join(root, _POINTER)) as f:
-            return int(json.load(f)["version"])
-    except FileNotFoundError:
-        raise FileNotFoundError(
-            f"not an IVF store (no {_POINTER}): {root}"
-        ) from None
-
-
-def _commit_version(root: str, version: int) -> None:
-    """One-rename commit (:func:`plans.commit.write_json`): a reader of
-    the pointer sees the old or the new version, never a torn file."""
-    write_json(os.path.join(root, _POINTER), {"version": version})
-
-
-def current_index_dir(root: str) -> str:
-    """Resolve the live version directory. Callers that issue several
-    reads against one logical index snapshot should resolve ONCE and
-    reuse the returned path — a concurrent rebuild then cannot mix
-    versions mid-query."""
-    return _version_dir(root, _current_version(root))
+    return _live(spark, idx_dir, df, id_col)
 
 
 def _assign_fn(cnorm: np.ndarray, id_col: str, vec_col: str, attrs: tuple = ()):
@@ -418,8 +225,8 @@ def build_ivf_store(
     train_iters: int = 2,
     attr_cols: tuple = (),
 ) -> None:
-    """Train (distributed spherical k-means, r7 verdict #2) + assign +
-    write version 1, then commit the pointer.
+    """Train (distributed spherical k-means) + assign + write version 1,
+    then commit the pointer.
 
     ``attr_cols`` are filterable metadata columns persisted WITH each
     vector inside its cell partition (label, source, license, ...) —
@@ -471,10 +278,9 @@ def _build_into(
 
 
 def _write_sealed(spark, idx_dir: str, cents, id_col: str, rows_for) -> None:
-    """The one build/rebuild write of both stores: the centroids, then
-    ``rows_for(cnorm)`` (id, payload, ``cell``) as generation 0 into
-    sealed cell directories, then the pinned read schemas (so probes
-    never pay footer inference)."""
+    """The one build/rebuild write of both IVF stores: the centroids,
+    then ``rows_for(cnorm)`` (id, payload, ``cell``) as generation 0
+    into sealed cell directories, then the pinned read schemas."""
     spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cell int, centroid array<double>",
@@ -487,54 +293,41 @@ def _write_sealed(spark, idx_dir: str, cents, id_col: str, rows_for) -> None:
     rows.repartition("cell").write.partitionBy("cell").parquet(
         os.path.join(idx_dir, _ASSIGNED)
     )
-    a_pin, d_pin = _pin_from_written(rows.schema, id_col)
-    _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
+    _write_store_schemas(
+        idx_dir, assigned=_pin_from_written(rows.schema), deleted=_tomb_pin(id_col)
+    )
 
 
-def _widen_pins(idx_dir: str, id_col: str) -> None:
-    """Update older pins before a write, so no reader meets a file its
-    pin cannot resolve: an int ``__seq``/``seq`` becomes long (int files
-    upcast) and the assigned pin gains ``__cell`` (old files read NULL)."""
-    pins = _read_store_schemas(idx_dir)
-    if "assigned" in pins:
-        a_pin, d_pin = _pin_from_written(pins["assigned"], id_col)
-        if (a_pin, d_pin) != (pins["assigned"], pins.get("deleted")):
-            _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
+def _append_delta(root: str, rows_for) -> None:
+    """The one append path of both IVF stores: ``rows_for(idx_dir)``
+    (id, payload, ``cell`` against that version's quantizers) is
+    written as a new write generation, without a shuffle, into the
+    delta partition: one file per input task, one Spark job, under the
+    store write lock."""
 
-
-def _append_delta(root: str, id_col: str, rows_for) -> None:
-    """The one append path of both stores: ``rows_for(idx_dir)`` (id,
-    payload, ``cell`` against that version's quantizers) is written as a
-    new write generation, without a shuffle, into the delta partition:
-    one file per input task, one Spark job. The
-    store lock covers seq bump, write and pin update (concurrent appends
-    would share the committer's ``_temporary`` dir); an append that
-    waited out a rebuild retries on the new version."""
-    while True:
-        idx_dir = current_index_dir(root)
+    def write(idx_dir: str) -> None:
         rows = rows_for(idx_dir)
-        with _write_lock(idx_dir):
-            if current_index_dir(root) != idx_dir:
-                continue
-            assigned = os.path.join(idx_dir, _ASSIGNED)
-            _widen_pins(idx_dir, id_col)
-            rows.select(
-                *[c for c in rows.columns if c != "cell"],
-                # long: the counter is unbounded and the pin says long
-                F.lit(_bump_seq(idx_dir)).cast("long").alias(_SEQ),
-                F.col("cell").alias(_CELL),
-            ).write.mode("append").parquet(
-                os.path.join(assigned, f"cell={_DELTA_CELL}")
+        assigned = os.path.join(idx_dir, _ASSIGNED)
+        pinned = _read_store_schemas(idx_dir).get("assigned")
+        if pinned is not None and _pin_from_written(pinned) != pinned:
+            # an older pin widens before the write (an int ``__seq``
+            # becomes long, ``__cell`` is added), so no reader meets a
+            # file its pin cannot resolve
+            _write_store_schemas(idx_dir, assigned=_pin_from_written(pinned))
+        rows.select(
+            *[c for c in rows.columns if c != "cell"],
+            F.lit(_bump_seq(idx_dir)).cast("long").alias(_SEQ),
+            F.col("cell").alias(_CELL),
+        ).write.mode("append").parquet(os.path.join(assigned, f"cell={_DELTA_CELL}"))
+        if pinned is None:
+            # a store written before pins: pin the union schema a
+            # mergeSchema read infers, so later probes skip footers
+            merged = rows.sparkSession.read.option("mergeSchema", "true").parquet(
+                assigned
             )
-            if "assigned" not in _read_store_schemas(idx_dir):
-                # one-time legacy migration: pin the union schema a
-                # mergeSchema read infers, so later probes skip footers
-                merged = rows.sparkSession.read.option(
-                    "mergeSchema", "true"
-                ).parquet(assigned)
-                a_pin, d_pin = _pin_from_written(merged.schema, id_col)
-                _write_store_schemas(idx_dir, assigned=a_pin, deleted=d_pin)
-            return
+            _write_store_schemas(idx_dir, assigned=_pin_from_written(merged.schema))
+
+    _locked(root, write)
 
 
 def append_to_ivf_store(
@@ -609,7 +402,7 @@ def append_to_ivf_store(
             + ", cell int",
         )
 
-    _append_delta(root, id_col, assigned)
+    _append_delta(root, assigned)
 
 
 def delete_from_ivf_store(
@@ -625,86 +418,18 @@ def delete_from_ivf_store(
     predicate over the store's columns (attributes, id — anything in
     the assigned schema). Returns the number of LIVE rows deleted.
 
-    Design: id-level TOMBSTONES, not a rewrite. Deleting rewrites
-    nothing — matching ids append to ``<version>/deleted/`` and every
-    read path (:func:`_load_assigned`: probes, range search, store kNN
-    joins, rebuild — and the shared-layout IVFPQ store's probe and
-    rebuild, operators/ivfpq_store.py) anti-joins them out. Cost is
-    delete-sized; a
-    predicate delete scans the (partition-pruned, columnar) store once
-    to find ids, never touches vectors. Deletes COMPACT at
-    :func:`rebuild_ivf_store`: the new version contains neither the
-    tombstoned rows nor the tombstones. This is the LSM/deletion-vector
-    trade every production store makes — O(1)-ish deletes, bounded
-    probe overhead (one broadcast anti-join on the id), reclaimed at
-    the scheduled rebuild.
-
-    Contract notes (stated, because they surprise): tombstones are
-    GENERATION-scoped (r11) — ``(id, seq)`` hides the id's rows written
-    at or before write-generation ``seq``, so a LATER append of the
-    same id resurrects it immediately (and :func:`update_ivf_store` is
-    exactly tombstone-then-append). Exactly one of ``ids`` / ``where``
-    must be given. Deleting ids not in the store is a no-op that
-    returns 0, not an error (the FAISS semantic)."""
-    if (ids is None) == (where is None):
-        raise ValueError("delete_from_ivf_store: pass exactly one of ids/where")
-    idx_dir = current_index_dir(root)
-    live = _load_assigned(spark, idx_dir, id_col)
-    if where is not None:
-        doomed = live.filter(F.expr(where)).select(id_col).distinct()
-    else:
-        id_df = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{id_col} long"
-        )
-        doomed = live.select(id_col).join(
-            F.broadcast(id_df.distinct()), id_col, "left_semi"
-        )
-    return _tombstone(spark, idx_dir, doomed, id_col, root=root)
-
-
-def _tombstone(
-    spark: SparkSession,
-    idx_dir: str,
-    doomed_ids: DataFrame,
-    id_col: str,
-    root: str | None = None,
-) -> int:
-    """Write generation-scoped tombstones for the given LIVE ids
-    (callers pre-intersect with the live set) at the version's current
-    write generation; rows appended at a later generation escape.
-    When ``root`` is given, the version pointer is re-checked after
-    the lock is acquired: a rebuild that committed while this writer
-    waited (rebuild holds the same lock) means the tombstones must
-    land in the NEW current version — the superseded dir is invisible
-    to readers and vacuumed away. The doomed ids are materialized
-    before the wait, so they carry over (a rebuild is a pure
-    compaction: the live id set is unchanged)."""
-    # pin severs lineage from the deleted/ directory the append below
-    # writes into — a persist()-only plan could be re-evaluated against
-    # that directory mid-append on cache eviction or executor loss (r11
-    # advice: self-read hazard). Tombstone id set: delta-sized, so the
-    # local default of materialize.py's policy applies.
-    doomed = pin(doomed_ids)
-    n = doomed.count()
-    while n:
-        # store lock around the deleted/ append: concurrent tombstone
-        # writes share the committer staging dir like any append; the
-        # seq literal is read (not bumped) under the same lock so it
-        # can't straddle a racer's bump, and is cast LONG to match the
-        # pinned read schema (r12 advice: an int literal past 2^31
-        # would read back NULL under a long pin's int predecessor)
-        with _write_lock(idx_dir):
-            if root is not None and current_index_dir(root) != idx_dir:
-                idx_dir = current_index_dir(root)
-                continue
-            _widen_pins(idx_dir, id_col)
-            doomed.withColumn(
-                "seq", F.lit(_read_seq(idx_dir)).cast("long")
-            ).coalesce(1).write.mode("append").parquet(
-                os.path.join(idx_dir, _DELETED)
-            )
-        break
-    return n
+    Deleting rewrites nothing: the matching ids become tombstones
+    (operators/store.py), which every read path of both IVF stores
+    subtracts through :func:`_load_assigned` and the next rebuild
+    compacts. A predicate delete scans the (columnar) store once to
+    find ids and never touches vectors. Exactly one of ``ids`` /
+    ``where`` must be given; deleting ids not in the store returns 0.
+    Tombstones are generation-scoped, so a LATER append of a deleted
+    id resurrects it."""
+    return _delete(
+        spark, root, "delete_from_ivf_store",
+        lambda idx_dir: _load_assigned(spark, idx_dir, id_col), id_col, ids, where,
+    )
 
 
 def update_ivf_store(
@@ -715,7 +440,7 @@ def update_ivf_store(
     vec_col: str = "embedding",
 ) -> int:
     """UPDATE (re-embed / metadata change) — the verb that completes
-    the store's CRUD (r11; FAISS has no update, Delta calls this MERGE):
+    the store's CRUD (FAISS has no update, Delta calls this MERGE):
     tombstone the CURRENT generation of the batch's ids, then append
     the batch as a NEW write generation. The appended rows carry
     ``__seq`` greater than the tombstone's, so the update is visible
@@ -729,7 +454,6 @@ def update_ivf_store(
     Cost: one tombstone write (delete-sized) + one append
     (batch-sized); the corpus is never re-read."""
     spark = batch.sparkSession
-    idx_dir = current_index_dir(root)
     # ONE job for the pk-uniqueness check (count + distinct-count in a
     # single aggregate) instead of two full passes over a batch whose
     # upstream may be an expensive re-embedding pipeline. The batch is
@@ -746,12 +470,12 @@ def update_ivf_store(
             f"update_ivf_store: batch must be unique on {id_col}"
         )
     ids = batch.select(id_col).distinct()
-    live_doomed = (
-        _load_assigned(spark, idx_dir, id_col)
+    n = _tombstone(
+        root, id_col,
+        lambda idx_dir: _load_assigned(spark, idx_dir, id_col)
         .select(id_col)
-        .join(F.broadcast(ids), id_col, "left_semi")
+        .join(F.broadcast(ids), id_col, "left_semi"),
     )
-    n = _tombstone(spark, idx_dir, live_doomed, id_col, root=root)
     append_to_ivf_store(batch, root, id_col=id_col, vec_col=vec_col)
     return n
 
@@ -908,66 +632,21 @@ def rebuild_ivf_store(
     train_iters: int = 2,
 ) -> None:
     """Drift repair: re-train centroids from the CURRENT contents of the
-    store (base + every appended batch) into a NEW version directory and
-    commit it with one atomic pointer replace — the explicit,
-    schedulable rebuild the append path defers. ``nlist`` defaults to
-    the existing centroid count; a different seed than build's keeps the
-    rebuild's sample independent of the original.
+    store (base + every appended batch, minus tombstoned rows) into a
+    new version and commit it (the store.py rebuild: under the write
+    lock, readers unblocked, a waiting writer retries on the new
+    version). ``nlist`` defaults to the existing centroid count; a
+    different seed than build's keeps the rebuild's sample independent
+    of the original. Attribute columns survive; ``cell`` is reassigned
+    by the new quantizer."""
 
-    Atomic AND reader-safe: the commit is a single ``os.replace`` of the
-    pointer file, and the superseded version directory is left intact —
-    an in-flight probe that resolved it keeps scanning files that still
-    exist. Superseded versions are deleted only by the explicit
-    :func:`vacuum_ivf_store` (single-writer assumed, as in
-    plans/versioned.py).
-
-    The rebuild holds the current version's store write lock for its
-    whole duration (r13 advice: an append racing an unlocked rebuild
-    could write into the superseded version dir after the pointer
-    swap — its rows silently absent from the new version and deleted
-    by the next vacuum). Readers are lock-free and stay unblocked; a
-    writer that waited out the rebuild re-resolves the pointer after
-    acquiring the lock and retries on the NEW version (the write
-    paths' currency re-check), so no write can land in a superseded
-    dir. :func:`vacuum_ivf_store` still requires quiescing writers —
-    deletion is not guarded by any lock."""
-    version = _current_version(root)
-    cur_dir = _version_dir(root, version)
-    with _write_lock(cur_dir):
-        # _load_assigned drops tombstoned ids, so deletes COMPACT here:
-        # the new version contains neither the rows nor the tombstones
+    def build(cur_dir: str, new_dir: str) -> None:
         full = _load_assigned(spark, cur_dir, id_col)
-        # attribute columns survive the rebuild (everything except cell,
-        # which the new quantizer reassigns)
-        attrs = tuple(
-            c for c in full.columns if c not in (id_col, vec_col, "cell")
-        )
-        current = full.select(id_col, vec_col, *attrs)
-        if nlist is None:
-            nlist = len(_read_centroids(spark, cur_dir)[0])
+        attrs = tuple(c for c in full.columns if c not in (id_col, vec_col, "cell"))
         _build_into(
-            current, _version_dir(root, version + 1), nlist, id_col,
-            vec_col, seed, train_iters, attr_cols=attrs,
+            full.select(id_col, vec_col, *attrs), new_dir,
+            nlist or len(_read_centroids(spark, cur_dir)[0]), id_col, vec_col,
+            seed, train_iters, attr_cols=attrs,
         )
-        _commit_version(root, version + 1)
 
-
-def vacuum_ivf_store(root: str, *, keep_last: int = 2) -> list[int]:
-    """Delete superseded version directories, keeping the newest
-    ``keep_last`` (the live version is always kept). Run this only once
-    no reader can still hold a pruned version — deletion is the one
-    non-atomic step, which is why it is a separate, explicit verb.
-    Returns the removed version numbers."""
-    import shutil
-
-    live = _current_version(root)
-    versions = sorted(
-        int(m.group(1))
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"v(\d{8})", d)) and os.path.isdir(os.path.join(root, d))
-    )
-    keep = set(versions[-max(keep_last, 1) :]) | {live}
-    removed = [v for v in versions if v not in keep]
-    for v in removed:
-        shutil.rmtree(_version_dir(root, v))
-    return removed
+    _rebuild(root, build)

@@ -8,14 +8,16 @@ layout instead: coarse cells prune WHICH rows are read (partition
 directories), PQ codes shrink WHAT each row is (m one-byte codes + a
 norm ≈ 16 bytes vs kilobyte vectors), ADC scores candidates with table
 lookups, and an exact re-rank against the raw corpus fixes the
-shortlist. Same immutable-versioned-directory + atomic-pointer commit
-protocol as ivf_store (shared helpers imported from it):
+shortlist. It shares the IVF store's cell layout (operators/
+ivf_store.py: sealed cells, the ``cell=-1`` delta, the cell-pruned
+reader) and the generational-store protocol of operators/store.py
+(versions behind one atomic pointer, write lock and generations,
+pins, tombstones, rebuild, vacuum):
 
-    root/_current.json                      {"version": N}
-    root/v0000000N/centroids.parquet        cell -> coarse centroid
-    root/v0000000N/codebooks.parquet        (sub, cell) -> PQ sub-centroid
-    root/v0000000N/assigned/cell=<c>/...    vec_id, codes, vnorm (sealed)
-    root/v0000000N/assigned/cell=-1/...     appended rows, real cell in __cell
+    v0000000N/centroids.parquet        cell -> coarse centroid
+    v0000000N/codebooks.parquet        (sub, cell) -> PQ sub-centroid
+    v0000000N/assigned/cell=<c>/...    vec_id, codes, vnorm (sealed)
+    v0000000N/assigned/cell=-1/...     appended rows, real cell in __cell
 
 Lifecycle mirrors ivf_store: :func:`build_ivfpq_store` trains coarse +
 PQ quantizers and writes version 1; :func:`append_to_ivfpq_store`
@@ -30,8 +32,9 @@ and a rebuild folds away, ADC-scores their codes, and exact-re-ranks the
 corpus rows whose ids the store holds (codes alone cannot re-train
 codebooks — quantization is lossy — which is why rebuild takes the
 corpus as an argument instead of reading only the store) into a new
-version behind the same atomic pointer; vacuum is shared with
-ivf_store (identical layout).
+version; deletes and vacuum are the IVF store's
+(:func:`operators.ivf_store.delete_from_ivf_store`,
+:func:`operators.ivf_store.vacuum_ivf_store`).
 
 Reference parity: the reference has no vector surface; this extends
 its incremental-sync architecture (operations.py:515-609 delta
@@ -50,17 +53,18 @@ from pyspark.sql import DataFrame, SparkSession
 from python_openetl_spark.functions.vectors import empty_topk
 from python_openetl_spark.operators.ivf_store import (
     _append_delta,
-    _commit_version,
-    _current_version,
     _load_assigned,
     _read_centroids,
-    _version_dir,
-    _write_lock,
     _write_sealed,
-    current_index_dir,
 )
 from python_openetl_spark.operators.kmeans import train_coarse_centroids
 from python_openetl_spark.operators.pq import _encode_assign_fn, _ivfpq_probe, pq_fit
+from python_openetl_spark.operators.store import (
+    _commit_version,
+    _rebuild,
+    _version_dir,
+    current_index_dir,
+)
 
 _CODEBOOKS = "codebooks.parquet"
 
@@ -79,8 +83,7 @@ def _write_codebooks(spark: SparkSession, idx_dir: str, books: np.ndarray) -> No
 
 def _read_codebooks(spark: SparkSession, idx_dir: str) -> np.ndarray:
     # m*ksub rows on the driver: pyarrow instead of a Spark
-    # read+collect job per probe (same rationale as
-    # ivf_store._read_centroids — guide §5, tiny fixed-size metadata).
+    # read+collect job per probe (tiny fixed-size metadata)
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(os.path.join(idx_dir, _CODEBOOKS)).to_pylist()
@@ -107,8 +110,8 @@ def build_ivfpq_store(
 ) -> None:
     """Train coarse + PQ quantizers, encode, write version 1, commit.
 
-    The coarse quantizer is k-means-trained (operators/kmeans.py, r7
-    verdict #2) with the same ``iters`` as the PQ codebooks — sampled
+    The coarse quantizer is k-means-trained (operators/kmeans.py) with
+    the same ``iters`` as the PQ codebooks — sampled
     coarse centroids give uneven cells, which at 100 TB means hot probe
     tasks and weaker recall per nprobe."""
     _build_pq_into(
@@ -169,35 +172,22 @@ def rebuild_ivfpq_store(
     codebooks (quantization is lossy), so a rebuild re-trains from the
     RAW ``corpus`` rows whose ids the store currently holds — the
     caller supplies the same raw table the probe path re-ranks against.
-    Writes a NEW version directory and commits it with one atomic
-    pointer replace; in-flight probes keep the version they resolved.
-    ``nlist``/``m``/``ksub`` default to the live store's geometry.
-    Superseded versions are pruned only by the explicit
-    :func:`operators.ivf_store.vacuum_ivf_store` (the layout is
-    shared). Holds the current version's store write lock for the
-    whole rebuild (the r14 rebuild-vs-append rule, see
-    ivf_store.rebuild_ivf_store) — a waiting appender re-resolves the
-    pointer after acquiring and retries on the new version."""
-    version = _current_version(root)
-    cur_dir = _version_dir(root, version)
-    with _write_lock(cur_dir):
-        if nlist is None:
-            nlist = len(_read_centroids(spark, cur_dir)[0])
-        if m is None or ksub is None:
-            books = _read_codebooks(spark, cur_dir)
-            m = m if m is not None else books.shape[0]
-            ksub = ksub if ksub is not None else books.shape[1]
-        # _load_assigned: tombstoned ids (delete_from_ivf_store — the
-        # layout is shared) must not survive a PQ rebuild either
+    The rows whose ids are tombstoned do not survive. Writes a new
+    version and commits it (the store.py rebuild, under the write
+    lock). ``nlist``/``m``/``ksub`` default to the live store's
+    geometry."""
+
+    def build(cur_dir: str, new_dir: str) -> None:
+        books = _read_codebooks(spark, cur_dir)
         held_ids = _load_assigned(spark, cur_dir, id_col).select(id_col)
-        current = corpus.select(id_col, vec_col).join(
-            held_ids, id_col, "left_semi"
-        )
         _build_pq_into(
-            current, _version_dir(root, version + 1), nlist, m, ksub, iters,
-            id_col, vec_col, seed,
+            corpus.select(id_col, vec_col).join(held_ids, id_col, "left_semi"),
+            new_dir, nlist or len(_read_centroids(spark, cur_dir)[0]),
+            m or books.shape[0], ksub or books.shape[1], iters, id_col, vec_col,
+            seed,
         )
-        _commit_version(root, version + 1)
+
+    _rebuild(root, build)
 
 
 def append_to_ivfpq_store(
@@ -208,8 +198,8 @@ def append_to_ivfpq_store(
     vec_col: str = "embedding",
 ) -> None:
     """Encode new vectors against the EXISTING quantizers and write them
-    into the delta partition (``ivf_store._append_delta``: one Spark
-    job, one file per input task) — batch-sized cost, corpus never
+    into the IVF delta partition (one Spark job, one file per input
+    task) — batch-sized cost, corpus never
     re-read; :func:`rebuild_ivfpq_store` folds the delta into cells."""
     spark = batch.sparkSession
 
@@ -221,7 +211,7 @@ def append_to_ivfpq_store(
             schema=f"{id_col} long, codes array<tinyint>, vnorm double, cell int",
         )
 
-    _append_delta(root, id_col, encoded)
+    _append_delta(root, encoded)
 
 
 def ivfpq_store_topk(
@@ -247,8 +237,6 @@ def ivfpq_store_topk(
     if queries_pdf.empty:
         return empty_topk(spark, query_id_col, id_col)
     cells, cnorm = _read_centroids(spark, idx_dir)
-    # tombstone-aware (the shared _load_assigned loader): deleted ids
-    # are invisible to PQ probes exactly as to the raw-vector store
     return _ivfpq_probe(
         lambda probed: _load_assigned(spark, idx_dir, id_col, probed),
         corpus, cells, cnorm,

@@ -1,20 +1,18 @@
 """Persisted, incrementally-maintained inverted index — the sparse
 (lexical) sibling of operators/ivf_store.py.
 
-r12 verdict gap #3: `update_postings` (operators/retrieval.py:84-111)
-maintains postings as a DataFrame-in/DataFrame-out operator, but with
-no on-disk store a 100 TB decontamination sweep re-tokenizes the whole
-corpus per retrieval job. This module closes the dense/sparse
-asymmetry: the SAME versioned-directory + atomic-pointer +
-generation-scoped-tombstone machinery the vector store hardened over
-r11/r12 (`_seq.lock`d counter, store-level `_write.lock`, pinned
-`_schema.json` read schemas), applied to the lexical index:
+``update_postings`` (operators/retrieval.py) maintains postings as a
+DataFrame-in/DataFrame-out operator, but with no on-disk store a 100 TB
+decontamination sweep re-tokenizes the whole corpus per retrieval job.
+This store keeps the lexical index under the generational-store
+protocol of operators/store.py (versions behind one atomic pointer,
+the write lock and write generations, pinned read schemas,
+generation-scoped ``doc_id`` tombstones, rebuild and vacuum), with this
+layout inside each version:
 
-    root/_current.json                     {"version": N}  (os.replace)
-    root/v0000000N/postings/bucket=<b>/... (term, doc_id, tf, __seq)
-    root/v0000000N/doclens/...             (doc_id, dl, __seq)
-    root/v0000000N/deleted/                (doc_id, seq) tombstones
-    root/v0000000N/_meta.json              {"n_buckets": B}
+    v0000000N/postings/bucket=<b>/... (term, doc_id, tf, __seq)
+    v0000000N/doclens/...             (doc_id, dl, __seq)
+    v0000000N/_meta.json              {"n_buckets": B} (+ "positions")
 
 - :func:`build_postings_store` — tokenize the corpus ONCE
   (retrieval.build_postings: explode → map-side-combined (term, doc)
@@ -27,37 +25,25 @@ r11/r12 (`_seq.lock`d counter, store-level `_write.lock`, pinned
   update_postings' delete-then-insert semantics made durable: the
   batch's postings/doclens append at the bumped generation FIRST,
   then the batch doc_ids that were already live are tombstoned at the
-  pre-bump generation (insert-then-tombstone, r14: a crash between
-  the two writes leaves detectable duplicate state that re-running
-  the append repairs, never a silent deletion) — so re-ingesting an
-  EDITED document replaces its stale postings instead of
-  double-counting tf/df, and the indexed corpus is never re-read or
-  re-tokenized.
+  pre-bump generation — so re-ingesting an EDITED document replaces
+  its stale postings instead of double-counting tf/df, and the
+  indexed corpus is never re-read or re-tokenized.
 - :func:`delete_from_postings_store` — id tombstones (delete-sized;
-  one broadcast anti-join at read; compacts at rebuild), shared
-  generation contract with the vector store: ``(doc_id, seq)`` hides
-  that doc's rows written at or before ``seq``; a LATER re-ingest
-  escapes.
+  one broadcast anti-join at read; compacts at rebuild).
+- :func:`apply_cdc_to_postings_store` — one change-data-capture batch
+  of deletes and upserts.
 - :func:`postings_store_topk` — Okapi BM25 over the LIVE store rows,
   bit-identical to retrieval.bm25_topk on the equivalent corpus state
-  (both call the ONE shared scoring tail, retrieval.bm25_rank_topk —
-  r13 verdict #5), so the full lifecycle is value-hash
-  oracle-checkable.
+  (both call the ONE shared scoring tail, retrieval.bm25_rank_topk),
+  so the full lifecycle is value-hash oracle-checkable.
 - :func:`postings_snapshot` — one-resolution ``(postings, doclens)``
-  read for callers composing both (the ivf_store 'resolve once' rule:
-  two independent pointer reads around a concurrent rebuild commit
-  could mix versions).
+  read for callers composing both (two independent pointer reads
+  around a concurrent rebuild commit could mix versions).
 - :func:`suggest_buckets` — ~sqrt(V) bucket-count rule for
   build/rebuild, so probe pruning keeps up with vocabulary growth.
-- :func:`rebuild_postings_store` — compact tombstones into a NEW
-  version directory, committed by one atomic pointer replace;
-  in-flight probes keep the version they resolved. The rebuild holds
-  the current version's write lock for its whole duration, and every
-  writer re-checks the pointer after acquiring the lock (r14: a
-  writer that waited out a rebuild retries on the NEW version instead
-  of writing into the superseded dir). Superseded versions are pruned
-  by the SHARED :func:`ivf_store.vacuum_ivf_store` (identical
-  version-dir layout); vacuum still requires quiescing writers.
+- :func:`rebuild_postings_store` — compact tombstones into a new
+  version (the store.py rebuild); superseded versions are pruned by
+  the protocol's one vacuum, :func:`operators.ivf_store.vacuum_ivf_store`.
 - :func:`build_positional_postings_store` /
   :func:`postings_store_phrase` — the positional variant (postings
   carry 1-based token positions) and the exact-phrase containment
@@ -72,10 +58,7 @@ bounded by distinct (term, doc) pairs — never raw token streams);
 appends cost O(batch); probes read only the query vocabulary's bucket
 partitions, tombstones ride one broadcast, and corpus scalars
 (N, Σdl) are a map-side-combined aggregate over the doc-count-sized
-doclens table — none of it touches raw text. Single-writer per store
-at a time (the `_write.lock` serializes appends/tombstones — the
-FileOutputCommitter staging-dir hazard, see ivf_store._write_lock;
-lock contract in plans/commit.py); readers are never blocked.
+doclens table — none of it touches raw text.
 
 Reference parity: the reference (tmccall8829/python-openetl) has no
 text retrieval; this extends its incremental-sync architecture
@@ -93,28 +76,31 @@ from pyspark.sql import functions as F
 
 from python_openetl_spark.functions.text import tokens
 from python_openetl_spark.operators.materialize import pin
-from python_openetl_spark.operators.ivf_store import (
-    _SEQ,
-    _bump_seq,
-    _commit_version,
-    _current_version,
-    _read_seq,
-    _read_store_schemas,
-    _version_dir,
-    _write_lock,
-    _write_store_schemas,
-    current_index_dir,
-)
 from python_openetl_spark.operators.retrieval import (
     bm25_rank_topk,
     build_postings,
     doc_lengths,
 )
+from python_openetl_spark.operators.store import (
+    _SEQ,
+    _bump_seq,
+    _commit_version,
+    _delete,
+    _live,
+    _locked,
+    _pin,
+    _rebuild,
+    _scan,
+    _tomb_pin,
+    _version_dir,
+    _write_store_schemas,
+    _write_tombstones,
+    current_index_dir,
+)
 from python_openetl_spark.plans.commit import write_json
 
 _POSTINGS = "postings"
 _DOCLENS = "doclens"
-_DELETED = "deleted"
 _META = "_meta.json"
 
 
@@ -124,9 +110,9 @@ def suggest_buckets(
     min_buckets: int = 8,
     max_buckets: int = 4096,
 ) -> int:
-    """Bucket-count rule for build/rebuild (r13 verdict #6 — probe
-    pruning depends on vocabulary/bucket geometry, and a fixed default
-    silently degrades as the vocabulary grows): the next power of two
+    """Bucket-count rule for build/rebuild (probe pruning depends on
+    vocabulary/bucket geometry, and a fixed default silently degrades
+    as the vocabulary grows): the next power of two
     at or above ``sqrt(V)``, clamped to ``[min_buckets, max_buckets]``.
 
     Why ~sqrt(V): a probe reads the bucket DIRECTORIES its query
@@ -167,68 +153,16 @@ def _write_meta(idx_dir: str, meta: dict) -> None:
     write_json(os.path.join(idx_dir, _META), meta)
 
 
-def _pins_for(postings_written, doclens_written):
-    """Pinned read-back schemas (the ivf_store r12 rule: probes must
-    never pay per-file footer inference). The hive ``bucket`` partition
-    column reads back appended after the data columns; ``__seq`` and
-    the tombstone ``seq`` are pinned LONG (unbounded counter — an int
-    pin would read a past-2^31 file's seq as NULL = kill-all)."""
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    pfields = [
-        StructField(f.name, LongType()) if f.name == _SEQ else f
-        for f in postings_written.fields
-        if f.name != "bucket"
-    ]
-    pfields.append(StructField("bucket", IntegerType()))
-    dfields = [
-        StructField(f.name, LongType()) if f.name == _SEQ else f
-        for f in doclens_written.fields
-    ]
-    deleted = StructType(
-        [StructField("doc_id", LongType()), StructField("seq", LongType())]
-    )
-    return StructType(pfields), StructType(dfields), deleted
+def _posting_cols(meta: dict) -> list[str]:
+    return ["term", "doc_id", "tf"] + (["positions"] if meta.get("positions") else [])
 
 
-def _load_live(
-    spark: SparkSession, idx_dir: str, sub: str, pin_key: str
-) -> DataFrame:
+def _load_live(spark: SparkSession, idx_dir: str, sub: str) -> DataFrame:
     """The ONE place store contents are read (postings or doclens):
-    pinned-schema scan minus the version's generation-scoped
-    tombstones, so delete semantics cannot drift between the probe,
-    stats, and rebuild paths. Tombstones are broadcast — bounded by
-    rebuild cadence, the deletion-vector contract."""
-    pins = _read_store_schemas(idx_dir)
-    reader = spark.read
-    if pin_key in pins:
-        reader = reader.schema(pins[pin_key])
-    else:  # pre-pin fallback only; never taken for stores built here
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(os.path.join(idx_dir, sub))
-    row_seq = (
-        F.coalesce(F.col(_SEQ), F.lit(0)) if _SEQ in df.columns else F.lit(0)
-    )
-    ddir = os.path.join(idx_dir, _DELETED)
-    if os.path.isdir(ddir):
-        treader = spark.read
-        if "deleted" in pins:
-            treader = treader.schema(pins["deleted"])
-        else:
-            treader = treader.option("mergeSchema", "true")
-        tomb = (
-            treader.parquet(ddir)
-            .groupBy("doc_id")
-            .agg(F.max(F.coalesce(F.col("seq"), F.lit(2**62))).alias("__tomb_seq"))
-        )
-        df = (
-            df.join(F.broadcast(tomb), "doc_id", "left")
-            .filter(
-                F.col("__tomb_seq").isNull() | (row_seq > F.col("__tomb_seq"))
-            )
-            .drop("__tomb_seq")
-        )
-    return df.drop(_SEQ)
+    the pinned scan minus the version's tombstones, so delete
+    semantics cannot drift between the probe, stats and rebuild
+    paths."""
+    return _live(spark, idx_dir, _scan(spark, idx_dir, sub), "doc_id")
 
 
 def load_postings(
@@ -240,13 +174,10 @@ def load_postings(
     version ONCE and pass it to both loads, or use
     :func:`postings_snapshot`, which does exactly that — two
     independent resolutions around a concurrent rebuild commit can mix
-    rows from two versions (r13 advice; the ivf_store 'resolve once'
-    rule, now followable through these helpers)."""
+    rows from two versions."""
     if idx_dir is None:
         idx_dir = current_index_dir(root)
-    return _load_live(spark, idx_dir, _POSTINGS, "postings").select(
-        "term", "doc_id", "tf"
-    )
+    return _load_live(spark, idx_dir, _POSTINGS).select("term", "doc_id", "tf")
 
 
 def load_doc_lengths(
@@ -257,9 +188,7 @@ def load_doc_lengths(
     composing caller must pin)."""
     if idx_dir is None:
         idx_dir = current_index_dir(root)
-    return _load_live(spark, idx_dir, _DOCLENS, "doclens").select(
-        "doc_id", "dl"
-    )
+    return _load_live(spark, idx_dir, _DOCLENS).select("doc_id", "dl")
 
 
 def postings_snapshot(
@@ -273,12 +202,10 @@ def postings_snapshot(
     ``idx_dir`` once). Positional stores include the ``positions``
     column."""
     idx_dir = current_index_dir(root)
-    cols = ["term", "doc_id", "tf"] + (
-        ["positions"] if _read_meta(idx_dir).get("positions") else []
-    )
+    cols = _posting_cols(_read_meta(idx_dir))
     return (
-        _load_live(spark, idx_dir, _POSTINGS, "postings").select(*cols),
-        _load_live(spark, idx_dir, _DOCLENS, "doclens").select("doc_id", "dl"),
+        _load_live(spark, idx_dir, _POSTINGS).select(*cols),
+        _load_live(spark, idx_dir, _DOCLENS).select("doc_id", "dl"),
     )
 
 
@@ -291,23 +218,45 @@ def _write_generation(
     mode: str,
 ) -> None:
     """Write one generation of postings (bucket-partitioned) and
-    doclens. Caller holds the store write lock for ``mode='append'``."""
+    doclens, then their pins. Caller holds the store write lock for
+    ``mode='append'``."""
     post = post.withColumn(_SEQ, F.lit(seq).cast("long")).withColumn(
         "bucket", _bucket_col("term", n_buckets)
     )
-    # repartition by bucket BEFORE the partitioned write (the ivf_store
-    # rule: otherwise tasks × buckets sliver files drown later scans)
+    # repartition by bucket BEFORE the partitioned write: otherwise
+    # tasks × buckets sliver files drown later scans
     post.repartition("bucket").write.mode(mode).partitionBy("bucket").parquet(
         os.path.join(idx_dir, _POSTINGS)
     )
     dl = dl.withColumn(_SEQ, F.lit(seq).cast("long"))
     dl.write.mode(mode).parquet(os.path.join(idx_dir, _DOCLENS))
-    p_pin, d_pin, del_pin = _pins_for(
-        post.schema, dl.schema
-    )
     _write_store_schemas(
-        idx_dir, postings=p_pin, doclens=d_pin, deleted=del_pin
+        idx_dir,
+        postings=_pin(post.schema, "bucket"),
+        doclens=_pin(dl.schema),
+        deleted=_tomb_pin("doc_id"),
     )
+
+
+def _write_version(idx_dir: str, meta: dict, post: DataFrame, dl: DataFrame) -> None:
+    """A new version directory: its ``_meta.json`` and generation 0."""
+    os.makedirs(idx_dir, exist_ok=True)
+    _write_meta(idx_dir, meta)
+    _write_generation(idx_dir, post, dl, 0, meta["n_buckets"], "errorifexists")
+
+
+def _build(
+    docs: DataFrame, root: str, n_buckets: int, text_col: str, id_col: str,
+    positions: bool,
+) -> None:
+    """Tokenize the corpus once and write version 1, generation 0."""
+    meta = {"n_buckets": int(n_buckets), **({"positions": True} if positions else {})}
+    make = _build_positional_postings if positions else build_postings
+    _write_version(
+        _version_dir(root, 1), meta, make(docs, text_col, id_col),
+        doc_lengths(docs, text_col, id_col),
+    )
+    _commit_version(root, 1)
 
 
 def build_postings_store(
@@ -319,23 +268,7 @@ def build_postings_store(
     id_col: str = "doc_id",
 ) -> None:
     """Tokenize the corpus once and write version 1, generation 0."""
-    version = 1
-    idx_dir = _version_dir(root, version)
-    os.makedirs(idx_dir, exist_ok=True)
-    _write_meta(idx_dir, {"n_buckets": int(n_buckets)})
-    post = build_postings(docs, text_col, id_col)
-    dl = doc_lengths(docs, text_col, id_col)
-    _write_generation(idx_dir, post, dl, 0, n_buckets, "errorifexists")
-    _commit_version(root, version)
-
-
-def _write_tombstones(doomed: DataFrame, idx_dir: str, seq: int) -> None:
-    """Append ``(doc_id, seq)`` tombstone rows. ``doomed`` must already
-    be materialized (localCheckpoint) — lineage into the deleted/ dir
-    this writes would be the r11 self-read hazard."""
-    doomed.withColumn("seq", F.lit(seq).cast("long")).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(idx_dir, _DELETED))
+    _build(docs, root, n_buckets, text_col, id_col, positions=False)
 
 
 def append_to_postings_store(
@@ -355,15 +288,14 @@ def append_to_postings_store(
     tombstone nothing; a batch with two rows for one id raises (both
     would land in the same generation).
 
-    Crash-safety (r13 advice — the previous tombstone-FIRST order
-    durably deleted re-ingested docs before their replacement rows
-    existed, so a crash between the two writes silently LOST those
-    documents): with the batch written first, a crash before the
-    tombstone commit leaves detectable DUPLICATE state instead —
-    the superseded generation still live alongside the new one.
-    Re-running the same append repairs it: the retry tombstones every
-    live generation of the batch's ids below its own new rows."""
-    spark = batch_docs.sparkSession
+    Crash-safety: tombstoning FIRST would durably delete re-ingested
+    docs before their replacement rows existed, so a crash between the
+    two writes would silently lose them. With the batch written first,
+    a crash before the tombstone commit leaves detectable DUPLICATE
+    state instead — the superseded generation still live alongside the
+    new one. Re-running the same append repairs it: the retry
+    tombstones every live generation of the batch's ids below its own
+    new rows."""
     dup = (
         batch_docs.groupBy(F.col(id_col).alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -374,42 +306,43 @@ def append_to_postings_store(
         raise ValueError(
             f"append_to_postings_store: batch must be unique on {id_col}"
         )
+    return _ingest(batch_docs, root, text_col, id_col)
+
+
+def _ingest(batch_docs: DataFrame, root: str, text_col: str, id_col: str) -> int:
+    """The append body, for a batch already known unique on ``id_col``."""
+    spark = batch_docs.sparkSession
     batch_ids = batch_docs.select(F.col(id_col).alias("doc_id")).distinct()
-    while True:
-        idx_dir = current_index_dir(root)
-        n_buckets = int(_read_meta(idx_dir)["n_buckets"])
-        with _write_lock(idx_dir):
-            if current_index_dir(root) != idx_dir:
-                # a rebuild committed while this writer waited on the
-                # lock (rebuild holds it): writing here would land in
-                # the superseded version dir — retry on the new one
-                continue
-            # resolve + materialize the doomed set BEFORE the batch's
-            # rows land (afterwards the batch's own rows read as live
-            # and would be tombstoned with the stale generations)
-            doomed = pin(
-                _load_live(spark, idx_dir, _DOCLENS, "doclens")
-                .select("doc_id")
-                .join(F.broadcast(batch_ids), "doc_id", "left_semi")
-            )
-            n = doomed.count()
-            seq = _bump_seq(idx_dir)
-            # a positional store's appends must keep the positional
-            # schema (meta records the build variant) — mixing would
-            # NULL the positions column for appended docs and break
-            # phrase probes
-            if _read_meta(idx_dir).get("positions"):
-                post = _build_positional_postings(batch_docs, text_col, id_col)
-            else:
-                post = build_postings(batch_docs, text_col, id_col)
-            dl = doc_lengths(batch_docs, text_col, id_col)
-            _write_generation(idx_dir, post, dl, seq, n_buckets, "append")
-            if n:
-                # committed LAST, scoped at the pre-bump generation:
-                # hides every older generation of these ids, spares the
-                # rows just written at ``seq`` (docstring crash story)
-                _write_tombstones(doomed, idx_dir, seq - 1)
+
+    def write(idx_dir: str) -> int:
+        meta = _read_meta(idx_dir)
+        # resolve + materialize the doomed set BEFORE the batch's rows
+        # land (afterwards the batch's own rows read as live and would
+        # be tombstoned with the stale generations)
+        doomed = pin(
+            _load_live(spark, idx_dir, _DOCLENS)
+            .select("doc_id")
+            .join(F.broadcast(batch_ids), "doc_id", "left_semi")
+        )
+        n = doomed.count()
+        seq = _bump_seq(idx_dir)
+        # a positional store's appends keep the positional schema:
+        # mixing would NULL the positions of appended docs and break
+        # phrase probes
+        make = _build_positional_postings if meta.get("positions") else build_postings
+        _write_generation(
+            idx_dir, make(batch_docs, text_col, id_col),
+            doc_lengths(batch_docs, text_col, id_col), seq,
+            int(meta["n_buckets"]), "append",
+        )
+        if n:
+            # committed LAST, scoped at the pre-bump generation: hides
+            # every older generation of these ids, spares the rows just
+            # written at ``seq`` (the crash story above)
+            _write_tombstones(idx_dir, doomed, "doc_id", seq - 1)
         return n
+
+    return _locked(root, write)
 
 
 def delete_from_postings_store(
@@ -423,32 +356,10 @@ def delete_from_postings_store(
     the doclens columns (doc_id, dl). Delete-sized cost; read paths
     anti-join the tombstones; compaction happens at the next rebuild.
     Deleting absent ids is a no-op returning 0 (the FAISS semantic)."""
-    if (ids is None) == (where is None):
-        raise ValueError(
-            "delete_from_postings_store: pass exactly one of ids/where"
-        )
-    while True:
-        idx_dir = current_index_dir(root)
-        with _write_lock(idx_dir):
-            if current_index_dir(root) != idx_dir:
-                # rebuild committed while we waited: retry on the new
-                # version (its live set is the same — rebuilds compact)
-                continue
-            live = _load_live(spark, idx_dir, _DOCLENS, "doclens")
-            if where is not None:
-                doomed = live.filter(F.expr(where)).select("doc_id").distinct()
-            else:
-                id_df = spark.createDataFrame(
-                    [(int(i),) for i in ids], "doc_id long"
-                )
-                doomed = live.select("doc_id").join(
-                    F.broadcast(id_df.distinct()), "doc_id", "left_semi"
-                )
-            doomed = pin(doomed)
-            n = doomed.count()
-            if n:
-                _write_tombstones(doomed, idx_dir, _read_seq(idx_dir))
-        return n
+    return _delete(
+        spark, root, "delete_from_postings_store",
+        lambda idx_dir: _load_live(spark, idx_dir, _DOCLENS), "doc_id", ids, where,
+    )
 
 
 def postings_store_topk(
@@ -490,18 +401,18 @@ def postings_store_topk(
             _bucket_col("term", n_buckets).alias("b")
         ).distinct().collect()
     ]
-    post = _load_live(spark, idx_dir, _POSTINGS, "postings")
+    post = _load_live(spark, idx_dir, _POSTINGS)
     if buckets:
         post = post.filter(F.col("bucket").isin(buckets))
     postings = post.select("term", "doc_id", "tf").join(
         F.broadcast(qvocab), "term"
     )
-    dl = _load_live(spark, idx_dir, _DOCLENS, "doclens").select("doc_id", "dl")
+    dl = _load_live(spark, idx_dir, _DOCLENS).select("doc_id", "dl")
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    # scoring tail shared verbatim with retrieval.bm25_topk (the r13
-    # verdict's single-construction-site rule; parity is guarded by
+    # scoring tail shared verbatim with retrieval.bm25_topk (one
+    # construction site; parity is guarded by
     # tests/test_postings_store.py store-vs-scratch equality)
     return bm25_rank_topk(postings, dl, stats, qterms, k=k, k1=k1, b=b)
 
@@ -519,91 +430,73 @@ def apply_cdc_to_postings_store(
     inverted index: rows ``(op, doc_id, text)`` with op ``I``/``U``
     (upsert: insert-or-replace, text required) or ``D`` (delete, text
     ignored). Deletes tombstone first, then the upsert slice ingests
-    through :func:`append_to_postings_store` (insert-then-tombstone,
-    one write generation for the whole upsert slice). The batch must
-    be unique on ``id_col`` (a CDC feed is per-key compacted upstream
-    — merge.apply_cdc's contract — so each key carries exactly its
-    LAST op; two ops for one key in one batch are ambiguous and
-    raise). Returns
-    ``{"upserted": n, "deleted": n}`` where ``deleted`` counts only
-    previously-live docs (absent-id deletes are no-ops, the FAISS
-    semantic). Cost: delete-sized + batch-sized — the indexed corpus
-    is never re-read or re-tokenized.
+    through the append body (insert-then-tombstone, one write
+    generation for the whole upsert slice). The batch must be unique
+    on ``id_col`` (a CDC feed is per-key compacted upstream —
+    merge.apply_cdc's contract — so each key carries exactly its LAST
+    op; two ops for one key in one batch are ambiguous and raise).
+    Returns ``{"upserted": n, "deleted": n}`` where ``deleted`` counts
+    only previously-live docs (absent-id deletes are no-ops, the FAISS
+    semantic). Cost: one aggregate over the batch (the op and
+    uniqueness checks, the upsert count and the deleted ids), then
+    delete-sized + batch-sized writes — the indexed corpus is never
+    re-read or re-tokenized.
 
     Reference parity: extends the reference's incremental-sync delta
     pattern (operations.py:515-609) to index maintenance; the CDC
     frame shape matches operators/merge.py apply_cdc."""
     spark = cdc.sparkSession
-    bad_op = cdc.filter(~F.col(op_col).isin("I", "U", "D")).take(1)
-    if bad_op:
+    op, key = F.col(op_col), F.col(id_col)
+    batch = cdc.agg(
+        F.first(F.when(~op.isin("I", "U", "D"), op), ignorenulls=True).alias("bad"),
+        F.count(F.lit(1)).alias("rows"),
+        # struct: a NULL key counts as one key, as it groups
+        F.count_distinct(F.struct(key)).alias("keys"),
+        F.count(F.when(op.isin("I", "U"), 1)).alias("upserts"),
+        F.collect_list(F.when(op == "D", key)).alias("deletes"),
+    ).first()
+    if batch["bad"] is not None:
         raise ValueError(
-            f"apply_cdc_to_postings_store: op must be I/U/D, got "
-            f"{bad_op[0][op_col]!r}"
+            f"apply_cdc_to_postings_store: op must be I/U/D, got {batch['bad']!r}"
         )
-    dup = (
-        cdc.groupBy(F.col(id_col))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .take(1)
-    )
-    if dup:
+    if batch["rows"] != batch["keys"]:
         raise ValueError(
             f"apply_cdc_to_postings_store: batch must be unique on {id_col}"
         )
-    del_ids = [
-        r[0]
-        for r in cdc.filter(F.col(op_col) == "D").select(id_col).collect()
-    ]
     n_del = (
-        delete_from_postings_store(spark, root, ids=del_ids)
-        if del_ids
+        delete_from_postings_store(spark, root, ids=batch["deletes"])
+        if batch["deletes"]
         else 0
     )
-    upserts = cdc.filter(F.col(op_col).isin("I", "U")).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    n_up = 0
-    if upserts.take(1):
-        append_to_postings_store(upserts, root)
-        n_up = upserts.count()
-    return {"upserted": n_up, "deleted": n_del}
+    if batch["upserts"]:
+        upserts = cdc.filter(op.isin("I", "U")).select(
+            key.alias("doc_id"), F.col(text_col).alias("text")
+        )
+        _ingest(upserts, root, "text", "doc_id")
+    return {"upserted": batch["upserts"], "deleted": n_del}
 
 
 def rebuild_postings_store(
     spark: SparkSession, root: str, *, n_buckets: int | None = None
 ) -> None:
     """Compaction: write the LIVE rows (tombstoned docs gone, every
-    surviving row at generation 0) into a NEW version directory and
-    commit it with one atomic pointer replace — in-flight probes keep
-    the version they resolved; superseded versions are pruned by the
-    shared :func:`ivf_store.vacuum_ivf_store`. No re-tokenization:
-    the rebuild reads postings/doclens, never document text. Pass
-    ``n_buckets`` to re-bucket (e.g. after the vocabulary grew).
+    surviving row at generation 0) into a new version and commit it
+    (the store.py rebuild: under the write lock, in-flight probes keep
+    the version they resolved, a waiting writer retries on the new
+    version). No re-tokenization: the rebuild reads postings/doclens,
+    never document text. Pass ``n_buckets`` to re-bucket (e.g. after
+    the vocabulary grew)."""
 
-    Holds the current version's write lock for the whole rebuild (r13
-    advice: an append racing an unlocked rebuild could write into the
-    superseded dir after the pointer swap — rows silently absent from
-    the new version and deleted by the next vacuum). Readers are
-    lock-free and stay unblocked; a waiting writer re-resolves the
-    pointer after acquiring and retries on the new version."""
-    version = _current_version(root)
-    cur_dir = _version_dir(root, version)
-    with _write_lock(cur_dir):
+    def build(cur_dir: str, new_dir: str) -> None:
         meta = _read_meta(cur_dir)
-        if n_buckets is None:
-            n_buckets = int(meta["n_buckets"])
-        cols = ["term", "doc_id", "tf"] + (
-            ["positions"] if meta.get("positions") else []
+        buckets = meta["n_buckets"] if n_buckets is None else n_buckets
+        _write_version(
+            new_dir, {**meta, "n_buckets": int(buckets)},
+            _load_live(spark, cur_dir, _POSTINGS).select(*_posting_cols(meta)),
+            _load_live(spark, cur_dir, _DOCLENS).select("doc_id", "dl"),
         )
-        post = _load_live(spark, cur_dir, _POSTINGS, "postings").select(*cols)
-        dl = _load_live(spark, cur_dir, _DOCLENS, "doclens").select(
-            "doc_id", "dl"
-        )
-        new_dir = _version_dir(root, version + 1)
-        os.makedirs(new_dir, exist_ok=True)
-        _write_meta(new_dir, {**meta, "n_buckets": int(n_buckets)})
-        _write_generation(new_dir, post, dl, 0, n_buckets, "errorifexists")
-        _commit_version(root, version + 1)
+
+    _rebuild(root, build)
 
 
 def _build_positional_postings(
@@ -645,14 +538,7 @@ def build_positional_postings_store(
     schema (append/delete/rebuild/vacuum work unchanged — the append
     path builds positional postings for the batch when the meta says
     so)."""
-    version = 1
-    idx_dir = _version_dir(root, version)
-    os.makedirs(idx_dir, exist_ok=True)
-    _write_meta(idx_dir, {"n_buckets": int(n_buckets), "positions": True})
-    post = _build_positional_postings(docs, text_col, id_col)
-    dl = doc_lengths(docs, text_col, id_col)
-    _write_generation(idx_dir, post, dl, 0, n_buckets, "errorifexists")
-    _commit_version(root, version)
+    _build(docs, root, n_buckets, text_col, id_col, positions=True)
 
 
 def postings_store_phrase(
@@ -715,7 +601,7 @@ def postings_store_phrase(
             _bucket_col("term", n_buckets).alias("b")
         ).distinct().collect()
     ]
-    post = _load_live(spark, idx_dir, _POSTINGS, "postings")
+    post = _load_live(spark, idx_dir, _POSTINGS)
     if buckets:
         post = post.filter(F.col("bucket").isin(buckets))
     rows = (

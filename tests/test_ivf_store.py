@@ -654,10 +654,10 @@ def test_store_read_schema_is_pinned_no_footer_inference(spark, tmp_path):
 
     from python_openetl_spark.operators.ivf_store import (
         _ASSIGNED,
-        _SCHEMA_FILE,
         _load_assigned,
         delete_from_ivf_store,
     )
+    from python_openetl_spark.operators.store import _SCHEMA_FILE
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     root = str(tmp_path / "store")
@@ -698,10 +698,8 @@ def test_legacy_store_without_pin_reads_and_append_migrates(spark, tmp_path):
     union schema once so every later probe skips footer inference."""
     import os
 
-    from python_openetl_spark.operators.ivf_store import (
-        _SCHEMA_FILE,
-        _load_assigned,
-    )
+    from python_openetl_spark.operators.ivf_store import _load_assigned
+    from python_openetl_spark.operators.store import _SCHEMA_FILE
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     root = str(tmp_path / "store")
@@ -717,6 +715,50 @@ def test_legacy_store_without_pin_reads_and_append_migrates(spark, tmp_path):
     assert _load_assigned(spark, idx).count() == 120
 
 
+def test_rebuild_replaces_a_crashed_rebuilds_leftover_version(spark, tmp_path):
+    """A rebuild that crashed after writing part of v{N+1} leaves a
+    directory no pointer names: vacuum removes it, and the next rebuild
+    replaces it instead of failing on the existing path."""
+    import os
+
+    from python_openetl_spark.operators.ivf_store import (
+        _load_assigned,
+        delete_from_ivf_store,
+        rebuild_ivf_store,
+        vacuum_ivf_store,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    root = str(tmp_path / "store")
+    build_ivf_store(emb.filter(F.col("vec_id") < 120), root, nlist=4)
+    delete_from_ivf_store(spark, root, ids=[3])
+
+    def live():
+        return sorted(
+            (r["vec_id"], tuple(r["embedding"]))
+            for r in _load_assigned(spark, current_index_dir(root)).collect()
+        )
+
+    def plant():
+        for sub in ("centroids.parquet", "assigned/cell=0"):
+            part = os.path.join(root, "v00000002", sub)
+            os.makedirs(part)
+            with open(os.path.join(part, "part-crashed.parquet"), "wb") as fh:
+                fh.write(b"partial")
+        return os.path.join(root, "v00000002", "assigned/cell=0/part-crashed.parquet")
+
+    before = live()
+    assert len(before) == 119
+    plant()
+    assert vacuum_ivf_store(root, keep_last=1) == [2]
+    assert current_index_dir(root).endswith("v00000001")
+    leftover = plant()
+    rebuild_ivf_store(spark, root)
+    assert current_index_dir(root).endswith("v00000002")
+    assert not os.path.exists(leftover)
+    assert live() == before
+
+
 def test_bump_seq_serializes_concurrent_writers(spark, tmp_path):
     """r12 (r11 verdict #4): the write-generation counter takes a
     _seq.lock O_EXCL critical section — two concurrent appenders can
@@ -727,7 +769,7 @@ def test_bump_seq_serializes_concurrent_writers(spark, tmp_path):
     import os
     from concurrent.futures import ThreadPoolExecutor
 
-    from python_openetl_spark.operators.ivf_store import _bump_seq, _read_seq
+    from python_openetl_spark.operators.store import _bump_seq, _read_seq
 
     idx = str(tmp_path / "idx")
     os.makedirs(idx)
@@ -738,13 +780,14 @@ def test_bump_seq_serializes_concurrent_writers(spark, tmp_path):
     assert not os.path.exists(os.path.join(idx, "_seq.lock"))  # released
 
 
-def test_bump_seq_crashed_holder_fails_loudly(spark, tmp_path):
+def test_bump_seq_crashed_holder_fails_loudly(spark, tmp_path, monkeypatch):
     """A stale _seq.lock (crashed writer) must make the next bump raise
     with remediation guidance instead of deadlocking or proceeding —
     fail-loud, never fail-corrupt (the plans/versioned.py contract)."""
     import os
 
-    import python_openetl_spark.operators.ivf_store as ivf
+    import python_openetl_spark.plans.commit as commit
+    from python_openetl_spark.operators.store import _bump_seq
 
     idx = str(tmp_path / "idx")
     os.makedirs(idx)
@@ -752,15 +795,11 @@ def test_bump_seq_crashed_holder_fails_loudly(spark, tmp_path):
     # shrink the wait so the test doesn't sit out the full 10s deadline:
     # first call (computes the deadline) sees t0, every later call sees
     # t0 + 11 — already past the deadline
-    orig = ivf.time.monotonic
-    t0 = orig()
+    t0 = commit.time.monotonic()
     calls = iter([t0])
-    try:
-        ivf.time.monotonic = lambda: next(calls, t0 + 11.0)
-        with pytest.raises(RuntimeError, match="lock held too long"):
-            ivf._bump_seq(idx)
-    finally:
-        ivf.time.monotonic = orig
+    monkeypatch.setattr(commit.time, "monotonic", lambda: next(calls, t0 + 11.0))
+    with pytest.raises(RuntimeError, match="lock held too long"):
+        _bump_seq(idx)
 
 
 def test_update_delete_update_generation_interleaving(spark, tmp_path):
@@ -828,11 +867,10 @@ def test_rebuild_holds_write_lock_and_waiting_append_retries(spark, tmp_path):
 
     from python_openetl_spark.operators.ivf_store import (
         _build_into,
-        _commit_version,
         _load_assigned,
-        _version_dir,
         rebuild_ivf_store,
     )
+    from python_openetl_spark.operators.store import _commit_version, _version_dir
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     root = str(tmp_path / "store")
@@ -887,11 +925,10 @@ def test_delete_waiting_out_rebuild_tombstones_new_version(spark, tmp_path):
 
     from python_openetl_spark.operators.ivf_store import (
         _build_into,
-        _commit_version,
         _load_assigned,
-        _version_dir,
         delete_from_ivf_store,
     )
+    from python_openetl_spark.operators.store import _commit_version, _version_dir
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     root = str(tmp_path / "store")
@@ -1312,12 +1349,11 @@ def test_parent_layout_store_appends_and_probes(spark, tmp_path):
     import os
 
     from python_openetl_spark.operators.ivf_store import (
-        _SCHEMA_FILE,
         _assign_fn,
-        _bump_seq,
         _read_centroids,
         ivf_store_range_search,
     )
+    from python_openetl_spark.operators.store import _SCHEMA_FILE, _bump_seq
 
     rng = np.random.default_rng(31)
     vecs = rng.standard_normal((600, 16)).astype(np.float32)

@@ -293,7 +293,7 @@ def test_parent_layout_pin_migrates_on_append(spark, tmp_path):
     import json
     import os
 
-    from python_openetl_spark.operators.ivf_store import _SCHEMA_FILE
+    from python_openetl_spark.operators.store import _SCHEMA_FILE
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     root = str(tmp_path / "store")

@@ -442,16 +442,16 @@ def test_writer_waiting_out_a_rebuild_retries_on_new_version(spark, root):
             _write_generation,
             _write_meta,
         )
-        from python_openetl_spark.operators.ivf_store import (
+        from python_openetl_spark.operators.store import (
             _commit_version,
             _version_dir,
         )
 
         meta = _read_meta(v1)
-        post = _load_live(spark, v1, "postings", "postings").select(
+        post = _load_live(spark, v1, "postings").select(
             "term", "doc_id", "tf"
         )
-        dl = _load_live(spark, v1, "doclens", "doclens").select(
+        dl = _load_live(spark, v1, "doclens").select(
             "doc_id", "dl"
         )
         new_dir = _version_dir(root, 2)
@@ -471,6 +471,22 @@ def test_writer_waiting_out_a_rebuild_retries_on_new_version(spark, root):
         == 1
     )
     _assert_matches_scratch(spark, root, _DOCS + [(99, "zebra apple")])
+
+
+def test_rebuild_replaces_a_crashed_rebuilds_leftover_version(spark, root):
+    """A rebuild that crashed after writing part of v{N+1} leaves a
+    directory no pointer names; the next rebuild replaces it instead of
+    failing on the existing path, and the live rows are unchanged."""
+    delete_from_postings_store(spark, root, ids=[4])
+    part = os.path.join(root, "v00000002", "postings", "bucket=0")
+    os.makedirs(part)
+    leftover = os.path.join(part, "part-crashed.parquet")
+    with open(leftover, "wb") as fh:
+        fh.write(b"partial")
+    rebuild_postings_store(spark, root)
+    assert current_index_dir(root).endswith("v00000002")
+    assert not os.path.exists(leftover)
+    _assert_matches_scratch(spark, root, [r for r in _DOCS if r[0] != 4])
 
 
 def test_postings_snapshot_resolves_version_once(spark, root):
@@ -641,6 +657,10 @@ class TestApplyCdc:
         with pytest.raises(ValueError, match="unique on doc_id"):
             apply_cdc_to_postings_store(
                 self._cdc(spark, [("D", 1, None), ("U", 1, "again")]), root
+            )
+        with pytest.raises(ValueError, match="unique on doc_id"):
+            apply_cdc_to_postings_store(
+                self._cdc(spark, [("D", None, None), ("U", None, "x")]), root
             )
 
     def test_empty_batch_is_noop(self, spark, root):
