@@ -1,26 +1,49 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families (BASELINE.json north star), all expressed as DataFrame
-dataflows that shuffle on *hash keys* — never on raw text — so the
-heavy exchange payload is a few dozen bytes per row regardless of
-document size:
+Every operator is a DataFrame dataflow that shuffles on *hash keys*,
+never on raw text, so the heavy exchange payload is a few dozen bytes
+per row whatever the document size:
 
-- exact dedup: fingerprint (md5 of normalized text) → groupBy → keep min id
-- MinHash + LSH near-dedup: shingle → minhash signature → band keys →
-  bucket self-join (candidates) → exact Jaccard verify
-- SimHash: 60-bit sign-aggregated token hash → banded hamming candidates
-- n-gram Jaccard: exact set-overlap join (the verifier, usable standalone)
-- embedding cosine near-dup: see operators/similarity.py
+- exact: md5 fingerprint of normalized text -> groupBy -> keep the min
+  id (:func:`exact_dedup`; :func:`incremental_dedup` and its Bloom
+  pre-filtered twin classify a new batch against a fingerprint store);
+- MinHash-LSH: shingle -> min-wise signature -> packed band keys ->
+  candidate pairs (:func:`minhash_lsh_candidates`;
+  :func:`incremental_near_dedup` against a persisted band-key store);
+- exact overlap of distinct shingle hashes: :func:`ngram_jaccard_pairs`
+  (Jaccard) and :func:`containment_pairs` (containment);
+- SimHash: 60-bit sign-aggregated token hash -> hamming-verified pairs
+  (:func:`simhash_candidates`);
+- edit distance of short titles within deletion-key blocks
+  (:func:`blocked_fuzzy_pairs`);
+- spans: :func:`cross_doc_repeated_windows`, :func:`paragraph_dedup`;
+- embedding cosine near-dup: see ``operators/similarity.py``.
 
-Scale notes (100 TB): every self-join here is preceded by an explode on
-a *bounded* key set (bands or shingles). Hot shingles that appear in
-huge numbers of docs create quadratic bucket joins, so
-``ngram_jaccard_pairs`` takes ``max_shingle_docs`` (stop-shingle cap,
-the standard trick); LSH bucket joins are naturally bounded by band
-collision probability.
+Every pairwise near-dup operator, here, in ``operators/multimodal.py``
+and in ``operators/similarity.lsh_cosine_pairs``, finds candidates
+under three rules, each written once in this module:
+
+- **Pair rule** (:func:`_shared_key_pairs`): two docs that share a key
+  form one candidate pair, smaller id first. It is a self-join on key
+  equality and ``a.doc < b.doc``; the caller dedups, counts or
+  verifies the pairs.
+- **Hot-key cap** (:func:`_drop_hot_keys`): keys held by more than N
+  docs are dropped before the join (the stop-shingle cap). A key held
+  by M docs makes M²/2 pairs, so one boilerplate shingle or shared
+  header chunk makes the join quadratic in corpus size; at scale set
+  N. ``None`` keeps every key (exact). LSH band keys need no cap: band
+  collision probability bounds their buckets.
+- **Pigeonhole banding** (:func:`_hash_bands`): a ``bits``-wide hash
+  splits into ``num_bands`` exact-match bands. Two hashes within
+  hamming ``max_hamming < num_bands`` agree on at least one band, so
+  the per-band join finds every such pair; ``max_hamming >=
+  num_bands`` could miss pairs and raises ``ValueError``.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_
 
 import numpy as np
 import pandas as pd
@@ -83,6 +106,73 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> 
     )
 
 
+def _shared_key_pairs(
+    keyed: DataFrame, keys: list[str], doc: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """The pair rule (module docstring): join ``keyed`` with itself
+    where every ``keys`` column is equal and ``a.doc < b.doc``.
+
+    Returns ``doc_a``, ``doc_b`` and, for each ``carry`` column ``c``,
+    ``c_a`` and ``c_b``. A pair sharing several keys comes back once per
+    shared key, so the caller dedups or counts."""
+    a, b = keyed.alias("a"), keyed.alias("b")
+    cond = reduce(
+        and_,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{doc}") < F.col(f"b.{doc}")],
+    )
+    return a.join(b, cond).select(
+        F.col(f"a.{doc}").alias("doc_a"),
+        F.col(f"b.{doc}").alias("doc_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
+def _drop_hot_keys(keyed: DataFrame, key: str, max_docs: int | None) -> DataFrame:
+    """The hot-key cap (module docstring): drop every row whose ``key``
+    is held by more than ``max_docs`` rows; ``None`` returns ``keyed``.
+
+    An inner join on the distinct kept keys, not a left-semi join: AQE
+    then reuses the cap's exchanges on both sides of the pair join
+    (d41 runs 5 Spark jobs, 6 with a left-semi join)."""
+    if max_docs is None:
+        return keyed
+    rare = (
+        keyed.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") <= max_docs)
+        .select(key)
+    )
+    return keyed.join(rare, key)
+
+
+def _hash_bands(
+    hashed: DataFrame, hash_col: str, *, bits: int, num_bands: int, max_hamming: int
+) -> DataFrame:
+    """Pigeonhole banding (module docstring): ``hashed`` with ``band``
+    and ``key`` added, one row per band, where ``key`` is the band's
+    ``bits // num_bands`` bits of ``hash_col``."""
+    if max_hamming >= num_bands:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs more than {max_hamming} bands, "
+            f"got num_bands={num_bands}: a pair can then differ in every "
+            "band and be missed"
+        )
+    band_bits = bits // num_bands
+    # a 64-bit band's mask is every bit of a long: -1, not 2^64 - 1
+    mask = F.lit(2**band_bits - 1 if band_bits < 64 else -1)
+    bands = F.array(*[
+        F.struct(
+            F.lit(i).alias("band"),
+            F.shiftright(F.col(hash_col), i * band_bits).bitwiseAND(mask).alias("key"),
+        )
+        for i in range(num_bands)
+    ])
+    return hashed.select("*", F.explode(bands).alias("__bk")).select(
+        *hashed.columns, "__bk.band", "__bk.key"
+    )
+
+
 #: Mersenne prime 2^31-1: universal-hash modulus. Products a*h stay
 #: below 2^62, so the whole MinHash family is exact 64-bit integer
 #: arithmetic in BOTH engines (Spark longs, DuckDB BIGINT).
@@ -113,11 +203,14 @@ def minhash_band_keys(
     keys are a few dozen bytes per document regardless of text size.
     """
     rows_per_band = num_hashes // num_bands
-    assert rows_per_band % 2 == 0, "band packing needs an even rows_per_band"
     # each packed key folds rows_per_band/2 base-P digits (P ≈ 2^31)
     # into one long: 2 digits < 2^62 is the 64-bit ceiling. More rows
     # per band would overflow silently — use more bands instead.
-    assert rows_per_band <= 4, "band packing overflows a long beyond 4 rows/band"
+    if rows_per_band % 2 or not 0 < rows_per_band <= 4:
+        raise ValueError(
+            f"band packing needs an even rows_per_band <= 4, got "
+            f"num_hashes // num_bands = {rows_per_band}"
+        )
     sh_rows = _shingle_rows(df, text_col, id_col, shingle_n)
     h = (token_hash60(F.col("shingle")) % MINHASH_P).alias("h")
     hashed = sh_rows.select("doc", h)
@@ -184,18 +277,38 @@ def minhash_lsh_candidates(
     # self-join: materialize so the signature pass runs once per corpus
     # scan worth paying for (size-adaptive — see operators/materialize)
     exploded = materialize(exploded)
-    a, b = exploded.alias("a"), exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.k1") == F.col("b.k1"))
-            & (F.col("a.k2") == F.col("b.k2"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+    return _shared_key_pairs(exploded, ["band", "k1", "k2"], "doc").distinct()
+
+
+def _shingle_overlap(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, max_shingle_docs: int | None
+) -> DataFrame:
+    """The shared step of :func:`ngram_jaccard_pairs` and
+    :func:`containment_pairs`: ``(doc_a, doc_b, common, n_a, n_b)`` per
+    pair sharing a distinct shingle hash, with the set sizes ``n_a``,
+    ``n_b`` counted before the hot-key cap drops shingles held by more
+    than ``max_shingle_docs`` docs."""
+    # the 16-byte (doc, h) rows feed the size count and BOTH sides of
+    # the co-occurrence self-join, and broadcast planning defeats
+    # exchange reuse — each reference re-runs the scan+tokenize+shingle+
+    # md5+distinct chain (r14 plan audit). Size-adaptive materialization
+    # pins them once when the corpus is big enough to care.
+    sh = materialize(
+        _shingle_rows(df, text_col, id_col, shingle_n)
+        .select("doc", token_hash60(F.col("shingle")).alias("h"))
         .distinct()
     )
+    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+    if max_shingle_docs is not None:
+        sh = materialize(_drop_hot_keys(sh, "h", max_shingle_docs))
+    common = (
+        _shared_key_pairs(sh, ["h"], "doc")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return common.join(sa, "doc_a").join(sb, "doc_b")
 
 
 def ngram_jaccard_pairs(
@@ -221,37 +334,8 @@ def ngram_jaccard_pairs(
     hash so the result stays value-checkable. A 60-bit collision inside
     one document would need ~2^30 distinct shingles per doc to matter.
     """
-    # the 16-byte (doc, h) rows feed the size count and BOTH sides of
-    # the co-occurrence self-join, and broadcast planning defeats
-    # exchange reuse — each reference re-runs the scan+tokenize+shingle+
-    # md5+distinct chain (r14 plan audit). Size-adaptive materialization
-    # pins them once when the corpus is big enough to care.
-    sh = (
-        _shingle_rows(df, text_col, id_col, shingle_n)
-        .select("doc", token_hash60(F.col("shingle")).alias("h"))
-        .distinct()
-    )
-    sh = materialize(sh)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_shingle_docs is not None:
-        rare = (
-            sh.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .filter(F.col("df_") <= max_shingle_docs)
-            .select("h")
-        )
-        sh = materialize(sh.join(rare, "h", "left_semi"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(df, text_col, id_col, shingle_n, max_shingle_docs)
         .withColumn(
             "jaccard",
             F.col("common").cast("double")
@@ -286,31 +370,7 @@ def containment_pairs(
     BOTH ways and a row is emitted per direction that clears the
     threshold (A-in-B and B-in-A are different facts).
     """
-    # same multi-reference materialization as ngram_jaccard_pairs
-    sh = (
-        _shingle_rows(df, text_col, id_col, shingle_n)
-        .select("doc", token_hash60(F.col("shingle")).alias("h"))
-        .distinct()
-    )
-    sh = materialize(sh)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_shingle_docs is not None:
-        rare = (
-            sh.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .filter(F.col("df_") <= max_shingle_docs)
-            .select("h")
-        )
-        sh = materialize(sh.join(rare, "h", "left_semi"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    scored = common.join(sa, "doc_a").join(sb, "doc_b")
+    scored = _shingle_overlap(df, text_col, id_col, shingle_n, max_shingle_docs)
     fwd = scored.select(
         F.col("doc_a").alias("inner_doc"),
         F.col("doc_b").alias("outer_doc"),
@@ -343,7 +403,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     h = token_hash60(F.col("tok"))
     votes = [
         F.sum(
-            F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+            F.when(h.bitwiseAND(F.lit(1 << j)) != 0, 1).otherwise(-1)
         ).alias(f"s{j}")
         for j in range(bits)
     ]
@@ -366,45 +426,24 @@ def simhash_candidates(
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming.
 
-    Pigeonhole banding: split 60 bits into 4 bands of 15; any pair
-    within hamming 3 must agree exactly on ≥ 1 band → per-band equi-join
-    finds all of them (no recall loss), then verify with bit_count(xor).
+    Pigeonhole banding (module docstring): 60 bits in 4 bands of 15
+    find every pair within hamming 3 with no recall loss, then
+    ``bit_count(xor)`` verifies.
     """
-    band_bits = bits // num_bands
-    sh = simhash(df, text_col, id_col, bits)
-    banded = sh.select(
-        F.col(id_col).alias("doc"),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * band_bits)
-                        .bitwiseAND(F.lit(2**band_bits - 1))
-                        .alias("key"),
-                    )
-                    for i in range(num_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "simhash", "bk.band", "bk.key")
+    banded = _hash_bands(
+        simhash(df, text_col, id_col, bits), "simhash",
+        bits=bits, num_bands=num_bands, max_hamming=max_hamming,
+    )
     # the banded frame self-joins; pin it so the 60-column per-bit
     # majority-vote aggregate runs once, not once per side (delta-sized:
     # (doc, band, key) rows — materialize.py policy)
     banded = pin(banded)
-    a, b = banded.alias("a"), banded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        _shared_key_pairs(banded, ["band", "key"], id_col, carry=("simhash",))
         .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
@@ -435,6 +474,12 @@ def incremental_dedup(
     then hash-joined against the store on the same key — with the store
     bucketed by ``fp``, only the (small) daily batch ever moves.
     """
+    return _classify(_batch_firsts(new_docs, text_col, id_col), id_col, seen_fps)
+
+
+def _batch_firsts(new_docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Each batch row's ``(id_col, fp)`` with ``__first_id``, the
+    smallest batch id holding the same fingerprint."""
     # NULL text → NULL fingerprint. groupBy already treats NULL as one
     # group (as SQL GROUP BY does), but a plain equi-join would drop
     # those rows (NULL != NULL) — so both joins are null-safe: all
@@ -444,19 +489,22 @@ def incremental_dedup(
     first = fp.groupBy("fp").agg(F.min(id_col).alias("__first_id")).withColumnRenamed(
         "fp", "__fp_f"
     )
-    seen = seen_fps.select(F.col("fp").alias("__fp_s"), F.lit(True).alias("__seen"))
-    return (
-        fp.join(first, F.col("fp").eqNullSafe(F.col("__fp_f")))
-        .join(seen, F.col("fp").eqNullSafe(F.col("__fp_s")), "left")
-        .select(
-            id_col,
-            "fp",
-            F.when(F.col("__seen"), F.lit("dup_of_store"))
-            .when(F.col(id_col) != F.col("__first_id"), F.lit("dup_in_batch"))
-            .otherwise(F.lit("new"))
-            .alias("status"),
-        )
+    return fp.join(first, F.col("fp").eqNullSafe(F.col("__fp_f")))
+
+
+def _classify(firsts: DataFrame, id_col: str, seen_fps: DataFrame | None) -> DataFrame:
+    """``(id_col, fp, status)`` for :func:`_batch_firsts` rows:
+    ``dup_of_store`` when ``seen_fps`` holds the fingerprint,
+    ``dup_in_batch`` when a smaller batch id does, else ``new``.
+    ``seen_fps=None`` skips the store lookup."""
+    status = F.when(F.col(id_col) != F.col("__first_id"), F.lit("dup_in_batch")).otherwise(
+        F.lit("new")
     )
+    if seen_fps is not None:
+        seen = seen_fps.select(F.col("fp").alias("__fp_s"), F.lit(True).alias("__seen"))
+        firsts = firsts.join(seen, F.col("fp").eqNullSafe(F.col("__fp_s")), "left")
+        status = F.when(F.col("__seen"), F.lit("dup_of_store")).otherwise(status)
+    return firsts.select(id_col, "fp", status.alias("status"))
 
 
 def incremental_dedup_bloom(
@@ -537,34 +585,11 @@ def incremental_dedup_bloom(
         ).all(axis=1)
         return pd.Series(hit | null.to_numpy())
 
-    fp = new_docs.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-    first = fp.groupBy("fp").agg(F.min(id_col).alias("__first_id")).withColumnRenamed(
-        "fp", "__fp_f"
-    )
-    pre = fp.join(first, F.col("fp").eqNullSafe(F.col("__fp_f"))).withColumn(
+    pre = _batch_firsts(new_docs, text_col, id_col).withColumn(
         "__cand", might_contain(h1, h2)
     )
-    seen = seen_fps.select(F.col("fp").alias("__fp_s"), F.lit(True).alias("__seen"))
-    cand = (
-        pre.filter(F.col("__cand"))
-        .join(seen, F.col("fp").eqNullSafe(F.col("__fp_s")), "left")
-        .select(
-            id_col,
-            "fp",
-            F.when(F.col("__seen"), F.lit("dup_of_store"))
-            .when(F.col(id_col) != F.col("__first_id"), F.lit("dup_in_batch"))
-            .otherwise(F.lit("new"))
-            .alias("status"),
-        )
-    )
-    fresh = pre.filter(~F.col("__cand")).select(
-        id_col,
-        "fp",
-        F.when(F.col(id_col) != F.col("__first_id"), F.lit("dup_in_batch"))
-        .otherwise(F.lit("new"))
-        .alias("status"),
-    )
-    return cand.unionByName(fresh)
+    cand = _classify(pre.filter(F.col("__cand")), id_col, seen_fps)
+    return cand.unionByName(_classify(pre.filter(~F.col("__cand")), id_col, None))
 
 
 def incremental_near_dedup(
@@ -612,16 +637,9 @@ def incremental_near_dedup(
         .distinct()
         .withColumn("__store_hit", F.lit(True))
     )
-    a, b = keys.alias("a"), keys.alias("b")
     batch_hits = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.k1") == F.col("b.k1"))
-            & (F.col("a.k2") == F.col("b.k2"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("b.doc").alias("doc"))
+        _shared_key_pairs(keys, on, "doc")
+        .select(F.col("doc_b").alias("doc"))
         .distinct()
         .withColumn("__batch_hit", F.lit(True))
     )
@@ -670,9 +688,9 @@ def blocked_fuzzy_pairs(
 
     Boilerplate armor: a deletion key shared by more than
     ``max_block`` titles ("untitled document page N" corpora) is
-    dropped — the stop-shingle-cap convention of
-    :func:`ngram_jaccard_pairs` — bounding every bucket join at the
-    cost of recall only inside pathological boilerplate clusters.
+    dropped by the hot-key cap (module docstring), bounding every
+    bucket join at the cost of recall only inside pathological
+    boilerplate clusters.
 
     The verify is the exact JVM ``levenshtein`` with a
     length-difference pre-filter (|len(a) - len(b)| > max_edit can
@@ -704,24 +722,17 @@ def blocked_fuzzy_pairs(
     keyed = materialize(base.select(
         "id", "title", F.explode(F.array_distinct(del_keys)).alias("key")
     ))
-    blocks = keyed.groupBy("key").agg(F.count(F.lit(1)).alias("__bs"))
-    keyed = materialize(keyed.join(
-        blocks.filter(F.col("__bs") <= max_block).select("key"), "key"
-    ))
-    a, b = keyed.alias("a"), keyed.alias("b")
+    keyed = materialize(_drop_hot_keys(keyed, "key", max_block))
     return (
-        a.join(
-            b,
-            (F.col("a.key") == F.col("b.key")) & (F.col("a.id") < F.col("b.id")),
-        )
+        _shared_key_pairs(keyed, ["key"], "id", carry=("title",))
         # cheap pre-filter before the DP: edit distance >= |len diff|
         .filter(
-            F.abs(F.length("a.title") - F.length("b.title")) <= F.lit(max_edit)
+            F.abs(F.length("title_a") - F.length("title_b")) <= F.lit(max_edit)
         )
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.levenshtein(F.col("a.title"), F.col("b.title")).alias("edit_distance"),
+            F.col("doc_a").alias("id_a"),
+            F.col("doc_b").alias("id_b"),
+            F.levenshtein(F.col("title_a"), F.col("title_b")).alias("edit_distance"),
         )
         .filter(F.col("edit_distance") <= max_edit)
         .dropDuplicates(["id_a", "id_b"])
@@ -837,7 +848,8 @@ def paragraph_dedup(
     Returns ``(id_col, n_paras, n_kept, text_dedup)``.
     """
     P = para_tokens
-    assert P > 0
+    if P <= 0:
+        raise ValueError(f"para_tokens must be positive, got {P}")
     tk = (
         df.select(F.col(id_col), tokens(text_col).alias("__tk"))
         .filter(F.size("__tk") >= 1)

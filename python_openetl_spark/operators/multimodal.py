@@ -12,6 +12,11 @@ At 100 TB: binary payloads dominate row size, so the kernels are
 ``mapInPandas`` (streaming Arrow batches, nothing pinned on the driver)
 and every metadata-only operation projects the payload column away
 first — column pruning keeps the scan from ever touching the bytes.
+
+The near-dup operators (perceptual hashes, video frames, CDC chunks,
+audio constellations) hash in the scan and then pair docs under the
+pair rule, hot-key cap and pigeonhole banding stated once in
+``operators/dedup.py``.
 """
 
 from __future__ import annotations
@@ -22,6 +27,12 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from python_openetl_spark.operators.dedup import (
+    _drop_hot_keys,
+    _hash_bands,
+    _shared_key_pairs,
+)
 
 #: Metadata struct carried alongside every binary payload.
 MEDIA_META_SCHEMA = (
@@ -267,46 +278,19 @@ def phash_near_dup_pairs(
     """Near-duplicate MEDIA pairs with hamming(phash) <= max_hamming —
     the image-dedup shape (re-encoded/resized copies land within a few
     bits of each other under a real pHash; exact byte-duplicates are
-    hamming 0 under any decoder). Same pigeonhole banding as
-    operators/dedup.py simhash_candidates: 64 bits in ``num_bands``
-    bands — any pair within ``max_hamming < num_bands`` bits must
-    agree exactly on >= 1 band, so the per-band equi-join finds ALL of
-    them (no recall loss) without an all-pairs join; JVM
-    ``bit_count(xor)`` verifies. Shuffle carries (id, 8-byte hash)
-    rows only."""
-    band_bits = 64 // num_bands
+    hamming 0 under any decoder). The pigeonhole banding of
+    ``operators/dedup.py`` over 64 bits in ``num_bands`` bands finds
+    every pair within ``max_hamming < num_bands`` bits without an
+    all-pairs join; JVM ``bit_count(xor)`` verifies. Shuffle carries
+    (id, 8-byte hash) rows only."""
     ph = perceptual_hashes(df, payload_col, id_col, decoder=decoder)
-    banded = ph.select(
-        F.col(id_col).alias("doc"),
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("phash"), i * band_bits)
-                        .bitwiseAND(F.lit(2**band_bits - 1))
-                        .alias("key"),
-                    )
-                    for i in range(num_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "phash", "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
+    banded = _hash_bands(ph, "phash", bits=64, num_bands=num_bands, max_hamming=max_hamming)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        _shared_key_pairs(banded, ["band", "key"], id_col, carry=("phash",))
         .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash"))).alias(
-                "hamming"
-            ),
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))).alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
@@ -381,41 +365,15 @@ def frame_phash_near_dup(
         .mapInPandas(kernel, schema=f"{id_col} long, fhash long")
         .distinct()  # a frame repeated WITHIN one video counts once
     )
-    band_bits = 64 // num_bands
-    banded = fh.select(
-        F.col(id_col).alias("vid"),
-        "fhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("fhash"), i * band_bits)
-                        .bitwiseAND(F.lit(2**band_bits - 1))
-                        .alias("key"),
-                    )
-                    for i in range(num_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vid", "fhash", "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
+    banded = _hash_bands(
+        fh, "fhash", bits=64, num_bands=num_bands, max_hamming=max_frame_hamming
+    )
     matched = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(
-            F.col("a.vid").alias("doc_a"),
-            F.col("b.vid").alias("doc_b"),
-            F.col("a.fhash").alias("fa"),
-            F.col("b.fhash").alias("fb"),
-        )
+        _shared_key_pairs(banded, ["band", "key"], id_col, carry=("fhash",))
         .distinct()  # one logical frame match per band collision set
         .filter(
-            F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))) <= max_frame_hamming
+            F.bit_count(F.col("fhash_a").bitwiseXOR(F.col("fhash_b")))
+            <= max_frame_hamming
         )
     )
     return (
@@ -540,35 +498,16 @@ def cdc_chunk_near_dup(
     single int64, so the heavy exchange is 16 bytes/row.
 
     ``max_chunk_docs`` drops chunk fingerprints shared by MORE than N
-    payloads before the self-join (None = exact). This is the same
-    stop-key cap as ``ngram_jaccard_pairs``'s ``max_shingle_docs``
-    (operators/dedup.py): ``distinct()`` per payload bounds repeats
+    payloads before the self-join (None = exact): the hot-key cap of
+    ``operators/dedup.py``. ``distinct()`` per payload bounds repeats
     WITHIN a document, but a UNIVERSAL chunk — a zero-run, a shared
-    container header — appears once per payload and makes the pair
-    join quadratic in corpus size. At 100× scale always set a cap; a
-    chunk in half the corpus carries no near-dup signal anyway."""
+    container header — appears once per payload. A chunk in half the
+    corpus carries no near-dup signal anyway."""
     fp = cdc_chunk_fingerprints(
         df, payload_col, id_col, window=window, divisor=divisor, decoder=decoder
     )
-    if max_chunk_docs is not None:
-        rare = (
-            fp.groupBy("chunk_fp")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .filter(F.col("df_") <= max_chunk_docs)
-            .select("chunk_fp")
-        )
-        fp = fp.join(rare, "chunk_fp", "left_semi")
-    a, b = fp.alias("a"), fp.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_fp") == F.col("b.chunk_fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
+        _shared_key_pairs(_drop_hot_keys(fp, "chunk_fp", max_chunk_docs), ["chunk_fp"], id_col)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared_chunks"))
         .filter(F.col("n_shared_chunks") >= min_shared_chunks)
@@ -694,34 +633,21 @@ def audio_constellation_near_dup(
     (its hash set is a superset of the original's interior), while
     background collisions in the small hash space stay far below —
     the decision is a ratio, not an absolute count, so it holds at
-    any payload length. ``max_fp_docs`` is the hot-key cap (a hash in
-    every payload — a silence landmark — is a stop word, same rule as
-    ``max_chunk_docs``; at 100× scale always set it)."""
-    fp = audio_constellation_fingerprints(
-        df, payload_col, id_col,
-        frame_samples=frame_samples, peaks_per_frame=peaks_per_frame,
-        fanout=fanout,
+    any payload length. ``max_fp_docs`` is the hot-key cap of
+    ``operators/dedup.py`` (a hash in every payload — a silence
+    landmark — is a stop word)."""
+    fp = _drop_hot_keys(
+        audio_constellation_fingerprints(
+            df, payload_col, id_col,
+            frame_samples=frame_samples, peaks_per_frame=peaks_per_frame,
+            fanout=fanout,
+        ),
+        "audio_fp",
+        max_fp_docs,
     )
-    if max_fp_docs is not None:
-        rare = (
-            fp.groupBy("audio_fp")
-            .agg(F.count(F.lit(1)).alias("df_"))
-            .filter(F.col("df_") <= max_fp_docs)
-            .select("audio_fp")
-        )
-        fp = fp.join(rare, "audio_fp", "left_semi")
     sizes = fp.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp"))
-    a, b = fp.alias("a"), fp.alias("b")
     shared = (
-        a.join(
-            b,
-            (F.col("a.audio_fp") == F.col("b.audio_fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
+        _shared_key_pairs(fp, ["audio_fp"], id_col)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared_hashes"))
     )

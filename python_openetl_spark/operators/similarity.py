@@ -20,7 +20,8 @@ Approximate:
   search.
 - :func:`lsh_cosine_pairs` — all-pairs via sign-bit hyperplane LSH: a
   bucket join instead of a cross join, the only viable all-pairs shape
-  at 100 TB, with recall tunable by bands/planes.
+  at 100 TB, with recall tunable by bands/planes. Its bucket join is
+  the pair rule stated once in ``operators/dedup.py``.
   :func:`cosine_pairs_exact` is its O(n²) ground truth.
 
 Every operator scores, breaks ties, excludes self-matches and ranks
@@ -48,9 +49,10 @@ from python_openetl_spark.functions.vectors import (
     topk,
     unit_rows,
 )
+from python_openetl_spark.operators.dedup import _shared_key_pairs
 from python_openetl_spark.operators.ivf_store import _assign_fn, _probe_cells
 from python_openetl_spark.operators.kmeans import init_centroids
-from python_openetl_spark.operators.materialize import _arrow_relation
+from python_openetl_spark.operators.materialize import _arrow_relation, materialize
 from python_openetl_spark.session import scan_parallelism
 
 
@@ -328,18 +330,10 @@ def lsh_cosine_pairs(
     # exchanges in the x04 plan). Size-adaptive: at fixture scale the
     # double kernel run is cheaper than a checkpoint barrier, at corpus
     # scale it is not — see operators/materialize.
-    from python_openetl_spark.operators.materialize import materialize
-
     bucketed = materialize(bucketed)
-    a, b = bucketed.alias("a"), bucketed.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        _shared_key_pairs(bucketed, ["tbl", "key"], "doc")
+        .toDF("id_a", "id_b")
         # dedup BEFORE the vector join: a true pair collides in many
         # tables (that is the whole point of OR-amplification), but
         # must fetch vectors and pay the cosine exactly once

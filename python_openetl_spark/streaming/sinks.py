@@ -12,6 +12,7 @@ to the table and skips replays — idempotent MERGE by construction
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pyspark.sql import DataFrame
@@ -22,8 +23,17 @@ from python_openetl_spark.plans.pipelines import ParquetTable
 
 
 class _BatchMarker:
-    """Shared replay guard: the last applied batch id, stored as a JSON
-    marker file beside the table (``plans.commit.write_json``).
+    """Shared replay guard: a sink applies a micro-batch only when its id
+    is above the last applied one, stored as a JSON marker file
+    (``plans.commit.write_json``) at ``_marker_base``.
+
+    The marker is scoped by the streaming query: batch ids restart at 0
+    for every NEW query (fresh checkpoint), so one unscoped marker
+    would drop a second stream's batches up to the first stream's last
+    id. Inside ``foreachBatch`` Spark sets the local property
+    ``sql.streaming.queryId``, which is stable across restarts from one
+    checkpoint, and the marker name carries it. A direct call outside a
+    stream has no query id and uses the unscoped name.
 
     Scope: driver-local filesystem — valid exactly where ParquetTable
     itself is (single driver host, POSIX; see its docstring). On an
@@ -34,21 +44,44 @@ class _BatchMarker:
     alternative (per-batch partition overwrite).
     """
 
-    table: ParquetTable
+    _marker_base: str
 
-    @property
-    def _marker_path(self) -> str:
-        return self.table.path + ".last_batch"
+    def _marker_path(self, query_id: str | None) -> str:
+        if query_id is None:
+            return self._marker_base
+        stem, ext = os.path.splitext(self._marker_base)
+        return f"{stem}.{query_id}{ext}"
 
-    def _last_batch(self) -> int:
+    def _last_batch(self, path: str) -> int:
         try:
-            with open(self._marker_path) as f:
+            with open(path) as f:
                 return json.load(f)["batch_id"]
-        except (OSError, ValueError, KeyError):
+        except FileNotFoundError:
+            return -1  # first batch of this stream
+        except (OSError, ValueError, KeyError) as e:
+            # a torn/unreadable marker is NOT the no-marker case: the
+            # write is an atomic os.replace, so corruption means real
+            # trouble. Warn loudly; returning -1 re-applies the batch
+            # (at-least-once), never drops data.
+            logging.getLogger(__name__).warning(
+                "%s: unreadable batch marker %s (%s); treating as absent — "
+                "replayed batches may be applied again",
+                type(self).__name__,
+                path,
+                e,
+            )
             return -1
 
-    def _record_batch(self, batch_id: int) -> None:
-        write_json(self._marker_path, {"batch_id": batch_id})
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        sc = batch_df.sparkSession.sparkContext
+        path = self._marker_path(sc.getLocalProperty("sql.streaming.queryId"))
+        if batch_id <= self._last_batch(path):
+            return  # replayed micro-batch → already applied, skip
+        self._apply(batch_df)
+        write_json(path, {"batch_id": batch_id})
+
+    def _apply(self, batch_df: DataFrame) -> None:
+        raise NotImplementedError
 
 
 class Scd2Sink(_BatchMarker):
@@ -64,17 +97,16 @@ class Scd2Sink(_BatchMarker):
 
     def __init__(self, table: ParquetTable, pk: str, ts_col: str):
         self.table = table
+        self._marker_base = table.path + ".last_batch"
         self.pk = pk
         self.ts_col = ts_col
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame) -> None:
         from pyspark.sql import functions as F
 
         from python_openetl_spark.operators.merge import dedupe_latest
         from python_openetl_spark.operators.scd import scd2_init, scd2_merge
 
-        if batch_id <= self._last_batch():
-            return
         row = batch_df.agg(F.max(self.ts_col).alias("m")).collect()[0]
         if row["m"] is None:
             return  # empty micro-batch
@@ -89,7 +121,6 @@ class Scd2Sink(_BatchMarker):
         else:
             merged = scd2_init(delta, as_of)
         self.table.overwrite(merged)
-        self._record_batch(batch_id)
 
 
 class UpsertSink(_BatchMarker):
@@ -100,12 +131,11 @@ class UpsertSink(_BatchMarker):
 
     def __init__(self, table: ParquetTable, pk: str, order_col: str | None = None):
         self.table = table
+        self._marker_base = table.path + ".last_batch"
         self.pk = pk
         self.order_col = order_col
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch():
-            return  # replayed micro-batch → already merged, skip
+    def _apply(self, batch_df: DataFrame) -> None:
         spark = batch_df.sparkSession
         if self.table.exists():
             target = self.table.read(spark)
@@ -119,7 +149,6 @@ class UpsertSink(_BatchMarker):
         else:
             merged = batch_df
         self.table.overwrite(merged)
-        self._record_batch(batch_id)
 
 
 class DedupIngestSink:
@@ -412,7 +441,7 @@ class VersionedCdcSink:
         table.commit(merged, txn=txn)
 
 
-class IvfAppendSink:
+class IvfAppendSink(_BatchMarker):
     """``writeStream.foreachBatch(IvfAppendSink(root))`` — streaming
     vector ingest into a persisted IVF store (operators/ivf_store.py):
     each micro-batch is assigned to the EXISTING coarse centroids and
@@ -422,80 +451,31 @@ class IvfAppendSink:
     production vector index actually fills (documents arrive
     continuously; the quantizer retrains on a schedule, not per batch).
 
-    Replay guard: a JSON batch marker (the _BatchMarker device —
-    ``plans.commit.write_json``) at the STORE ROOT, not inside a version
-    directory, so replay protection survives a rebuild swapping the
-    live version mid-stream. Spark's normal foreachBatch redelivery
-    (same batch re-offered after a restart) no-ops on the marker. The
-    one remaining window is a crash BETWEEN the append and the marker
-    write: plain parquet appends to the delta cannot commit data and
-    marker atomically, so that window re-appends the batch (duplicate
-    rows cost shortlist slots, never wrong ranks — probes order by
-    (cos, id)). Exactly-once needs the data write and the token in ONE
-    atomic commit, which is the versioned-pointer design
-    (:class:`VersionedCdcSink`); an IVF store trades that for
-    append-in-place delta files that need no version swap.
+    Replay guard: the ``_BatchMarker`` marker, kept at the STORE ROOT,
+    not inside a version directory, so replay protection survives a
+    rebuild swapping the live version mid-stream. Spark's normal
+    foreachBatch redelivery (same batch re-offered after a restart)
+    no-ops on the marker. The one remaining window is a crash BETWEEN
+    the append and the marker write: plain parquet appends to the delta
+    cannot commit data and marker atomically, so that window re-appends
+    the batch (duplicate rows cost shortlist slots, never wrong ranks —
+    probes order by (cos, id)). Exactly-once needs the data write and
+    the token in ONE atomic commit, which is the versioned-pointer
+    design (:class:`VersionedCdcSink`); an IVF store trades that for
+    append-in-place delta files that need no version swap."""
 
-    ``stream_id`` scopes the marker: batch ids restart at 0 for every
-    NEW streaming query (fresh checkpoint), so an unscoped marker from
-    an earlier stream against the same store would silently drop every
-    batch of the next one. Pass a stable id per logical stream —
-    the checkpoint location is the natural key; same id across
-    restarts of the same query keeps the replay guard. Omitting it
-    keeps the single-stream-per-store marker name."""
-
-    def __init__(
-        self,
-        root: str,
-        *,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        stream_id: str | None = None,
-    ):
+    def __init__(self, root: str, *, id_col: str = "vec_id", vec_col: str = "embedding"):
         self.root = root
+        self._marker_base = os.path.join(root, "_stream_last_batch.json")
         self.id_col = id_col
         self.vec_col = vec_col
-        self.stream_id = stream_id
 
-    @property
-    def _marker_path(self) -> str:
-        if self.stream_id is None:
-            return os.path.join(self.root, "_stream_last_batch.json")
-        import hashlib
-
-        tag = hashlib.sha256(self.stream_id.encode()).hexdigest()[:16]
-        return os.path.join(self.root, f"_stream_last_batch_{tag}.json")
-
-    def _last_batch(self) -> int:
-        try:
-            with open(self._marker_path) as f:
-                return json.load(f)["batch_id"]
-        except FileNotFoundError:
-            return -1  # first batch of this stream
-        except (OSError, ValueError, KeyError) as e:
-            # a torn/unreadable marker is NOT the no-marker case: the
-            # write is an atomic os.replace, so corruption means real
-            # trouble. Warn loudly; returning -1 re-appends (the sink's
-            # documented at-least-once degradation), never drops data.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "IvfAppendSink: unreadable batch marker %s (%s); "
-                "treating as absent — replayed batches may re-append",
-                self._marker_path,
-                e,
-            )
-            return -1
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(self, batch_df: DataFrame) -> None:
         from python_openetl_spark.operators.ivf_store import append_to_ivf_store
 
-        if batch_id <= self._last_batch():
-            return  # replayed micro-batch
         append_to_ivf_store(
             batch_df, self.root, id_col=self.id_col, vec_col=self.vec_col
         )
-        write_json(self._marker_path, {"batch_id": batch_id})
 
 
 class JoinViewSink:

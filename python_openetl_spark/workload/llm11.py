@@ -109,9 +109,7 @@ def s12_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q = (
             read_file_stream(spark, path, late.schema)
-            .writeStream.foreachBatch(
-                IvfAppendSink(root, stream_id=tmp + "/ckpt")
-            )
+            .writeStream.foreachBatch(IvfAppendSink(root))
             .option("checkpointLocation", tmp + "/ckpt")
             .trigger(availableNow=True)
             .start()

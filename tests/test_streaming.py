@@ -27,6 +27,32 @@ def _replay_stream(spark, tmp_path, df, chunks=4):
     return read_file_stream(spark, path, df.schema)
 
 
+def _replay_in_query(spark, query, sink, batch_df, batch_id):
+    """Re-offer ``batch_id`` to ``sink`` as the restarted ``query`` would:
+    inside ``foreachBatch`` Spark sets the query id as a local property,
+    and the sinks' replay markers are scoped by it."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", query.id)
+    try:
+        sink(batch_df, batch_id=batch_id)
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+
+
+def _drop_last_commit(ckpt):
+    """Forget the last committed micro-batch of a checkpoint, as a crash
+    between the sink's write and Spark's commit would: a restart from
+    ``ckpt`` re-runs that batch under the same batch id."""
+    import os
+
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    return last
+
+
 def _run_to_completion(stream_df, mode, tmp_path, name):
     q = (
         stream_df.writeStream.format("memory")
@@ -245,7 +271,7 @@ def test_foreachbatch_upsert_sink(spark, tmp_path):
     assert got.count() == ev.count()
     # idempotence: replaying an old batch id is a no-op
     before = got.count()
-    sink(ev.limit(5).withColumn("value", F.lit(-1.0)), batch_id=0)
+    _replay_in_query(spark, q, sink, ev.limit(5).withColumn("value", F.lit(-1.0)), 0)
     assert table.read(spark).count() == before
     assert table.read(spark).filter(F.col("value") == -1.0).count() == 0
 
@@ -283,7 +309,7 @@ def test_foreachbatch_scd2_sink_builds_history(spark, tmp_path):
     assert hist.count() >= users
     # replaying an old batch id is a no-op
     before = hist.count()
-    sink(ev.withColumn("event_type", F.lit("bogus")), batch_id=0)
+    _replay_in_query(spark, q, sink, ev.withColumn("event_type", F.lit("bogus")), 0)
     assert table.read(spark).count() == before
 
 
@@ -432,6 +458,33 @@ def test_dedup_ingest_sink_from_real_stream(spark, tmp_path):
     # corpus contains each distinct content exactly once
     assert got.count() == got.distinct().count()
     assert got.distinct().count() == ev.select("text").distinct().count()
+
+
+def test_upsert_sink_second_stream_is_not_dropped(spark, tmp_path):
+    """A NEW stream into the same table (fresh checkpoint, so its batch
+    ids restart at 0) lands its rows: the replay marker is scoped by
+    streaming query, so stream A's last batch id (1) cannot swallow
+    stream B's batch 0."""
+    table = ParquetTable(str(tmp_path / "two_stream_tbl"))
+    schema = "event_id long, ts long, value double"
+    streams = {
+        "a": spark.createDataFrame([(1, 10, 1.0), (2, 20, 2.0)], schema),
+        "b": spark.createDataFrame([(3, 30, 3.0)], schema),
+    }
+    for name, df in streams.items():
+        src = stage_replay_dir(
+            df, str(tmp_path / f"replay_{name}"), chunks=df.count(),
+            shuffle_time_order=False,
+        )
+        q = (
+            read_file_stream(spark, src, df.schema)
+            .writeStream.foreachBatch(UpsertSink(table, pk="event_id", order_col="ts"))
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    assert sorted(r["event_id"] for r in table.read(spark).collect()) == [1, 2, 3]
 
 
 def test_upsert_sink_dedups_table_creating_first_batch(spark, tmp_path):
@@ -837,12 +890,14 @@ def test_ivf_append_sink_replays_noop_and_streams_ingest(spark, tmp_path):
 
 
 def test_ivf_append_sink_stream_scoped_markers(spark, tmp_path, caplog):
-    """r8 advice: batch ids restart at 0 for every NEW streaming query,
-    so the replay marker must be scoped per stream — a second stream's
-    batch 0 against the same store APPENDS instead of being swallowed
-    by the first stream's marker — while a restart of the SAME stream
-    (same stream_id) still no-ops. A corrupt marker is warned about and
-    treated as absent (at-least-once re-append), never a silent drop."""
+    """Batch ids restart at 0 for every NEW streaming query, so the
+    replay marker is scoped by the query id Spark sets inside
+    foreachBatch: a second stream's batch 0 against the same store
+    APPENDS instead of being swallowed by the first stream's marker,
+    while a restart of the SAME stream (same checkpoint, so the same
+    query id) that re-runs its last batch still no-ops. A corrupt
+    marker is warned about and treated as absent (at-least-once
+    re-append), never a silent drop."""
     import logging
     import os
 
@@ -857,29 +912,53 @@ def test_ivf_append_sink_stream_scoped_markers(spark, tmp_path, caplog):
     build_ivf_store(emb.filter(F.col("vec_id") % 5 != 0), root, nlist=8)
     late = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id", "embedding")
     b0 = late.filter(F.col("vec_id") % 10 == 0)
-    b1 = late.filter(F.col("vec_id") % 10 == 5)
+    b1 = late.filter(F.col("vec_id") % 10 == 5).withColumn(
+        "vec_id", F.col("vec_id") + 3_000_000
+    )
 
-    sink_a = IvfAppendSink(root, stream_id=str(tmp_path / "ckpt_a"))
-    sink_a(b0, batch_id=0)
-    sink_a(b0, batch_id=0)  # same-stream restart replay -> no-op
-    n_a = spark.read.parquet(os.path.join(current_index_dir(root), "assigned")).count()
+    def n_assigned():
+        return spark.read.parquet(
+            os.path.join(current_index_dir(root), "assigned")
+        ).count()
+
+    srcs = {
+        name: stage_replay_dir(df, str(tmp_path / f"replay_{name}"), chunks=2, order_col="vec_id")
+        for name, df in (("a", b0), ("b", b1))
+    }
+
+    def stream(name):
+        q = (
+            read_file_stream(spark, srcs[name], late.schema)
+            .writeStream.foreachBatch(IvfAppendSink(root))
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return q
+
+    qa = stream("a")
+    n_a = n_assigned()
     assert n_a == emb.filter(F.col("vec_id") % 5 != 0).count() + b0.count()
+    # same-stream restart replay -> no-op
+    last = _drop_last_commit(str(tmp_path / "ckpt_a"))
+    qa2 = stream("a")
+    assert qa2.id == qa.id
+    assert last in {p["batchId"] for p in qa2.recentProgress}
+    assert n_assigned() == n_a
 
     # a NEW stream (fresh checkpoint, ids restart at 0) must not be
     # dropped by stream A's marker
-    sink_b = IvfAppendSink(
-        root,
-        stream_id=str(tmp_path / "ckpt_b"),
-    )
-    sink_b(b1.withColumn("vec_id", F.col("vec_id") + 3_000_000), batch_id=0)
-    n_b = spark.read.parquet(os.path.join(current_index_dir(root), "assigned")).count()
-    assert n_b == n_a + b1.count()
+    qb = stream("b")
+    assert n_assigned() == n_a + b1.count()
 
     # corrupt marker: warned, treated as absent
-    with open(sink_b._marker_path, "w") as f:
+    sink_b = IvfAppendSink(root)
+    marker = sink_b._marker_path(qb.id)
+    with open(marker, "w") as f:
         f.write("{ torn")
     with caplog.at_level(logging.WARNING):
-        assert sink_b._last_batch() == -1
+        assert sink_b._last_batch(marker) == -1
     assert any("unreadable batch marker" in r.message for r in caplog.records)
 
 
